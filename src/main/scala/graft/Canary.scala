@@ -73,7 +73,7 @@ object Canary {
     * latency-chain canary above cannot see (measured on this box:
     * chain canary flat at ~86 ms while this kernel ran at 0.26× its
     * healthy rate). Min-of-2 reps. Healthy reference lives in the
-    * artifact history (EncodeBench rows).
+    * artifact history (encode_argmin rows, CHANGES_r10.md).
     */
   def kernelCanaryRowsPerSec(): Double = {
     val nlist = 131072; val d = 64; val nQ = 256

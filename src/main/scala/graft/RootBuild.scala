@@ -11,8 +11,8 @@ import graft.index.IndexParams
 /** Build-and-KEEP a trained engine root at a named directory — the
   * profiling companion to ScaleEval (which sweeps its temp root): the
   * corpus, params, and train chain are ScaleEval's exactly, so
-  * QueryProfile / PreparedProfile runs against this root attribute the
-  * same geometry ScaleEval measures. Env knobs: GRAFT_SCALE_N/D/OPQ/PQM
+  * measurements run against this root (ScaleEval's GRAFT_SCALE_ROOT)
+  * see the same geometry ScaleEval builds. Env knobs: GRAFT_SCALE_N/D/OPQ/PQM
   * (ScaleEval's), GRAFT_ROOT_DIR (required).
   */
 object RootBuild {
@@ -37,30 +37,7 @@ object RootBuild {
     val centers = Array.fill(numCenters, d)(rnd.nextGaussian().toFloat)
     val bcCenters = spark.sparkContext.broadcast(centers)
 
-    // GRAFT_SCALE_GROUP_BYTES: override the grouped coded write's scratch
-    // threshold — smaller groups → more write passes → more coded FILES
-    // at the same row count. This is the file-count lever for measuring
-    // how the serving scans behave at object-store-like many-file
-    // geometries (VERDICT r16 next #5: the injected-predicate and
-    // union-job rationales are files×terms scaling claims; this knob
-    // makes them measurable instead of argued).
-    // GRAFT_SCALE_SHIFT: override the coded bucket shift — SMALLER shift
-    // → more cluster_bucket dirs → more coded FILES at the same row
-    // count (each bucket is one file per write). This, not group bytes,
-    // is the file-count lever: the grouped write never splits a bucket
-    // (each bucket is written by exactly one group), so group size only
-    // bounds shuffle scratch.
-    val gbOpt = sys.env.get("GRAFT_SCALE_GROUP_BYTES").map(_.toLong)
-    val shiftOpt = sys.env.get("GRAFT_SCALE_SHIFT").map(_.toInt)
-    val engine =
-      if (gbOpt.isEmpty && shiftOpt.isEmpty) new Engine(spark, root)
-      else new Engine(spark, root) {
-        override protected def codedShuffleGroupBytes: Long =
-          gbOpt.getOrElse(super.codedShuffleGroupBytes)
-        override protected def chooseCodedBucketShift(n: Long, nlist: Int,
-                                                      d: Int, m: Int): Int =
-          shiftOpt.getOrElse(super.chooseCodedBucketShift(n, nlist, d, m))
-      }
+    val engine = new Engine(spark, root)
     // GRAFT_SCALE_PACKED=true → train writes the packed code column
     // (ScaleEval's knob, mirrored so packed roots can be kept and
     // profiled too — the r15 packed filtered anomaly repro)

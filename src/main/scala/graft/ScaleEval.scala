@@ -249,11 +249,12 @@ object ScaleEval {
     // probe selection + plan build + Catalyst planning, forced via
     // executedPlan) and cluster-side (job + collect) — attributes how
     // much of ITS p50 is planning vs scan/kernel work
-    // r14: the coarse stage is EAGER inside queryCatalyst (concurrent
-    // chunk jobs, BatchANN.coarseSingleChunked), so the "plan" share now
-    // contains the coarse scan execution. Task accounting + input bytes
-    // attribute where a cold-cache p50 goes (driver vs task-time vs IO
-    // volume) — the r14 35M artifact needed exactly this split.
+    // r14: the coarse stage is EAGER inside queryCatalyst (one union job
+    // over the chunk scans, BatchANN.coarseSingleChunked), so the "plan"
+    // share now contains the coarse scan execution. Task accounting +
+    // input bytes attribute where a cold-cache p50 goes (driver vs
+    // task-time vs IO volume) — the r14 35M artifact needed exactly this
+    // split.
     // the catalyst p50 is a GATED number (<300 ms): start+END canary
     // bracket with retry, so a window breaking mid-loop re-measures
     // instead of polluting the gate reading (VERDICT r16 next #1).
@@ -310,7 +311,7 @@ object ScaleEval {
     // candidates INSIDE the fused serving job, sharing the routed floor
     // instead of the ~1 s Catalyst planning floor.
     //
-    // TWO predicates, deliberately (found via graft.core.FilterProfile):
+    // TWO predicates, deliberately (CHANGES_r13.md):
     //  - hash-parity — 50% selectivity WITHIN every cluster, the
     //    production metadata-filter shape: the first probe round fills
     //    (~250 of prelimK=500 survive ≥ finalK=50) and the query stays
@@ -401,8 +402,7 @@ object ScaleEval {
     // prepared in-memory serving path (Engine.prepareServing): one fused
     // job per query over cached blocks — the latency-floor answer. Gate
     // its equality against the regular path before timing it.
-    val doPrepared = sys.env.getOrElse("GRAFT_SCALE_PREPARED", "true").toBoolean
-    val preparedJson = if (!doPrepared) "" else {
+    val preparedJson = {
       val pb0 = System.nanoTime()
       val prep = engine.prepareServing("scale")
       val prepBuildSec = (System.nanoTime() - pb0) / 1e9

@@ -134,7 +134,8 @@ class Engine(val spark: SparkSession, val root: String) {
   /** r15 layout knob, off by default: when true, the NEXT train writes
     * the coded table with the PACKED code column (one BIGINT carrying up
     * to 8 code bytes) instead of `array<int>` — 2.2× the scan-decode
-    * throughput at identical disk bytes (CodeLayoutProfile; PLANS.md).
+    * throughput at identical disk bytes (packed-code micro-profile,
+    * PLANS.md r15).
     * Per-TABLE, recorded in the catalog (`codedPacked`) so appends,
     * compaction, and every reader follow the table's own layout
     * regardless of the knob's current value. Requires m ≤ 8.
@@ -154,11 +155,6 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   @volatile var flatAddMemoryGuardBytes: Option[Long] = None
 
-  /** The warm handle serving `doc`'s exact version — build (or rebuild
-    * after a swap) under a per-db lock so concurrent first queries share
-    * one block build. The build lock is NOT [[dbLock]]: pinning blocks
-    * runs a Spark job and must not stall adds/removes.
-    */
   /** Adds-refresh debounce of the AUTO-built handle — a test seam
     * (CatalystWarmServeSpec pins read-your-writes with a debounce the
     * test provably cannot outrun).
@@ -172,6 +168,11 @@ class Engine(val spark: SparkSession, val root: String) {
   private[core] def hasAutoPrepared(name: String): Boolean =
     autoPrepared.contains(name)
 
+  /** The warm handle serving `doc`'s exact version — build (or rebuild
+    * after a swap) under a per-db lock so concurrent first queries share
+    * one block build. The build lock is NOT [[dbLock]]: pinning blocks
+    * runs a Spark job and must not stall adds/removes.
+    */
   private def autoPreparedFor(doc: CatalogDoc): PreparedIndex =
     autoPrepared.get(doc.name).filter(!_.isStaleFor(doc)).getOrElse {
       prepareLocks.getOrElseUpdate(doc.name, new Object).synchronized {
@@ -1057,9 +1058,9 @@ class Engine(val spark: SparkSession, val root: String) {
                              preCoarse: Option[Array[(Long, Double, Int)]] = None)
             : DataFrame = {
           // q=1 coarse: same kernel and (adc_dist, id) order as the batch
-          // form, merged on the driver — one CONCURRENT job per probe
-          // chunk, no window shuffle (BatchANN.coarseSingleChunked; the
-          // r14 planning-floor work). `pushPred` is the under-fill
+          // form, merged on the driver — every probe chunk scored in ONE
+          // union job, no window shuffle (BatchANN.coarseSingleChunked;
+          // the r14 planning-floor work). `pushPred` is the under-fill
           // round's decisive form: the predicate filters the COVERING
           // chunk scans BEFORE the ADC cut (a Catalyst filter, pushed to
           // parquet where possible), so the survivors are the
@@ -1091,7 +1092,7 @@ class Engine(val spark: SparkSession, val root: String) {
           // geometry that is ~250k decoded covering rows instead of 3M —
           // the vector/metadata decode of probed-but-candidate-less
           // clusters was the single-query exec bottleneck (profiled
-          // 5-10 s, QueryProfile). This is the Parquet form of the
+          // 5-10 s, CHANGES_r10.md). This is the Parquet form of the
           // reference's fetch-by-id from LMDB after the Faiss search.
           val fetched =
             if (candRows.isEmpty)
@@ -1535,11 +1536,6 @@ class Engine(val spark: SparkSession, val root: String) {
       collectDeleted, collectAppended, addsRefreshIntervalMs)
   }
 
-  /** The live rows of the probed coded partitions: partition-pruned scan of
-    * the covering index minus pending soft-deletes (D2 — the index never
-    * serves dead rows; the deletes side is broadcast-small by the
-    * compaction threshold).
-    */
   /** Probe-list chunk size for the bucketed pruned scan. Each chunk's
     * `cluster_id IN (…)` stays under the parquet push threshold (512, see
     * the constructor conf) so it reaches the reader as a page-prunable
@@ -1548,22 +1544,7 @@ class Engine(val spark: SparkSession, val root: String) {
     * still opened ~once across the union. Overridable so specs can force
     * the multi-chunk path on a small nprobe.
     */
-  protected def probePushChunk: Int =
-    // measurement override (A/B harnesses force a chunk count on a
-    // small root — e.g. the union-job lever's submit-overhead A/B,
-    // which is data-size independent); production leaves it unset.
-    // Parsed tolerantly: non-numeric or <1 values fall back to the
-    // default with a warning instead of making every query's
-    // `grouped(0)` throw (ADVICE r16)
-    sys.env.get("GRAFT_PROBE_PUSH_CHUNK").flatMap(_.toIntOption)
-      .filter(_ >= 1)
-      .orElse {
-        if (sys.env.contains("GRAFT_PROBE_PUSH_CHUNK"))
-          log.warn("ignoring GRAFT_PROBE_PUSH_CHUNK=" +
-            s"'${sys.env("GRAFT_PROBE_PUSH_CHUNK")}' (need an int >= 1)")
-        None
-      }
-      .getOrElse(500)
+  protected def probePushChunk: Int = 500
 
   /** Per-instance view of [[Engine.CodedShuffleGroupBytes]] — the
     * grouped coded write's scratch threshold. Overridable so specs can
@@ -1597,7 +1578,7 @@ class Engine(val spark: SparkSession, val root: String) {
     * once per consumer (Bridge.ofRows) — the DataFrame-API fold analyzed
     * the accumulated tree at every `.filter`/`.union`, O(chunks²)
     * analyzer passes ≈ 40 ms/query at the 8-chunk 35M shape
-    * (PlanFloorProfile r14 attribution).
+    * (PLANS.md, round-14 serving-floor findings).
     */
   private def prunedCodedBranchPlans(doc: CatalogDoc, probes: Array[Int],
                                      serving: Boolean)
@@ -1625,12 +1606,13 @@ class Engine(val spark: SparkSession, val root: String) {
     val sorted = probes.sorted
     if (sorted.length <= maxChunkedProbePush(doc.numClusters))
       sorted.grouped(probePushChunk).map(branchPlan).toIndexedSeq
-      // (r15 negative result, ChunkCpuProfile ccp5: splitting each chunk
-      // into a UNION of per-bucket branch Filters — so each file's
-      // reader serializes only its own ~79-term In-chain instead of the
-      // chunk's 445 — did NOT move the concurrent scan (167→177 ms) and
-      // ADDED ~70 ms of per-query union planning. The coarse wall is
-      // latency-bound on job/task scheduling, not chain-size-bound.)
+      // (r15 negative result, evalruns_r15/ccp5_bucketbranch.log:
+      // splitting each chunk into a UNION of per-bucket branch Filters —
+      // so each file's reader serializes only its own ~79-term In-chain
+      // instead of the chunk's 445 — did NOT move the concurrent scan
+      // (167→177 ms) and ADDED ~70 ms of per-query union planning. The
+      // coarse wall is latency-bound on job/task scheduling, not
+      // chain-size-bound.)
     else IndexedSeq(branchPlan(sorted)) // row-level only; bucket pruning still applies
   }
 
@@ -1638,6 +1620,11 @@ class Engine(val spark: SparkSession, val root: String) {
     if (doc.numPendingDeletes == 0) pruned
     else pruned.join(broadcast(deletes(doc)), Seq("id"), "left_anti")
 
+  /** The live rows of the probed coded partitions: partition-pruned scan of
+    * the covering index minus pending soft-deletes (D2 — the index never
+    * serves dead rows; the deletes side is broadcast-small by the
+    * compaction threshold).
+    */
   private[core] def prunedLiveCoded(doc: CatalogDoc, probes: Array[Int]): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Union => LUnion}
     val pruned =
@@ -1654,36 +1641,36 @@ class Engine(val spark: SparkSession, val root: String) {
     withLiveDeletes(doc, pruned)
   }
 
-  // (r15 negative result, RootProfile rootprofile2-4: a per-bucket
-  // branch-union candidate fetch — each file's pushed chain carrying
-  // only its own candidate ids — measured fetch_collect 116 → 319 ms at
-  // 35M even with branches grouped to ≤12 and split-planned on the
-  // serving relation; the branch-union's per-query planning and
+  // (r15 negative result, evalruns_r15/rootprofile{2,3,4}_35m.log: a
+  // per-bucket branch-union candidate fetch — each file's pushed chain
+  // carrying only its own candidate ids — measured fetch_collect
+  // 116 → 319 ms at 35M even with branches grouped to ≤12 and
+  // split-planned on the serving relation; the branch-union's per-query planning and
   // per-branch scan setup outweigh the shorter chains. The single
   // pruned scan + one pushed id-chain below is the measured optimum.)
 
-  /** [[prunedLiveCoded]] split into its chunk scans, one DataFrame per
-    * chunk — for the q=1 coarse path, which runs the chunks as
-    * CONCURRENT jobs so each chunk's driver-side scan setup (the
-    * per-scan Hadoop-conf broadcast) and its tasks overlap instead of
-    * serializing (BatchANN.coarseSingleChunked). Row-set union over the
-    * returned frames is exactly [[prunedLiveCoded]]'s row set.
+  /** Test seam: false routes every trained query through the Catalyst
+    * chunk scans even where the plan-free [[ServingScan]] is eligible —
+    * the specs' reference for the custom scan's bit-equality gates.
     */
-  /** The plan-free coarse stage ([[ServingScan]]) when the layout admits
-    * it: bucketed coded table, no pending soft-deletes (the custom scan
-    * has no anti-join stage — deletes are transient between compactions,
-    * and the Catalyst path serves those windows), knob on. Returns None
-    * to route the query through the Catalyst chunk scans instead.
-    * `GRAFT_SERVING_CUSTOM_SCAN=false` / `-Dgraft.serving.custom.scan=
-    * false` restores the Catalyst path engine-wide for A/B.
+  @volatile private[core] var servingCustomScan: Boolean = true
+
+  /** True when the plan-free serving scan may answer `doc`: bucketed
+    * coded table and no pending soft-deletes (the custom scan has no
+    * anti-join stage — deletes are transient between compactions, and
+    * the Catalyst path serves those windows).
+    */
+  private def servingScanEligible(doc: CatalogDoc): Boolean =
+    servingCustomScan && doc.codedBucketShift >= 0 && doc.numPendingDeletes == 0
+
+  /** The plan-free coarse stage ([[ServingScan]]) when
+    * [[servingScanEligible]]; None routes the query through the Catalyst
+    * chunk scans instead.
     */
   private[core] def servingScanCoarse(doc: CatalogDoc, qp: Array[Float],
                                       probes: Array[Int], prelimK: Int)
       : Option[Array[(Long, Double, Int)]] =
-    if (doc.codedBucketShift < 0 || doc.numPendingDeletes > 0 ||
-        !sys.props.get("graft.serving.custom.scan")
-          .orElse(sys.env.get("GRAFT_SERVING_CUSTOM_SCAN"))
-          .forall(v => !v.trim.equalsIgnoreCase("false"))) None
+    if (!servingScanEligible(doc)) None
     else
       Some(ServingScan.coarse(spark, servingScanEpochFor(doc),
         modelBroadcast(doc), qp, probes, prelimK))
@@ -1798,10 +1785,7 @@ class Engine(val spark: SparkSession, val root: String) {
   private[core] def servingScanFetchRows(doc: CatalogDoc,
                                           candRows: Array[(Long, Double, Int)])
       : Option[Array[(Long, Array[Float], String)]] =
-    if (doc.codedBucketShift < 0 || doc.numPendingDeletes > 0 ||
-        !sys.props.get("graft.serving.custom.scan")
-          .orElse(sys.env.get("GRAFT_SERVING_CUSTOM_SCAN"))
-          .forall(v => !v.trim.equalsIgnoreCase("false"))) None
+    if (!servingScanEligible(doc)) None
     else if (candRows.isEmpty) Some(Array.empty) // zero-hit: nothing to scan
     else {
       val idsByCluster = candRows.groupBy(_._3)
@@ -1859,6 +1843,12 @@ class Engine(val spark: SparkSession, val root: String) {
       }: _*), schema)
   }
 
+  /** [[prunedLiveCoded]] split into its chunk scans, one DataFrame per
+    * chunk, planned under [[servingSession]] — the q=1 coarse path's
+    * Catalyst form, which [[graft.operators.BatchANN.coarseSingleChunked]]
+    * scores in ONE union job. Row-set union over the returned frames is
+    * exactly [[prunedLiveCoded]]'s row set.
+    */
   private[core] def prunedLiveCodedChunks(doc: CatalogDoc,
                                           probes: Array[Int]): IndexedSeq[DataFrame] =
     if (doc.codedBucketShift < 0) IndexedSeq(prunedLiveCoded(doc, probes))
@@ -1891,13 +1881,14 @@ class Engine(val spark: SparkSession, val root: String) {
       buildCodedDf(doc, servingSession))
 
   /** Session for the INTERNAL serving scans — the per-query coarse chunk
-    * jobs. Shares the SparkContext (same executors, same scheduler); the
+    * scans. Shares the SparkContext (same executors, same scheduler); the
     * one conf that matters is `files.minPartitionNum = 1`: the default
     * (defaultParallelism) makes Spark split every scan to fill all cores
     * via bytes-per-core, which turns the 8 CONCURRENT ~26 MB-file chunk
     * scans of one query into ~300 one-file tasks — per-task file open +
     * footer + page-index cost dominated the measured coarse stage
-    * (RootProfile r14: 319 ms of the 489 ms coarse was pure scan setup).
+    * (PLANS.md, round-14 serving-floor findings: 319 ms of the 489 ms
+    * coarse was pure scan setup).
     * With minPartitionNum=1 the packer fills 128 MB partitions (~4-5
     * files per task), the 8 jobs still land ~60 tasks on 32 cores, and
     * big analytic scans are unaffected (maxPartitionBytes still bounds a
@@ -1908,8 +1899,8 @@ class Engine(val spark: SparkSession, val root: String) {
     s.conf.set("spark.sql.files.minPartitionNum", "1")
     // 512 MB split packing for the per-query coarse scans: at the 35M
     // geometry it cut the concurrent chunk scan 154→138 ms and the fresh
-    // coarse 271→241 ms (ChunkCpuProfile ccp6 A/B) — fewer per-task
-    // reader inits, still ≥2 tasks per bucket file for parallelism
+    // coarse 271→241 ms (evalruns_r15/ccp6_{def,512m}.log) — fewer
+    // per-task reader inits, still ≥2 tasks per bucket file for parallelism
     s.conf.set("spark.sql.files.maxPartitionBytes", "512m")
     // re-pin the engine's scan confs (newSession starts from globals,
     // not from the parent session's runtime values)
@@ -1928,19 +1919,6 @@ class Engine(val spark: SparkSession, val root: String) {
     s.conf.set("spark.sql.parquet.filterPushdown", "false")
     s.conf.set("spark.sql.shuffle.partitions",
       spark.conf.get("spark.sql.shuffle.partitions"))
-    // measurement overrides for the serving-scan shape (ChunkCpuProfile's
-    // A/B harness; production leaves all three unset): the r15 stack
-    // attribution put ~99.6% of the coarse scan's task CPU in per-file
-    // pushed-filter plumbing (FilterPredicate.toString + gzip/Java
-    // serialization into a cloned Hadoop conf, O(or-chain terms) each),
-    // so these gate which predicate shape and task packing the chunk
-    // scans plan under while the fix is being measured.
-    sys.env.get("GRAFT_SERVING_IN_THRESHOLD").foreach(v =>
-      s.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", v))
-    sys.env.get("GRAFT_SERVING_MAXPART").foreach(v =>
-      s.conf.set("spark.sql.files.maxPartitionBytes", v))
-    sys.env.get("GRAFT_SERVING_PUSHDOWN").foreach(v =>
-      s.conf.set("spark.sql.parquet.filterPushdown", v))
     s
   }
 
@@ -2836,8 +2814,8 @@ object Engine {
 
   /** Pre-serialized parquet `FilterPredicate` carried as READ OPTIONS on
     * a scan relation — the structural fix for the r15 attribution
-    * (ChunkCpuProfile, PLANS.md): ~99.6% of the serving coarse scan's
-    * task CPU was per-file pushed-filter PLUMBING, because Spark's own
+    * (evalruns_r15/chunkcpu_35m.log, PLANS.md): ~99.6% of the serving
+    * coarse scan's task CPU was per-file pushed-filter PLUMBING, because Spark's own
     * pushdown rebuilds the predicate at every reader init — parquet
     * `setFilterPredicate` string-concats the left-nested 445-term
     * or-chain (O(terms²) chars; Spark 4.1 has no parquet-native In) and
@@ -2943,7 +2921,8 @@ object Engine {
 
   /** Target parquet-file size for the bucketed coded-table layout.
     * 256 MB (canonical parquet sizing, 2 row groups at the default
-    * 128 MB block), raised from 32 MB after RootProfile r14 measured the
+    * 128 MB block), raised from 32 MB after the round-14 35M root
+    * profile (PLANS.md serving-floor findings) measured the
     * serving floor at the 35M geometry: probed clusters spread uniformly
     * over buckets, so EVERY coarse pass opens ~every bucket file, and at
     * 26 MB files that was ~350 opens × (footer + page-index ≈ 3-5 ms) —
@@ -3030,6 +3009,24 @@ object Engine {
     * the caller should re-prepare.
     */
   val MaxPreparedSideRows: Int = 200000
+
+  /** Task count of a [[PreparedIndex]]'s NARROW serving shape — the
+    * coalesced view of its cached blocks that serves under concurrency
+    * (see the adaptive-shape note there).
+    */
+  def preparedNarrowParts(defaultParallelism: Int): Int =
+    math.max(4, defaultParallelism / 4)
+
+  /** In-flight servings at which a [[PreparedIndex]] switches to the
+    * narrow shape; below it a lone query keeps every core (wide shape).
+    */
+  val PreparedNarrowDepth: Int = 3
+
+  /** Byte ceiling on a [[PreparedIndex]]'s pinned blocks for the
+    * driver-local serve (no Spark job per query); above it every serve
+    * runs as a job over the cached blocks.
+    */
+  val PreparedLocalMaxBytes: Long = 256L << 20
 
   /** Debounce window for a [[PreparedIndex]]'s adds delta-refresh: at
     * most one side-buffer collect job per window under continuous ingest

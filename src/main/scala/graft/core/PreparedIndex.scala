@@ -114,51 +114,25 @@ final class PreparedIndex private[core] (
   // same global merge, whichever task grouping computed them.
   private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
   private val narrowParts =
-    sys.env.get("GRAFT_PREPARED_NARROW").flatMap(_.toIntOption)
-      .getOrElse(math.max(4, spark.sparkContext.defaultParallelism / 4))
+    Engine.preparedNarrowParts(spark.sparkContext.defaultParallelism)
   // var so specs can force every serve onto the narrow shape (depth 1)
   // and assert bit-equality against the wide shape
-  @volatile private[core] var narrowDepth: Int =
-    sys.env.get("GRAFT_PREPARED_NARROW_DEPTH").flatMap(_.toIntOption)
-      .getOrElse(3)
+  @volatile private[core] var narrowDepth: Int = Engine.PreparedNarrowDepth
   private val narrowBlocks: RDD[Map[Int, ClusterBlock]] =
-    if (narrowParts > 0 && blocks.getNumPartitions > narrowParts)
-      blocks.coalesce(narrowParts)
+    if (blocks.getNumPartitions > narrowParts) blocks.coalesce(narrowParts)
     else blocks
 
-  // ---- wave batching (r18, VERDICT r17 next #5) — measured NEGATIVE,
-  // default OFF. Hypothesis: one serving JOB per query caps concurrent
-  // qps at the scheduler's small-job floor (ServeFloorProfile: 428
-  // empty 8-task jobs/s at 16 threads), so flat-combining waves — one
-  // leader serves every queued query in a single job whose tasks run
-  // the UNCHANGED per-query kernel once per (query, cached partition),
-  // bit-identical by construction (WaveServeSpec) — should recover the
-  // gap to prepared_implied_cpu_max_qps. Measured same-JVM interleaved
-  // A/B on the 35M root (waveqps_35m.log, healthy sub-windows): OFF
-  // 108.6/136.6 qps vs ON 83.3/107.4 — waves LOSE ~23%. Why: 16
-  // one-job-per-query narrow jobs keep ~128 tasks outstanding, which
-  // pipelines away both per-job gaps and per-partition skew, while 2
-  // wave jobs idle cores at wave boundaries and on straggler
-  // partitions. The scheduler floor was never binding at ~130 qps; the
-  // binding term is kernel CPU occupancy (implied max 172-209 by
-  // window). Kept env-gated (GRAFT_PREPARED_WAVE=true) with this
-  // negative result as the record; the 200-qps lever is kernel
-  // occupancy, not job count.
   // ---- driver-local serve for small corpora (r18) ---------------------
   // The published-config replication (57,638×768) pinned the single-query
   // floor at the per-query Spark JOB (~15-19 ms at local[32]) while the
   // kernel work is ~1-2 ms — the reference serves the same corpus at
   // 5.04 ms because it is an in-process call. When the pinned block set
   // is small enough to hold on the driver (byte-estimated from the
-  // cached blocks themselves, bounded by GRAFT_PREPARED_LOCAL_MAX_BYTES,
-  // default 256 MB), serves run the UNCHANGED per-partition kernel over
-  // a driver-resident copy in the caller thread: no job, no scheduler —
-  // the same parts reach the same merge, so results are bit-identical
-  // (WaveServeSpec's local gates). Above the bound (every real at-scale
-  // corpus) nothing changes.
-  private val LocalServeMaxBytes: Long =
-    sys.env.get("GRAFT_PREPARED_LOCAL_MAX_BYTES").flatMap(_.toLongOption)
-      .getOrElse(256L << 20)
+  // cached blocks themselves, bounded by [[Engine.PreparedLocalMaxBytes]]),
+  // serves run the UNCHANGED per-partition kernel over a driver-resident
+  // copy in the caller thread: no job, no scheduler — the same parts
+  // reach the same merge, so results are bit-identical (LocalServeSpec).
+  // Above the bound (every real at-scale corpus) nothing changes.
   @volatile private[core] var localServe: Boolean = true
   private lazy val localParts: Option[Array[Map[Int, ClusterBlock]]] = {
     val bytes = blocks.map { m =>
@@ -167,26 +141,8 @@ final class PreparedIndex private[core] (
           b.meta.iterator.map(s =>
             if (s == null) 8L else 40L + 2L * s.length).sum).sum
     }.sum()
-    if (bytes > LocalServeMaxBytes) None else Some(blocks.collect())
+    if (bytes > Engine.PreparedLocalMaxBytes) None else Some(blocks.collect())
   }
-
-  private final class WaveReq(
-      val probes: Array[Int], val qp: Array[Float], val qn: Array[Float],
-      val prelimK: Int,
-      val promise: java.util.concurrent.CompletableFuture[Array[Cand]])
-  private val waveQueue =
-    new java.util.concurrent.ConcurrentLinkedQueue[WaveReq]
-  // two leaders so a forming wave's job overlaps the previous wave's
-  // submit/merge gap — one leader serialized ALL serving onto a single
-  // job at a time and idled the cores between waves (r18b: 22 qps at
-  // 35M where one-job-per-query read 75-129)
-  private val waveLeader = new java.util.concurrent.Semaphore(
-    sys.env.get("GRAFT_PREPARED_WAVE_LEADERS").flatMap(_.toIntOption)
-      .getOrElse(2))
-  private val WaveMax =
-    sys.env.get("GRAFT_PREPARED_WAVE_MAX").flatMap(_.toIntOption).getOrElse(16)
-  @volatile private[core] var waveServe: Boolean =
-    sys.env.get("GRAFT_PREPARED_WAVE").exists(_.trim.equalsIgnoreCase("true"))
 
   /** Acquire one more reference — None if the last holder already
     * released (a concurrent swap closed the routing handle between
@@ -211,10 +167,6 @@ final class PreparedIndex private[core] (
     */
   def isStale: Boolean = isStaleFor(engine.load(pinned.name))
 
-  /** [[isStale]] against an already-loaded catalog doc — the form the
-    * engine's auto-routing uses (it has the doc in hand; no second
-    * catalog read).
-    */
   /** True when the handle's pinned blocks + adds side buffer ALREADY
     * cover every row of `cur` — i.e. serving through the handle loses
     * nothing to the adds-refresh debounce. [[Engine.queryCatalyst]]'s
@@ -226,6 +178,10 @@ final class PreparedIndex private[core] (
   private[core] def coversAddsOf(cur: CatalogDoc): Boolean =
     !addsOverflowed && addsSnapshot._1 == cur.maxId
 
+  /** [[isStale]] against an already-loaded catalog doc — the form the
+    * engine's auto-routing uses (it has the doc in hand; no second
+    * catalog read).
+    */
   private[core] def isStaleFor(cur: CatalogDoc): Boolean =
     cur.indexVersion != pinned.indexVersion ||
       cur.dataVersion != pinned.dataVersion ||
@@ -413,10 +369,10 @@ final class PreparedIndex private[core] (
   }
 
   /** One serving job over the pinned blocks (+ the appended-rows side
-    * scan) returning the per-partition ADC/rerank candidates, NOT yet
-    * globally merged.
-    */
-  /** `pred` (nullable): the pushed predicate of the filtered under-fill
+    * scan) returning the per-partition ADC/rerank candidates merged to
+    * the global preliminary cut.
+    *
+    * `pred` (nullable): the pushed predicate of the filtered under-fill
     * round — ships in the job closure (deterministic compiled predicates
     * and plain lambdas only; [[Engine.DriverOnlyPredicate]]s never reach
     * here) and gates heap entry inside [[PreparedANN.servePartition]].
@@ -438,102 +394,11 @@ final class PreparedIndex private[core] (
         return PreparedANN.mergePrelim(all, prelimK)
       case None => ()
     }
-    if (pred == null && waveServe) probePrelimWave(probes, qp, qn, prelimK)
-    else probePrelimSingle(probes, qp, qn, prelimK, bcDeleted, side, pred)
+    probePrelimSingle(probes, qp, qn, prelimK, bcDeleted, side, pred)
   }
 
-  /** Flat-combining wave dispatcher: enqueue, then either become the
-    * leader (serve everything queued in one job) or wait for a leader to
-    * complete this request. Snapshots are read by the LEADER at serve
-    * time — monotonically ≥ the ones current at enqueue, so every served
-    * query still reflects "the state observed during the call or newer".
-    */
-  private def probePrelimWave(probes: Array[Int], qp: Array[Float],
-                              qn: Array[Float], prelimK: Int): Array[Cand] = {
-    val req = new WaveReq(probes, qp, qn, prelimK,
-      new java.util.concurrent.CompletableFuture[Array[Cand]])
-    waveQueue.add(req)
-    while (!req.promise.isDone) {
-      if (waveLeader.tryAcquire()) {
-        try {
-          if (!req.promise.isDone) {
-            val wave = Array.newBuilder[WaveReq]
-            var n = 0
-            var r = waveQueue.poll()
-            while (r != null) {
-              wave += r; n += 1
-              r = if (n < WaveMax) waveQueue.poll() else null
-            }
-            val w = wave.result()
-            if (w.nonEmpty) serveWave(w)
-          }
-        } finally waveLeader.release()
-      } else {
-        try req.promise.get(20, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch {
-          case _: java.util.concurrent.TimeoutException => ()
-          case _: java.util.concurrent.ExecutionException => () // surfaced by join below
-        }
-      }
-    }
-    try req.promise.join()
-    catch {
-      // unwrap so callers see the same exception type the single-query
-      // path throws (the leader completed us exceptionally)
-      case e: java.util.concurrent.CompletionException if e.getCause != null =>
-        throw e.getCause
-    }
-  }
-
-  /** One job serving a whole wave: each task runs the unchanged
-    * per-query kernel once per (query, cached partition map), so the
-    * per-(query, partition) CandBatch stream is exactly what `nQ`
-    * single-query jobs would have produced — only the job count changes.
-    */
-  private def serveWave(wave: Array[WaveReq]): Unit =
-    try {
-      val bc = bcModel
-      val bcDel = deletedSnapshot._2
-      val side = addsSnapshot._2
-      val nQ = wave.length
-      val probesArr = wave.map(_.probes)
-      val qpArr = wave.map(_.qp)
-      val qnArr = wave.map(_.qn)
-      val prelimArr = wave.map(_.prelimK)
-      inFlight.addAndGet(nQ)
-      // task → query → one CandBatch per cached partition map. Waves
-      // always run the WIDE partitioning: a wave is ~the only job in
-      // flight, so the narrow shape's fewer-task-events rationale does
-      // not apply and its fewer tasks would cap the wave at a fraction
-      // of the cores (measured: 8-task waves kept ~6 of 32 cores busy
-      // and qps collapsed to 22 — scaleeval_35m_r18b.log)
-      val perTask: Array[Array[Array[PreparedANN.CandBatch]]] =
-        try {
-          val rdd = blocks
-          spark.sparkContext.runJob(rdd,
-            (it: Iterator[Map[Int, ClusterBlock]]) => {
-              val maps = it.toArray
-              Array.tabulate(nQ)(qi =>
-                maps.map(m => PreparedANN.servePartitionBatch(m, bc.value,
-                  probesArr(qi), qpArr(qi), qnArr(qi), prelimArr(qi),
-                  bcDel.value, null)))
-            })
-        } finally inFlight.addAndGet(-nQ)
-      var qi = 0
-      while (qi < nQ) {
-        val parts =
-          perTask.iterator.flatMap(t => t(qi).iterator.map(_.toCands)).toArray
-        val all =
-          if (side.isEmpty) parts
-          else parts :+ PreparedANN.servePartition(side, model, probesArr(qi),
-            qpArr(qi), qnArr(qi), prelimArr(qi), bcDel.value, null)
-        wave(qi).promise.complete(PreparedANN.mergePrelim(all, prelimArr(qi)))
-        qi += 1
-      }
-    } catch {
-      case t: Throwable => wave.foreach(_.promise.completeExceptionally(t))
-    }
-
+  // One job per query: batching queued queries into one job measured −23%
+  // qps at 35M (evalruns_r18/waveqps_35m.log); kernel CPU binds, not jobs.
   private def probePrelimSingle(probes: Array[Int], qp: Array[Float],
                                 qn: Array[Float], prelimK: Int,
                                 bcDeleted: Broadcast[Array[Long]],

@@ -25,7 +25,7 @@ package graft.index
   * first: at the target geometry (d 64, clustered corpus, nlist 91k) the
   * annulus bound prunes only ~7% of centroids and its id-indirection
   * breaks cache locality — 0.5× brute, a regression. Flat + SIMD replaces
-  * it on measurement (EncodeBench), not intuition.
+  * it on measurement (encode_argmin rows, CHANGES_r10.md), not intuition.
   *
   * Ships to executors as ONE broadcast: n·d floats + n norms.
   */

@@ -153,7 +153,8 @@ object BatchANN {
           // subDim==8 the block sum uses the PAIRWISE-TREE grouping
           // (r18c) — same grouping as PreparedANN.servePartition and the
           // DuckDB replay (see the comment there): breaks the serial FP
-          // add chain, measured 123 → 68 ns/row (AdcKernelProfile)
+          // add chain, measured 123 → 68 ns/row (ADC micro-profile,
+          // CHANGES_r18.md)
           var d = 0.0
           var j = 0
           if (subDim == 8) {
@@ -253,31 +254,6 @@ object BatchANN {
     heaps
   }
 
-  /** Single-query coarse candidates over per-chunk scans, driver-merged:
-    * the q=1 face of [[coarseCandidates]] used by the composable Catalyst
-    * path. Same kernel, same global (adc_dist, id) order, same ≤ prelimK
-    * result — two structural differences, both latency-only:
-    *
-    *  - each probe CHUNK runs as its own CONCURRENT job from its own
-    *    thread, so the per-scan driver setup (Hadoop-conf broadcast:
-    *    serialize + deflate, ~11 ms per scan — the single largest
-    *    per-query driver cost at the 8-chunk 35M shape, PlanFloorProfile
-    *    r14) and the chunk tasks all overlap instead of serializing
-    *    behind one union plan;
-    *  - the cross-partition merge happens on the DRIVER over
-    *    partitions·prelimK tuples (tens of KBs) instead of a
-    *    window-over-shuffle stage.
-    *
-    * The kernel is per-partition either way, so chunk boundaries do not
-    * change any heap's content — the merged result is bit-identical to
-    * the union-scan + window form (gated by PreparedIndexSpec /
-    * TrainedPathSpec equalities).
-    *
-    * @param chunks the per-chunk pruned coded frames
-    *               (Engine.prunedLiveCodedChunks)
-    * @return ≤ prelimK (id, adc_dist, cluster_id) rows, smallest
-    *         (adc_dist, id) first
-    */
   /** The q=1 per-partition coarse stage as a plain function: the shared
     * kernel over an InternalRow iterator, drained to three flat
     * primitive arrays (the task wire format — ship arrays, not ~500
@@ -317,6 +293,30 @@ object BatchANN {
     merged.take(prelimK).map { case (d, id, cid) => (id, d, cid) }
   }
 
+  /** Single-query coarse candidates over per-chunk scans, driver-merged:
+    * the q=1 face of [[coarseCandidates]] used by the composable Catalyst
+    * path. Same kernel, same global (adc_dist, id) order, same ≤ prelimK
+    * result — two structural differences, both latency-only:
+    *
+    *  - each probe CHUNK's driver-side setup (`toRdd`: planning plus the
+    *    per-scan Hadoop-conf broadcast, ~11 ms per scan at the 8-chunk
+    *    35M shape — PLANS.md, round-14 serving-floor findings) runs on its
+    *    own thread, and all chunk scans are then scored in ONE union job;
+    *  - the cross-partition merge happens on the DRIVER over
+    *    partitions·prelimK tuples (tens of KBs) instead of a
+    *    window-over-shuffle stage.
+    *
+    * The kernel is per-partition either way, so chunk boundaries do not
+    * change any heap's content — the merged result is bit-identical to
+    * the union-scan + window form (gated by PreparedIndexSpec /
+    * TrainedPathSpec equalities) and to a single-chunk scan of the same
+    * probes (CoarseUnionJobSpec).
+    *
+    * @param chunks the per-chunk pruned coded frames
+    *               (Engine.prunedLiveCodedChunks)
+    * @return ≤ prelimK (id, adc_dist, cluster_id) rows, smallest
+    *         (adc_dist, id) first
+    */
   def coarseSingleChunked(spark: SparkSession, chunks: Seq[DataFrame],
                           bcModel: Broadcast[IndexModel],
                           qp: Array[Float], probes: Array[Int],
@@ -329,37 +329,22 @@ object BatchANN {
         val (q, ps) = bcQ.value
         coarsePartition(it, model, q, ps, prelimK, packed)
       }
-    def runChunk(df: DataFrame): Array[(Array[Double], Array[Long], Array[Int])] = {
-      val src = df.select(col("id").cast("long"), col("cluster_id").cast("int"),
-        col("code"))
-      spark.sparkContext.runJob(src.queryExecution.toRdd, partFn(isPackedCode(df)))
-    }
-    // ONE RDD-union job for all chunk scans (default ON, r16): keep the
-    // parallel per-chunk DRIVER setup (toRdd on one thread per chunk —
-    // the conf-broadcast overlap the concurrent-jobs form bought), but
-    // submit ONE job instead of `chunks` jobs: same partition functions
-    // over the same partitions, so every per-partition heap — and
-    // therefore the merged result — is bit-identical (gated by
-    // CoarseUnionJobSpec). What collapses is `chunks` job submits +
-    // result collections on the DAGScheduler's single-threaded event
-    // loop — the coarse-wall residual left after r15 ruled out chain
-    // size and task CPU. Measured (interleaved A/B on a 2M root forced
-    // to the 8-chunk shape, where submit overhead dominates —
-    // evalruns_r16/ujob_*.log): warm coarse 133→87 and 95→74 ms, e2e
-    // p50 365→350 and 332→248, never worse. GRAFT_COARSE_UNION_JOB=
-    // false (or -Dgraft.coarse.union.job=false) restores per-chunk
-    // jobs for A/B.
-    // Tolerant parse: only a literal "false" disables the union job;
-    // anything else (including typos like "off"/"1") keeps the default
-    // instead of throwing per query in the serve path (ADVICE r16).
-    val unionJob =
-      chunks.lengthCompare(1) > 0 &&
-        sys.props.get("graft.coarse.union.job")
-          .orElse(sys.env.get("GRAFT_COARSE_UNION_JOB"))
-          .forall(v => !v.trim.equalsIgnoreCase("false"))
+    def scanRdd(df: DataFrame) =
+      df.select(col("id").cast("long"), col("cluster_id").cast("int"),
+        col("code")).queryExecution.toRdd
+    // Several chunks: ONE RDD-union job, not one job per chunk — the
+    // per-job submit + result collection runs on the DAGScheduler's
+    // single-threaded event loop. Same partition functions over the same
+    // partitions, so the merged result is bit-identical. Measured against
+    // concurrent per-chunk jobs (2M root forced to 8 chunks,
+    // evalruns_r16/ujob_*.log): warm coarse 133→87 and 95→74 ms, e2e p50
+    // 365→350 and 332→248, never worse.
     val parts: Array[(Array[Double], Array[Long], Array[Int])] =
-      if (chunks.lengthCompare(1) == 0) runChunk(chunks.head)
-      else if (unionJob) {
+      if (chunks.isEmpty) Array.empty
+      else if (chunks.lengthCompare(1) == 0)
+        spark.sparkContext.runJob(scanRdd(chunks.head),
+          partFn(isPackedCode(chunks.head)))
+      else {
         val rdds = new Array[org.apache.spark.rdd.RDD[
           org.apache.spark.sql.catalyst.InternalRow]](chunks.length)
         val packed = new Array[Boolean](chunks.length)
@@ -368,9 +353,7 @@ object BatchANN {
           val t = new Thread(() => {
             try {
               packed(i) = isPackedCode(df)
-              rdds(i) = df.select(col("id").cast("long"),
-                col("cluster_id").cast("int"), col("code"))
-                .queryExecution.toRdd
+              rdds(i) = scanRdd(df)
             } catch { case e: Throwable => errors.compareAndSet(null, e) }
           })
           t.setDaemon(true); t.start(); t
@@ -381,20 +364,6 @@ object BatchANN {
           "chunk scans of one table must share a code layout")
         spark.sparkContext.runJob(spark.sparkContext.union(rdds.toIndexedSeq),
           partFn(packed(0)))
-      }
-      else {
-        val results = new Array[Array[(Array[Double], Array[Long], Array[Int])]](chunks.length)
-        val errors = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-        val threads = chunks.zipWithIndex.map { case (df, i) =>
-          val t = new Thread(() => {
-            try results(i) = runChunk(df)
-            catch { case e: Throwable => errors.compareAndSet(null, e) }
-          })
-          t.setDaemon(true); t.start(); t
-        }
-        threads.foreach(_.join())
-        if (errors.get() != null) throw errors.get()
-        results.flatten
       }
     bcQ.unpersist(blocking = false)
     mergeCoarseParts(parts, prelimK)

@@ -210,7 +210,8 @@ object PreparedANN {
             // oracle stay hash-exact together. Why: the sequential
             // dist += df*df chain is latency-bound (one dependent FP add
             // per dim); the depth-3 tree halves measured scan cost
-            // (AdcKernelProfile: 123 → 68 ns/row at the 35M geometry).
+            // (ADC micro-profile, CHANGES_r18.md: 123 → 68 ns/row at the
+            // 35M geometry).
             var dist = 0.0
             var j = 0
             if (subDim == 8) {

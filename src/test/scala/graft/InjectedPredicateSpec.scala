@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * must still engage parquet row-group/page pruning at the reader, and
   * results must stay exact. This is the structural replacement for
   * Spark's per-file predicate rebuild (O(terms²) toString + gzip/Java
-  * serialize per reader init — the r15 ChunkCpuProfile attribution of
+  * serialize per reader init — the r15 attribution of
   * ~99.6% of coarse-scan task CPU).
   */
 class InjectedPredicateSpec extends SparkSpec {

@@ -19,7 +19,7 @@ import graft.operators.{BatchANN, PreparedANN}
   * (BatchANN.isPackedCode), so this spec packs the same codes by hand
   * and asserts equality of every consumer. PLANS.md "Round-15
   * candidate: packed PQ code column" holds the design + the measured
-  * 2.2× decode win (CodeLayoutProfile).
+  * 2.2× decode win.
   */
 class PackedCodeSpec extends SparkSpec {
 

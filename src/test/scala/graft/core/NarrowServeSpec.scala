@@ -42,7 +42,6 @@ class NarrowServeSpec extends SparkSpec {
         prep.query(q, 200, 20).toSeq
       }.map(h => Seq(h.rank, h.id, h.metadata, h.cosineSimilarity))
       prep.localServe = false // force the JOB shapes this spec gates
-      prep.waveServe = false // one job per query, so the shape seam binds
       prep.narrowDepth = Int.MaxValue // wide shape
       val wide = run()
       prep.narrowDepth = 1 // every serve takes the narrow shape

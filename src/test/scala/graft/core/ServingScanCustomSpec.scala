@@ -109,11 +109,9 @@ class ServingScanCustomSpec extends SparkSpec {
       e.queryCatalyst("db", q, 200, 20).collect().toSeq.map(_.toSeq)
     }
     val on = run()
-    System.setProperty("graft.serving.custom.scan", "false")
-    try {
-      val off = run()
-      assert(on == off, "queryCatalyst rows differ between custom scan and Catalyst path")
-    } finally System.clearProperty("graft.serving.custom.scan")
+    e.servingCustomScan = false
+    val off = run()
+    assert(on == off, "queryCatalyst rows differ between custom scan and Catalyst path")
   }
 
   test("multi-range tasks: coarse + fetch + e2e stay exact (midpoint-rule footer filter)") {
@@ -139,9 +137,8 @@ class ServingScanCustomSpec extends SparkSpec {
     assert(fetched.map(_._1).sorted.toSeq == cand.map(_._1).sorted.toSeq,
       "fetch rows are not exactly the candidate ids")
     val res = e.queryCatalyst("db", q, 100, 20).collect().map(_.toSeq).toSeq
-    System.setProperty("graft.serving.custom.scan", "false")
-    try assert(res == e.queryCatalyst("db", q, 100, 20).collect().map(_.toSeq).toSeq)
-    finally System.clearProperty("graft.serving.custom.scan")
+    e.servingCustomScan = false
+    assert(res == e.queryCatalyst("db", q, 100, 20).collect().map(_.toSeq).toSeq)
   }
 
   test("custom fetch returns exactly the rows the Catalyst fetch scan returns") {
@@ -179,10 +176,9 @@ class ServingScanCustomSpec extends SparkSpec {
       e.queryCatalyst("db", q, 200, 20, Some(pred)).collect().toSeq.map(_.toSeq)
     }
     val on = run()
-    System.setProperty("graft.serving.custom.scan", "false")
-    try assert(on == run(),
+    e.servingCustomScan = false
+    assert(on == run(),
       "filtered queryCatalyst rows differ between custom scan and Catalyst path")
-    finally System.clearProperty("graft.serving.custom.scan")
   }
 
   test("zero-hit shapes: empty buckets and empty candidate sets plan zero tasks") {
