@@ -156,9 +156,9 @@ object Canary {
 
   /** Run `body` inside a START+END canary bracket, retrying (up to
     * `maxRetries` extra attempts) when the END canary reads below the
-    * floor — the r15 packed anomaly and every degraded r16 35M reading
-    * slipped through start-only gating exactly because contention began
-    * MID-block (PLANS.md round-16 audit). Returns the last attempt's
+    * floor — every degraded r16 35M reading slipped through start-only
+    * gating exactly because contention began MID-block (PLANS.md
+    * round-16 audit). Returns the last attempt's
     * result with both canaries; callers record both so the artifact says
     * whether the window HELD, not just whether it opened.
     */

@@ -101,31 +101,11 @@ object Eval {
     // the contrast number, not the headline, and at 648 queries the
     // uncapped loop would dominate the whole eval's wall time)
     val nCat = math.min(nQ, 32)
-    // the composable surface's DEFAULT (r18: warm-serve — the routed
-    // loop above warmed the handle, so queryCatalyst rides its blocks)
     val catalystLat = queries.take(nCat).map { q =>
       val q0 = System.nanoTime()
       engine.queryCatalyst("eval", q, prelimK, finalK).collect()
       (System.nanoTime() - q0) / 1e6
     }.sorted
-    // the PURE plan path (r17's catalyst number), plus a live equality
-    // gate: warm-serve must be bit-identical to the pure plan
-    engine.catalystWarmServe = false
-    val warmMatchesPure = queries.take(4).forall { q =>
-      val pure = engine.queryCatalyst("eval", q, prelimK, finalK)
-        .collect().map(_.toSeq).toSeq
-      engine.catalystWarmServe = true
-      val warm = engine.queryCatalyst("eval", q, prelimK, finalK)
-        .collect().map(_.toSeq).toSeq
-      engine.catalystWarmServe = false
-      warm == pure
-    }
-    val catalystPureLat = queries.take(nCat).map { q =>
-      val q0 = System.nanoTime()
-      engine.queryCatalyst("eval", q, prelimK, finalK).collect()
-      (System.nanoTime() - q0) / 1e6
-    }.sorted
-    engine.catalystWarmServe = true
 
     // the hits form of the routed path (no per-call DataFrame analysis)
     engine.queryHits("eval", queries(0), prelimK, finalK) // warm
@@ -188,7 +168,6 @@ object Eval {
     // comparison pays the planning floor; the prepared timing itself
     // covers all nQ)
     var prepMatches = true
-    engine.catalystWarmServe = false // ground truth must stay the pure plan
     queries.take(nCat).foreach { q =>
       val hits = prep.query(q, prelimK, finalK)
       val reg = engine.queryCatalyst("eval", q, prelimK, finalK).collect()
@@ -197,7 +176,6 @@ object Eval {
           h.cosineSimilarity == r.getDouble(3)
       }
     }
-    engine.catalystWarmServe = true
     val prepLat = queries.map { q =>
       val t = System.nanoTime()
       prep.query(q, prelimK, finalK)
@@ -229,8 +207,6 @@ object Eval {
         s""""query_ms_p95":${"%.0f".format(latencies((nQ * 95) / 100))},""" +
         s""""query_ms_p99":${"%.0f".format(latencies((nQ * 99) / 100))},""" +
         s""""catalyst_query_ms_p50":${"%.0f".format(catalystLat(nCat / 2))},""" +
-        s""""catalyst_pure_ms_p50":${"%.0f".format(catalystPureLat(nCat / 2))},""" +
-        s""""warm_serve_matches_pure":$warmMatchesPure,""" +
         s""""hits_query_ms_p50":${"%.1f".format(hitsLat(nQ / 2))},""" +
         s""""hits_query_ms_p95":${"%.1f".format(hitsLat((nQ * 95) / 100))},""" +
         s""""hits_query_ms_p99":${"%.1f".format(hitsLat((nQ * 99) / 100))},""" +

@@ -38,11 +38,6 @@ object RootBuild {
     val bcCenters = spark.sparkContext.broadcast(centers)
 
     val engine = new Engine(spark, root)
-    // GRAFT_SCALE_PACKED=true → train writes the packed code column
-    // (ScaleEval's knob, mirrored so packed roots can be kept and
-    // profiled too — the r15 packed filtered anomaly repro)
-    engine.packedCodesOnTrain =
-      sys.env.getOrElse("GRAFT_SCALE_PACKED", "false").toBoolean
     engine.create("scale", vectorDimension = d)
     val corpus = spark.range(0L, n, 1L, 64)
       .map(i => (ScaleEval.rowVector(i, bcCenters.value, d, seed).toSeq, s"""{"i":$i}"""))

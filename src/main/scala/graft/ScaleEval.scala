@@ -96,11 +96,6 @@ object ScaleEval {
         s"kept root (d=${d0.vectorDimension}, maxId=${d0.maxId}) does not " +
           s"match GRAFT_SCALE_N=$n / GRAFT_SCALE_D=$d")
     }
-    // GRAFT_SCALE_PACKED=true → train writes the r15 packed code column
-    // (requires m ≤ 8); readers are dual-mode so the rest of the harness
-    // is unchanged
-    engine.packedCodesOnTrain =
-      sys.env.getOrElse("GRAFT_SCALE_PACKED", "false").toBoolean
     if (!reusing) engine.create("scale", vectorDimension = d)
 
     // distributed generation: 64 gen partitions so the per-partition working
@@ -263,11 +258,6 @@ object ScaleEval {
     // route_build_sec: the catalyst loop otherwise counts footer-cache
     // and codegen warmup inside a p50 of 8.
     engine.queryCatalyst("scale", queries(0), prelimK, finalK).collect()
-    // r18: queryCatalyst's no-predicate branch rides the warm prepared
-    // handle by default (Engine.catalystWarmServe) — the composable
-    // surface's headline. The PURE plan-free path (r17's gated number)
-    // is measured in the same bracket, after a live warm==pure equality
-    // gate, so neither surface's number goes unwatched.
     def catLoop(): IndexedSeq[(Double, Double, Double)] =
       (0 until nSingle).map { qi =>
         val s0 = System.nanoTime()
@@ -278,33 +268,14 @@ object ScaleEval {
         val s2 = System.nanoTime()
         ((s1 - s0) / 1e6, (s2 - s1) / 1e6, (s2 - s0) / 1e6)
       }
-    val ((warmSplits, warmMatchesPure, ((splits, catRunMs, catCpuMs, catTasks), catInMb)),
+    val (((splits, catRunMs, catCpuMs, catTasks), catInMb),
          kernelCatStart, kernelCatEnd, _) = Canary.bracket("scale-eval-catalyst") {
-      val warm = catLoop()
-      val eq = (0 until 2).forall { qi =>
-        val w = engine.queryCatalyst("scale", queries(qi), prelimK, finalK)
-          .collect().map(_.toSeq).toSeq
-        engine.catalystWarmServe = false
-        val p = try engine.queryCatalyst("scale", queries(qi), prelimK, finalK)
-          .collect().map(_.toSeq).toSeq
-        finally engine.catalystWarmServe = true
-        w == p
-      }
-      engine.catalystWarmServe = false
-      val pure = try {
-        engine.queryCatalyst("scale", queries(0), prelimK, finalK).collect()
-        inputDelta { taskDelta { catLoop() } }
-      } finally engine.catalystWarmServe = true
-      (warm, eq, pure)
+      inputDelta { taskDelta { catLoop() } }
     }
-    val catalystP50 = warmSplits.map(_._3).sorted.apply(nSingle / 2)
-    val planP50 = warmSplits.map(_._1).sorted.apply(nSingle / 2)
-    val execP50 = warmSplits.map(_._2).sorted.apply(nSingle / 2)
-    val catalystAll = warmSplits.map(t => "%.0f".format(t._3)).mkString("[", ",", "]")
-    val pureP50 = splits.map(_._3).sorted.apply(nSingle / 2)
-    val purePlanP50 = splits.map(_._1).sorted.apply(nSingle / 2)
-    val pureExecP50 = splits.map(_._2).sorted.apply(nSingle / 2)
-    val pureAll = splits.map(t => "%.0f".format(t._3)).mkString("[", ",", "]")
+    val catalystP50 = splits.map(_._3).sorted.apply(nSingle / 2)
+    val planP50 = splits.map(_._1).sorted.apply(nSingle / 2)
+    val execP50 = splits.map(_._2).sorted.apply(nSingle / 2)
+    val catalystAll = splits.map(t => "%.0f".format(t._3)).mkString("[", ",", "]")
 
     // routed FILTERED single-query (VERDICT r12 ask #1): the metadata
     // predicate is compiled once and evaluated against the preliminary
@@ -406,14 +377,13 @@ object ScaleEval {
       val pb0 = System.nanoTime()
       val prep = engine.prepareServing("scale")
       val prepBuildSec = (System.nanoTime() - pb0) / 1e9
-      engine.catalystWarmServe = false // ground truth = the pure plan path
-      val matches = try (0 until 2).forall { qi =>
+      val matches = (0 until 2).forall { qi =>
         val exp = engine.queryCatalyst("scale", queries(qi), prelimK, finalK)
           .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(3))).toSeq
         val got = prep.query(queries(qi), prelimK, finalK)
           .map(h => (h.rank, h.id, h.cosineSimilarity)).toSeq
         got == exp
-      } finally engine.catalystWarmServe = true
+      }
       prep.query(queries(0), prelimK, finalK) // warm the code path
       // start+END canary bracket (r18b): the prepared block runs LAST in
       // this main, after every other bracket — the 2M×768 r18 rerun
@@ -472,11 +442,6 @@ object ScaleEval {
         s""""query_plan_ms_p50":${"%.0f".format(planP50)},""" +
         s""""query_exec_ms_p50":${"%.0f".format(execP50)},""" +
         s""""catalyst_ms_all":$catalystAll,""" +
-        s""""warm_serve_matches_pure":$warmMatchesPure,""" +
-        s""""catalyst_pure_ms_p50":${"%.0f".format(pureP50)},""" +
-        s""""pure_plan_ms_p50":${"%.0f".format(purePlanP50)},""" +
-        s""""pure_exec_ms_p50":${"%.0f".format(pureExecP50)},""" +
-        s""""catalyst_pure_ms_all":$pureAll,""" +
         s""""singles_ms_sorted":${singles.map("%.0f".format(_)).mkString("[", ",", "]")},""" +
         s""""catalyst_task_occupancy_ms_per_query":${"%.0f".format(catRunMs / nSingle)},""" +
         s""""catalyst_task_cpu_ms_per_query":${"%.0f".format(catCpuMs / nSingle)},""" +

@@ -193,10 +193,7 @@ final class RestServer(engine: Engine, port: Int = 8000,
       val vec = r.get(0)
       if (vec == null || !vec.isArray)
         fail(400, "each add_data entry must start with a vector")
-      val v = new Array[Float](vec.size())
-      var i = 0
-      while (i < v.length) { v(i) = vec.get(i).floatValue(); i += 1 }
-      vectors += v
+      vectors += finiteFloats(vec, "add_data vector")
       val meta = if (r.size() > 1) r.get(1) else null
       metas += (if (meta == null || meta.isNull) null
                 else if (meta.isTextual) meta.asText()
@@ -273,11 +270,9 @@ final class RestServer(engine: Engine, port: Int = 8000,
     val qNode = in.path("query_vector")
     if (!qNode.isArray || qNode.size() == 0)
       fail(400, "query_vector must be a non-empty list of floats")
-    val q = new Array[Float](qNode.size())
-    var i = 0
-    while (i < q.length) { q(i) = qNode.get(i).floatValue(); i += 1 }
-    val prelimK = in.path("preliminary_top_k").asInt(500)
-    val finalK = in.path("final_top_k").asInt(100)
+    val q = finiteFloats(qNode, "query_vector")
+    val prelimK = intField(in, "preliminary_top_k", 500)
+    val finalK = intField(in, "final_top_k", 100)
     val hits =
       try engine.queryHits(name, q, prelimK, finalK)
       catch { case e: IllegalArgumentException => fail(400, e.getMessage) }
@@ -300,6 +295,36 @@ final class RestServer(engine: Engine, port: Int = 8000,
     o.set[ObjectNode]("ids", ids)
     o.set[ObjectNode]("cosine_similarity", sims)
     reply(ex, 200, o)
+  }
+
+  /** A JSON array of finite numbers as floats, else 400. Jackson's
+    * floatValue() reads a string, null, boolean or object as 0.0 and an
+    * out-of-float-range number as Infinity; the reference's np.float32
+    * conversion raises on all of them (input_validation.py:77-94).
+    */
+  private def finiteFloats(arr: JsonNode, what: String): Array[Float] = {
+    val v = new Array[Float](arr.size())
+    var i = 0
+    while (i < v.length) {
+      val e = arr.get(i)
+      val f = if (e.isNumber) e.floatValue() else Float.NaN
+      if (!java.lang.Float.isFinite(f))
+        fail(400, s"$what element $i must be a finite number")
+      v(i) = f
+      i += 1
+    }
+    v
+  }
+
+  /** An optional int field: absent → `default`; anything but a JSON
+    * integer in int range → 400 (asInt read "abc" as the default and 1.7
+    * as 1).
+    */
+  private def intField(in: JsonNode, key: String, default: Int): Int = {
+    val n = in.get(key)
+    if (n == null) default
+    else if (n.isIntegralNumber && n.canConvertToInt) n.intValue()
+    else fail(400, s"$key must be an integer")
   }
 
   private def reload(ex: HttpExchange, name: String): Unit = {

@@ -43,17 +43,12 @@ final case class CatalogDoc(
     codedBucketShift: Int,         // coded-table layout: clusters 2^shift-grouped into
                                    // `cluster_bucket` partition dirs (-1 = legacy one
                                    // hive dir per cluster_id)
-    codedOwners: String = "",      // per-bucket owner INDEX VERSION as csv (one int per
+    codedOwners: String = "") {    // per-bucket owner INDEX VERSION as csv (one int per
                                    // cluster_bucket) — "" means every bucket lives under
                                    // `indexVersion`. Lets compaction rewrite ONLY the
                                    // buckets holding deleted rows: untouched buckets stay
                                    // in (and are read from) the version dir that wrote
                                    // them, so compact cost ∝ touched buckets, not table
-    codedPacked: Int = 0) {        // coded `code` column layout: 0 = array<int> (one
-                                   // 0..255 entry per subquantizer), 1 = PACKED — one
-                                   // BIGINT carrying up to 8 code bytes, lowest
-                                   // subquantizer in the lowest byte (r15 layout; readers
-                                   // are dual-mode, BatchANN.isPackedCode)
 
   def isTrained: Boolean = indexVersion >= 0
 
@@ -205,7 +200,6 @@ object Catalog {
          |  "createdAt": ${doc.createdAt},
          |  "codedBucketShift": ${doc.codedBucketShift},
          |  "codedOwners": ${quote(doc.codedOwners)},
-         |  "codedPacked": ${doc.codedPacked},
          |  "complete": true
          |}""".stripMargin
     val known = listEpochs(dir, f)
@@ -305,9 +299,12 @@ object Catalog {
       // (codedBucketShift -1 = the pre-r10 one-dir-per-cluster layout)
       numOr("usedTwoLevel", -1L).toInt, numOr("createdAt", 0L),
       numOr("codedBucketShift", -1L).toInt,
-      strOr("codedOwners", ""),
-      // absent from pre-r14 catalogs — array layout
-      numOr("codedPacked", 0L).toInt)
+      strOr("codedOwners", ""))
+    // the packed BIGINT `code` column is retired: every reader declares
+    // `code` as array<int>, so such a table would be misread — refuse it
+    if (numOr("codedPacked", 0L) != 0L)
+      sys.error(s"catalog for '$name': the coded table uses the retired " +
+        "packed code layout (codedPacked = 1); retrain the db to rewrite it")
     // cache under the winner's identity; the probe only ever hits when
     // this same file is still the newest listed, so a torn newer epoch
     // (winner != newest) simply never hits — correct, just uncached

@@ -115,33 +115,6 @@ class Engine(val spark: SparkSession, val root: String) {
     scala.collection.concurrent.TrieMap.empty[String, Object]
   @volatile var autoRoutePrepared: Boolean = true
 
-  /** r18 (VERDICT r17 next #2): [[queryCatalyst]]'s no-predicate trained
-    * branch serves through the engine's auto-prepared handle when one is
-    * ALREADY WARM and its blocks exactly cover the freshly-loaded doc
-    * (never builds one, never relaxes queryCatalyst's read-your-writes
-    * visibility — [[PreparedIndex.coversAddsOf]]). The returned frame is
-    * the same local relation the plan-free path builds, bit-identical by
-    * the prepared equality gates, but the candidate work runs over the
-    * handle's in-memory decoded blocks instead of re-decoding ~4 task-
-    * seconds of probed parquet per query (EVAL_r17 35M: occupancy
-    * 4,050 ms/query plan-free vs 153 prepared). OFF = the pure plan
-    * path, required by every spec/eval that uses queryCatalyst as the
-    * independent ground truth for the prepared path (comparing prepared
-    * to prepared gates nothing).
-    */
-  @volatile var catalystWarmServe: Boolean = true
-
-  /** r15 layout knob, off by default: when true, the NEXT train writes
-    * the coded table with the PACKED code column (one BIGINT carrying up
-    * to 8 code bytes) instead of `array<int>` — 2.2× the scan-decode
-    * throughput at identical disk bytes (packed-code micro-profile,
-    * PLANS.md r15).
-    * Per-TABLE, recorded in the catalog (`codedPacked`) so appends,
-    * compaction, and every reader follow the table's own layout
-    * regardless of the knob's current value. Requires m ≤ 8.
-    */
-  @volatile var packedCodesOnTrain: Boolean = false
-
   /** A3 — opt-in flat-index memory guard (reference
     * input_validation.py:101-105 via training_utils.py:58-61): when set,
     * an [[add]] to an UNTRAINED db is rejected — nothing committed — if
@@ -156,16 +129,16 @@ class Engine(val spark: SparkSession, val root: String) {
   @volatile var flatAddMemoryGuardBytes: Option[Long] = None
 
   /** Adds-refresh debounce of the AUTO-built handle — a test seam
-    * (CatalystWarmServeSpec pins read-your-writes with a debounce the
-    * test provably cannot outrun).
+    * (PreparedIndexSpec pins queryCatalyst's read-your-writes with a
+    * debounce the test provably cannot outrun).
     */
   protected def autoPreparedAddsRefreshMs: Long =
     Engine.PreparedAddsRefreshIntervalMs
 
   /** True when an auto-prepared handle exists for `name` (test seam:
-    * queryCatalyst's warm-serve must never BUILD one).
+    * queryCatalyst must never BUILD one).
     */
-  private[core] def hasAutoPrepared(name: String): Boolean =
+  private[graft] def hasAutoPrepared(name: String): Boolean =
     autoPrepared.contains(name)
 
   /** The warm handle serving `doc`'s exact version — build (or rebuild
@@ -951,32 +924,33 @@ class Engine(val spark: SparkSession, val root: String) {
     // the handle, and the handle is rebuilt here once the catalog doc
     // shows a moved version. `autoRoutePrepared = false` (or
     // [[queryCatalyst]]) restores the pure-plan path.
-    if (autoRoutePrepared && doc.isTrained) {
-      // catch IllegalArgumentException on all routed branches: a
-      // concurrent close (cache eviction / drop) can void the handle
-      // mid-call — the plan path serves the same observed state. This
-      // also covers validation failures: queryCatalyst re-runs the
-      // identical require()s, so a genuine bad query surfaces the same
-      // error from the plan path instead of racing the handle check.
-      predicate match {
-        case None =>
-          try {
-            val p = autoPreparedFor(doc)
-            return hitsDf(p.queryWith(doc, q, preliminaryTopK, finalTopK))
-          } catch { case _: IllegalArgumentException => () }
-        case Some(pred) =>
-          compileMetaPredicate(pred) match {
-            case Some(evalP) =>
-              try {
-                val p = autoPreparedFor(doc)
-                return hitsDf(p.queryFilteredWith(doc, q, preliminaryTopK,
-                  finalTopK, pred, evalP))
-              } catch { case _: IllegalArgumentException => () }
-            case None => () // predicate needs the full candidate schema
-          }
-      }
+    routedHits(doc, q, preliminaryTopK, finalTopK, predicate)
+      .fold(queryCatalyst(name, q, preliminaryTopK, finalTopK, predicate))(hitsDf)
+  }
+
+  /** The routed answer shared by [[query]] and [[queryHits]]: the warm
+    * auto-prepared handle's hits, or None when the caller must take the
+    * plan path — routing off, an untrained db, a predicate that needs the
+    * full candidate schema, or an IllegalArgumentException from the
+    * handle. The catch covers a concurrent close (cache eviction / drop)
+    * voiding the handle mid-call — the plan path serves the same
+    * observed state — and validation failures: queryCatalyst re-runs the
+    * identical require()s, so a genuine bad query surfaces the same error
+    * from the plan path instead of racing the handle check.
+    */
+  private def routedHits(doc: CatalogDoc, q: Array[Float], prelimK: Int,
+                         finalK: Int, predicate: Option[Column])
+      : Option[Array[PreparedIndex.Hit]] = {
+    def routed(serve: PreparedIndex => Array[PreparedIndex.Hit]) =
+      try Some(serve(autoPreparedFor(doc)))
+      catch { case _: IllegalArgumentException => None }
+    if (!autoRoutePrepared || !doc.isTrained) None
+    else predicate match {
+      case None => routed(_.queryWith(doc, q, prelimK, finalK))
+      case Some(pred) =>
+        compileMetaPredicate(pred).flatMap(evalP =>
+          routed(_.queryFilteredWith(doc, q, prelimK, finalK, pred, evalP)))
     }
-    queryCatalyst(name, q, preliminaryTopK, finalTopK, predicate)
   }
 
   /** [[query]] without the DataFrame: the driver-local hits, straight
@@ -991,33 +965,19 @@ class Engine(val spark: SparkSession, val root: String) {
                 finalTopK: Int = 100,
                 predicate: Option[Column] = None): Array[PreparedIndex.Hit] = {
     val doc = loadForServing(name)
-    if (autoRoutePrepared && doc.isTrained) {
-      predicate match {
-        case None =>
-          try return autoPreparedFor(doc).queryWith(doc, q, preliminaryTopK, finalTopK)
-          catch { case _: IllegalArgumentException => () }
-        case Some(pred) =>
-          compileMetaPredicate(pred).foreach { evalP =>
-            try return autoPreparedFor(doc).queryFilteredWith(doc, q,
-              preliminaryTopK, finalTopK, pred, evalP)
-            catch { case _: IllegalArgumentException => () }
-          }
+    routedHits(doc, q, preliminaryTopK, finalTopK, predicate).getOrElse {
+      queryCatalyst(name, q, preliminaryTopK, finalTopK, predicate).collect().map { r =>
+        PreparedIndex.Hit(r.getInt(0), r.getLong(1), r.getString(2), r.getDouble(3))
       }
-    }
-    queryCatalyst(name, q, preliminaryTopK, finalTopK, predicate).collect().map { r =>
-      PreparedIndex.Hit(r.getInt(0), r.getLong(1), r.getString(2), r.getDouble(3))
     }
   }
 
   /** [[query]] on the composable plan surface: a fresh catalog load
     * (read-your-writes, unlike the routed entry's TTL'd load), Column
-    * predicates, explainable frames. Since r18 the no-predicate trained
-    * branch is served from an already-warm prepared handle when its
-    * blocks exactly cover the fresh doc ([[catalystWarmServe]] — same
-    * rows, same local-relation surface, none of the per-query probed-
-    * parquet decode); set `catalystWarmServe = false` to pin the PURE
-    * plan path — the independent ground truth every spec/eval compares
-    * the routed/prepared forms against.
+    * predicates, explainable frames. Always the plan path (the per-epoch
+    * [[ServingScan]] or the Catalyst chunk scans) and never a prepared
+    * handle, so it is the independent ground truth every spec/eval
+    * compares the routed/prepared forms against.
     */
   def queryCatalyst(name: String, q: Array[Float], preliminaryTopK: Int = 500,
                     finalTopK: Int = 100,
@@ -1025,19 +985,6 @@ class Engine(val spark: SparkSession, val root: String) {
     val doc = load(name)
     require(doc.vectorDimension <= 0 || q.length == doc.vectorDimension,
       s"query dim ${q.length} != ${doc.vectorDimension}")
-    // warm-serve fast path (see [[catalystWarmServe]]): same frame, same
-    // fresh-doc visibility (coversAddsOf gates exactness), served from
-    // the already-warm handle's in-memory blocks. Strictly opportunistic:
-    // never builds a handle, and any handle-side refusal (concurrent
-    // close, version drift) falls through to the plan path below.
-    if (catalystWarmServe && predicate.isEmpty && doc.isTrained) {
-      autoPrepared.get(name)
-        .filter(p => !p.isStaleFor(doc) && p.coversAddsOf(doc))
-        .foreach { p =>
-          try return hitsDf(p.queryWith(doc, q, preliminaryTopK, finalTopK))
-          catch { case _: IllegalArgumentException => () }
-        }
-    }
     val qn = normalizeLocal(q)
     val table = snapshot(doc)
 
@@ -1508,8 +1455,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // (the scan sees the appended files) and in the side buffer (id >
     // pinned.maxId) — served twice
     val blocks = graft.operators.PreparedANN.buildBlocks(
-        codedDf(doc).filter(col("id") <= doc.maxId), parts,
-        codeM = indexModel(doc).pq.m)
+        codedDf(doc).filter(col("id") <= doc.maxId), parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     blocks.count() // materialize the cache at prepare time, not first query
     val collectDeleted = (d: CatalogDoc) =>
@@ -1524,13 +1470,10 @@ class Engine(val spark: SparkSession, val root: String) {
     val collectAppended = (d: CatalogDoc, sinceId: Long) => {
       val delta = codedDf(d).filter(col("id") > sinceId)
         .select("cluster_id", "id", "code", "vector", "metadata")
-      val packedM =
-        if (graft.operators.BatchANN.isPackedCode(delta)) indexModel(d).pq.m
-        else -1
       val rows = delta.limit(Engine.MaxPreparedSideRows + 1).collect()
       if (rows.length > Engine.MaxPreparedSideRows) None
       else Some(graft.operators.PreparedANN.foldBlocks(
-        rows.iterator.map(r => (r.getInt(0), r)), packedM))
+        rows.iterator.map(r => (r.getInt(0), r))))
     }
     new PreparedIndex(this, spark, doc, blocks, modelBroadcast(doc),
       collectDeleted, collectAppended, addsRefreshIntervalMs)
@@ -1685,7 +1628,7 @@ class Engine(val spark: SparkSession, val root: String) {
     * [[dropServingScanEpoch]].
     */
   private def servingScanStamp(doc: CatalogDoc): String =
-    s"${doc.maxId}|${doc.codedOwners}|${doc.codedPacked}"
+    s"${doc.maxId}|${doc.codedOwners}"
 
   /** Epoch lookup with a race-safe build: TrieMap.getOrElseUpdate is not
     * atomic for the builder's side effects, so two cold-epoch queries
@@ -1722,12 +1665,10 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   private def buildServingScanEpoch(doc: CatalogDoc): ServingScan.Epoch = {
     import org.apache.hadoop.fs.Path
-    val packed = doc.codedPacked == 1
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("cluster_id", IntegerType, nullable = false),
-      if (packed) StructField("code", LongType, nullable = false)
-      else StructField("code", ArrayType(IntegerType, containsNull = false),
+      StructField("code", ArrayType(IntegerType, containsNull = false),
         nullable = false)))
     // cluster_id rides in the FETCH projection even though the caller
     // only needs (id, vector, metadata): parquet's column-index filter
@@ -1763,7 +1704,7 @@ class Engine(val spark: SparkSession, val root: String) {
               .filter { case (b, _) => owned(b) }
         }
       }
-    ServingScan.buildEpoch(spark, packed, doc.codedBucketShift, schema,
+    ServingScan.buildEpoch(spark, doc.codedBucketShift, schema,
       fetchSchema, dirs, Engine.ServingScanTaskBytes, servingScanMinSplitBytes,
       servingScanStamp(doc))
   }
@@ -1924,7 +1865,7 @@ class Engine(val spark: SparkSession, val root: String) {
 
   private def buildCodedDf(doc: CatalogDoc, spark: SparkSession): DataFrame = {
       if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-        spark.read.schema(codedReadSchema(doc.codedBucketShift, doc.codedPacked == 1))
+        spark.read.schema(codedReadSchema(doc.codedBucketShift))
           .parquet(s"${doc.indexPath(root)}/coded")
       else {
         val buckets = Engine.codedBucketCount(math.max(1, doc.numClusters),
@@ -1950,9 +1891,9 @@ class Engine(val spark: SparkSession, val root: String) {
             if (dirs.isEmpty)
               spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                codedReadSchema(doc.codedBucketShift, doc.codedPacked == 1))
+                codedReadSchema(doc.codedBucketShift))
             else
-              spark.read.schema(codedReadSchema(doc.codedBucketShift, doc.codedPacked == 1))
+              spark.read.schema(codedReadSchema(doc.codedBucketShift))
                 .option("basePath", base).parquet(dirs: _*)
         }.reduce(_ union _)
       }
@@ -1970,16 +1911,11 @@ class Engine(val spark: SparkSession, val root: String) {
     * joins the declared schema (legacy layout reconstructs `cluster_id`
     * from its hive dirs instead).
     */
-  private def codedReadSchema(shift: Int, packed: Boolean): StructType = {
+  private def codedReadSchema(shift: Int): StructType = {
     // explicit schema (inference dies on a legitimately-empty index), so
     // the layout must come from the catalog, not the files
-    val base =
-      if (!packed) codedSchema
-      else StructType(codedSchema.fields.map(f =>
-        if (f.name == "code") StructField("code", LongType, nullable = false)
-        else f))
-    if (shift < 0) base
-    else StructType(base.fields :+
+    if (shift < 0) codedSchema
+    else StructType(codedSchema.fields :+
       StructField("cluster_bucket", IntegerType, nullable = false))
   }
 
@@ -2202,9 +2138,7 @@ class Engine(val spark: SparkSession, val root: String) {
     val indexDir = s"$root/$name/index/v$newVersion"
     val bucketShift = chooseCodedBucketShift(n, nlist, d,
       p.compressedVectorBytes)
-    val packNewTable = packedCodesOnTrain && p.compressedVectorBytes <= 8
     writeCoded(pinnedFull, model, bucketShift, nlist, s"$indexDir/coded",
-      packNewTable,
       // covering-row estimate: id+overheads ~16 B, 4-byte floats, ~96 B
       // code+metadata — drives the low-scratch grouped write at scale
       estBytes = n * (16L + 4L * d + 96L))
@@ -2247,7 +2181,6 @@ class Engine(val spark: SparkSession, val root: String) {
         usedTwoLevel = if (twoLevel) 1 else 0,
         codedBucketShift = bucketShift,
         codedOwners = "",
-        codedPacked = if (packNewTable) 1 else 0,
         indexVersion = newVersion,
         maxTrainedId = snapshotMaxId,
         numVectorsTrainedOn = n,
@@ -2316,7 +2249,7 @@ class Engine(val spark: SparkSession, val root: String) {
     * sortWithinPartitions).
     */
   private def writeCoded(rows: DataFrame, model: IndexModel, shift: Int,
-                         nlist: Int, path: String, packed: Boolean,
+                         nlist: Int, path: String,
                          estBytes: Long = -1L): Unit = {
     val groups =
       if (shift < 0 || estBytes <= 0) 1
@@ -2324,7 +2257,7 @@ class Engine(val spark: SparkSession, val root: String) {
         (estBytes + codedShuffleGroupBytes - 1) /
           codedShuffleGroupBytes).toInt
     if (groups <= 1)
-      writeCodedRows(assignEncode(rows, model, packed), shift, nlist, path,
+      writeCodedRows(assignEncode(rows, model), shift, nlist, path,
         "overwrite")
     else {
       val buckets = Engine.codedBucketCount(nlist, shift)
@@ -2332,7 +2265,7 @@ class Engine(val spark: SparkSession, val root: String) {
         s"(~${estBytes / (1 << 30)} GiB covering bytes, $buckets buckets)")
       val baseline = shuffleScratchBytes()
       (0 until groups).foreach { g =>
-        val encoded = assignEncode(rows, model, packed)
+        val encoded = assignEncode(rows, model)
         val inGroup = encoded.filter(
           (expr(s"cluster_id div ${1L << shift}") % groups).cast("int") === g)
         writeCodedRows(inGroup, shift, nlist, path,
@@ -2465,8 +2398,7 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   private def appendToCodedTable(doc: CatalogDoc, model: IndexModel,
                                  rows: DataFrame): Unit = {
-    // appends must match the TABLE's layout, not the train-time knob
-    val encoded = assignEncode(rows, model, doc.codedPacked == 1)
+    val encoded = assignEncode(rows, model)
     val nlist = math.max(1, doc.numClusters)
     if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
       writeCodedRows(encoded, doc.codedBucketShift, nlist,
@@ -2562,29 +2494,17 @@ class Engine(val spark: SparkSession, val root: String) {
     * the fused assign+encode kernel run in one scan; vector/metadata pass
     * through untouched.
     */
-  private def assignEncode(rows: DataFrame, model: IndexModel,
-                           packed: Boolean): DataFrame = {
+  private def assignEncode(rows: DataFrame, model: IndexModel): DataFrame = {
     val withP =
       if (model.pca.isIdentity)
         rows.withColumn("pvec", col("vector").cast("array<double>"))
       else
         rows.withColumn("pvec", Coder.pcaApplyCol(spark, model.pca, col("vector")))
-    // packed layout (codedPacked = 1): fold the m 0..255 entries into one
-    // BIGINT, lowest subquantizer in the lowest byte — a pure column
-    // expression, so the encode stage stays in whole-stage codegen
-    val codeCol =
-      if (!packed) col("code")
-      else {
-        require(model.pq.m <= 8, "packed code layout holds at most 8 bytes")
-        (0 until model.pq.m).map(j =>
-            shiftleft(element_at(col("code"), j + 1).cast("long"), 8 * j))
-          .reduce((a, b) => a.bitwiseOR(b))
-      }
     Coder.assignEncodeBatched(
         withP.select(col("id"), col("vector"), col("metadata"), col("pvec")),
         "pvec", model.centroids, model.pq)
       .select(col("id"), col("vector"), col("metadata"),
-        codeCol.as("code"), col("cluster_id"))
+        col("code"), col("cluster_id"))
   }
 
   /** Drop unreferenced snapshot/index/deletes versions (everything below

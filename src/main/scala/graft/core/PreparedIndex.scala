@@ -167,17 +167,6 @@ final class PreparedIndex private[core] (
     */
   def isStale: Boolean = isStaleFor(engine.load(pinned.name))
 
-  /** True when the handle's pinned blocks + adds side buffer ALREADY
-    * cover every row of `cur` — i.e. serving through the handle loses
-    * nothing to the adds-refresh debounce. [[Engine.queryCatalyst]]'s
-    * warm-serve fast path requires this (r18): queryCatalyst's contract
-    * is read-your-writes against its fresh catalog load, so it may ride
-    * the handle only when the handle's view is exactly current; adds
-    * inside the debounce window route to the plan-free scan instead.
-    */
-  private[core] def coversAddsOf(cur: CatalogDoc): Boolean =
-    !addsOverflowed && addsSnapshot._1 == cur.maxId
-
   /** [[isStale]] against an already-loaded catalog doc — the form the
     * engine's auto-routing uses (it has the doc in hand; no second
     * catalog read).

@@ -83,7 +83,6 @@ object ServingScan {
     * every query of this epoch reuses.
     */
   final class Epoch(
-      val packed: Boolean,
       val shift: Int,
       val bucketFiles: Map[Int, Array[(String, Long)]],
       val bcConf: Broadcast[SerializableConfiguration],
@@ -95,7 +94,7 @@ object ServingScan {
       // footer filtering they depend on) are exercised at sbt-test scale
       val minSplitBytes: Long = 4L << 20,
       // data stamp of the catalog doc this epoch's listing reflects
-      // (maxId|codedOwners|packed at build time) — the engine rebuilds
+      // (maxId|codedOwners at build time) — the engine rebuilds
       // the epoch when the TTL'd doc re-read shows a different stamp, so
       // a CROSS-DRIVER same-version coded append is served at doc-TTL
       // granularity instead of "stale until a version bump" (r18,
@@ -173,7 +172,7 @@ object ServingScan {
     * engine owns the owner-version layout rules, so the listing rule
     * stays in ONE place (Engine.servingScanEpoch).
     */
-  def buildEpoch(spark: SparkSession, packed: Boolean, shift: Int,
+  def buildEpoch(spark: SparkSession, shift: Int,
                  coarseSchema: StructType, fetchSchema: StructType,
                  bucketDirs: Seq[(Int, Path)],
                  maxTaskBytes: Long,
@@ -210,7 +209,7 @@ object ServingScan {
         b -> listed
     }.toMap
     val bc = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-    new Epoch(packed, shift, files, bc, coarseSchema.json, fetchSchema.json,
+    new Epoch(shift, files, bc, coarseSchema.json, fetchSchema.json,
       maxTaskBytes, minSplitBytes, stamp)
   }
 
@@ -325,7 +324,6 @@ object ServingScan {
     if (tasks.isEmpty) return Array.empty
     val sc = spark.sparkContext
     val bcConf = epoch.bcConf
-    val packed = epoch.packed
     val schemaJson = epoch.coarseSchemaJson
     val q = qp
     val rdd = sc.parallelize(tasks.toIndexedSeq, tasks.length)
@@ -338,7 +336,7 @@ object ServingScan {
       it.map { task =>
         graft.operators.BatchANN.coarsePartition(
           taskRows(task, bcConf.value.value, schemaJson), model, q,
-          task.probes.toSet, prelimK, packed)
+          task.probes.toSet, prelimK)
       }.toArray
     })
     graft.operators.BatchANN.mergeCoarseParts(

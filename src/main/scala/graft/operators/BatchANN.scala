@@ -62,7 +62,6 @@ object BatchANN {
 
     val src = coded.select(col("id").cast("long"), col("cluster_id").cast("int"),
       col("code"))
-    val packed = isPackedCode(coded)
 
     // InternalRow scan (queryExecution.toRdd), not the boxing Row API:
     // this kernel touches every probed row, and `getSeq[Int]` boxed each
@@ -73,7 +72,7 @@ object BatchANN {
     val partialRdd = src.queryExecution.toRdd.mapPartitions { it =>
       val model = bcModel.value
       val (qvecs, c2q) = bcQ.value
-      val heaps = scanPartitionHeaps(it, model, qvecs, c2q, prelimK, packed)
+      val heaps = scanPartitionHeaps(it, model, qvecs, c2q, prelimK)
       heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
         h.iterator.map { case (d, id, cid) => Row(qIds(qi), id, d, cid) }
       }
@@ -89,28 +88,17 @@ object BatchANN {
       .select("query_id", "id", "adc_dist", "cluster_id")
   }
 
-  /** True when the frame carries the r15 PACKED code layout (one BIGINT
-    * holding up to 8 code bytes, lowest subquantizer in the lowest byte)
-    * instead of the `array<int>` form. The layout is self-describing by
-    * column type, so readers serve BOTH without a catalog flag.
-    */
-  def isPackedCode(coded: DataFrame): Boolean =
-    coded.schema("code").dataType == LongType
-
   /** The per-partition coarse kernel shared by [[coarseCandidates]] and
     * [[coarseSingle]]: decode each probed row's PQ code once, score it
     * for exactly the queries probing its cluster, keep per-query bounded
     * heaps. Returns one heap per query of ≤ prelimK (adc_dist, id,
     * cluster_id) entries — worst kept under (dist asc, id asc) on top.
-    * `packedCode` selects the code read (see [[isPackedCode]]); the
-    * scored values are identical either way.
     */
   private def scanPartitionHeaps(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       model: IndexModel, qvecs: Array[Array[Float]],
       c2q: Map[Int, Array[Int]],
-      prelimK: Int,
-      packedCode: Boolean): Array[PriorityQueue[(Double, Long, Int)]] = {
+      prelimK: Int): Array[PriorityQueue[(Double, Long, Int)]] = {
     val (centroids, codebooks, subDim) =
       (model.centroids, model.pq.codebooks, model.pq.subDim)
     val m = codebooks.length
@@ -126,15 +114,9 @@ object BatchANN {
       val cid = r.getInt(1)
       c2q.get(cid).foreach { probing =>
         val id = r.getLong(0)
-        if (packedCode) {
-          val word = r.getLong(2)
-          var j = 0
-          while (j < m) { codeBuf(j) = ((word >>> (8 * j)) & 0xFF).toInt; j += 1 }
-        } else {
-          val code = r.getArray(2)
-          var j = 0
-          while (j < m) { codeBuf(j) = code.getInt(j); j += 1 }
-        }
+        val code = r.getArray(2)
+        var j = 0
+        while (j < m) { codeBuf(j) = code.getInt(j); j += 1 }
         val cc = centroids(cid)
         if (probing.length == 1) {
           // single-query fused reconstruct+distance (r18): the separate
@@ -264,10 +246,10 @@ object BatchANN {
     */
   def coarsePartition(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
                       model: IndexModel, qp: Array[Float], probeSet: Set[Int],
-                      prelimK: Int, packed: Boolean)
+                      prelimK: Int)
       : (Array[Double], Array[Long], Array[Int]) = {
     val c2q = probeSet.iterator.map(c => c -> Array(0)).toMap
-    val heap = scanPartitionHeaps(it, model, Array(qp), c2q, prelimK, packed)(0)
+    val heap = scanPartitionHeaps(it, model, Array(qp), c2q, prelimK)(0)
     val n = heap.size
     val ds = new Array[Double](n); val ids = new Array[Long](n)
     val cs = new Array[Int](n)
@@ -323,11 +305,11 @@ object BatchANN {
                           prelimK: Int): Array[(Long, Double, Int)] = {
     val probeSet = probes.toSet
     val bcQ = spark.sparkContext.broadcast((qp, probeSet))
-    def partFn(packed: Boolean) =
+    val partFn =
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         val model = bcModel.value
         val (q, ps) = bcQ.value
-        coarsePartition(it, model, q, ps, prelimK, packed)
+        coarsePartition(it, model, q, ps, prelimK)
       }
     def scanRdd(df: DataFrame) =
       df.select(col("id").cast("long"), col("cluster_id").cast("int"),
@@ -342,28 +324,22 @@ object BatchANN {
     val parts: Array[(Array[Double], Array[Long], Array[Int])] =
       if (chunks.isEmpty) Array.empty
       else if (chunks.lengthCompare(1) == 0)
-        spark.sparkContext.runJob(scanRdd(chunks.head),
-          partFn(isPackedCode(chunks.head)))
+        spark.sparkContext.runJob(scanRdd(chunks.head), partFn)
       else {
         val rdds = new Array[org.apache.spark.rdd.RDD[
           org.apache.spark.sql.catalyst.InternalRow]](chunks.length)
-        val packed = new Array[Boolean](chunks.length)
         val errors = new java.util.concurrent.atomic.AtomicReference[Throwable]()
         val threads = chunks.zipWithIndex.map { case (df, i) =>
           val t = new Thread(() => {
-            try {
-              packed(i) = isPackedCode(df)
-              rdds(i) = scanRdd(df)
-            } catch { case e: Throwable => errors.compareAndSet(null, e) }
+            try rdds(i) = scanRdd(df)
+            catch { case e: Throwable => errors.compareAndSet(null, e) }
           })
           t.setDaemon(true); t.start(); t
         }
         threads.foreach(_.join())
         if (errors.get() != null) throw errors.get()
-        require(packed.distinct.length == 1,
-          "chunk scans of one table must share a code layout")
         spark.sparkContext.runJob(spark.sparkContext.union(rdds.toIndexedSeq),
-          partFn(packed(0)))
+          partFn)
       }
     bcQ.unpersist(blocking = false)
     mergeCoarseParts(parts, prelimK)

@@ -63,14 +63,9 @@ object PreparedANN {
   /** Fold `(cluster_id, covering row)` pairs into per-cluster primitive
     * blocks — shared by the distributed prepare-time build and the
     * driver-local side-buffer build for post-prepare appends.
-    *
-    * `packedM` > 0 means the `code` column is the r15 PACKED layout (one
-    * BIGINT, `packedM` code bytes, lowest subquantizer in the lowest
-    * byte); the resulting blocks are byte-identical to the array-layout
-    * fold of the same codes (PackedCodeSpec).
     */
-  def foldBlocks(it: Iterator[(Int, org.apache.spark.sql.Row)],
-                 packedM: Int = -1): Map[Int, ClusterBlock] = {
+  def foldBlocks(it: Iterator[(Int, org.apache.spark.sql.Row)])
+      : Map[Int, ClusterBlock] = {
     val ids = mutable.Map.empty[Int, mutable.ArrayBuilder.ofLong]
     val codes = mutable.Map.empty[Int, mutable.ArrayBuilder.ofByte]
     val vecs = mutable.Map.empty[Int, mutable.ArrayBuilder.ofFloat]
@@ -78,11 +73,7 @@ object PreparedANN {
     it.foreach { case (cid, r) =>
       ids.getOrElseUpdate(cid, new mutable.ArrayBuilder.ofLong) += r.getLong(1)
       val cb = codes.getOrElseUpdate(cid, new mutable.ArrayBuilder.ofByte)
-      if (packedM > 0) {
-        val word = r.getLong(2)
-        var j = 0
-        while (j < packedM) { cb += ((word >>> (8 * j)) & 0xFF).toByte; j += 1 }
-      } else r.getSeq[Int](2).foreach(c => cb += c.toByte)
+      r.getSeq[Int](2).foreach(c => cb += c.toByte)
       val vb = vecs.getOrElseUpdate(cid, new mutable.ArrayBuilder.ofFloat)
       r.getSeq[Float](3).foreach(vb += _)
       metas.getOrElseUpdate(cid, mutable.ArrayBuffer.empty[String]) +=
@@ -120,13 +111,7 @@ object PreparedANN {
     * the exchange was the ENOSPC risk (tables already wider than
     * `numParts` splits).
     */
-  def buildBlocks(coded: DataFrame, numParts: Int,
-                  codeM: Int = -1): RDD[Map[Int, ClusterBlock]] = {
-    val packedM =
-      if (BatchANN.isPackedCode(coded)) {
-        require(codeM > 0, "packed code layout needs the model's m")
-        codeM
-      } else -1
+  def buildBlocks(coded: DataFrame, numParts: Int): RDD[Map[Int, ClusterBlock]] = {
     val src = coded.select("cluster_id", "id", "code", "vector", "metadata")
     // partition-count probe via the already-planned internal RDD —
     // `src.rdd` would wrap the plan in a second to-external-row
@@ -137,7 +122,7 @@ object PreparedANN {
       else src.repartition(numParts)
     shaped.rdd
       .mapPartitions(it =>
-        Iterator.single(foldBlocks(it.map(r => (r.getInt(0), r)), packedM)))
+        Iterator.single(foldBlocks(it.map(r => (r.getInt(0), r)))))
   }
 
   /** Serve one query against one partition's blocks: ADC top-`prelimK`

@@ -69,7 +69,7 @@ class AdcGroupingSpec extends SparkSpec {
     val row = new GenericInternalRow(Array[Any](7L, 0,
       new GenericArrayData(Array(0, 0))))
     val (ds, ids, _) = BatchANN.coarsePartition(Iterator(row), model, qp,
-      probeSet = Set(0), prelimK = 1, packed = false)
+      probeSet = Set(0), prelimK = 1)
     assert(ids.toSeq === Seq(7L))
     assert(ds(0) === treeExpected)
   }

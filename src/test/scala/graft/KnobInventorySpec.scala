@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every environment variable / system property read under `src/main`
   * must be documented in README.md's "Configuration" table, and every
   * name in that table must still be read. A knob added without a row
-  * (or a row left behind by a deleted knob) fails the suite.
+  * (or a row left behind by a deleted knob) fails the suite. The same
+  * holds for the public per-instance switches of `class Engine` and the
+  * field list in that section's closing paragraph.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -30,13 +32,36 @@ class KnobInventorySpec extends AnyFunSuite {
     }.toSet
   }
 
-  private def readmeNames(): Set[String] = {
+  private def configSection(): List[String] = {
     val lines = Files.readAllLines(Paths.get("README.md")).asScala.toList
     val section = lines.dropWhile(_.trim != "## Configuration").drop(1)
       .takeWhile(l => !l.startsWith("## "))
     assert(section.nonEmpty, "README.md has no '## Configuration' section")
+    section
+  }
+
+  private def readmeNames(): Set[String] = {
     val Row = """\|\s*`([^`]+)`\s*\|.*""".r
-    section.collect { case Row(name) => name }.toSet
+    configSection().collect { case Row(name) => name }.toSet
+  }
+
+  // member-level `var`s (two-space indent, optionally @volatile, no access
+  // modifier) between `class Engine(` and `object Engine {`
+  private def engineSwitches(): Set[String] = {
+    val src = Files.readString(Paths.get("src/main/scala/graft/core/Engine.scala"))
+    val start = src.indexOf("\nclass Engine(")
+    val end = src.indexOf("\nobject Engine {")
+    assert(start >= 0 && end > start, "class Engine / object Engine not found")
+    """(?m)^  (?:@volatile )?var (\w+)""".r
+      .findAllMatchIn(src.substring(start, end)).map(_.group(1)).toSet
+  }
+
+  private def readmeEngineFields(): Set[String] = {
+    val para = configSection()
+      .dropWhile(l => !l.startsWith("Engine behaviour that specs and evals switch"))
+      .takeWhile(_.trim.nonEmpty).mkString(" ")
+    assert(para.nonEmpty, "README Configuration has no engine field paragraph")
+    """`(?:Engine\.)?(\w+)`""".r.findAllMatchIn(para).map(_.group(1)).toSet
   }
 
   test("README Configuration table lists exactly the knobs src/main reads") {
@@ -49,5 +74,13 @@ class KnobInventorySpec extends AnyFunSuite {
       s"read under src/main but missing from README Configuration: ${undocumented.toSeq.sorted}")
     assert(stale.isEmpty,
       s"listed in README Configuration but no longer read: ${stale.toSeq.sorted}")
+  }
+
+  test("README Configuration lists exactly the public switches of class Engine") {
+    val fields = engineSwitches()
+    val documented = readmeEngineFields()
+    assert(fields.nonEmpty && documented.nonEmpty)
+    assert(fields == documented,
+      s"Engine public vars ${fields.toSeq.sorted} != README fields ${documented.toSeq.sorted}")
   }
 }

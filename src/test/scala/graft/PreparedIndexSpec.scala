@@ -21,14 +21,7 @@ class PreparedIndexSpec extends SparkSpec {
   private val PrelimK = 200
   private val FinalK = 25
 
-  lazy val engine = {
-    val e = new Engine(spark, tmpDir("graft-prep"))
-    // regular()/regularP() are this spec's INDEPENDENT ground truth for
-    // the prepared/routed paths — pin queryCatalyst to the pure plan
-    // path (warm-serve would compare prepared against prepared)
-    e.catalystWarmServe = false
-    e
-  }
+  lazy val engine = new Engine(spark, tmpDir("graft-prep"))
 
   private def mkCorpus(n: Int, seed: Long): Array[Array[Float]] = {
     val rnd = new Random(seed)
@@ -479,5 +472,51 @@ class PreparedIndexSpec extends SparkSpec {
     // no row lost or duplicated by the split
     val ids = maps.flatMap(_.valuesIterator.flatMap(_.ids)).sorted.toSeq
     assert(ids == (0L until 64L))
+  }
+
+  /** A small trained db (4 coded buckets) on its own engine, with the
+    * auto-built handle's adds-refresh debounce set to `debounceMs`.
+    */
+  private def smallTrained(dir: String, debounceMs: Long): Engine = {
+    val d = 12
+    val e = new Engine(spark, tmpDir(dir)) {
+      override protected def chooseCodedBucketShift(nn: Long, nlist: Int,
+                                                    dd: Int, m: Int): Int = 2
+      override protected def autoPreparedAddsRefreshMs: Long = debounceMs
+    }
+    val rnd = new Random(23L)
+    val centers = Array.fill(10, d)(rnd.nextGaussian().toFloat)
+    val vecs = Seq.tabulate(1600) { i =>
+      val c = centers(i % 10)
+      Array.tabulate(d)(j => c(j) + 0.3f * rnd.nextGaussian().toFloat)
+    }
+    e.create("db", vectorDimension = d)
+    e.addLocal("db", vecs, Seq.tabulate(1600)(i => s"""{"i":$i}"""))
+    e.train("db", params = Some(graft.index.IndexParams(d, d, 4, omitOpq = true)),
+      kmeansIters = 3, seed = 23L, minTrainRows = 1)
+    e
+  }
+
+  test("queryCatalyst never builds a handle (cold engine stays on the plan path)") {
+    val e = smallTrained("graft-catalyst-cold", debounceMs = 100L)
+    // no engine.query/queryHits has run: the catalyst call must neither
+    // pay for nor trigger a prepared block build
+    val rows = e.queryCatalyst("db", Array.fill(12)(0.1f), 120, 10).collect()
+    assert(rows.nonEmpty)
+    assert(!e.hasAutoPrepared("db"), "queryCatalyst built a prepared handle")
+  }
+
+  test("read-your-writes: an add inside the debounce window is visible immediately") {
+    // a LONG debounce so the warm handle provably cannot have folded the add
+    val e = smallTrained("graft-catalyst-ryw", debounceMs = 600000L)
+    val rnd = new Random(25L)
+    val q = Array.fill(12)(rnd.nextGaussian().toFloat)
+    e.query("db", q, 120, 10).collect() // warm the handle
+    // a marker row exactly at the query point dominates the top-1
+    val marker = q.map(x => x * 10f)
+    e.addLocal("db", Seq(marker), Seq("""{"marker":true}"""))
+    val top = e.queryCatalyst("db", q, 120, 1).collect()
+    assert(top.nonEmpty && top.head.getString(2) == """{"marker":true}""",
+      "freshly-added row invisible through queryCatalyst - read-your-writes broken")
   }
 }

@@ -94,6 +94,37 @@ class RestServerSpec extends SparkSpec {
     assert(cd == 400) // dimension mismatch
   }
 
+  test("hostile vector elements and k values are rejected with 400, nothing stored") {
+    def info(): Long =
+      mapper.readTree(get("/db/restdb/info")._2.get("db_info").asText())
+        .get("num_vectors").asLong()
+    val before = info()
+    val ok = Seq.fill(7)("0.5")
+    // Jackson's floatValue() reads each of these as 0.0 or Infinity
+    Seq("\"abc\"", "null", "true", "{}", "[]", "1e39", "-1e39").foreach { bad =>
+      val vec = (bad +: ok).mkString("[", ",", "]")
+      val (ca, ba) = post("/db/restdb/add", s"""{"add_data": [[$vec, {"x": 1}]]}""")
+      assert(ca == 400, s"add with element $bad: $ca $ba")
+      assert(ba.get("detail").asText().contains("finite number"))
+      val (cq, bq) = post("/db/restdb/query", s"""{"query_vector": $vec}""")
+      assert(cq == 400, s"query with element $bad: $cq $bq")
+      assert(bq.get("detail").asText().contains("finite number"))
+    }
+    assert(info() == before, "a rejected add stored rows")
+    val q = Seq("1") ++ Seq.fill(7)("0")
+    Seq("\"abc\"", "1.7", "null", "true", "[1]", "3000000000").foreach { bad =>
+      Seq("final_top_k", "preliminary_top_k").foreach { key =>
+        val (c, b) = post("/db/restdb/query",
+          s"""{"query_vector": ${q.mkString("[", ",", "]")}, "$key": $bad}""")
+        assert(c == 400 && b.get("detail").asText().contains(key), s"$key = $bad: $c $b")
+      }
+    }
+    // integers and finite values that round to 0.0f still pass
+    val (cg, bg) = post("/db/restdb/query",
+      s"""{"query_vector": [1, 0, 0, 0, 0, 0, 0, 1e-50], "final_top_k": 2}""")
+    assert(cg == 200 && bg.get("ids").size() == 2, s"$cg $bg")
+  }
+
   test("info envelope: db_info is a JSON-encoded string (fastapi.py:75-105)") {
     val (ci, bi) = get("/db/restdb/info")
     assert(ci == 200)

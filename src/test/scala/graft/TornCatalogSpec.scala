@@ -128,6 +128,22 @@ class TornCatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no complete epoch"))
   }
 
+  test("a catalog carrying the retired packed code layout fails to load, naming the db") {
+    val root = newRoot()
+    Catalog.save(root, doc("packeddb", 10L))
+    val f = fsOf(root)
+    val first = new Path(new Path(root, "packeddb"), "catalog.00000000000000000001.json")
+    val in = f.open(first)
+    val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    assert(json.contains("\"complete\": true") && !json.contains("codedPacked"),
+      "a current save must not write codedPacked")
+    writeRaw(root, "packeddb", "catalog.00000000000000000002.json",
+      json.replace("\"complete\": true", "\"codedPacked\": 1,\n  \"complete\": true"))
+    val e = intercept[RuntimeException](Catalog.load(root, "packeddb"))
+    assert(e.getMessage.contains("'packeddb'") && e.getMessage.contains("retrain"),
+      e.getMessage)
+  }
+
   test("reader never sees a torn or absent doc while a writer saves and sweeps") {
     val root = newRoot()
     Catalog.save(root, doc("db", 0L))

@@ -39,16 +39,11 @@ class CoarseUnionJobSpec extends SparkSpec {
     e.train("db", params = Some(IndexParams(D, D, 4, omitOpq = true)),
       kmeansIters = 6, seed = Seed, minTrainRows = 1)
     e.remove("db", Seq(1L, 2L, 3L))
-    e.catalystWarmServe = false
     e
   }
 
   // the default chunk size on the same root: every probe list is one chunk
-  private lazy val single: Engine = {
-    val e = new Engine(spark, chunked.root)
-    e.catalystWarmServe = false
-    e
-  }
+  private lazy val single: Engine = new Engine(spark, chunked.root)
 
   private def results(e: Engine, q: Array[Float]): Seq[(Int, Long, String, Double)] =
     e.queryCatalyst("db", q, preliminaryTopK = 200, finalTopK = 20)

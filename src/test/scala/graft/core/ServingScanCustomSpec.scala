@@ -8,17 +8,16 @@ import graft.index.IndexParams
 /** Bit-identity and staleness gates for the plan-free serving scan
   * ([[ServingScan]]): its coarse candidate array must equal the Catalyst
   * chunk-scan path's EXACTLY (same kernel, same merge — any drift means
-  * the reader surfaced different rows), across array and packed code
-  * layouts, and the per-epoch listing must be invalidated by the
-  * same-version post-train append exactly like the cached serving
-  * DataFrames are.
+  * the reader surfaced different rows), and the per-epoch listing must
+  * be invalidated by the same-version post-train append exactly like the
+  * cached serving DataFrames are.
   */
 class ServingScanCustomSpec extends SparkSpec {
 
   private val D = 16
   private val Seed = 11L
 
-  private def buildEngine(dir: String, packed: Boolean, n: Int = 2400,
+  private def buildEngine(dir: String, n: Int = 2400,
                           minSplit: Long = 4L << 20): Engine = {
     val e = new Engine(spark, tmpDir(dir)) {
       override protected def chooseCodedBucketShift(nn: Long, nlist: Int,
@@ -26,7 +25,6 @@ class ServingScanCustomSpec extends SparkSpec {
       override protected def probePushChunk: Int = 4 // force multi-chunk Catalyst shape
       override protected def servingScanMinSplitBytes: Long = minSplit
     }
-    e.packedCodesOnTrain = packed
     val rnd = new Random(Seed)
     val centers = Array.fill(12, D)(rnd.nextGaussian().toFloat)
     val vecs = Seq.tabulate(n) { i =>
@@ -71,15 +69,11 @@ class ServingScanCustomSpec extends SparkSpec {
   }
 
   test("array layout: custom coarse bit-equal to Catalyst chunks, all probe shapes") {
-    compareAllShapes(buildEngine("graft-sscan-arr", packed = false))
-  }
-
-  test("packed layout: custom coarse bit-equal to Catalyst chunks, all probe shapes") {
-    compareAllShapes(buildEngine("graft-sscan-pack", packed = true))
+    compareAllShapes(buildEngine("graft-sscan-arr"))
   }
 
   test("same-version post-train append invalidates the epoch listing") {
-    val e = buildEngine("graft-sscan-stale", packed = false, n = 2000)
+    val e = buildEngine("graft-sscan-stale", n = 2000)
     val doc0 = e.load("db")
     val model = e.indexModel(doc0)
     val rnd = new Random(Seed + 2)
@@ -102,7 +96,7 @@ class ServingScanCustomSpec extends SparkSpec {
   }
 
   test("full query path equality: knob on vs knob off") {
-    val e = buildEngine("graft-sscan-e2e", packed = false)
+    val e = buildEngine("graft-sscan-e2e")
     val rnd = new Random(Seed + 3)
     val qs = Array.fill(4)(Array.fill(D)(rnd.nextGaussian().toFloat))
     def run(): Seq[Seq[Any]] = qs.toSeq.flatMap { q =>
@@ -121,7 +115,7 @@ class ServingScanCustomSpec extends SparkSpec {
     // range re-read every row group: duplicate coarse candidates and
     // N× fetch rows (the r17 scaleeval_35m_final equality-gate failure,
     // reproduced and pinned here at spec scale).
-    val e = buildEngine("graft-sscan-ranges", packed = false, minSplit = 1L << 10)
+    val e = buildEngine("graft-sscan-ranges", minSplit = 1L << 10)
     val doc = e.load("db")
     val model = e.indexModel(doc)
     val rnd = new Random(Seed + 21)
@@ -142,7 +136,7 @@ class ServingScanCustomSpec extends SparkSpec {
   }
 
   test("custom fetch returns exactly the rows the Catalyst fetch scan returns") {
-    val e = buildEngine("graft-sscan-fetch", packed = false)
+    val e = buildEngine("graft-sscan-fetch")
     val doc = e.load("db")
     val model = e.indexModel(doc)
     val rnd = new Random(Seed + 7)
@@ -167,7 +161,7 @@ class ServingScanCustomSpec extends SparkSpec {
   }
 
   test("filtered query path equality: knob on vs knob off") {
-    val e = buildEngine("graft-sscan-filt", packed = false)
+    val e = buildEngine("graft-sscan-filt")
     import org.apache.spark.sql.functions._
     val pred = get_json_object(col("metadata"), "$.i").cast("long") % 2 === 0
     val rnd = new Random(Seed + 9)
@@ -188,24 +182,24 @@ class ServingScanCustomSpec extends SparkSpec {
     val bc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration(false)))
-    val e1 = new ServingScan.Epoch(false, 1,
+    val e1 = new ServingScan.Epoch(1,
       Map(0 -> Array(("f0", 10L))), bc, "", "", maxTaskBytes = 512L << 20)
     // probes 4,5 -> bucket 2: absent from bucketFiles
     assert(ServingScan.planTasks(e1, Array(4, 5), parallelism = 32).isEmpty)
     // bucket present but with an empty file array
-    val e2 = new ServingScan.Epoch(false, 1,
+    val e2 = new ServingScan.Epoch(1,
       Map(2 -> Array.empty[(String, Long)]), bc, "", "",
       maxTaskBytes = 512L << 20)
     assert(ServingScan.planTasks(e2, Array(4), parallelism = 32).isEmpty)
     // engine-level: a fetch over zero coarse candidates returns an empty
     // row set (not an exception) and the e2e query serves an empty frame
-    val e = buildEngine("graft-sscan-zero", packed = false, n = 600)
+    val e = buildEngine("graft-sscan-zero", n = 600)
     val doc = e.load("db")
     assert(e.servingScanFetchRows(doc, Array.empty).exists(_.isEmpty))
   }
 
   test("footer cache is byte-bounded: eviction keeps resident bytes under the cap") {
-    val e = buildEngine("graft-sscan-footer", packed = false)
+    val e = buildEngine("graft-sscan-footer")
     val doc = e.load("db")
     val model = e.indexModel(doc)
     val rnd = new Random(Seed + 31)
@@ -286,7 +280,7 @@ class ServingScanCustomSpec extends SparkSpec {
       0 -> Array(("f0a", 10L), ("f0b", 10L)),
       1 -> Array(("f1a", 25L)),
       3 -> Array(("f3a", 5L), ("f3b", 5L), ("f3c", 5L)))
-    val e1 = new ServingScan.Epoch(false, 1, tiny, bc, "", "",
+    val e1 = new ServingScan.Epoch(1, tiny, bc, "", "",
       maxTaskBytes = 512L << 20)
     // shift=1: probes 0,1 -> bucket 0; 2,3 -> bucket 1; 6 -> bucket 3
     val t1 = ServingScan.planTasks(e1, Array(6, 2, 0, 1, 3), parallelism = 32)
@@ -304,7 +298,7 @@ class ServingScanCustomSpec extends SparkSpec {
     val gb = 600L << 20
     val big = Map(0 -> Array(("b0", gb)), 1 -> Array(("b1", gb)),
       2 -> Array(("b2", gb)))
-    val e2 = new ServingScan.Epoch(false, 1, big, bc, "", "",
+    val e2 = new ServingScan.Epoch(1, big, bc, "", "",
       maxTaskBytes = 512L << 20)
     val t2 = ServingScan.planTasks(e2, Array(0, 2, 4), parallelism = 32)
     assert(t2.length >= 32, s"expected >=32 tasks, got ${t2.length}")
