@@ -127,7 +127,8 @@ final class RestServer(engine: Engine, port: Int = 8000,
           arr(initialQueue.toArray(Array.empty[String]).toSeq)))
       case ("POST", "db" :: "update_max_memory_usage" :: Nil) =>
         engine.updateMaxMemoryUsage(
-          body(ex).path("max_memory_usage").asLong())
+          longField(body(ex), "max_memory_usage", nullIsAbsent = false)
+            .getOrElse(fail(400, "max_memory_usage must be an integer")))
         reply(ex, 200, obj("message" -> "Max memory usage updated successfully"))
       case ("GET", "db" :: name :: "info" :: Nil) => info(ex, name)
       case ("POST", "db" :: name :: "add" :: Nil) => add(ex, name)
@@ -155,12 +156,12 @@ final class RestServer(engine: Engine, port: Int = 8000,
     val name = in.path("name").asText()
     if (engine.exists(name))
       fail(400, "Database with this name already exists")
-    val dim = if (in.hasNonNull("vector_dimension"))
-      in.get("vector_dimension").asInt() else -1
+    // both sizes are validated before anything is created
+    val dim = intField(in, "vector_dimension", -1, nullIsAbsent = true)
+    val maxMemory = longField(in, "max_memory_usage", nullIsAbsent = true)
     try engine.create(name, vectorDimension = dim)
     catch { case e: IllegalArgumentException => fail(400, e.getMessage) }
-    if (in.hasNonNull("max_memory_usage"))
-      dbMaxMemory(name) = in.get("max_memory_usage").asLong()
+    maxMemory.foreach(dbMaxMemory(name) = _)
     reply(ex, 200, obj("message" -> "Database created successfully"))
   }
 
@@ -213,8 +214,13 @@ final class RestServer(engine: Engine, port: Int = 8000,
   private def removeIds(ex: HttpExchange, name: String): Unit = {
     if (!engine.exists(name)) notFound()
     val idsNode = body(ex).path("ids")
+    if (!idsNode.isArray) fail(400, "ids must be a list of integers")
     val ids = Array.newBuilder[Long]
-    idsNode.forEach(n => ids += n.asLong())
+    // asLong() read "abc", null and {} as 0 and true or 1.7 as 1
+    idsNode.forEach { n =>
+      if (n.isIntegralNumber && n.canConvertToLong) ids += n.longValue()
+      else fail(400, "ids must be a list of integers")
+    }
     val xs = ids.result().toSeq
     try engine.remove(name, xs)
     catch { case e: IllegalArgumentException => fail(400, e.getMessage) }
@@ -239,9 +245,9 @@ final class RestServer(engine: Engine, port: Int = 8000,
     val params =
       if (hasDims)
         Some(IndexParams(
-          in.path("pca_dimension").asInt(-1),
-          in.path("opq_dimension").asInt(-1),
-          in.path("compressed_vector_bytes").asInt(-1),
+          intField(in, "pca_dimension", -1, nullIsAbsent = true),
+          intField(in, "opq_dimension", -1, nullIsAbsent = true),
+          intField(in, "compressed_vector_bytes", -1, nullIsAbsent = true),
           omitOpq = in.path("omit_opq").asBoolean(false)))
       else if (in.hasNonNull("omit_opq")) {
         val dim = engine.load(name).vectorDimension
@@ -318,12 +324,21 @@ final class RestServer(engine: Engine, port: Int = 8000,
 
   /** An optional int field: absent → `default`; anything but a JSON
     * integer in int range → 400 (asInt read "abc" as the default and 1.7
-    * as 1).
+    * as 1). `nullIsAbsent` lets an explicit null mean absent, for the
+    * fields the reference declares `Optional`.
     */
-  private def intField(in: JsonNode, key: String, default: Int): Int = {
+  private def intField(in: JsonNode, key: String, default: Int,
+                       nullIsAbsent: Boolean = false): Int =
+    longField(in, key, nullIsAbsent).fold(default) { v =>
+      if (v.isValidInt) v.toInt else fail(400, s"$key must be an integer")
+    }
+
+  /** [[intField]]'s Long twin, for memory sizes: None when absent. */
+  private def longField(in: JsonNode, key: String,
+                        nullIsAbsent: Boolean): Option[Long] = {
     val n = in.get(key)
-    if (n == null) default
-    else if (n.isIntegralNumber && n.canConvertToInt) n.intValue()
+    if (n == null || (nullIsAbsent && n.isNull)) None
+    else if (n.isIntegralNumber && n.canConvertToLong) Some(n.longValue())
     else fail(400, s"$key must be an integer")
   }
 

@@ -16,8 +16,9 @@ import graft.index.IndexParams
   *
   * Layout per database:
   * {{{
-  *   <root>/<name>/catalog.json
+  *   <root>/<name>/catalog.<epoch>.json      one complete file per save ([[Catalog.save]])
   *   <root>/<name>/data/v<dataVersion>/      (id, vector, metadata) parquet
+  *   <root>/<name>/deletes/d<dataVersion>/   pending soft-deleted ids
   *   <root>/<name>/index/v<indexVersion>/    centroids/ codebooks/ pca/ coded/
   * }}}
   */
@@ -41,8 +42,8 @@ final case class CatalogDoc(
     createdAt: Long,               // creation stamp — a train started against an older
                                    // incarnation must never swap onto a drop+recreate
     codedBucketShift: Int,         // coded-table layout: clusters 2^shift-grouped into
-                                   // `cluster_bucket` partition dirs (-1 = legacy one
-                                   // hive dir per cluster_id)
+                                   // `cluster_bucket` partition dirs (-1 = untrained,
+                                   // no coded table yet)
     codedOwners: String = "") {    // per-bucket owner INDEX VERSION as csv (one int per
                                    // cluster_bucket) — "" means every bucket lives under
                                    // `indexVersion`. Lets compaction rewrite ONLY the
@@ -53,17 +54,8 @@ final case class CatalogDoc(
   def isTrained: Boolean = indexVersion >= 0
 
   def dataPath(root: String): String = s"$root/$name/data/v$dataVersion"
-  def indexPath(root: String): String = s"$root/$name/index/v$indexVersion"
-
-  /** Owner index version per cluster_bucket (resolving the "" shorthand). */
-  def ownerVersions(bucketCount: Int): Array[Int] =
-    if (codedOwners.isEmpty) Array.fill(bucketCount)(indexVersion)
-    else codedOwners.split(",").map(_.toInt)
-
-  /** CSV for an owner array, collapsed to the "" shorthand when uniform. */
-  def withOwners(owners: Array[Int]): CatalogDoc =
-    copy(codedOwners =
-      if (owners.forall(_ == indexVersion)) "" else owners.mkString(","))
+  def indexPath(root: String, version: Int = indexVersion): String =
+    s"$root/$name/index/v$version"
 }
 
 object CatalogDoc {
@@ -98,12 +90,6 @@ object Catalog {
 
   private def fs(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)
-
-  /** Legacy (pre-r12) single-file catalog — still READ (as epoch 0) so
-    * old roots stay loadable; never written anymore.
-    */
-  def catalogFile(root: String, name: String): Path =
-    new Path(new Path(root, name), "catalog.json")
 
   // ---- rename-free epoch protocol -----------------------------------
   //
@@ -296,10 +282,16 @@ object Catalog {
       num("opqDimension").toInt, num("compressedVectorBytes").toInt,
       num("numClusters").toInt, num("nProbe").toInt,
       // absent from older catalogs — defaults keep old roots loadable
-      // (codedBucketShift -1 = the pre-r10 one-dir-per-cluster layout)
       numOr("usedTwoLevel", -1L).toInt, numOr("createdAt", 0L),
       numOr("codedBucketShift", -1L).toInt,
       strOr("codedOwners", ""))
+    // a trained doc without a bucket shift (missing, or the pre-r10 -1)
+    // points at the retired one-dir-per-cluster coded table, which no
+    // reader understands any more — refuse it
+    if (doc.isTrained && doc.codedBucketShift < 0)
+      sys.error(s"catalog for '$name': the trained index uses the retired " +
+        "per-cluster coded layout (codedBucketShift missing or -1); " +
+        "retrain the db to rewrite it")
     // the packed BIGINT `code` column is retired: every reader declares
     // `code` as array<int>, so such a table would be misread — refuse it
     if (numOr("codedPacked", 0L) != 0L)

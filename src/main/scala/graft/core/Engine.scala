@@ -19,13 +19,9 @@ import graft.index._
   *
   * Architectural translation (SURVEY §1.3/§4): LMDB row-KV → Parquet
   * columnar snapshots; Faiss index file → centroid/codebook/PCA DataFrames
-  * + a PQ-coded table in a bucketed IVF layout — `2^shift` consecutive
-  * clusters per `cluster_bucket` hive dir, rows sorted by `cluster_id`
-  * within each ~32 MB file ([[Engine.codedBucketShift]]), so probe
-  * pruning runs on partition dirs first and parquet row-group/page stats
-  * second while file count tracks data bytes, not nlist; locks/queues/
-  * dual-writes → immutable versioned tables with an atomic catalog
-  * pointer swap.
+  * + a PQ-coded covering table whose on-disk layout only [[CodedStore]]
+  * knows; locks/queues/dual-writes → immutable versioned tables with an
+  * atomic catalog pointer swap.
   */
 class Engine(val spark: SparkSession, val root: String) {
   import Engine._
@@ -43,6 +39,13 @@ class Engine(val spark: SparkSession, val root: String) {
   private def fsFor(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(hadoopConf)
 
+  /** The coded table. The protected seams below are handed over as
+    * functions, so a spec subclass overriding them steers the store.
+    */
+  private[core] val store = new CodedStore(spark, root, deletes,
+    chooseCodedBucketShift, () => codedShuffleGroupBytes, () => probePushChunk,
+    maxChunkedProbePush, () => servingScanMinSplitBytes)
+
   /** One executor-side broadcast of the index artifacts per (db, version),
     * reused by every query against that version — the serving path never
     * ships anything whose size depends on nprobe or q per query (the
@@ -56,35 +59,6 @@ class Engine(val spark: SparkSession, val root: String) {
   private val modelBcCache = scala.collection.concurrent.TrieMap
     .empty[(String, Int), org.apache.spark.broadcast.Broadcast[IndexModel]]
 
-  /** Cached coded-table DataFrame per (db, indexVersion): the frame owns
-    * its resolved FileIndex, so the nlist-sized partition-directory
-    * listing (6k+ directories at the 1M-row heuristic scale — seconds of
-    * driver time) happens once per version instead of on every query.
-    * Partition pruning still applies per query via `cluster_id` filters.
-    * Invalidated on same-version appends (new files) and swept together
-    * with the model broadcasts.
-    */
-  private val codedDfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), DataFrame]
-
-  /** [[codedDfCache]]'s twin for the SERVING session (the internal
-    * per-query coarse scans) — same keys, invalidated together.
-    */
-  private val codedDfServingCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), DataFrame]
-
-  /** [[ServingScan.Epoch]] per (db, indexVersion) — the plan-free coarse
-    * scan's amortized driver state (one conf broadcast, one bucket→file
-    * listing). Same keys and invalidation sites as [[codedDfServingCache]]
-    * (the listing has exactly the cached FileIndex's staleness rules,
-    * including the same-version post-train append).
-    */
-  private val servingScanCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), ServingScan.Epoch]
-
-  private def dropServingScanEpoch(k: (String, Int)): Unit =
-    servingScanCache.remove(k).foreach(_.close())
-
   /** M7 — LRU over loaded index artifacts, bounded by their actual driver
     * footprint (reference cache/cache.py:5-102; the M8 estimator backs the
     * info endpoint, MemoryModel.scala). Evicting a model also unpersists
@@ -94,9 +68,7 @@ class Engine(val spark: SparkSession, val root: String) {
     Engine.DefaultMaxMemoryUsage, Engine.modelBytes,
     onEvict = (k, _) => {
       modelBcCache.remove(k).foreach(_.unpersist(false))
-      codedDfCache.remove(k)
-      codedDfServingCache.remove(k)
-      dropServingScanEpoch(k)
+      store.evict(k)
       // a cold db releases its auto-routed serving blocks too (same
       // budget story as the model broadcast)
       autoPrepared.get(k._1).filter(_.pinned.indexVersion == k._2)
@@ -313,27 +285,6 @@ class Engine(val spark: SparkSession, val root: String) {
         StructField("metadata", StringType, nullable = true),
         StructField("cosine_similarity", DoubleType, nullable = false))))
 
-  // The probe filter on the bucketed coded layout is `cluster_id IN
-  // (…)`; a pushed In is what lets parquet page stats prune the
-  // cluster_id-sorted files. Spark's default threshold (10) never
-  // pushes a probe list — but the push compiles to a LEFT-NESTED OR
-  // CHAIN whose evaluation recurses once per value, so a large
-  // threshold is a StackOverflowError at scale (measured: a 40k-value
-  // probe-union filter killed every scan task at 35M/nlist-91k).
-  // 512 keeps the chain shallow; [[prunedLiveCoded]] chunks bigger
-  // probe lists into ≤[[probePushChunk]]-value disjoint scans instead.
-  spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-  // Keep generated code LITERAL-FREE for list predicates: every query
-  // carries fresh probe/candidate-id lists, and both the small-list `In`
-  // codegen and `InSet`'s switch form inline the values into the
-  // generated source — a Janino recompile per query (and per partition-
-  // prune) instead of a cache hit. Converting at ≥2 values and disabling
-  // the switch puts the values in `references` (the source text is
-  // stable), trading a hash-set probe per row — noise next to the scan —
-  // for zero steady-state compilation in the serving path.
-  spark.conf.set("spark.sql.optimizer.inSetConversionThreshold", "1")
-  spark.conf.set("spark.sql.optimizer.inSetSwitchThreshold", "0")
-
   /** Per-db monitor serializing every catalog read-modify-write (add,
     * remove, compact, the train swap, the post-train drain). The
     * reference serializes the same sections with its LMDB/faiss locks
@@ -430,28 +381,6 @@ class Engine(val spark: SparkSession, val root: String) {
     StructField("id", LongType, nullable = false),
     StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false),
     StructField("metadata", StringType, nullable = true)))
-
-  /** PQ-coded index table schema (explicit on every read — inference dies
-    * on a legitimately-empty index, e.g. after removing every row).
-    *
-    * COVERING index: alongside the PQ code it stores the full-precision
-    * vector and the metadata, so the rerank + hydrate stages read ONLY the
-    * probed cluster partitions. The reference gets this for free from LMDB
-    * point-lookups (mindb.py:424-428 fetches candidates by id); Parquet
-    * has no point-lookup, so without covering columns every query paid a
-    * full base-table scan to fetch ~500 candidate rows — measured at the
-    * 1M×768 ScaleEval as 20 s/query, SLOWER than brute force. With them,
-    * every serving stage's bytes ∝ nprobe/nlist (column pruning keeps the
-    * ADC scan reading only id/code/cluster_id). Storage is ~2× the base
-    * table — the same trade the reference makes by keeping vectors in both
-    * the Faiss index and the LMDB store.
-    */
-  val codedSchema: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false),
-    StructField("metadata", StringType, nullable = true),
-    StructField("code", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("cluster_id", IntegerType, nullable = false)))
 
   // ------------------------------------------------------------- lifecycle
 
@@ -693,20 +622,17 @@ class Engine(val spark: SparkSession, val root: String) {
       } finally prepared.unpersist()
 
     // A6 — incremental index insert for a live trained index
-    if (doc.isTrained) {
-      val model = indexModel(doc)
-      appendToCodedTable(doc, model,
+    if (doc.isTrained)
+      store.append(doc, indexModel(doc),
         spark.read.schema(dataSchema).parquet(doc.dataPath(root))
           .filter(col("id") >= base))
-    }
 
     doc = doc.copy(maxId = base + added - 1,
       vectorDimension = d,
       numNewVectors = doc.numNewVectors + added)
     saveDoc(doc)
     // a steady trickle of post-train adds must not degrade the pruned
-    // scan into a small-file storm — bin-pack when the file count crosses
-    // the per-cluster threshold
+    // scan into a small-file storm — bin-pack past the file budget
     if (doc.isTrained) maybeCompactCoded(name)
     // A10 — flat-index size warning (mindb.py:180-184)
     if (flatWarning(doc))
@@ -801,55 +727,18 @@ class Engine(val spark: SparkSession, val root: String) {
     val newVersion = doc.dataVersion + 1
     snapshot(doc).write.mode("overwrite").parquet(s"$root/$name/data/v$newVersion")
 
-    // Index-side rewrite is PER-BUCKET on the bucketed layout: only the
-    // cluster_buckets that actually HOLD deleted rows are rewritten into
-    // the new index version; every untouched bucket keeps its existing
-    // files and is read from the version dir that owns them
-    // (doc.codedOwners). At 100 TB a threshold compact touches ~10% of
-    // rows — spread over (usually far) fewer than all buckets — so the
-    // rewrite cost is ∝ touched buckets, not table size. The legacy
-    // one-dir-per-cluster layout keeps the full rewrite (every retrain
-    // upgrades it to the bucketed layout anyway).
+    // the index side rewrites only what holds deleted rows
+    // ([[CodedStore.rewriteWithout]]) into a new index version; versions
+    // that no longer own any of the table become sweepable
     var unreferencedIndexDirs = Seq.empty[String]
     if (doc.isTrained) {
       val model = indexModel(doc)
       val newIdxVersion = doc.indexVersion + 1
-      val nlist = math.max(1, doc.numClusters)
-      if (doc.codedBucketShift < 0) {
-        writeCodedRows(
-          codedDf(doc).join(broadcast(deletes(doc)), Seq("id"), "left_anti"),
-          doc.codedBucketShift, nlist,
-          s"$root/$name/index/v$newIdxVersion/coded", "overwrite")
-        IndexStore.saveModel(spark, s"$root/$name/index/v$newIdxVersion", model)
-        unreferencedIndexDirs = Seq(doc.indexPath(root))
-        doc = doc.copy(indexVersion = newIdxVersion, codedOwners = "")
-      } else {
-        val buckets = Engine.codedBucketCount(nlist, doc.codedBucketShift)
-        val owners = doc.ownerVersions(buckets)
-        // one column-pruned pass (id + the partition value) finds the
-        // buckets with deletions — no vector/code/metadata decode
-        val touched = codedDf(doc)
-          .join(broadcast(deletes(doc)), Seq("id"), "left_semi")
-          .select("cluster_bucket").distinct().collect().map(_.getInt(0))
-        val touchedSet = touched.toSet
-        if (touched.nonEmpty)
-          writeCodedRows(
-            codedDf(doc)
-              .filter(col("cluster_bucket").isin(
-                touched.toIndexedSeq.map(Integer.valueOf): _*))
-              .join(broadcast(deletes(doc)), Seq("id"), "left_anti"),
-            doc.codedBucketShift, nlist,
-            s"$root/$name/index/v$newIdxVersion/coded", "overwrite")
-        IndexStore.saveModel(spark, s"$root/$name/index/v$newIdxVersion", model)
-        val newOwners = owners.zipWithIndex.map { case (o, b) =>
-          if (touchedSet(b)) newIdxVersion else o }
-        // versions that no longer own any bucket become sweepable
-        val stillReferenced = newOwners.toSet + newIdxVersion
-        unreferencedIndexDirs = (owners.toSet + doc.indexVersion)
-          .diff(stillReferenced).toSeq.sorted
-          .map(v => s"$root/$name/index/v$v")
-        doc = doc.copy(indexVersion = newIdxVersion).withOwners(newOwners)
-      }
+      val (rewritten, unreferenced) =
+        store.rewriteWithout(doc, deletes(doc), newIdxVersion)
+      IndexStore.saveModel(spark, doc.indexPath(root, newIdxVersion), model)
+      unreferencedIndexDirs = unreferenced.map(doc.indexPath(root, _))
+      doc = rewritten
     }
 
     doc = doc.copy(dataVersion = newVersion, numPendingDeletes = 0L)
@@ -999,7 +888,7 @@ class Engine(val spark: SparkSession, val root: String) {
         val model = indexModel(doc)
         val qp = model.pca.applyLocal(qn)
         val probes = model.nearestClusters(qp, doc.nProbe)
-        lazy val live = prunedLiveCoded(doc, probes) // only the empty-candidate branch needs the union form
+        lazy val live = store.prunedLive(doc, probes) // only the empty-candidate branch needs the union form
         def probedCandidates(prelim: Int,
                              pushPred: Boolean = false,
                              preCoarse: Option[Array[(Long, Double, Int)]] = None)
@@ -1023,7 +912,7 @@ class Engine(val spark: SparkSession, val root: String) {
               .orElse(if (pushPred) None
                       else servingScanCoarse(doc, qp, probes, prelim))
               .getOrElse {
-                val chunks0 = prunedLiveCodedChunks(doc, probes)
+                val chunks0 = store.chunks(doc, probes)
                 val chunks =
                   if (pushPred) predicate.fold(chunks0)(p => chunks0.map(_.filter(p)))
                   else chunks0
@@ -1050,7 +939,7 @@ class Engine(val spark: SparkSession, val root: String) {
               // pass, no per-file predicate rebuild; ≤ prelim rows come
               // back as a local relation the rerank composes over
               servingScanFetch(doc, candRows).getOrElse {
-                prunedLiveCoded(doc, candRows.map(_._3).distinct)
+                store.prunedLive(doc, candRows.map(_._3).distinct)
                   .select("id", "vector", "metadata")
                   .filter(col("id").isInCollection(
                     candRows.map(r => java.lang.Long.valueOf(r._1)).toIndexedSeq))
@@ -1232,7 +1121,7 @@ class Engine(val spark: SparkSession, val root: String) {
     val qsP = qs.map { case (qid, qn) => qid -> model.pca.applyLocal(qn) }
     val probes = qsP.map { case (_, qp) => model.nearestClusters(qp, doc.nProbe) }
     val probeUnion = probes.flatten.distinct
-    val live = prunedLiveCoded(doc, probeUnion)
+    val live = store.prunedLive(doc, probeUnion)
     val candRows = graft.operators.BatchANN.coarseCandidates(
       spark, live, modelBroadcast(doc), qsP, probes, preliminaryTopK)
       .select("query_id", "id", "cluster_id").collect()
@@ -1250,7 +1139,7 @@ class Engine(val spark: SparkSession, val root: String) {
     val fetchScan =
       if (candRows.isEmpty)
         live.select("cluster_id", "id", "vector", "metadata").filter(lit(false))
-      else prunedLiveCoded(doc, candRows.map(_.getInt(2)).distinct)
+      else store.prunedLive(doc, candRows.map(_.getInt(2)).distinct)
         .select("cluster_id", "id", "vector", "metadata")
         // the candidate id-chain pushes too (the single-path form,
         // Q4): page-level pruning inside the candidate-holding
@@ -1378,7 +1267,7 @@ class Engine(val spark: SparkSession, val root: String) {
     }
     val qsP = qsSub.map { case (qid, qn) => qid -> model.pca.applyLocal(qn) }
     val probes = qsP.map { case (_, qp) => model.nearestClusters(qp, doc.nProbe) }
-    val live0 = prunedLiveCoded(doc, probes.flatten.distinct)
+    val live0 = store.prunedLive(doc, probes.flatten.distinct)
     val live = if (pushed) live0.filter(pred) else live0
     val candRows = graft.operators.BatchANN.coarseCandidates(
       spark, live, modelBroadcast(doc), qsP, probes, prelim)
@@ -1390,7 +1279,7 @@ class Engine(val spark: SparkSession, val root: String) {
         StructField("query_id", LongType, nullable = false),
         StructField("id", LongType, nullable = false),
         StructField("cluster_id", IntegerType, nullable = false))))
-    val fetchScan = prunedLiveCoded(doc, candRows.map(_.getInt(2)).distinct)
+    val fetchScan = store.prunedLive(doc, candRows.map(_.getInt(2)).distinct)
       .select("cluster_id", "id", "vector", "metadata")
       // pushed candidate id-chain — same form and rationale as the
       // unfiltered batch fetch above: reads ∝ candidates, not clusters
@@ -1455,7 +1344,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // (the scan sees the appended files) and in the side buffer (id >
     // pinned.maxId) — served twice
     val blocks = graft.operators.PreparedANN.buildBlocks(
-        codedDf(doc).filter(col("id") <= doc.maxId), parts)
+        store.frame(doc).filter(col("id") <= doc.maxId), parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     blocks.count() // materialize the cache at prepare time, not first query
     val collectDeleted = (d: CatalogDoc) =>
@@ -1468,7 +1357,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // pre-prepare file at the footer. None past the row cap — the handle
     // degrades to fallback and tells the caller to re-prepare.
     val collectAppended = (d: CatalogDoc, sinceId: Long) => {
-      val delta = codedDf(d).filter(col("id") > sinceId)
+      val delta = store.frame(d).filter(col("id") > sinceId)
         .select("cluster_id", "id", "code", "vector", "metadata")
       val rows = delta.limit(Engine.MaxPreparedSideRows + 1).collect()
       if (rows.length > Engine.MaxPreparedSideRows) None
@@ -1481,7 +1370,7 @@ class Engine(val spark: SparkSession, val root: String) {
 
   /** Probe-list chunk size for the bucketed pruned scan. Each chunk's
     * `cluster_id IN (…)` stays under the parquet push threshold (512, see
-    * the constructor conf) so it reaches the reader as a page-prunable
+    * the [[CodedStore]] constructor) so it reaches the reader as a page-prunable
     * predicate; chunks of the SORTED list cover disjoint cluster-id
     * ranges, so their bucket sets barely overlap and each bucket file is
     * still opened ~once across the union. Overridable so specs can force
@@ -1489,12 +1378,12 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   protected def probePushChunk: Int = 500
 
-  /** Per-instance view of [[Engine.CodedShuffleGroupBytes]] — the
+  /** Per-instance view of [[CodedStore.CodedShuffleGroupBytes]] — the
     * grouped coded write's scratch threshold. Overridable so specs can
     * force the multi-group path on a small corpus (layout equality is
     * gated, not assumed — CodedLayoutSpec).
     */
-  protected def codedShuffleGroupBytes: Long = Engine.CodedShuffleGroupBytes
+  protected def codedShuffleGroupBytes: Long = CodedStore.CodedShuffleGroupBytes
 
   /** Probe-count ceiling for the chunked-union plan, given the table's
     * nlist. Two independent reasons to stop chunking and take one
@@ -1515,75 +1404,6 @@ class Engine(val spark: SparkSession, val root: String) {
     // (512 floor: below it either plan reads a trivial table — keep the
     // pushed-In shape small fixtures and specs rely on)
 
-  /** The per-chunk branch plans of the pruned coded scan: each chunk's
-    * `Filter(In(cluster_id), Filter(In(cluster_bucket), coded))` over the
-    * cached analyzed base plan. Built as raw LogicalPlans and analyzed
-    * once per consumer (Bridge.ofRows) — the DataFrame-API fold analyzed
-    * the accumulated tree at every `.filter`/`.union`, O(chunks²)
-    * analyzer passes ≈ 40 ms/query at the 8-chunk 35M shape
-    * (PLANS.md, round-14 serving-floor findings).
-    */
-  private def prunedCodedBranchPlans(doc: CatalogDoc, probes: Array[Int],
-                                     serving: Boolean)
-      : IndexedSeq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.{In => ExprIn, Literal => ExprLit}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan}
-    val shift = doc.codedBucketShift
-    val basePlan =
-      (if (serving) codedDfServing(doc) else codedDf(doc)).queryExecution.analyzed
-    val bucketAttr = basePlan.output.find(_.name == "cluster_bucket").get
-    val clusterAttr = basePlan.output.find(_.name == "cluster_id").get
-    def branchPlan(chunk: Array[Int]): LogicalPlan =
-      LFilter(
-        ExprIn(clusterAttr, chunk.toIndexedSeq.map(v => ExprLit(v))),
-        LFilter(
-          ExprIn(bucketAttr,
-            chunk.map(_ >>> shift).distinct.toIndexedSeq.map(v => ExprLit(v))),
-          // serving scans: the probe predicate reaches the parquet
-          // reader pre-serialized via read options (the serving session
-          // has Spark-side pushdown off) — see Engine.injectedIntInOptions
-          if (serving)
-            Engine.withReadOptions(basePlan,
-              Engine.injectedIntInOptions("cluster_id", chunk))
-          else basePlan))
-    val sorted = probes.sorted
-    if (sorted.length <= maxChunkedProbePush(doc.numClusters))
-      sorted.grouped(probePushChunk).map(branchPlan).toIndexedSeq
-      // (r15 negative result, evalruns_r15/ccp5_bucketbranch.log:
-      // splitting each chunk into a UNION of per-bucket branch Filters —
-      // so each file's reader serializes only its own ~79-term In-chain
-      // instead of the chunk's 445 — did NOT move the concurrent scan
-      // (167→177 ms) and ADDED ~70 ms of per-query union planning. The
-      // coarse wall is latency-bound on job/task scheduling, not
-      // chain-size-bound.)
-    else IndexedSeq(branchPlan(sorted)) // row-level only; bucket pruning still applies
-  }
-
-  private def withLiveDeletes(doc: CatalogDoc, pruned: DataFrame): DataFrame =
-    if (doc.numPendingDeletes == 0) pruned
-    else pruned.join(broadcast(deletes(doc)), Seq("id"), "left_anti")
-
-  /** The live rows of the probed coded partitions: partition-pruned scan of
-    * the covering index minus pending soft-deletes (D2 — the index never
-    * serves dead rows; the deletes side is broadcast-small by the
-    * compaction threshold).
-    */
-  private[core] def prunedLiveCoded(doc: CatalogDoc, probes: Array[Int]): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Union => LUnion}
-    val pruned =
-      if (doc.codedBucketShift < 0)
-        // legacy layout: one hive dir per cluster — the In is a pure
-        // partition-pruning predicate, never pushed to parquet
-        codedDf(doc).filter(
-          col("cluster_id").isin(probes.toIndexedSeq.map(Integer.valueOf): _*))
-      else {
-        val plans = prunedCodedBranchPlans(doc, probes, serving = false)
-        org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
-          if (plans.length == 1) plans.head else LUnion(plans))
-      }
-    withLiveDeletes(doc, pruned)
-  }
-
   // (r15 negative result, evalruns_r15/rootprofile{2,3,4}_35m.log: a
   // per-bucket branch-union candidate fetch — each file's pushed chain
   // carrying only its own candidate ids — measured fetch_collect
@@ -1598,13 +1418,13 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   @volatile private[core] var servingCustomScan: Boolean = true
 
-  /** True when the plan-free serving scan may answer `doc`: bucketed
-    * coded table and no pending soft-deletes (the custom scan has no
-    * anti-join stage — deletes are transient between compactions, and
-    * the Catalyst path serves those windows).
+  /** True when the plan-free serving scan may answer `doc`: no pending
+    * soft-deletes (the custom scan has no anti-join stage — deletes are
+    * transient between compactions, and the Catalyst path serves those
+    * windows).
     */
   private def servingScanEligible(doc: CatalogDoc): Boolean =
-    servingCustomScan && doc.codedBucketShift >= 0 && doc.numPendingDeletes == 0
+    servingCustomScan && doc.numPendingDeletes == 0
 
   /** The plan-free coarse stage ([[ServingScan]]) when
     * [[servingScanEligible]]; None routes the query through the Catalyst
@@ -1615,99 +1435,8 @@ class Engine(val spark: SparkSession, val root: String) {
       : Option[Array[(Long, Double, Int)]] =
     if (!servingScanEligible(doc)) None
     else
-      Some(ServingScan.coarse(spark, servingScanEpochFor(doc),
+      Some(ServingScan.coarse(spark, store.servingEpoch(doc),
         modelBroadcast(doc), qp, probes, prelimK))
-
-  /** The epoch's data stamp: the doc fields a same-version coded append
-    * or per-bucket compaction moves. A CROSS-DRIVER writer saves the doc
-    * with a new stamp; this driver's TTL'd doc re-read surfaces it and
-    * [[servingScanEpochFor]] rebuilds the listing — so out-of-band coded
-    * files are served at doc-TTL granularity, the same visibility rule
-    * as every other serving read (was: stale until a version bump,
-    * VERDICT r17 #3). Same-driver writers still invalidate eagerly via
-    * [[dropServingScanEpoch]].
-    */
-  private def servingScanStamp(doc: CatalogDoc): String =
-    s"${doc.maxId}|${doc.codedOwners}"
-
-  /** Epoch lookup with a race-safe build: TrieMap.getOrElseUpdate is not
-    * atomic for the builder's side effects, so two cold-epoch queries
-    * could each broadcast a Hadoop conf and leak the loser's (ADVICE
-    * r17). Cold or stale-stamped builds serialize on the cache monitor —
-    * a once-per-epoch event, so contention is irrelevant and the loser's
-    * broadcast never exists. Closing a replaced epoch under in-flight
-    * queries is safe: unpersist(false) only drops executor copies; the
-    * broadcast value re-ships lazily (the model-broadcast eviction has
-    * relied on the same semantics since r12).
-    */
-  private def servingScanEpochFor(doc: CatalogDoc): ServingScan.Epoch = {
-    val k = (doc.name, doc.indexVersion)
-    val want = servingScanStamp(doc)
-    servingScanCache.get(k) match {
-      case Some(e) if e.stamp == want => e
-      case _ => servingScanCache.synchronized {
-        servingScanCache.get(k) match {
-          case Some(e) if e.stamp == want => e
-          case stale =>
-            stale.foreach(_.close())
-            val built = buildServingScanEpoch(doc)
-            servingScanCache.put(k, built)
-            built
-        }
-      }
-    }
-  }
-
-  /** Bucket→dir pairs under the exact owner-version rules of
-    * [[buildCodedDf]] (stale copies of rewritten buckets stay invisible
-    * because only the OWNED dirs are listed), handed to
-    * [[ServingScan.buildEpoch]] for the one-per-epoch file listing.
-    */
-  private def buildServingScanEpoch(doc: CatalogDoc): ServingScan.Epoch = {
-    import org.apache.hadoop.fs.Path
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("cluster_id", IntegerType, nullable = false),
-      StructField("code", ArrayType(IntegerType, containsNull = false),
-        nullable = false)))
-    // cluster_id rides in the FETCH projection even though the caller
-    // only needs (id, vector, metadata): parquet's column-index filter
-    // treats a predicate column missing from the projection as "not in
-    // file" and returns EMPTY row ranges — the same reason Spark's scans
-    // always read their filter columns
-    val fetchSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("vector", ArrayType(FloatType, containsNull = false),
-        nullable = false),
-      StructField("metadata", StringType, nullable = true),
-      StructField("cluster_id", IntegerType, nullable = false)))
-    def bucketsIn(base: Path): Seq[(Int, Path)] = {
-      val f = fsFor(base)
-      if (!f.exists(base)) Seq.empty
-      else f.listStatus(base).iterator.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("cluster_bucket="))
-          n.stripPrefix("cluster_bucket=").toIntOption.map(_ -> st.getPath)
-        else None
-      }.toSeq
-    }
-    val dirs: Seq[(Int, Path)] =
-      if (doc.codedOwners.isEmpty)
-        bucketsIn(new Path(s"${doc.indexPath(root)}/coded"))
-      else {
-        val buckets = Engine.codedBucketCount(math.max(1, doc.numClusters),
-          doc.codedBucketShift)
-        doc.ownerVersions(buckets).zipWithIndex.groupBy(_._1).toSeq.flatMap {
-          case (ownerV, entries) =>
-            val owned = entries.iterator.map(_._2).toSet
-            bucketsIn(new Path(s"$root/${doc.name}/index/v$ownerV/coded"))
-              .filter { case (b, _) => owned(b) }
-        }
-      }
-    ServingScan.buildEpoch(spark, doc.codedBucketShift, schema,
-      fetchSchema, dirs, Engine.ServingScanTaskBytes, servingScanMinSplitBytes,
-      servingScanStamp(doc))
-  }
 
   /** Byte-range floor for the plan-free serving scan's splits —
     * overridable so specs can force multi-range tasks (and the
@@ -1731,7 +1460,7 @@ class Engine(val spark: SparkSession, val root: String) {
     else {
       val idsByCluster = candRows.groupBy(_._3)
         .map { case (c, rs) => c -> rs.map(_._1) }
-      Some(ServingScan.fetch(spark, servingScanEpochFor(doc), idsByCluster))
+      Some(ServingScan.fetch(spark, store.servingEpoch(doc), idsByCluster))
     }
 
   private[core] def servingScanFetch(doc: CatalogDoc,
@@ -1784,140 +1513,14 @@ class Engine(val spark: SparkSession, val root: String) {
       }: _*), schema)
   }
 
-  /** [[prunedLiveCoded]] split into its chunk scans, one DataFrame per
-    * chunk, planned under [[servingSession]] — the q=1 coarse path's
-    * Catalyst form, which [[graft.operators.BatchANN.coarseSingleChunked]]
-    * scores in ONE union job. Row-set union over the returned frames is
-    * exactly [[prunedLiveCoded]]'s row set.
-    */
-  private[core] def prunedLiveCodedChunks(doc: CatalogDoc,
-                                          probes: Array[Int]): IndexedSeq[DataFrame] =
-    if (doc.codedBucketShift < 0) IndexedSeq(prunedLiveCoded(doc, probes))
-    else prunedCodedBranchPlans(doc, probes, serving = true).map(p =>
-      withLiveDeletes(doc,
-        org.apache.spark.sql.graftbridge.Bridge.ofRows(servingSession, p)))
-
-  /** The coded table as ONE DataFrame. With per-bucket compaction a
-    * bucket's rows live under the index version that last REWROTE it
-    * (`doc.codedOwners`), so the frame is a union of per-owner-version
-    * reads — each restricted to exactly the bucket dirs that version
-    * still owns (the same version dir may also hold STALE copies of
-    * buckets a later compact rewrote; listing the owned dirs explicitly,
-    * never the whole dir, is what keeps those invisible). The common
-    * case (owners empty: fresh train, bin-pack, legacy) stays a single
-    * whole-dir read. Cached per (db, indexVersion) — owners only change
-    * on a version bump.
-    */
-  private def codedDf(doc: CatalogDoc): DataFrame =
-    codedDfCache.getOrElseUpdate((doc.name, doc.indexVersion),
-      buildCodedDf(doc, spark))
-
-  /** [[codedDf]] read through the SERVING session: identical rows, but the
-    * scan plans under [[servingSession]]'s confs. Only the internal
-    * coarse path uses it — frames that reach callers stay on the main
-    * session.
-    */
-  private def codedDfServing(doc: CatalogDoc): DataFrame =
-    codedDfServingCache.getOrElseUpdate((doc.name, doc.indexVersion),
-      buildCodedDf(doc, servingSession))
-
-  /** Session for the INTERNAL serving scans — the per-query coarse chunk
-    * scans. Shares the SparkContext (same executors, same scheduler); the
-    * one conf that matters is `files.minPartitionNum = 1`: the default
-    * (defaultParallelism) makes Spark split every scan to fill all cores
-    * via bytes-per-core, which turns the 8 CONCURRENT ~26 MB-file chunk
-    * scans of one query into ~300 one-file tasks — per-task file open +
-    * footer + page-index cost dominated the measured coarse stage
-    * (PLANS.md, round-14 serving-floor findings: 319 ms of the 489 ms
-    * coarse was pure scan setup).
-    * With minPartitionNum=1 the packer fills 128 MB partitions (~4-5
-    * files per task), the 8 jobs still land ~60 tasks on 32 cores, and
-    * big analytic scans are unaffected (maxPartitionBytes still bounds a
-    * task). Analytics/train/fetch scans stay on the MAIN session.
-    */
-  private[core] lazy val servingSession: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.files.minPartitionNum", "1")
-    // 512 MB split packing for the per-query coarse scans: at the 35M
-    // geometry it cut the concurrent chunk scan 154→138 ms and the fresh
-    // coarse 271→241 ms (evalruns_r15/ccp6_{def,512m}.log) — fewer
-    // per-task reader inits, still ≥2 tasks per bucket file for parallelism
-    s.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    // re-pin the engine's scan confs (newSession starts from globals,
-    // not from the parent session's runtime values)
-    s.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-    s.conf.set("spark.sql.optimizer.inSetConversionThreshold", "1")
-    s.conf.set("spark.sql.optimizer.inSetSwitchThreshold", "0")
-    // Spark-side parquet pushdown OFF for the serving scans: the probe
-    // predicate rides pre-serialized in the relation's read options
-    // (Engine.injectedIntInOptions — built once per chunk per query on
-    // the driver as parquet's native In), and Spark's own per-file
-    // setFilterPredicate — the r15-attributed O(terms²) toString +
-    // serialize per reader init, ~99.6% of coarse task CPU — would
-    // rebuild and OVERWRITE it. Row-level exactness is unaffected (the
-    // logical In Filter stays in the plan); reader-level row-group +
-    // page + dictionary pruning still runs off the injected predicate.
-    s.conf.set("spark.sql.parquet.filterPushdown", "false")
-    s.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    s
-  }
-
-  private def buildCodedDf(doc: CatalogDoc, spark: SparkSession): DataFrame = {
-      if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-        spark.read.schema(codedReadSchema(doc.codedBucketShift))
-          .parquet(s"${doc.indexPath(root)}/coded")
-      else {
-        val buckets = Engine.codedBucketCount(math.max(1, doc.numClusters),
-          doc.codedBucketShift)
-        val owners = doc.ownerVersions(buckets)
-        owners.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).map {
-          case (ownerV, entries) =>
-            val base = s"$root/${doc.name}/index/v$ownerV/coded"
-            val basePath = new org.apache.hadoop.fs.Path(base)
-            val f = fsFor(basePath)
-            // a bucket with no rows never materialized a dir — list what
-            // the owner version actually wrote and intersect
-            val present: Set[Int] =
-              if (!f.exists(basePath)) Set.empty
-              else f.listStatus(basePath).iterator.flatMap { st =>
-                val n = st.getPath.getName
-                if (n.startsWith("cluster_bucket="))
-                  n.stripPrefix("cluster_bucket=").toIntOption
-                else None
-              }.toSet
-            val dirs = entries.iterator.map(_._2).filter(present)
-              .map(b => s"$base/cluster_bucket=$b").toSeq
-            if (dirs.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                codedReadSchema(doc.codedBucketShift))
-            else
-              spark.read.schema(codedReadSchema(doc.codedBucketShift))
-                .option("basePath", base).parquet(dirs: _*)
-        }.reduce(_ union _)
-      }
-  }
-
   /** Coded-table layout sizing at train time — overridable so specs can
     * force a multi-bucket layout on a corpus small enough for `sbt test`
-    * (the production rule needs ≥32 MB per extra bucket).
+    * (the production rule needs ≥256 MB per extra bucket). A negative
+    * result fails the train: there is no layout below shift 0.
     */
   protected def chooseCodedBucketShift(n: Long, nlist: Int, d: Int,
                                        m: Int): Int =
-    Engine.codedBucketShift(n, nlist, d, m)
-
-  /** Read schema for a coded table: the bucketed layout's partition column
-    * joins the declared schema (legacy layout reconstructs `cluster_id`
-    * from its hive dirs instead).
-    */
-  private def codedReadSchema(shift: Int): StructType = {
-    // explicit schema (inference dies on a legitimately-empty index), so
-    // the layout must come from the catalog, not the files
-    if (shift < 0) codedSchema
-    else StructType(codedSchema.fields :+
-      StructField("cluster_bucket", IntegerType, nullable = false))
-  }
+    CodedStore.bucketShift(n, nlist, d, m)
 
   // ----------------------------------------------------------------- train
 
@@ -2135,14 +1738,9 @@ class Engine(val spark: SparkSession, val root: String) {
     // writers that bump it (compact, coded-table bin-packing) defer while
     // the status is "in progress"
     val newVersion = doc.indexVersion + 1
-    val indexDir = s"$root/$name/index/v$newVersion"
-    val bucketShift = chooseCodedBucketShift(n, nlist, d,
+    val layout = store.write(pinnedFull, model, name, newVersion, n, nlist, d,
       p.compressedVectorBytes)
-    writeCoded(pinnedFull, model, bucketShift, nlist, s"$indexDir/coded",
-      // covering-row estimate: id+overheads ~16 B, 4-byte floats, ~96 B
-      // code+metadata — drives the low-scratch grouped write at scale
-      estBytes = n * (16L + 4L * d + 96L))
-    IndexStore.saveModel(spark, indexDir, model)
+    IndexStore.saveModel(spark, doc.indexPath(root, newVersion), model)
 
     // T19 — atomic swap. Counters are RECOMPUTED from the then-live rows
     // (not carried from train start) so adds/removes that landed during
@@ -2165,27 +1763,15 @@ class Engine(val spark: SparkSession, val root: String) {
       val liveNew = if (live.isNullAt(1)) 0L else live.getLong(1)
       // the fresh index supersedes EVERY old index version, including
       // bucket-owner versions a per-bucket compact left referenced
-      val oldIndexPaths =
-        if (!cur.isTrained) Seq.empty[String]
-        else {
-          val owners =
-            if (cur.codedOwners.isEmpty || cur.codedBucketShift < 0)
-              Set(cur.indexVersion)
-            else cur.ownerVersions(Engine.codedBucketCount(
-              math.max(1, cur.numClusters), cur.codedBucketShift)).toSet +
-              cur.indexVersion
-          owners.toSeq.sorted.map(v => s"$root/$name/index/v$v")
-        }
+      val oldIndexPaths = supersededIndexDirs(cur)
       val reconcileTo = cur.maxId
-      cur = Catalog.withParams(cur, p, nlist, nprobe).copy(
+      cur = layout(Catalog.withParams(cur, p, nlist, nprobe).copy(
         usedTwoLevel = if (twoLevel) 1 else 0,
-        codedBucketShift = bucketShift,
-        codedOwners = "",
         indexVersion = newVersion,
         maxTrainedId = snapshotMaxId,
         numVectorsTrainedOn = n,
         numTrainedVectorsRemoved = n - liveTrained,
-        numNewVectors = liveNew)
+        numNewVectors = liveNew))
       saveDoc(cur)
       markSuperseded(oldIndexPaths: _*)
       (cur, true, snapshotMaxId, reconcileTo)
@@ -2206,7 +1792,7 @@ class Engine(val spark: SparkSession, val root: String) {
       if (doc.isTrained && reconcileTo > snapshotMaxId) {
         val pending = snapshot(doc)
           .filter(col("id") > snapshotMaxId && col("id") <= reconcileTo)
-        appendToCodedTable(doc, indexModel(doc), pending)
+        store.append(doc, indexModel(doc), pending)
       }
       val physicalRows = doc.maxId + 1
       if (physicalRows > 0 &&
@@ -2228,236 +1814,19 @@ class Engine(val spark: SparkSession, val root: String) {
     else
       rows.select(col("id"), Coder.pcaApplyCol(spark, pca, col("vector")).as("pvec"))
 
-  /** T18 — fused project+assign+residual+PQ-encode (broadcast kernel,
-    * plan size O(1) in nlist/m), written in the bucketed IVF layout
-    * (`shift` from [[Engine.codedBucketShift]]). Carries the covering
-    * columns (vector, metadata).
-    *
-    * DISK ENVELOPE (r15): the bucket repartition shuffles the full
-    * covering rows — at 768-d that is ~3.2 KB/row of incompressible
-    * float bytes ON TOP of the input table and the final parquet, which
-    * is what ENOSPC'd the r14 10M×768 run (~11 GB scratch per M rows,
-    * EVAL_r14). When `estBytes` exceeds [[Engine.CodedShuffleGroupBytes]]
-    * the write splits into BUCKET GROUPS: each group's job re-runs the
-    * (deterministic) assign+encode projection and shuffles only its own
-    * buckets' rows, so peak shuffle scratch is ~1/groups of the table.
-    * Costs `groups` extra scans + assign passes of the input (~10-20% of
-    * train at the 768-d geometry) only when the one-shot form would
-    * threaten the disk quota; layout, file count, and per-bucket row
-    * order are identical to the one-shot write (each bucket is written
-    * by exactly one group, same bucket partition count, same
-    * sortWithinPartitions).
+  /** Index dirs a swap away from `doc` supersedes: every version its
+    * coded table still reads ([[CodedStore.referencedVersions]]).
     */
-  private def writeCoded(rows: DataFrame, model: IndexModel, shift: Int,
-                         nlist: Int, path: String,
-                         estBytes: Long = -1L): Unit = {
-    val groups =
-      if (shift < 0 || estBytes <= 0) 1
-      else math.min(Engine.codedBucketCount(nlist, shift).toLong,
-        (estBytes + codedShuffleGroupBytes - 1) /
-          codedShuffleGroupBytes).toInt
-    if (groups <= 1)
-      writeCodedRows(assignEncode(rows, model), shift, nlist, path,
-        "overwrite")
-    else {
-      val buckets = Engine.codedBucketCount(nlist, shift)
-      log.info(s"coded write in $groups bucket groups " +
-        s"(~${estBytes / (1 << 30)} GiB covering bytes, $buckets buckets)")
-      val baseline = shuffleScratchBytes()
-      (0 until groups).foreach { g =>
-        val encoded = assignEncode(rows, model)
-        val inGroup = encoded.filter(
-          (expr(s"cluster_id div ${1L << shift}") % groups).cast("int") === g)
-        writeCodedRows(inGroup, shift, nlist, path,
-          if (g == 0) "overwrite" else "append")
-        // a group's exchange files linger until its ShuffleDependency is
-        // GC'd and the (async) ContextCleaner removes them — AWAIT the
-        // drain before the next group's shuffle starts, else the two
-        // exchanges coexist and the documented ~1/groups peak-scratch
-        // envelope (the whole point of grouping) is silently void
-        // (ADVICE r15: gc() alone only NUDGED the cleaner). Bounded: on
-        // timeout we log and proceed rather than hang the train.
-        if (g < groups - 1) awaitShuffleDrain(baseline)
-      }
-    }
-  }
+  private def supersededIndexDirs(doc: CatalogDoc): Seq[String] =
+    store.referencedVersions(doc).toSeq.sorted.map(doc.indexPath(root, _))
 
-  /** Total bytes of shuffle files under this context's block-manager
-    * scratch dirs (`spark.local.dir`, default `java.io.tmpdir` —
-    * local-mode layout: each dir holds `blockmgr-<uuid>` trees with
-    * `shuffle_*.{data,index}` leaves). Racy-by-design: files vanishing
-    * mid-walk read as 0. CLUSTER CAVEAT: this walks the DRIVER's local
-    * dirs only — in local mode that is every shuffle file; on a real
-    * cluster the executors hold the shuffle files and this undercounts,
-    * so [[awaitShuffleDrain]] degrades to the gc-nudge best-effort
-    * there (the bounded timeout guarantees progress either way; a
-    * cluster deployment that needs the strict envelope should gate on
-    * executor disk metrics instead).
-    */
-  private def shuffleScratchBytes(): Long = {
-    def sum(f: java.io.File): Long = {
-      val kids = f.listFiles()
-      if (kids == null) // plain file (or vanished dir)
-        if (f.getName.startsWith("shuffle_")) f.length() else 0L
-      else kids.foldLeft(0L)((acc, k) => acc + sum(k))
-    }
-    spark.sparkContext.getConf
-      .get("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .split(",").iterator.map(_.trim).filter(_.nonEmpty)
-      .flatMap { d =>
-        val kids = new java.io.File(d).listFiles()
-        if (kids == null) Iterator.empty
-        else kids.iterator.filter(f => f.getName.startsWith("blockmgr-"))
-      }.foldLeft(0L)((acc, bm) => acc + sum(bm))
-  }
-
-  /** Wait (bounded) until shuffle scratch drains back to ~`baseline` —
-    * GC makes the dropped group's ShuffleDependency collectable, the
-    * ContextCleaner then deletes its files asynchronously; we poll the
-    * dirs because the cleaner exposes no completion signal. The slack
-    * absorbs unrelated concurrent jobs' scratch; on timeout (a pinned
-    * reference, a busy cleaner queue) we log loudly and proceed — the
-    * envelope degrades to the pre-await best-effort rather than the
-    * train hanging.
-    */
-  private def awaitShuffleDrain(baseline: Long,
-                                timeoutMs: Long = 120000L): Unit = {
-    val slack = 256L << 20
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var cur = shuffleScratchBytes()
-    // One gc() makes the dropped ShuffleDependency collectable; the
-    // ContextCleaner's deletion is then async, so the wait is for the
-    // cleaner, not for more gcs. Nudge again only on a backed-off
-    // cadence (1 s, 2 s, 4 s, ... capped at 15 s) — a 200 ms gc loop
-    // here meant up to 600 forced full GCs per group on a large heap
-    // (ADVICE r16), stalling the very cleaner thread we're waiting on.
-    var nextGcNanos = 0L
-    var gcBackoffMs = 1000L
-    while (cur > baseline + slack && System.nanoTime() < deadline) {
-      if (System.nanoTime() >= nextGcNanos) {
-        System.gc()
-        nextGcNanos = System.nanoTime() + gcBackoffMs * 1000000L
-        gcBackoffMs = math.min(gcBackoffMs * 2, 15000L)
-      }
-      Thread.sleep(200)
-      cur = shuffleScratchBytes()
-    }
-    if (cur > baseline + slack)
-      log.warn(s"grouped coded write: shuffle scratch still " +
-        s"~${cur >> 20} MiB (baseline ${baseline >> 20} MiB) after " +
-        s"$timeoutMs ms - proceeding; the next group's exchange may " +
-        "stack on the previous one's")
-  }
-
-  /** The one coded-table writer: IVF inverted lists as parquet layout.
-    *
-    * `shift >= 0` (bucketed): `2^shift` consecutive clusters share one
-    * `cluster_bucket` hive dir; rows sort by `cluster_id` within each
-    * file so parquet stats prune inside a bucket. File count tracks data
-    * bytes (≈32 MB each), not nlist — at nlist 91k the legacy layout laid
-    * down 78,969 ~125 KB files (EVAL_r09), a small-file storm per query
-    * and an object-store bomb at 100 TB. `shift < 0` keeps the legacy
-    * one-dir-per-cluster layout of pre-r10 tables (reads stay
-    * compatible; every retrain upgrades in place).
-    */
-  private def writeCodedRows(coded: DataFrame, shift: Int, nlist: Int,
-                             path: String, mode: String): Unit =
-    if (shift < 0)
-      coded.drop("cluster_bucket")
-        .repartition(col("cluster_id"))
-        .write.mode(mode).partitionBy("cluster_id").parquet(path)
-    else {
-      val buckets = Engine.codedBucketCount(nlist, shift)
-      coded.drop("cluster_bucket")
-        .withColumn("cluster_bucket",
-          expr(s"cluster_id div ${1L << shift}").cast("int"))
-        .repartition(buckets, col("cluster_bucket"))
-        .sortWithinPartitions("cluster_bucket", "cluster_id")
-        .write.mode(mode)
-        // Page granularity IS the read precision of this layout: the
-        // column index prunes row-RANGES at cluster_id-page granularity,
-        // and page SIZE alone leaves int pages holding ~16k values
-        // (~42 clusters at the 35M geometry — measured: page pruning
-        // passed 81% of rows and the single-query exec p50 regressed
-        // 1.3 s → 1.7 s). The ROW-COUNT limit is the effective knob:
-        // 512-row pages ≈ 1-2 clusters per cluster_id page, so a pushed
-        // probe-In reads ~the probed clusters' rows — per-cluster-dir
-        // read precision from ~200x fewer files. Costs page-header
-        // overhead on this table only (CodedLayoutSpec asserts the
-        // granularity actually lands on disk).
-        .option("parquet.page.size", (64 * 1024).toString)
-        .option("parquet.page.row.count.limit", "512")
-        .partitionBy("cluster_bucket").parquet(path)
-    }
-
-  /** Incremental insert (A6). Each appended row lands in the version dir
-    * that OWNS its cluster_bucket (after a per-bucket compact different
-    * buckets live under different versions) — one append-write per
-    * distinct owner, all reading one persisted encode pass. Owner count
-    * is small (grows by ≤1 per compact, reset by every train/bin-pack).
-    */
-  private def appendToCodedTable(doc: CatalogDoc, model: IndexModel,
-                                 rows: DataFrame): Unit = {
-    val encoded = assignEncode(rows, model)
-    val nlist = math.max(1, doc.numClusters)
-    if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-      writeCodedRows(encoded, doc.codedBucketShift, nlist,
-        s"${doc.indexPath(root)}/coded", "append")
-    else {
-      val buckets = Engine.codedBucketCount(nlist, doc.codedBucketShift)
-      val byOwner = doc.ownerVersions(buckets).zipWithIndex.groupBy(_._1)
-      encoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        byOwner.toSeq.sortBy(_._1).foreach { case (ownerV, entries) =>
-          val owned = entries.map(_._2).toIndexedSeq.map(Integer.valueOf)
-          val subset = encoded.filter(
-            expr(s"cluster_id div ${1L << doc.codedBucketShift}").cast("int")
-              .isin(owned: _*))
-          writeCodedRows(subset, doc.codedBucketShift, nlist,
-            s"$root/${doc.name}/index/v$ownerV/coded", "append")
-        }
-      } finally encoded.unpersist()
-    }
-    // same-version append: the cached frame's FileIndex is now stale
-    codedDfCache.remove((doc.name, doc.indexVersion))
-    codedDfServingCache.remove((doc.name, doc.indexVersion))
-    dropServingScanEpoch((doc.name, doc.indexVersion))
-  }
-
-  /** Parquet files under a directory (recursive; 0 if absent). */
-  private def countParquetFiles(dir: org.apache.hadoop.fs.Path): Int = {
-    val f = fsFor(dir)
-    if (!f.exists(dir)) return 0
-    var n = 0
-    val it = f.listFiles(dir, true)
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    n
-  }
-
-  /** Parquet data files the coded table would READ — per owned bucket dir
-    * when ownership is split across versions (stale copies of rewritten
-    * buckets left in old version dirs don't count; they're vacuum's
-    * problem, not the bin-pack trigger's).
-    */
-  private def codedFileCount(doc: CatalogDoc): Int =
-    if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-      countParquetFiles(new org.apache.hadoop.fs.Path(doc.indexPath(root), "coded"))
-    else {
-      val buckets = Engine.codedBucketCount(math.max(1, doc.numClusters),
-        doc.codedBucketShift)
-      doc.ownerVersions(buckets).zipWithIndex.iterator.map { case (v, b) =>
-        countParquetFiles(new org.apache.hadoop.fs.Path(
-          s"$root/${doc.name}/index/v$v/coded/cluster_bucket=$b"))
-      }.sum
-    }
-
-  /** Bin-pack the coded table once post-train appends have accreted more
-    * than [[Engine.CodedFilesPerCluster]] files per cluster: one
-    * cluster-partitioned rewrite into a fresh index version (atomic
-    * pointer swap, same machinery as [[compact]]), so the pruned serving
-    * scan keeps reading O(nprobe) right-sized files no matter how many
-    * small adds trickled in. Trained query results are unchanged — the
-    * rewrite only rearranges rows into fewer files.
+  /** Bin-pack the coded table once post-train appends have accreted past
+    * its file budget ([[CodedStore.overFileBudget]]): one rewrite into a
+    * fresh index version (atomic pointer swap, same machinery as
+    * [[compact]]), so the pruned serving scan keeps reading right-sized
+    * files no matter how many small adds trickled in. Trained query
+    * results are unchanged — the rewrite only rearranges rows into fewer
+    * files.
     */
   private def maybeCompactCoded(name: String): Unit = {
     val doc = load(name)
@@ -2465,46 +1834,17 @@ class Engine(val spark: SparkSession, val root: String) {
     // defers while a train is in flight — same version-allocation rule
     // as compact(); reconcileAfterTrain re-runs this check post-drain
     if (trainingStatus(name) == "in progress") return
-    val units =
-      if (doc.codedBucketShift < 0) math.max(1, doc.numClusters)
-      else Engine.codedBucketCount(math.max(1, doc.numClusters), doc.codedBucketShift)
-    val files = codedFileCount(doc)
-    if (files <= Engine.CodedFilesPerCluster * units) return
-    val model = indexModel(doc)
-    val newVersion = doc.indexVersion + 1
-    val newDir = s"$root/$name/index/v$newVersion"
-    writeCodedRows(codedDf(doc), doc.codedBucketShift,
-      math.max(1, doc.numClusters), s"$newDir/coded", "overwrite")
-    IndexStore.saveModel(spark, newDir, model)
-    // the bin-pack consolidates EVERY owner version into the new one
-    val oldPaths = (
-      (if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-         Set(doc.indexVersion)
-       else doc.ownerVersions(Engine.codedBucketCount(
-         math.max(1, doc.numClusters), doc.codedBucketShift)).toSet +
-         doc.indexVersion)
-      ).toSeq.sorted.map(v => s"$root/$name/index/v$v")
-    saveDoc(doc.copy(indexVersion = newVersion, codedOwners = ""))
-    markSuperseded(oldPaths: _*)
-    log.info(s"coded-table compaction: '$name' index v${doc.indexVersion} → " +
-      s"v$newVersion ($files files exceeded ${Engine.CodedFilesPerCluster}×$units)")
-  }
-
-  /** (id, vector, metadata) rows → covering coded rows. The projection and
-    * the fused assign+encode kernel run in one scan; vector/metadata pass
-    * through untouched.
-    */
-  private def assignEncode(rows: DataFrame, model: IndexModel): DataFrame = {
-    val withP =
-      if (model.pca.isIdentity)
-        rows.withColumn("pvec", col("vector").cast("array<double>"))
-      else
-        rows.withColumn("pvec", Coder.pcaApplyCol(spark, model.pca, col("vector")))
-    Coder.assignEncodeBatched(
-        withP.select(col("id"), col("vector"), col("metadata"), col("pvec")),
-        "pvec", model.centroids, model.pq)
-      .select(col("id"), col("vector"), col("metadata"),
-        col("code"), col("cluster_id"))
+    store.overFileBudget(doc).foreach { why =>
+      val model = indexModel(doc)
+      val newVersion = doc.indexVersion + 1
+      val packed = store.binPack(doc, newVersion)
+      IndexStore.saveModel(spark, doc.indexPath(root, newVersion), model)
+      saveDoc(packed)
+      // the bin-pack consolidates EVERY owner version into the new one
+      markSuperseded(supersededIndexDirs(doc): _*)
+      log.info(s"coded-table compaction: '$name' index v${doc.indexVersion} → " +
+        s"v$newVersion ($why)")
+    }
   }
 
   /** Drop unreferenced snapshot/index/deletes versions (everything below
@@ -2526,16 +1866,10 @@ class Engine(val spark: SparkSession, val root: String) {
     val doc = load(name)
     val cutoff = System.currentTimeMillis() - graceMillis
     val f = fsFor(new org.apache.hadoop.fs.Path(root))
-    // index versions still REFERENCED as bucket owners (per-bucket
-    // compaction leaves untouched buckets in older version dirs) are
-    // never sweepable, no matter how old
-    val referencedIdx: Set[Int] =
-      if (!doc.isTrained) Set.empty
-      else if (doc.codedOwners.isEmpty || doc.codedBucketShift < 0)
-        Set(doc.indexVersion)
-      else doc.ownerVersions(Engine.codedBucketCount(
-        math.max(1, doc.numClusters), doc.codedBucketShift)).toSet +
-        doc.indexVersion
+    // index versions the coded table still READS (per-bucket compaction
+    // leaves untouched buckets in older version dirs) are never
+    // sweepable, no matter how old
+    val referencedIdx = store.referencedVersions(doc)
     def sweep(parent: org.apache.hadoop.fs.Path, prefix: String, current: Int,
               referenced: Int => Boolean): Int = {
       if (!f.exists(parent)) return 0
@@ -2709,16 +2043,14 @@ class Engine(val spark: SparkSession, val root: String) {
 
   /** Unpersist (not destroy — lazily re-fetchable by in-flight plans)
     * cached model broadcasts for `name` with version < `keepBelow`; the
-    * matching coded-frame cache entries go with them.
+    * store's cached read state of those versions goes with them.
     */
   private def dropModelBroadcasts(name: String, keepBelow: Int): Unit =
     modelBcCache.keys
       .filter { case (n, v) => n == name && v < keepBelow }
       .foreach { k =>
         modelBcCache.remove(k).foreach(_.unpersist(false))
-        codedDfCache.remove(k)
-        codedDfServingCache.remove(k)
-        dropServingScanEpoch(k)
+        store.evict(k)
       }
 
   private def normalizeLocal(v: Array[Float]): Array[Float] = {
@@ -2832,63 +2164,6 @@ object Engine {
     */
   val CompactionThreshold: Double = 0.1
 
-  /** Rewrite the coded table when post-train appends push its file count
-    * past this many files per layout unit (bucket when bucketed, cluster
-    * on the legacy layout; each append lays down one file-set per touched
-    * partition; unchecked, the pruned scan becomes a small-file storm).
-    */
-  val CodedFilesPerCluster: Int = 4
-
-  /** Target parquet-file size for the bucketed coded-table layout.
-    * 256 MB (canonical parquet sizing, 2 row groups at the default
-    * 128 MB block), raised from 32 MB after the round-14 35M root
-    * profile (PLANS.md serving-floor findings) measured the
-    * serving floor at the 35M geometry: probed clusters spread uniformly
-    * over buckets, so EVERY coarse pass opens ~every bucket file, and at
-    * 26 MB files that was ~350 opens × (footer + page-index ≈ 3-5 ms) —
-    * more than half the composable-path latency. Bigger buckets cut the
-    * per-query open count ~8× while analytic scans keep task parallelism
-    * by splitting at row-group boundaries (maxPartitionBytes 128 MB).
-    */
-  val TargetCodedFileBytes: Long = 256L * 1024 * 1024
-
-  /** Ceiling on coded-table buckets — bounds partition-dir count (and the
-    * listing cost of every coded read) no matter the corpus size; past it
-    * files simply grow beyond the 32 MB target, which scans tolerate.
-    */
-  val MaxCodedBuckets: Long = 4096L
-
-  /** Coded-table layout sizing: group `2^shift` consecutive cluster_ids
-    * into one `cluster_bucket` partition dir so each bucket's file lands
-    * near [[TargetCodedFileBytes]].
-    *
-    * Rationale (measured, EVAL_r09 `scale_run_35m`): one hive dir per
-    * cluster is healthy at nlist ≈ 35k but at nlist 91,008 the layout
-    * degrades to 78,969 files of ~125 KB — the single-query candidate
-    * fetch opens thousands of tiny files (exec-bound 2,071 ms of a
-    * 2,302 ms p50) and a 100 TB deployment would put millions of objects
-    * per index version on the object store. Bucketing keeps file count
-    * ∝ data bytes (not nlist); files sort by `cluster_id` so parquet
-    * row-group/page stats still prune within a bucket.
-    *
-    * `0` means bucket == cluster_id (few huge clusters: per-cluster dirs
-    * already right-sized); returns at least that. Estimation only needs
-    * to land within ~2× of the target — `rowBytes` is the covering row:
-    * id 8 + length/offsets ~8 + 4·d vector + m code bytes + ~64 metadata.
-    */
-  def codedBucketShift(n: Long, nlist: Int, d: Int, m: Int): Int = {
-    val rowBytes = 16L + 4L * math.max(1, d) + math.max(0, m) + 64L
-    val buckets = math.max(1L, math.min(MaxCodedBuckets,
-      (n * rowBytes + TargetCodedFileBytes - 1) / TargetCodedFileBytes))
-    val cpb = math.max(1L, (nlist + buckets - 1) / buckets)
-    if (cpb <= 1L) 0
-    else math.min(30, 64 - java.lang.Long.numberOfLeadingZeros(cpb - 1L))
-  }
-
-  /** Bucket-dir count the shift yields for an nlist. */
-  def codedBucketCount(nlist: Int, shift: Int): Int =
-    math.max(1, ((nlist.toLong + (1L << shift) - 1) >> shift).toInt)
-
   /** (The pre-r15 `MaxWidenedPreliminaryK` widening ceiling is gone with
     * the geometric widening loop itself — the pushed under-fill round is
     * bounded by `preliminaryTopK` per partition by construction.)
@@ -2904,18 +2179,6 @@ object Engine {
     extends ((Long, String) => Boolean) {
     def apply(id: Long, meta: String): Boolean = f(id, meta)
   }
-
-  /** Peak shuffle bytes one coded-write bucket group may carry (the
-    * train-time disk envelope, [[writeCoded]]): the bucket repartition of
-    * a covering table beyond this splits into ⌈bytes/this⌉ groups so
-    * shuffle scratch never stacks the whole table on top of the input
-    * parquet and the output parquet. 6 GiB ≈ the slack the r14 80 GB
-    * scratch box had left after data+coded at the 10M×768 geometry.
-    * Env-overridable for eval boxes with different quotas.
-    */
-  val CodedShuffleGroupBytes: Long =
-    sys.env.get("GRAFT_CODED_SHUFFLE_GROUP_BYTES").map(_.toLong)
-      .getOrElse(6L << 30)
 
   /** Driver-side candidate-row ceiling for one trained query batch
     * (q·prelimK). ~2M rows ≈ a few hundred MB of Rows — past it the

@@ -168,9 +168,9 @@ object ServingScan {
   private[core] def footerCacheClear(): Unit = footerCache.clear()
 
   /** Build the per-epoch state: one conf clone + one broadcast + one
-    * listing pass. `listBucketDirs` supplies (bucket → dir) pairs — the
-    * engine owns the owner-version layout rules, so the listing rule
-    * stays in ONE place (Engine.servingScanEpoch).
+    * listing pass. `bucketDirs` supplies (bucket → dir) pairs — the
+    * coded store owns the owner-version layout rules, so the listing rule
+    * stays in ONE place (CodedStore.servingEpoch).
     */
   def buildEpoch(spark: SparkSession, shift: Int,
                  coarseSchema: StructType, fetchSchema: StructType,

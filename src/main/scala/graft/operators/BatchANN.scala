@@ -295,7 +295,7 @@ object BatchANN {
     * probes (CoarseUnionJobSpec).
     *
     * @param chunks the per-chunk pruned coded frames
-    *               (Engine.prunedLiveCodedChunks)
+    *               (CodedStore.chunks)
     * @return ≤ prelimK (id, adc_dist, cluster_id) rows, smallest
     *         (adc_dist, id) first
     */

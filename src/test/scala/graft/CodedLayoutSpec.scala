@@ -3,20 +3,19 @@ package graft
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import graft.core.Engine
+import graft.core.{CodedStore, Engine}
 import graft.index.IndexParams
 
-/** Bucketed coded-table layout (round 10): `2^shift` consecutive clusters
-  * share one `cluster_bucket` hive dir, rows sorted by `cluster_id` within
-  * each file. Replaces the one-dir-per-cluster layout whose file count
-  * tracked nlist (78,969 ~125 KB files at the 35M/nlist-91k scale point,
-  * EVAL_r09) instead of data bytes.
+/** Bucketed coded-table layout: `2^shift` consecutive clusters share one
+  * `cluster_bucket` hive dir, rows sorted by `cluster_id` within each
+  * file, so the file count tracks data bytes rather than nlist.
   *
-  * The invariant under test: layout is INVISIBLE to every result. A
-  * bucketed engine and a legacy (per-cluster) engine trained on identical
-  * data with the same seed produce bit-identical query results through
-  * train, post-train appends, and delete+compact — only the directory
-  * shape differs.
+  * The invariant under test: the bucket shape is INVISIBLE to every
+  * result. A shift-2 engine (four clusters per bucket) and a shift-0
+  * engine (one cluster per bucket) trained on identical data with the
+  * same seed produce bit-identical query results through train,
+  * post-train appends, and delete+compact — only the directory shape
+  * differs.
   */
 class CodedLayoutSpec extends SparkSpec {
 
@@ -66,13 +65,13 @@ class CodedLayoutSpec extends SparkSpec {
   // ------------------------------------------------------------ sizing math
 
   test("sizing: tiny corpus collapses to one bucket") {
-    val shift = Engine.codedBucketShift(500L, 743, 64, 32)
-    assert(Engine.codedBucketCount(743, shift) == 1)
+    val shift = CodedStore.bucketShift(500L, 743, 64, 32)
+    assert(CodedStore.bucketCount(743, shift) == 1)
   }
 
   test("sizing: the 35M x 64-d scale geometry lands near the 256 MB file target") {
-    val shift = Engine.codedBucketShift(35000000L, 91008, 64, 32)
-    val buckets = Engine.codedBucketCount(91008, shift)
+    val shift = CodedStore.bucketShift(35000000L, 91008, 64, 32)
+    val buckets = CodedStore.bucketCount(91008, shift)
     // ~12.9 GB estimate / 256 MB target → tens of buckets: few enough
     // that a coarse pass (which touches ~every bucket — probed clusters
     // spread uniformly) opens tens of files, not hundreds (the r14
@@ -82,23 +81,25 @@ class CodedLayoutSpec extends SparkSpec {
   }
 
   test("sizing: huge rows-per-cluster keeps shift 0 (per-cluster dirs already right-sized)") {
-    assert(Engine.codedBucketShift(1000000000L, 100, 768, 64) == 0)
+    assert(CodedStore.bucketShift(1000000000L, 100, 768, 64) == 0)
   }
 
   test("sizing: bucket-count ceiling bounds dir count at any corpus size") {
-    val shift = Engine.codedBucketShift(10000000000L, 200000, 768, 64)
-    assert(Engine.codedBucketCount(200000, shift) <= Engine.MaxCodedBuckets)
+    val shift = CodedStore.bucketShift(10000000000L, 200000, 768, 64)
+    assert(CodedStore.bucketCount(200000, shift) <= CodedStore.MaxCodedBuckets)
   }
 
   // ------------------------------------- layout-invisibility differential
 
   private lazy val (corpusV, corpusM) = mkCorpus(N)
 
-  /** Legacy engine: the pre-r10 per-cluster layout via shift -1. */
-  private lazy val legacy: Engine = {
-    val e = new Engine(spark, tmpDir("graft-coded-legacy")) {
+  /** Reference engine with shift 0: every bucket holds exactly one
+    * cluster — the finest directory shape the layout has.
+    */
+  private lazy val perCluster: Engine = {
+    val e = new Engine(spark, tmpDir("graft-coded-shift0")) {
       override protected def chooseCodedBucketShift(n: Long, nlist: Int,
-                                                    d: Int, m: Int): Int = -1
+                                                    d: Int, m: Int): Int = 0
     }
     e.create("db", vectorDimension = D)
     e.addLocal("db", corpusV, corpusM)
@@ -184,11 +185,11 @@ class CodedLayoutSpec extends SparkSpec {
     }
   }
 
-  test("chunked probe-push union is bit-identical to the legacy scan") {
+  test("chunked probe-push union is bit-identical to the one-cluster-per-bucket scan") {
     assert(chunked.load("db").nProbe > 4,
       "fixture must span multiple probe chunks for this test to bite")
     mkQueries(8).foreach { q =>
-      assert(results(chunked, "db", q) == results(legacy, "db", q))
+      assert(results(chunked, "db", q) == results(perCluster, "db", q))
     }
   }
 
@@ -254,25 +255,28 @@ class CodedLayoutSpec extends SparkSpec {
     } finally r.close()
   }
 
-  test("disk shape: bucketed root has cluster_bucket dirs, legacy has cluster_id dirs") {
-    val ldoc = legacy.load("db")
+  test("disk shape: more cluster_bucket dirs at shift 0 than 2, no cluster_id dirs") {
+    val pdoc = perCluster.load("db")
     val bdoc = bucketed.load("db")
-    assert(ldoc.codedBucketShift == -1 && bdoc.codedBucketShift == 2)
-    assert(ldoc.numClusters == bdoc.numClusters,
+    assert(pdoc.codedBucketShift == 0 && bdoc.codedBucketShift == 2)
+    assert(pdoc.numClusters == bdoc.numClusters,
       "same data + seed must give the same nlist on both engines")
-    assert(hiveDirs(legacy, "db", "cluster_id=").nonEmpty)
-    assert(hiveDirs(legacy, "db", "cluster_bucket=").isEmpty)
+    val clusterDirs = hiveDirs(perCluster, "db", "cluster_bucket=")
     val bucketDirs = hiveDirs(bucketed, "db", "cluster_bucket=")
+    assert(clusterDirs.size > bucketDirs.size,
+      s"shift 0: ${clusterDirs.size} dirs, shift 2: ${bucketDirs.size}")
+    assert(clusterDirs.size <= pdoc.numClusters)
+    assert(hiveDirs(perCluster, "db", "cluster_id=").isEmpty)
     assert(hiveDirs(bucketed, "db", "cluster_id=").isEmpty)
     // multi-bucket for real: shift 2 over nlist clusters
-    val expected = Engine.codedBucketCount(bdoc.numClusters, 2)
+    val expected = CodedStore.bucketCount(bdoc.numClusters, 2)
     assert(bucketDirs.size > 1 && bucketDirs.size <= expected,
       s"got ${bucketDirs.size} bucket dirs for nlist ${bdoc.numClusters}")
   }
 
   test("trained queries are bit-identical across layouts") {
     mkQueries(8).foreach { q =>
-      assert(results(bucketed, "db", q) == results(legacy, "db", q))
+      assert(results(bucketed, "db", q) == results(perCluster, "db", q))
     }
   }
 
@@ -280,26 +284,27 @@ class CodedLayoutSpec extends SparkSpec {
     val rnd = new Random(Seed + 2)
     val extraV = Seq.fill(120)(Array.fill(D)(rnd.nextGaussian().toFloat))
     val extraM = Seq.tabulate(120)(i => s"""{"x":$i}""")
-    legacy.addLocal("db", extraV, extraM)
+    perCluster.addLocal("db", extraV, extraM)
     bucketed.addLocal("db", extraV, extraM)
-    assert(bucketed.count("db") == legacy.count("db"))
+    assert(bucketed.count("db") == perCluster.count("db"))
     mkQueries(5).foreach { q =>
-      assert(results(bucketed, "db", q) == results(legacy, "db", q))
+      assert(results(bucketed, "db", q) == results(perCluster, "db", q))
     }
   }
 
   test("delete + compact rewrites preserve the layout and the results") {
     val ids = (0L until N.toLong by 7L).toSeq
-    legacy.remove("db", ids, compactionThreshold = 0.01)
+    perCluster.remove("db", ids, compactionThreshold = 0.01)
     bucketed.remove("db", ids, compactionThreshold = 0.01)
-    assert(legacy.load("db").numPendingDeletes == 0L,
+    assert(perCluster.load("db").numPendingDeletes == 0L,
       "threshold 0.01 must have forced a physical compaction")
     assert(bucketed.load("db").numPendingDeletes == 0L)
     // compaction rewrote into a NEW version dir in the SAME layout
     assert(hiveDirs(bucketed, "db", "cluster_bucket=").nonEmpty)
-    assert(hiveDirs(legacy, "db", "cluster_id=").nonEmpty)
+    assert(hiveDirs(perCluster, "db", "cluster_bucket=").nonEmpty)
+    assert(hiveDirs(perCluster, "db", "cluster_id=").isEmpty)
     mkQueries(5).foreach { q =>
-      assert(results(bucketed, "db", q) == results(legacy, "db", q))
+      assert(results(bucketed, "db", q) == results(perCluster, "db", q))
     }
   }
 
@@ -312,10 +317,10 @@ class CodedLayoutSpec extends SparkSpec {
 
   test("bucketed file count tracks buckets, not clusters") {
     // after train + appends + compaction the bin-pack bound applies per
-    // bucket: far fewer files than the legacy per-cluster layout
+    // bucket: far fewer files than one dir per cluster would hold
     val bdoc = bucketed.load("db")
-    val units = Engine.codedBucketCount(bdoc.numClusters, bdoc.codedBucketShift)
-    assert(parquetFiles(bucketed, "db") <= Engine.CodedFilesPerCluster * units)
+    val units = CodedStore.bucketCount(bdoc)
+    assert(parquetFiles(bucketed, "db") <= CodedStore.CodedFilesPerCluster * units)
     assert(units < bdoc.numClusters)
   }
 
@@ -364,5 +369,23 @@ class CodedLayoutSpec extends SparkSpec {
       assert(a == results(bucketed, "db", q),
         "row-filter branch diverged from the chunk-pushed plan")
     }
+  }
+
+  test("a negative layout shift fails the train and commits nothing") {
+    // there is no layout below shift 0 any more: a sizing seam that asks
+    // for one must fail loudly before the swap, leaving the db untrained
+    val neg = new Engine(spark, tmpDir("graft-coded-negative")) {
+      override protected def chooseCodedBucketShift(n: Long, nlist: Int,
+                                                    d: Int, m: Int): Int = -1
+    }
+    neg.create("db", vectorDimension = D)
+    neg.addLocal("db", corpusV, corpusM)
+    val e = intercept[IllegalStateException](
+      neg.train("db", params = Some(IndexParams(D, D, 4, omitOpq = true)),
+        kmeansIters = 2, seed = Seed, minTrainRows = 1))
+    assert(e.getMessage.contains("shift -1"), e.getMessage)
+    assert(!neg.load("db").isTrained)
+    assert(neg.trainingStatus("db") == "failed")
+    assert(neg.query("db", mkQueries(1).head, finalTopK = 5).count() == 5L)
   }
 }

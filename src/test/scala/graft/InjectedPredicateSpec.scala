@@ -18,7 +18,7 @@ class InjectedPredicateSpec extends SparkSpec {
   private lazy val dir: String = {
     val d = tmpDir("graft-injpred")
     // one file, cluster_id-sorted, 512-row pages — the coded layout's
-    // page geometry (Engine.writeCodedRows)
+    // page geometry (CodedStore.writeRows)
     spark.range(N)
       .select((col("id") / 64).cast("int").as("cluster_id"), col("id").as("v"))
       .coalesce(1).sortWithinPartitions("cluster_id")

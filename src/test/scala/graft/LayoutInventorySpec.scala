@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The coded table's on-disk format is a decision only `core/CodedStore`
+  * makes: `core/Engine.scala` keeps the lifecycle (locks, catalog commits,
+  * routing) and must not name the layout fields or the bucket dirs. A
+  * change that lets the format leak back into the lifecycle code fails
+  * the suite here.
+  */
+class LayoutInventorySpec extends AnyFunSuite {
+
+  private val LayoutNames =
+    Seq("codedBucketShift", "codedOwners", "ownerVersions", "cluster_bucket")
+
+  test("core/Engine.scala names none of the coded layout's fields or dirs") {
+    val path = Paths.get("src/main/scala/graft/core/Engine.scala")
+    assert(Files.isRegularFile(path), s"run from the repo root (no $path)")
+    val lines = Files.readString(path).split("\n").zipWithIndex
+    val leaks = for {
+      (line, i) <- lines.toSeq
+      name <- LayoutNames if line.contains(name)
+    } yield s"Engine.scala:${i + 1}: $name"
+    assert(leaks.isEmpty, s"layout knowledge outside CodedStore:\n${leaks.mkString("\n")}")
+    // and the store that owns it still does
+    val store = Files.readString(Paths.get("src/main/scala/graft/core/CodedStore.scala"))
+    LayoutNames.foreach(n => assert(store.contains(n), s"CodedStore no longer names $n"))
+  }
+}

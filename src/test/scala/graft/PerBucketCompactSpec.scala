@@ -99,8 +99,7 @@ class PerBucketCompactSpec extends SparkSpec {
     assert(doc.indexVersion == v0 + 1)
     assert(doc.numPendingDeletes == 0L)
     // owner map: target bucket moved to v1, everything else stayed at v0
-    val buckets = Engine.codedBucketCount(doc.numClusters, doc.codedBucketShift)
-    val owners = doc.ownerVersions(buckets)
+    val owners = graft.core.CodedStore.ownerVersions(doc)
     assert(owners(target) == v0 + 1)
     untouched.foreach(b => assert(owners(b) == v0, s"bucket $b must stay at v$v0"))
 

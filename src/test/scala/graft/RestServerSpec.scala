@@ -145,6 +145,68 @@ class RestServerSpec extends SparkSpec {
     assert(post("/db/restdb/remove", """{"ids":[-5]}""")._1 == 400)
   }
 
+  test("hostile ids and sizes are rejected with 400, nothing changed") {
+    def info(db: String): JsonNode =
+      mapper.readTree(get(s"/db/$db/info")._2.get("db_info").asText())
+    val before = info("restdb").get("num_vectors").asLong()
+    // Jackson's asLong() read the first five as id 0 or 1
+    Seq("\"abc\"", "null", "{}", "true", "1.7", "[2]", "99999999999999999999")
+      .foreach { bad =>
+        val (c, b) = post("/db/restdb/remove", s"""{"ids": [2, $bad]}""")
+        assert(c == 400 && b.get("detail").asText().contains("ids"), s"id $bad: $c $b")
+      }
+    Seq("""{"ids": 2}""", """{"ids": "2"}""", """{"ids": {"a": 2}}""",
+        """{"ids": null}""", "{}").foreach { bad =>
+      val (c, b) = post("/db/restdb/remove", bad)
+      assert(c == 400 && b.get("detail").asText().contains("ids"), s"$bad: $c $b")
+    }
+    assert(info("restdb").get("num_vectors").asLong() == before, "a rejected remove deleted rows")
+
+    // create: both sizes are checked before anything is created
+    Seq("vector_dimension" -> Seq("\"abc\"", "1.7", "true", "{}", "3000000000"),
+        "max_memory_usage" -> Seq("\"abc\"", "1.7", "true", "1e30", "99999999999999999999"))
+      .foreach { case (key, bads) =>
+        bads.foreach { bad =>
+          val (c, b) = post("/db/create", s"""{"name": "hostile", "$key": $bad}""")
+          assert(c == 400 && b.get("detail").asText().contains(key), s"$key = $bad: $c $b")
+          assert(get("/db/hostile/info")._1 == 404, s"$key = $bad created the db")
+        }
+      }
+    // an explicit null means absent (the reference declares both Optional)
+    assert(post("/db/create",
+      """{"name": "nulls", "vector_dimension": null, "max_memory_usage": null}""")._1 == 200)
+    assert(info("nulls").get("vector_dimension").asInt() == -1)
+
+    val maxBefore = get("/db/view_cache")._2.get("max_memory_usage").asLong()
+    Seq("{}", """{"max_memory_usage": null}""", """{"max_memory_usage": "abc"}""",
+        """{"max_memory_usage": 1.7}""", """{"max_memory_usage": true}""").foreach { bad =>
+      val (c, b) = post("/db/update_max_memory_usage", bad)
+      assert(c == 400 && b.get("detail").asText().contains("max_memory_usage"), s"$bad: $c $b")
+    }
+    assert(get("/db/view_cache")._2.get("max_memory_usage").asLong() == maxBefore)
+
+    Seq("pca_dimension" -> "\"abc\"", "pca_dimension" -> "1.7",
+        "opq_dimension" -> "true", "compressed_vector_bytes" -> "{}",
+        "compressed_vector_bytes" -> "3000000000").foreach { case (key, bad) =>
+      val (c, b) = post("/db/restdb/train", s"""{"$key": $bad}""")
+      assert(c == 400 && b.get("detail").asText().contains(key), s"$key = $bad: $c $b")
+    }
+    assert(get("/db/restdb/train")._2.get("status").asText() == "not started",
+      "a rejected train body started a train")
+    // null dimensions mean absent: the heuristic train starts (and, on an
+    // empty db, bypasses to "failed")
+    val (ct, bt) = post("/db/nulls/train",
+      """{"pca_dimension": null, "opq_dimension": null, "compressed_vector_bytes": null}""")
+    assert(ct == 200, s"$ct $bt")
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var status = ""
+    while ({ status = get("/db/nulls/train")._2.get("status").asText()
+             status == "in progress" || status == "not started" } &&
+           System.nanoTime() < deadline) Thread.sleep(100)
+    assert(status == "failed")
+    assert(post("/db/nulls/delete")._1 == 200)
+  }
+
   test("train: async start, status endpoint, small-db bypass → failed " +
        "(fastapi.py:314-338; T3)") {
     assert(get("/db/restdb/train")._2.get("status").asText() == "not started")

@@ -144,6 +144,44 @@ class TornCatalogSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  /** The epoch file `save` just wrote for `name`, as text. */
+  private def savedJson(root: String, name: String): String = {
+    val f = fsOf(root)
+    val first = new Path(new Path(root, name), "catalog.00000000000000000001.json")
+    val in = f.open(first)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  test("a trained catalog on the retired per-cluster layout fails to load, naming the db") {
+    val root = newRoot()
+    Catalog.save(root, doc("percluster", 10L).copy(indexVersion = 0))
+    val json = savedJson(root, "percluster")
+    assert(json.contains("\"codedBucketShift\": -1"), json)
+    val e = intercept[RuntimeException](Catalog.load(root, "percluster"))
+    assert(e.getMessage.contains("'percluster'") && e.getMessage.contains("retrain"),
+      e.getMessage)
+  }
+
+  test("a trained catalog without a codedBucketShift key fails to load") {
+    val root = newRoot()
+    Catalog.save(root, doc("noshift", 10L).copy(indexVersion = 2, codedBucketShift = 3))
+    val json = savedJson(root, "noshift")
+    val stripped = json.replaceAll("""\s*"codedBucketShift": 3,""", "")
+    assert(stripped != json && !stripped.contains("codedBucketShift"))
+    writeRaw(root, "noshift", "catalog.00000000000000000002.json", stripped)
+    val e = intercept[RuntimeException](Catalog.load(root, "noshift"))
+    assert(e.getMessage.contains("'noshift'") && e.getMessage.contains("retrain"),
+      e.getMessage)
+  }
+
+  test("an untrained catalog keeps codedBucketShift -1 and loads") {
+    val root = newRoot()
+    Catalog.save(root, doc("fresh", 10L))
+    assert(savedJson(root, "fresh").contains("\"codedBucketShift\": -1"))
+    val d = Catalog.load(root, "fresh")
+    assert(!d.isTrained && d.codedBucketShift == -1 && d.maxId == 10L)
+  }
+
   test("reader never sees a torn or absent doc while a writer saves and sweeps") {
     val root = newRoot()
     Catalog.save(root, doc("db", 0L))

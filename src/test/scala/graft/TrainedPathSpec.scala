@@ -286,7 +286,7 @@ class TrainedPathSpec extends SparkSpec {
       try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
       finally s.close()
     }
-    val bound = Engine.CodedFilesPerCluster * doc0.numClusters
+    val bound = graft.core.CodedStore.CodedFilesPerCluster * doc0.numClusters
     // burst of tiny adds: each lays down one file-set per touched cluster
     (0 until 15).foreach { b =>
       eng.addLocal("cc", vecs(10), (0 until 10).map(i => s"b$b-$i"))

@@ -63,8 +63,8 @@ class CoarseUnionJobSpec extends SparkSpec {
       val probes = model.nearestClusters(qp, doc.nProbe)
       assert(chunked.servingScanCoarse(doc, qp, probes, 200).isEmpty,
         "plan-free scan answered - the chunk path is not under test")
-      assert(chunked.prunedLiveCodedChunks(doc, probes).length > 1)
-      assert(single.prunedLiveCodedChunks(single.load("db"), probes).length == 1)
+      assert(chunked.store.chunks(doc, probes).length > 1)
+      assert(single.store.chunks(single.load("db"), probes).length == 1)
     }
     val many = qs.map(results(chunked, _))
     val one = qs.map(results(single, _))

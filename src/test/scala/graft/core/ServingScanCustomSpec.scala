@@ -41,7 +41,7 @@ class ServingScanCustomSpec extends SparkSpec {
   private def catalystCoarse(e: Engine, doc: graft.catalog.CatalogDoc,
                              qp: Array[Float], probes: Array[Int],
                              prelimK: Int): Array[(Long, Double, Int)] = {
-    val chunks = e.prunedLiveCodedChunks(doc, probes)
+    val chunks = e.store.chunks(doc, probes)
     graft.operators.BatchANN.coarseSingleChunked(
       spark, chunks, e.modelBroadcast(doc), qp, probes, prelimK)
   }
@@ -149,7 +149,7 @@ class ServingScanCustomSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getString(2)))
       .sortBy(_._1).toSeq
     import org.apache.spark.sql.functions._
-    val old = e.prunedLiveCoded(doc, candRows.map(_._3).distinct)
+    val old = e.store.prunedLive(doc, candRows.map(_._3).distinct)
       .select("id", "vector", "metadata")
       .filter(col("id").isInCollection(
         candRows.map(r => java.lang.Long.valueOf(r._1)).toIndexedSeq))

@@ -10,7 +10,7 @@ import graft.index.IndexParams
   * a plan transform — a silent non-match would quietly revert to
   * unpruned reads with pushdown off, costing a 2× decode at scale with
   * no correctness signal). Lives in graft.core to reach the
-  * private[core] prunedLiveCodedChunks.
+  * private[core] store.chunks.
   */
 class ServingScanInjectionSpec extends SparkSpec {
 
@@ -41,7 +41,7 @@ class ServingScanInjectionSpec extends SparkSpec {
     val probes = Array.range(0, math.min(8, doc.numClusters))
     val key = org.apache.parquet.hadoop.ParquetInputFormat.FILTER_PREDICATE
 
-    val chunks = engine.prunedLiveCodedChunks(doc, probes)
+    val chunks = engine.store.chunks(doc, probes)
     assert(chunks.nonEmpty)
     chunks.foreach { df =>
       val rels = df.queryExecution.analyzed.collect {
@@ -57,7 +57,7 @@ class ServingScanInjectionSpec extends SparkSpec {
       assert(df.sparkSession.conf.get("spark.sql.parquet.filterPushdown") == "false")
     }
 
-    val mainScan = engine.prunedLiveCoded(doc, probes)
+    val mainScan = engine.store.prunedLive(doc, probes)
     val mainRels = mainScan.queryExecution.analyzed.collect {
       case lr: LogicalRelation => lr.relation.asInstanceOf[HadoopFsRelation]
     }
