@@ -244,12 +244,11 @@ object ScaleEval {
     // probe selection + plan build + Catalyst planning, forced via
     // executedPlan) and cluster-side (job + collect) — attributes how
     // much of ITS p50 is planning vs scan/kernel work
-    // r14: the coarse stage is EAGER inside queryCatalyst (one union job
-    // over the chunk scans, BatchANN.coarseSingleChunked), so the "plan"
-    // share now contains the coarse scan execution. Task accounting +
-    // input bytes attribute where a cold-cache p50 goes (driver vs
-    // task-time vs IO volume) — the r14 35M artifact needed exactly this
-    // split.
+    // the coarse and fetch stages are EAGER inside queryCatalyst (plan-free
+    // ServingScan jobs), so the "plan" share contains their execution.
+    // Task accounting + input bytes attribute where a cold-cache p50 goes
+    // (driver vs task-time vs IO volume) — the r14 35M artifact needed
+    // exactly this split.
     // the catalyst p50 is a GATED number (<300 ms): start+END canary
     // bracket with retry, so a window breaking mid-loop re-measures
     // instead of polluting the gate reading (VERDICT r16 next #1).

@@ -239,7 +239,9 @@ final class RestServer(engine: Engine, port: Int = 8000,
     // schema's semantics, while the body-less path keeps the reference's
     // effective server default (training_params.py omit_opq=True) via
     // params=None → heuristics.
-    val in = try body(ex) catch { case NonFatal(_) => mapper.createObjectNode() }
+    val in = body(ex)
+    val omitOpq = boolField(in, "omit_opq")
+    val twoLevel = boolField(in, "use_two_level_clustering")
     val hasDims = in.hasNonNull("pca_dimension") ||
       in.hasNonNull("opq_dimension") || in.hasNonNull("compressed_vector_bytes")
     val params =
@@ -248,16 +250,13 @@ final class RestServer(engine: Engine, port: Int = 8000,
           intField(in, "pca_dimension", -1, nullIsAbsent = true),
           intField(in, "opq_dimension", -1, nullIsAbsent = true),
           intField(in, "compressed_vector_bytes", -1, nullIsAbsent = true),
-          omitOpq = in.path("omit_opq").asBoolean(false)))
-      else if (in.hasNonNull("omit_opq")) {
+          omitOpq = omitOpq.getOrElse(false)))
+      else omitOpq.flatMap { omit =>
         val dim = engine.load(name).vectorDimension
-        if (dim > 0)
-          Some(Heuristics.defaultIndexParams(dim)
-            .copy(omitOpq = in.get("omit_opq").asBoolean()))
-        else None // train will reject the empty db regardless
-      } else None
-    val twoLevel = if (in.hasNonNull("use_two_level_clustering"))
-      Some(in.get("use_two_level_clustering").asBoolean()) else None
+        // train will reject the empty db regardless
+        if (dim > 0) Some(Heuristics.defaultIndexParams(dim).copy(omitOpq = omit))
+        else None
+      }
     try
       engine.trainAsync(name, params = params, useTwoLevelClustering = twoLevel,
         maxMemoryUsage = dbMaxMemory.getOrElse(name, Engine.DefaultMaxMemoryUsage),
@@ -332,6 +331,16 @@ final class RestServer(engine: Engine, port: Int = 8000,
     longField(in, key, nullIsAbsent).fold(default) { v =>
       if (v.isValidInt) v.toInt else fail(400, s"$key must be an integer")
     }
+
+  /** An optional JSON boolean: absent or null → None; anything else → 400
+    * (asBoolean read "yes", "abc" and {} as false and 1 as true).
+    */
+  private def boolField(in: JsonNode, key: String): Option[Boolean] = {
+    val n = in.get(key)
+    if (n == null || n.isNull) None
+    else if (n.isBoolean) Some(n.booleanValue())
+    else fail(400, s"$key must be a boolean")
+  }
 
   /** [[intField]]'s Long twin, for memory sizes: None when absent. */
   private def longField(in: JsonNode, key: String,
@@ -473,10 +482,17 @@ final class RestServer(engine: Engine, port: Int = 8000,
 
   // --------------------------------------------------------------- plumbing
 
+  /** The request's JSON body; an empty body reads as `{}`. A body that
+    * does not parse answers 422, FastAPI's status for a JSON decode error.
+    */
   private def body(ex: HttpExchange): JsonNode = {
     val bytes = ex.getRequestBody.readAllBytes()
     if (bytes.isEmpty) mapper.createObjectNode()
-    else mapper.readTree(bytes)
+    else try mapper.readTree(bytes)
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        fail(422, s"JSON decode error: ${e.getOriginalMessage}")
+    }
   }
 
   private def obj(kvs: (String, Any)*): ObjectNode = {

@@ -122,8 +122,8 @@ object Catalog {
   private def epochFile(dir: Path, epoch: Long): Path =
     new Path(dir, f"catalog.$epoch%020d.json")
 
-  /** (epoch, status) of every epoch file present, torn or not, plus the
-    * legacy single file as epoch 0 — newest first.
+  /** (epoch, status) of every epoch file present, torn or not — newest
+    * first.
     */
   private def listEpochs(dir: Path, f: FileSystem)
       : Seq[(Long, org.apache.hadoop.fs.FileStatus)] = {
@@ -131,17 +131,19 @@ object Catalog {
       try f.listStatus(dir).toSeq catch {
         case _: java.io.FileNotFoundException => Seq.empty
       }
-    val epochs = listed.flatMap { st =>
+    listed.flatMap { st =>
       st.getPath.getName match {
         case EpochFile(e) => Some(e.toLong -> st)
         case _ => None
       }
-    }
-    val legacy = listed.collectFirst {
-      case st if st.getPath.getName == "catalog.json" => 0L -> st
-    }
-    (epochs ++ legacy).sortBy(-_._1)
+    }.sortBy(-_._1)
   }
+
+  /** The retired pre-epoch single-file catalog. A db dir holding only
+    * this file still EXISTS — so it never reads as "db not found" — but
+    * [[load]] refuses it.
+    */
+  private def legacyFile(dir: Path): Path = new Path(dir, "catalog.json")
 
   /** Parsed-doc cache: one entry per catalog DIRECTORY, keyed by the
     * winning epoch file's (name, length, mtime). A complete epoch file
@@ -158,7 +160,8 @@ object Catalog {
 
   def exists(root: String, name: String)(implicit conf: Configuration): Boolean = {
     val dir = new Path(root, name)
-    listEpochs(dir, fs(dir, conf)).nonEmpty
+    val f = fs(dir, conf)
+    listEpochs(dir, f).nonEmpty || f.exists(legacyFile(dir))
   }
 
   def save(root: String, doc: CatalogDoc)(implicit conf: Configuration): Unit = {
@@ -204,10 +207,10 @@ object Catalog {
     // next save's sweep removes them once a newer complete epoch
     // exists). Best-effort: a failed read/delete just leaves an extra
     // epoch for the next sweep.
-    val newestComplete = known.find { case (e, st) =>
-      e == 0L || (try {
+    val newestComplete = known.find { case (_, st) =>
+      try {
         """"complete"\s*:\s*true""".r.findFirstIn(readFile(f, st.getPath)).nonEmpty
-      } catch { case _: java.io.IOException => false })
+      } catch { case _: java.io.IOException => false }
     }
     newestComplete.foreach { case (ce, _) =>
       known.filter(_._1 < ce).foreach { case (_, st) =>
@@ -224,6 +227,9 @@ object Catalog {
     var winner: org.apache.hadoop.fs.FileStatus = null
     while (raw == null) {
       val cands = listEpochs(dir, f)
+      if (cands.isEmpty && f.exists(legacyFile(dir)))
+        sys.error(s"catalog for '$name': only the retired pre-epoch " +
+          "catalog.json is present; recreate the db")
       require(cands.nonEmpty, s"no catalog for database '$name' under $root")
       // parsed-doc cache probe on the NEWEST listed candidate: a hit
       // means the newest file IS the complete winner last parsed
@@ -236,14 +242,14 @@ object Catalog {
           cached._2 == newest.getLen &&
           cached._3 == newest.getModificationTime)
         return cached._4
-      val found = cands.iterator.flatMap { case (epoch, st) =>
+      val found = cands.iterator.flatMap { case (_, st) =>
         // a candidate may be mid-write (visible-but-partial on filesystems
         // without atomic create visibility) or already swept — skip to the
         // previous complete epoch
         try {
           val s = readFile(f, st.getPath)
           val complete = """"complete"\s*:\s*true""".r.findFirstIn(s).nonEmpty
-          if (complete || epoch == 0L) Some((s, st)) else None
+          if (complete) Some((s, st)) else None
         } catch { case _: java.io.IOException => None }
       }.nextOption().orNull
       if (found != null) { raw = found._1; winner = found._2 }

@@ -39,23 +39,24 @@ private[core] final class CodedStore(
   private def codedDir(name: String, version: Int): String =
     s"$root/$name/index/v$version/coded"
 
-  // The probe filter is `cluster_id IN (…)`; a pushed In is what lets
-  // parquet page stats prune the cluster_id-sorted files. Spark's
-  // default threshold (10) never pushes a probe list — but the push
-  // compiles to a LEFT-NESTED OR CHAIN whose evaluation recurses once per
-  // value, so a large threshold is a StackOverflowError at scale
+  // The Catalyst reads of the table (the batch and filtered paths, the
+  // compaction rewrite) filter with `cluster_id IN (…)`; a pushed In is
+  // what lets parquet page stats prune the cluster_id-sorted files.
+  // Spark's default threshold (10) never pushes a probe list — but the
+  // push compiles to a LEFT-NESTED OR CHAIN whose evaluation recurses once
+  // per value, so a large threshold is a StackOverflowError at scale
   // (measured: a 40k-value probe-union filter killed every scan task at
-  // 35M/nlist-91k). 512 keeps the chain shallow; [[prunedLive]] chunks bigger
-  // probe lists into ≤probePushChunk-value disjoint scans instead.
+  // 35M/nlist-91k). 512 keeps the chain shallow; [[prunedLive]] chunks
+  // bigger probe lists into ≤probePushChunk-value disjoint branches.
   spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-  // Keep generated code LITERAL-FREE for list predicates: every query
+  // Keep generated code LITERAL-FREE for list predicates: every batch
   // carries fresh probe/candidate-id lists, and both the small-list `In`
   // codegen and `InSet`'s switch form inline the values into the
-  // generated source — a Janino recompile per query (and per partition-
+  // generated source — a Janino recompile per call (and per partition-
   // prune) instead of a cache hit. Converting at ≥2 values and disabling
   // the switch puts the values in `references` (the source text is
   // stable), trading a hash-set probe per row — noise next to the scan —
-  // for zero steady-state compilation in the serving path.
+  // for zero steady-state compilation on these paths.
   spark.conf.set("spark.sql.optimizer.inSetConversionThreshold", "1")
   spark.conf.set("spark.sql.optimizer.inSetSwitchThreshold", "0")
 
@@ -67,15 +68,9 @@ private[core] final class CodedStore(
   private val frameCache = scala.collection.concurrent.TrieMap
     .empty[(String, Int), DataFrame]
 
-  /** [[frameCache]]'s twin for [[servingSession]] — same keys,
-    * invalidated together.
-    */
-  private val servingFrameCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), DataFrame]
-
   /** [[ServingScan.Epoch]] per (db, indexVersion) — the plan-free coarse
     * scan's amortized driver state (one conf broadcast, one bucket→file
-    * listing). Same keys and invalidation as the frame caches (the
+    * listing). Same keys and invalidation as the frame cache (the
     * listing has exactly the cached FileIndex's staleness rules,
     * including the same-version post-train append).
     */
@@ -85,7 +80,6 @@ private[core] final class CodedStore(
   /** Drop every cached read state of one (db, indexVersion). */
   def evict(k: (String, Int)): Unit = {
     frameCache.remove(k)
-    servingFrameCache.remove(k)
     epochCache.remove(k).foreach(_.close())
   }
 
@@ -127,32 +121,24 @@ private[core] final class CodedStore(
     */
   def frame(doc: CatalogDoc): DataFrame =
     frameCache.getOrElseUpdate((doc.name, doc.indexVersion),
-      buildFrame(doc, spark))
-
-  /** [[frame]] read through [[servingSession]]: identical rows, planned
-    * under the serving confs. Only the internal coarse chunk scans use
-    * it — frames that reach callers stay on the main session.
-    */
-  private def servingFrame(doc: CatalogDoc): DataFrame =
-    servingFrameCache.getOrElseUpdate((doc.name, doc.indexVersion),
-      buildFrame(doc, servingSession))
+      buildFrame(doc))
 
   /** A single whole-dir read when every bucket lives under the current
     * version (fresh train, bin-pack); otherwise a union of per-owner-
     * version reads, each restricted to the bucket dirs that version
     * still owns.
     */
-  private def buildFrame(doc: CatalogDoc, session: SparkSession): DataFrame =
+  private def buildFrame(doc: CatalogDoc): DataFrame =
     if (doc.codedOwners.isEmpty)
-      session.read.schema(codedSchema)
+      spark.read.schema(codedSchema)
         .parquet(codedDir(doc.name, doc.indexVersion))
     else {
       val byOwner = ownedBucketDirs(doc).groupBy(_._1).toSeq.sortBy(_._1)
       if (byOwner.isEmpty)
-        session.createDataFrame(session.sparkContext.emptyRDD[Row], codedSchema)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], codedSchema)
       else byOwner.map { case (v, dirs) =>
         val base = codedDir(doc.name, v)
-        session.read.schema(codedSchema).option("basePath", base)
+        spark.read.schema(codedSchema).option("basePath", base)
           .parquet(dirs.map { case (_, b, _) => s"$base/cluster_bucket=$b" }: _*)
       }.reduce(_ union _)
     }
@@ -165,14 +151,12 @@ private[core] final class CodedStore(
     * analyzer passes ≈ 40 ms/query at the 8-chunk 35M shape
     * (PLANS.md, round-14 serving-floor findings).
     */
-  private def branchPlans(doc: CatalogDoc, probes: Array[Int],
-                          serving: Boolean)
+  private def branchPlans(doc: CatalogDoc, probes: Array[Int])
       : IndexedSeq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.{In => ExprIn, Literal => ExprLit}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan}
     val shift = doc.codedBucketShift
-    val basePlan =
-      (if (serving) servingFrame(doc) else frame(doc)).queryExecution.analyzed
+    val basePlan = frame(doc).queryExecution.analyzed
     val bucketAttr = basePlan.output.find(_.name == "cluster_bucket").get
     val clusterAttr = basePlan.output.find(_.name == "cluster_id").get
     def branchPlan(chunk: Array[Int]): LogicalPlan =
@@ -181,13 +165,7 @@ private[core] final class CodedStore(
         LFilter(
           ExprIn(bucketAttr,
             chunk.map(_ >>> shift).distinct.toIndexedSeq.map(v => ExprLit(v))),
-          // serving scans: the probe predicate reaches the parquet
-          // reader pre-serialized via read options (the serving session
-          // has Spark-side pushdown off) — see Engine.injectedIntInOptions
-          if (serving)
-            Engine.withReadOptions(basePlan,
-              Engine.injectedIntInOptions("cluster_id", chunk))
-          else basePlan))
+          basePlan))
     val sorted = probes.sorted
     if (sorted.length <= maxChunkedProbePush(doc.numClusters))
       sorted.grouped(probePushChunk()).map(branchPlan).toIndexedSeq
@@ -201,72 +179,21 @@ private[core] final class CodedStore(
     else IndexedSeq(branchPlan(sorted)) // row-level only; bucket pruning still applies
   }
 
-  /** The live rows of the probed clusters: one chunked-union scan (bucket
-    * dirs pruned, the probe In pushed to parquet) minus pending
-    * soft-deletes (D2 — the index never serves dead rows; the deletes
-    * side is broadcast-small by the compaction threshold).
+  /** The live rows of the probed clusters as a Catalyst frame: one
+    * chunked-union scan (bucket dirs pruned, the probe In pushed to
+    * parquet) minus pending soft-deletes (D2 — the index never serves dead
+    * rows; the deletes side is broadcast-small by the compaction
+    * threshold). The batch path and the single query's pushed under-fill
+    * round read through it; a single query's first coarse and fetch
+    * stages read the same live rows through [[ServingScan]].
     */
   def prunedLive(doc: CatalogDoc, probes: Array[Int]): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Union => LUnion}
-    val plans = branchPlans(doc, probes, serving = false)
-    live(doc, org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
-      if (plans.length == 1) plans.head else LUnion(plans)))
-  }
-
-  /** [[prunedLive]] split into its chunk scans, one DataFrame per chunk,
-    * planned under [[servingSession]] — the q=1 coarse path's Catalyst
-    * form, which [[graft.operators.BatchANN.coarseSingleChunked]] scores
-    * in ONE union job. The row-set union over them is exactly
-    * [[prunedLive]]'s.
-    */
-  def chunks(doc: CatalogDoc, probes: Array[Int]): IndexedSeq[DataFrame] =
-    branchPlans(doc, probes, serving = true).map(p =>
-      live(doc, org.apache.spark.sql.graftbridge.Bridge.ofRows(servingSession, p)))
-
-  private def live(doc: CatalogDoc, rows: DataFrame): DataFrame =
+    val plans = branchPlans(doc, probes)
+    val rows = org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+      if (plans.length == 1) plans.head else LUnion(plans))
     if (doc.numPendingDeletes == 0) rows
     else rows.join(broadcast(deletes(doc)), Seq("id"), "left_anti")
-
-  /** Session for the INTERNAL serving scans — the per-query coarse chunk
-    * scans. Shares the SparkContext (same executors, same scheduler); the
-    * one conf that matters is `files.minPartitionNum = 1`: the default
-    * (defaultParallelism) makes Spark split every scan to fill all cores
-    * via bytes-per-core, which turns the 8 CONCURRENT ~26 MB-file chunk
-    * scans of one query into ~300 one-file tasks — per-task file open +
-    * footer + page-index cost dominated the measured coarse stage
-    * (PLANS.md, round-14 serving-floor findings: 319 ms of the 489 ms
-    * coarse was pure scan setup).
-    * With minPartitionNum=1 the packer fills 128 MB partitions (~4-5
-    * files per task), the 8 jobs still land ~60 tasks on 32 cores, and
-    * big analytic scans are unaffected (maxPartitionBytes still bounds a
-    * task). Analytics/train/fetch scans stay on the MAIN session.
-    */
-  private lazy val servingSession: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.files.minPartitionNum", "1")
-    // 512 MB split packing for the per-query coarse scans: at the 35M
-    // geometry it cut the concurrent chunk scan 154→138 ms and the fresh
-    // coarse 271→241 ms (evalruns_r15/ccp6_{def,512m}.log) — fewer
-    // per-task reader inits, still ≥2 tasks per bucket file for parallelism
-    s.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    // re-pin the scan confs (newSession starts from globals, not from
-    // the parent session's runtime values)
-    s.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-    s.conf.set("spark.sql.optimizer.inSetConversionThreshold", "1")
-    s.conf.set("spark.sql.optimizer.inSetSwitchThreshold", "0")
-    // Spark-side parquet pushdown OFF for the serving scans: the probe
-    // predicate rides pre-serialized in the relation's read options
-    // (Engine.injectedIntInOptions — built once per chunk per query on
-    // the driver as parquet's native In), and Spark's own per-file
-    // setFilterPredicate — the r15-attributed O(terms²) toString +
-    // serialize per reader init, ~99.6% of coarse task CPU — would
-    // rebuild and OVERWRITE it. Row-level exactness is unaffected (the
-    // logical In Filter stays in the plan); reader-level row-group +
-    // page + dictionary pruning still runs off the injected predicate.
-    s.conf.set("spark.sql.parquet.filterPushdown", "false")
-    s.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    s
   }
 
   /** The plan-free scan's epoch for `doc`, with a race-safe build:

@@ -372,6 +372,7 @@ class Engine(val spark: SparkSession, val root: String) {
   def removeFromCache(name: String): Unit = {
     indexCache.removeIf { case (n, _) => n == name }
     dropModelBroadcasts(name, keepBelow = Int.MaxValue)
+    dropPendingDeletes(name)
     autoPrepared.remove(name).foreach(_.close())
   }
 
@@ -507,6 +508,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // catalog delete would pass its existence check and leak its pinned
     // blocks until the engine died
     Catalog.delete(root, name)
+    dropPendingDeletes(name)
     autoPrepared.remove(name).foreach(_.close())
     prepareLocks.remove(name)
     docGeneration.incrementAndGet()
@@ -533,6 +535,34 @@ class Engine(val spark: SparkSession, val root: String) {
   private def deletes(doc: CatalogDoc): DataFrame =
     spark.read.schema(StructType(Seq(StructField("id", LongType, nullable = false))))
       .parquet(deletesPath(doc))
+
+  /** The sorted pending soft-deleted ids of `doc` and their executor
+    * broadcast, collected once per deletes generation — (createdAt,
+    * dataVersion, numPendingDeletes) names the deletes dir and its row
+    * count — and shared by [[ServingScan]]'s coarse gate and every
+    * [[PreparedIndex]]'s kernel. A replaced generation's broadcast is
+    * unpersisted, not destroyed: an in-flight query re-fetches it lazily.
+    */
+  private def pendingDeletes(doc: CatalogDoc): Engine.PendingDeletes = {
+    val gen = (doc.createdAt, doc.dataVersion, doc.numPendingDeletes)
+    def cached = pendingDeletesCache.get(doc.name).filter(_.gen == gen)
+    cached.getOrElse(pendingDeletesCache.synchronized {
+      cached.getOrElse {
+        val ids =
+          if (doc.numPendingDeletes == 0) Array.empty[Long]
+          else deletes(doc).orderBy("id").collect().map(_.getLong(0))
+        val fresh = Engine.PendingDeletes(gen, spark.sparkContext.broadcast(ids))
+        pendingDeletesCache.put(doc.name, fresh).foreach(_.bc.unpersist(false))
+        fresh
+      }
+    })
+  }
+
+  private val pendingDeletesCache =
+    scala.collection.concurrent.TrieMap.empty[String, Engine.PendingDeletes]
+
+  private def dropPendingDeletes(name: String): Unit =
+    pendingDeletesCache.remove(name).foreach(_.bc.unpersist(false))
 
   /** Typed view of the main table (API boundary; plans stay identical —
     * the Encoder only applies at collect/map sites).
@@ -863,10 +893,11 @@ class Engine(val spark: SparkSession, val root: String) {
 
   /** [[query]] on the composable plan surface: a fresh catalog load
     * (read-your-writes, unlike the routed entry's TTL'd load), Column
-    * predicates, explainable frames. Always the plan path (the per-epoch
-    * [[ServingScan]] or the Catalyst chunk scans) and never a prepared
-    * handle, so it is the independent ground truth every spec/eval
-    * compares the routed/prepared forms against.
+    * predicates, explainable frames. Never a prepared handle: the coarse
+    * and fetch stages run as per-epoch [[ServingScan]] jobs (pending
+    * deletes included), and a filtered query's pushed under-fill round is
+    * the batch path at q=1 — so it is the independent ground truth every
+    * spec/eval compares the routed/prepared forms against.
     */
   def queryCatalyst(name: String, q: Array[Float], preliminaryTopK: Int = 500,
                     finalTopK: Int = 100,
@@ -876,130 +907,59 @@ class Engine(val spark: SparkSession, val root: String) {
       s"query dim ${q.length} != ${doc.vectorDimension}")
     val qn = normalizeLocal(q)
     val table = snapshot(doc)
+    // untrained: the exact flat scan, the predicate pushed into it
+    if (!doc.isTrained)
+      return rerankFrame(predicate.fold(table)(table.filter), qn, finalTopK)
 
-    val candidates: DataFrame =
-      if (!doc.isTrained) predicate.fold(table)(table.filter) // pushed into the scan
-      else {
-        // Q2 — coarse search: probe selection on the driver (O(nlist·p)),
-        // partition-pruned scan scored by the BatchANN reconstruction
-        // kernel (q=1). ADC math runs executor-side from the per-version
-        // model broadcast — nothing nprobe-sized ships per query (the
-        // per-call push is just the projected query vector + probe list).
-        val model = indexModel(doc)
-        val qp = model.pca.applyLocal(qn)
-        val probes = model.nearestClusters(qp, doc.nProbe)
-        lazy val live = store.prunedLive(doc, probes) // only the empty-candidate branch needs the union form
-        def probedCandidates(prelim: Int,
-                             pushPred: Boolean = false,
-                             preCoarse: Option[Array[(Long, Double, Int)]] = None)
-            : DataFrame = {
-          // q=1 coarse: same kernel and (adc_dist, id) order as the batch
-          // form, merged on the driver — every probe chunk scored in ONE
-          // union job, no window shuffle (BatchANN.coarseSingleChunked;
-          // the r14 planning-floor work). `pushPred` is the under-fill
-          // round's decisive form: the predicate filters the COVERING
-          // chunk scans BEFORE the ADC cut (a Catalyst filter, pushed to
-          // parquet where possible), so the survivors are the
-          // top-`prelim` MATCHING rows by (adc, id) — identical to the
-          // prepared path's kernel-gated pushed round.
-          // the unfiltered coarse runs plan-free against the per-epoch
-          // serving scan (ServingScan — zero per-query Catalyst passes,
-          // one epoch-wide conf broadcast, cached footers); the pushed-
-          // predicate round and the fallback shapes keep the Catalyst
-          // chunk scans (they need composable Column filters)
-          val candRows =
-            preCoarse
-              .orElse(if (pushPred) None
-                      else servingScanCoarse(doc, qp, probes, prelim))
-              .getOrElse {
-                val chunks0 = store.chunks(doc, probes)
-                val chunks =
-                  if (pushPred) predicate.fold(chunks0)(p => chunks0.map(_.filter(p)))
-                  else chunks0
-                graft.operators.BatchANN.coarseSingleChunked(
-                  spark, chunks, modelBroadcast(doc),
-                  qp, probes, prelim)
-              }
-          // Q4 — candidate fetch reads ∝ CANDIDATES, not ∝ probes: the
-          // surviving ids land on the driver (≤ prelim rows — the same
-          // bound the old broadcast build already imposed), and the fetch
-          // scan's pushed probe list is just the clusters that HOLD
-          // survivors (≤ prelim distinct, vs nprobe). At the 100M
-          // geometry that is ~250k decoded covering rows instead of 3M —
-          // the vector/metadata decode of probed-but-candidate-less
-          // clusters was the single-query exec bottleneck (profiled
-          // 5-10 s, CHANGES_r10.md). This is the Parquet form of the
-          // reference's fetch-by-id from LMDB after the Faiss search.
-          val fetched =
-            if (candRows.isEmpty)
-              live.select("id", "vector", "metadata").filter(lit(false))
-            else
-              // plan-free fetch when the custom scan is eligible: same
-              // two pushed chains (cluster + id), zero per-query Catalyst
-              // pass, no per-file predicate rebuild; ≤ prelim rows come
-              // back as a local relation the rerank composes over
-              servingScanFetch(doc, candRows).getOrElse {
-                store.prunedLive(doc, candRows.map(_._3).distinct)
-                  .select("id", "vector", "metadata")
-                  .filter(col("id").isInCollection(
-                    candRows.map(r => java.lang.Long.valueOf(r._1)).toIndexedSeq))
-              }
-          predicate.fold(fetched)(fetched.filter)
+    // Q2 — coarse search: probe selection on the driver (O(nlist·p)),
+    // the probed buckets scored by the BatchANN reconstruction kernel
+    // (q=1) in plan-free scan tasks. ADC math runs executor-side from the
+    // per-version model broadcast — nothing nprobe-sized ships per query.
+    val model = indexModel(doc)
+    val qp = model.pca.applyLocal(qn)
+    val probes = model.nearestClusters(qp, doc.nProbe)
+    val cand = servingScanCoarse(doc, qp, probes, preliminaryTopK)
+    // Q4 — candidate fetch reads ∝ CANDIDATES, not ∝ probes: the ≤ prelim
+    // surviving ids land on the driver and the fetch scans only the
+    // clusters that HOLD survivors. At the 100M geometry that is ~250k
+    // decoded covering rows instead of 3M — the vector/metadata decode of
+    // probed-but-candidate-less clusters was the single-query exec
+    // bottleneck (profiled 5-10 s, CHANGES_r10.md). This is the Parquet
+    // form of the reference's fetch-by-id from LMDB after the Faiss search.
+    predicate match {
+      case None =>
+        // the rerank over ≤ prelimK driver-resident rows needs no cluster
+        // job: rerankLocal is row-identical to rerankFrame (gated by the
+        // DuckDB trained rows). The motive: the window+orderBy rerank of
+        // ~500 LOCAL rows still cost a ~70 ms two-stage job at 35M
+        // (scaleeval_35m_clean.log query_exec_ms_p50).
+        rerankLocal(servingScanFetchRows(doc, cand), qn, finalTopK)
+      case Some(pred) =>
+        // Under-fill guard (r15 semantics — one decisive pushed round,
+        // see PreparedIndex.queryFilteredWith for the full rationale).
+        // localCheckpoint materializes the (tiny, ≤ prelim rows) filtered
+        // candidates so counting and reranking them share one evaluation.
+        val first = servingScanFetch(doc, cand).filter(pred).localCheckpoint(true)
+        if (first.count() >= finalTopK) rerankFrame(first, qn, finalTopK)
+        // a NONDETERMINISTIC predicate has no stable matching set to push
+        // against — the exact flat scan, one evaluation per row, is the
+        // only coherent continuation
+        else if (predicateNondeterministic(table, pred))
+          rerankFrame(table.filter(pred), qn, finalTopK)
+        else {
+          // the pushed round is the batch path at q=1: the predicate
+          // filters the covering scan BEFORE the ADC cut, so the
+          // survivors are the top-prelimK MATCHING rows by (adc, id).
+          // Fewer than finalTopK means the probed clusters can't fill
+          // the ask — the exact flat scan is then semantically required.
+          val pushed = filteredBatchRound(doc, model, Array(0L -> qn),
+            preliminaryTopK, finalTopK, pred, pushed = true)
+          if (pushed.length >= finalTopK)
+            hitsDf(pushed.sortBy(_.getInt(4)).map(r => PreparedIndex.Hit(
+              r.getInt(4), r.getLong(1), r.getString(2), r.getDouble(3))))
+          else rerankFrame(table.filter(pred), qn, finalTopK)
         }
-        predicate match {
-          case None =>
-            // Fully-local serve when both stages rode the plan-free scan:
-            // the rerank over ≤ prelimK driver-resident rows needs no
-            // cluster job at all — rerankLocal runs the dot kernel's
-            // exact arithmetic (double accumulation over float products,
-            // VectorKernels.dotFF) and the same (cos desc, id) order, so
-            // the frame is row-identical to rerankFrame's (gated by
-            // ServingScanCustomSpec e2e equality + the DuckDB trained
-            // rows). The measured motive: the window+orderBy rerank of
-            // ~500 LOCAL rows still cost a ~70 ms two-stage job at 35M
-            // (scaleeval_35m_clean.log query_exec_ms_p50).
-            servingScanCoarse(doc, qp, probes, preliminaryTopK) match {
-              case Some(cand) =>
-                servingScanFetchRows(doc, cand) match {
-                  case Some(rows) => return rerankLocal(rows, qn, finalTopK)
-                  case None => probedCandidates(preliminaryTopK,
-                    preCoarse = Some(cand))
-                }
-              case None => probedCandidates(preliminaryTopK)
-            }
-          case Some(_) =>
-            // Under-fill guard (r15 semantics — one decisive pushed
-            // round, see PreparedIndex.queryFilteredWith for the full
-            // rationale). localCheckpoint materializes the (tiny,
-            // ≤ prelim rows) candidate set so counting it and reranking
-            // it share one coarse pass; discarded frames are GC-cleaned.
-            val first = probedCandidates(preliminaryTopK).localCheckpoint(true)
-            if (first.count() >= finalTopK) first
-            else {
-              // a NONDETERMINISTIC predicate has no stable matching set
-              // to push against (and the pushed form would evaluate it
-              // twice per surviving row: once at the coarse gate, once
-              // on the fetched frame) — the exact flat scan, one
-              // evaluation per row, is the only coherent continuation.
-              if (predicate.exists(predicateNondeterministic(table, _)))
-                predicate.fold(table)(table.filter)
-              else {
-                // the predicate filters the covering chunk scans BEFORE
-                // the ADC cut: top-prelimK MATCHING rows by (adc, id) —
-                // what the old selectivity-estimated widening converged
-                // to, in one round. Fewer than finalTopK survivors means
-                // the probed clusters genuinely can't fill the ask — the
-                // exact flat scan is then semantically required.
-                val pushed = probedCandidates(preliminaryTopK, pushPred = true)
-                  .localCheckpoint(true)
-                if (pushed.count() >= finalTopK) pushed
-                else predicate.fold(table)(table.filter) // exact flat fallback
-              }
-            }
-        }
-      }
-
-    rerankFrame(candidates, qn, finalTopK)
+    }
   }
 
   /** Q5/Q6 — exact rerank by dot-product cosine (normalized vectors):
@@ -1347,9 +1307,6 @@ class Engine(val spark: SparkSession, val root: String) {
         store.frame(doc).filter(col("id") <= doc.maxId), parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     blocks.count() // materialize the cache at prepare time, not first query
-    val collectDeleted = (d: CatalogDoc) =>
-      if (d.numPendingDeletes == 0) Array.empty[Long]
-      else deletes(d).orderBy("id").collect().map(_.getLong(0))
     // Post-prepare appends (A6 encodes them into the coded table before
     // add() returns) delta-refresh into a driver-local side buffer: the
     // appended rows live in parquet files whose id stats are entirely
@@ -1365,7 +1322,7 @@ class Engine(val spark: SparkSession, val root: String) {
         rows.iterator.map(r => (r.getInt(0), r))))
     }
     new PreparedIndex(this, spark, doc, blocks, modelBroadcast(doc),
-      collectDeleted, collectAppended, addsRefreshIntervalMs)
+      pendingDeletes(_).bc, collectAppended, addsRefreshIntervalMs)
   }
 
   /** Probe-list chunk size for the bucketed pruned scan. Each chunk's
@@ -1408,35 +1365,18 @@ class Engine(val spark: SparkSession, val root: String) {
   // per-bucket branch-union candidate fetch — each file's pushed chain
   // carrying only its own candidate ids — measured fetch_collect
   // 116 → 319 ms at 35M even with branches grouped to ≤12 and
-  // split-planned on the serving relation; the branch-union's per-query planning and
-  // per-branch scan setup outweigh the shorter chains. The single
-  // pruned scan + one pushed id-chain below is the measured optimum.)
+  // split-planned; the branch-union's per-query planning and per-branch
+  // scan setup outweigh the shorter chains. One pruned scan + one pushed
+  // id-chain — the batch fetch's form — is the measured optimum.)
 
-  /** Test seam: false routes every trained query through the Catalyst
-    * chunk scans even where the plan-free [[ServingScan]] is eligible —
-    * the specs' reference for the custom scan's bit-equality gates.
-    */
-  @volatile private[core] var servingCustomScan: Boolean = true
-
-  /** True when the plan-free serving scan may answer `doc`: no pending
-    * soft-deletes (the custom scan has no anti-join stage — deletes are
-    * transient between compactions, and the Catalyst path serves those
-    * windows).
-    */
-  private def servingScanEligible(doc: CatalogDoc): Boolean =
-    servingCustomScan && doc.numPendingDeletes == 0
-
-  /** The plan-free coarse stage ([[ServingScan]]) when
-    * [[servingScanEligible]]; None routes the query through the Catalyst
-    * chunk scans instead.
+  /** The plan-free coarse stage ([[ServingScan]]) over `doc`'s live rows:
+    * pending soft-deletes never enter a heap.
     */
   private[core] def servingScanCoarse(doc: CatalogDoc, qp: Array[Float],
                                       probes: Array[Int], prelimK: Int)
-      : Option[Array[(Long, Double, Int)]] =
-    if (!servingScanEligible(doc)) None
-    else
-      Some(ServingScan.coarse(spark, store.servingEpoch(doc),
-        modelBroadcast(doc), qp, probes, prelimK))
+      : Array[(Long, Double, Int)] =
+    ServingScan.coarse(spark, store.servingEpoch(doc), modelBroadcast(doc),
+      pendingDeletes(doc).bc, qp, probes, prelimK)
 
   /** Byte-range floor for the plan-free serving scan's splits —
     * overridable so specs can force multi-range tasks (and the
@@ -1446,37 +1386,30 @@ class Engine(val spark: SparkSession, val root: String) {
   protected def servingScanMinSplitBytes: Long = 4L << 20
 
   /** Plan-free candidate fetch (Q4) through the same epoch state as
-    * [[servingScanCoarse]] — only taken when that path is eligible, so
-    * both stages of a query ride the same snapshot rules. Returns the
-    * fetched (id, vector, metadata) frame as a LOCAL relation (≤ prelimK
-    * rows by the coarse contract): downstream rerank expressions and
-    * caller predicates compose over it exactly as over the scan frame.
+    * [[servingScanCoarse]], so both stages of a query ride the same
+    * snapshot rules: the (id, vector, metadata) rows of exactly the
+    * candidate ids, driver-local (≤ prelimK rows by the coarse contract).
     */
   private[core] def servingScanFetchRows(doc: CatalogDoc,
                                           candRows: Array[(Long, Double, Int)])
-      : Option[Array[(Long, Array[Float], String)]] =
-    if (!servingScanEligible(doc)) None
-    else if (candRows.isEmpty) Some(Array.empty) // zero-hit: nothing to scan
+      : Array[(Long, Array[Float], String)] =
+    if (candRows.isEmpty) Array.empty // zero-hit: nothing to scan
     else {
       val idsByCluster = candRows.groupBy(_._3)
         .map { case (c, rs) => c -> rs.map(_._1) }
-      Some(ServingScan.fetch(spark, store.servingEpoch(doc), idsByCluster))
+      ServingScan.fetch(spark, store.servingEpoch(doc), idsByCluster)
     }
 
+  /** [[servingScanFetchRows]] as a LOCAL relation: caller predicates and
+    * the rerank expressions compose over it exactly as over a scan frame.
+    */
   private[core] def servingScanFetch(doc: CatalogDoc,
                                      candRows: Array[(Long, Double, Int)])
-      : Option[DataFrame] =
-    servingScanFetchRows(doc, candRows).map { rows =>
-      val schema = StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("vector", ArrayType(FloatType, containsNull = false),
-          nullable = false),
-        StructField("metadata", StringType, nullable = true)))
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows.map { case (id, v, m) =>
-          org.apache.spark.sql.Row(id, v.toSeq, m)
-        }: _*), schema)
-    }
+      : DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(servingScanFetchRows(doc, candRows).map {
+        case (id, v, m) => org.apache.spark.sql.Row(id, v.toSeq, m)
+      }: _*), dataSchema)
 
   /** Driver-side twin of [[rerankFrame]] for ≤ prelimK LOCAL candidate
     * rows: same scoring arithmetic (the dot kernel's double accumulation
@@ -2064,89 +1997,21 @@ class Engine(val spark: SparkSession, val root: String) {
 
 object Engine {
 
-  /** Pre-serialized parquet `FilterPredicate` carried as READ OPTIONS on
-    * a scan relation — the structural fix for the r15 attribution
-    * (evalruns_r15/chunkcpu_35m.log, PLANS.md): ~99.6% of the serving
-    * coarse scan's task CPU was per-file pushed-filter PLUMBING, because Spark's own
-    * pushdown rebuilds the predicate at every reader init — parquet
-    * `setFilterPredicate` string-concats the left-nested 445-term
-    * or-chain (O(terms²) chars; Spark 4.1 has no parquet-native In) and
-    * gzip+Java-serializes the tree into a cloned Hadoop conf, per FILE
-    * per TASK. Here the predicate is built ONCE on the driver as
-    * parquet's native `Operators.In` (linear toString, Set-backed eval),
-    * serialized ONCE, and shipped inside the relation's options map —
-    * `newHadoopConfWithOptions` folds options into the scan's broadcast
-    * Hadoop conf, and the reader picks it up via
-    * `ParquetInputFormat.getFilter` (`ParquetReadOptions.Builder` reads
-    * `parquet.private.read.filter.predicate` unconditionally — verified
-    * against the bundled parquet 1.16 bytecode), applying the SAME
-    * row-group-stats + page-index + dictionary pruning the per-file
-    * rebuild did. Callers must disable Spark-side parquet pushdown on
-    * the session running the scan (it would rebuild and overwrite the
-    * injected value) and keep the logical Filter in the plan for
-    * exactness — reader pruning passes a page-granular SUPERSET.
-    * InjectedPredicateSpec gates the mechanism end-to-end.
-    *
-    * Predicate SHAPE: a BALANCED or-tree of `eq` terms, NOT parquet's
-    * native `Operators.In` — measured on the coded page geometry
-    * (InjectedPredicateSpec's fixture), 1.16's column-index evaluation
-    * of In kept every page from row 0 through the LAST matching page
-    * (97,280 of 100k rows for 4 values) where the same values as an
-    * or-chain of eq kept exactly the 4 matching pages (2,048 rows).
-    * Balanced keeps the tree O(log terms) deep (serializer/visitor
-    * stack) and any accidental toString O(terms·log terms). The
-    * serialization bypasses `setFilterPredicate` (whose side write of
-    * `predicate.toString` is the O(terms²) burn) and calls
-    * `SerializationUtil.writeObjectToConfAsBase64` directly, with a
-    * short constant human-readable twin.
+  /** One deletes generation of a db: the broadcast of its sorted pending
+    * soft-deleted ids (see `Engine.pendingDeletes`).
     */
-  private[graft] def injectedIntInOptions(column: String,
-                                          values: Array[Int]): Map[String, String] = {
-    require(values.nonEmpty,
-      "injectedIntInOptions needs at least one value (the or-of-eq tree " +
-        "has no empty form; an empty probe list means no scan at all)")
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-    val c = FilterApi.intColumn(column)
-    def tree(lo: Int, hi: Int): FilterPredicate = // [lo, hi)
-      if (hi - lo == 1) FilterApi.eq(c, Integer.valueOf(values(lo)))
-      else {
-        val mid = (lo + hi) >>> 1
-        FilterApi.or(tree(lo, mid), tree(mid, hi))
-      }
-    val scratch = new org.apache.hadoop.conf.Configuration(false)
-    val key = org.apache.parquet.hadoop.ParquetInputFormat.FILTER_PREDICATE
-    org.apache.parquet.hadoop.util.SerializationUtil.writeObjectToConfAsBase64(
-      key, tree(0, values.length), scratch)
-    Map(key -> scratch.get(key),
-      (key + ".human.readable") -> s"or-of-eq($column, ${values.length} values)")
-  }
-
-  /** `plan` with `opts` folded into every parquet relation's read
-    * options (same FileIndex — no re-listing, no re-analysis; output
-    * attributes preserved by `copy`).
-    */
-  private[graft] def withReadOptions(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      opts: Map[String, String])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    plan.transform {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-        lr.copy(relation =
-          fs.copy(options = fs.options ++ opts)(fs.sparkSession))
-    }
-  }
+  private[core] final case class PendingDeletes(gen: (Long, Int, Long),
+      bc: org.apache.spark.broadcast.Broadcast[Array[Long]])
 
   /** Reference default `max_memory_usage` = 4 GiB (mindb.py:42). Drives the
     * T7 strategy chooser only — Spark spills instead of enforcing it.
     */
   val DefaultMaxMemoryUsage: Long = 4L * 1024 * 1024 * 1024
 
-  /** Target bytes per [[ServingScan]] task — matches the serving
-    * session's 512 MB split packing (the ccp6-measured optimum for the
-    * per-query coarse scans: fewer reader inits, still ≥2 tasks per
-    * bucket at the measured geometries).
+  /** Target bytes per [[ServingScan]] task — 512 MB, the ccp6-measured
+    * split packing optimum for the per-query coarse scans
+    * (evalruns_r15/ccp6_{def,512m}.log: fewer reader inits, still ≥2
+    * tasks per bucket at the measured geometries).
     */
   val ServingScanTaskBytes: Long = 512L << 20
 

@@ -18,9 +18,10 @@ import graft.operators.PreparedANN.{Cand, ClusterBlock}
   * cached partition-local blocks: no per-query Catalyst planning, no
   * candidate-fetch join round-trip. Staleness is handled conservatively:
   *
-  *  - removes: pending deletes are re-collected (one small job) only
+  *  - removes: the engine's pending-delete ids (one small job per
+  *    deletes generation, shared with the plan path) are re-read only
   *    when the pinned count drifts, then applied in-kernel before the
-  *    ADC heap — the regular path's anti-join-before-ADC, same place;
+  *    ADC heap — the plan path's gate, same place;
   *  - adds (maxId moved, versions unchanged): DELTA-REFRESH — the
   *    appended rows (already PQ-encoded by A6 before `add` returned)
   *    are collected once into a driver-local side buffer of the same
@@ -62,7 +63,7 @@ final class PreparedIndex private[core] (
     val pinned: CatalogDoc,
     blocks: RDD[Map[Int, ClusterBlock]],
     bcModel: Broadcast[IndexModel],
-    collectDeleted: CatalogDoc => Array[Long],
+    pendingDeletes: CatalogDoc => Broadcast[Array[Long]],
     collectAppended: (CatalogDoc, Long) => Option[Map[Int, ClusterBlock]],
     addsRefreshIntervalMs: Long = Engine.PreparedAddsRefreshIntervalMs) {
 
@@ -72,10 +73,10 @@ final class PreparedIndex private[core] (
   // broadcast so the set ships once per executor on refresh, not per-task
   // in every query's closure (pending deletes are bounded by the
   // compaction threshold, which can still be millions of ids at scale).
-  // Refreshed under the lock when the catalog count drifts.
+  // The engine owns the broadcast (one per deletes generation, shared
+  // with the plan path); refreshed when the catalog count drifts.
   @volatile private var deletedSnapshot: (Long, Broadcast[Array[Long]]) =
-    (pinned.numPendingDeletes,
-      spark.sparkContext.broadcast(collectDeleted(pinned)))
+    (pinned.numPendingDeletes, pendingDeletes(pinned))
   // appended-rows side buffer: (maxId it covers, blocks of every coded
   // row with id > pinned.maxId). Driver-local — the extra per-query work
   // is one in-process kernel scan over the appended rows only, no task.
@@ -324,14 +325,8 @@ final class PreparedIndex private[core] (
   private def refreshForServe(cur: CatalogDoc)
       : Option[(Broadcast[Array[Long]], Map[Int, ClusterBlock])] = {
     if (versionMoved(cur) || addsOverflowed) return None
-    if (cur.numPendingDeletes != deletedSnapshot._1) refreshLock.synchronized {
-      if (cur.numPendingDeletes != deletedSnapshot._1) {
-        val old = deletedSnapshot._2
-        deletedSnapshot = (cur.numPendingDeletes,
-          spark.sparkContext.broadcast(collectDeleted(cur)))
-        old.unpersist(blocking = false)
-      }
-    }
+    if (cur.numPendingDeletes != deletedSnapshot._1)
+      deletedSnapshot = (cur.numPendingDeletes, pendingDeletes(cur))
     // adds delta-refresh: rebuild the side buffer when maxId moved (the
     // collect re-reads ALL appends past the pinned fence — idempotent,
     // so a racing add that lands mid-scan is at worst served early).
@@ -448,13 +443,13 @@ final class PreparedIndex private[core] (
     }
 
   /** Release this acquisition's reference; the cached blocks free when
-    * the LAST holder releases (the model broadcast is engine-owned and
-    * stays — it serves the regular path too). Call once per acquisition.
+    * the LAST holder releases (the model and pending-delete broadcasts
+    * are engine-owned and stay — they serve the plan path too). Call once
+    * per acquisition.
     */
   def close(): Unit = if (refs.decrementAndGet() == 0) {
     closed = true
     blocks.unpersist(blocking = false)
-    deletedSnapshot._2.unpersist(blocking = false)
     addsSnapshot = (addsSnapshot._1, Map.empty)
   }
 }

@@ -19,39 +19,40 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.Engine.IndexModel
 
-/** Plan-free serving scan for the per-query coarse ADC stage: reads the
-  * probed coded buckets through Spark's own vectorized parquet reader,
-  * but with every per-query driver cost amortized to once per INDEX
-  * EPOCH (db, indexVersion):
+/** Plan-free serving scan for the per-query coarse ADC and fetch
+  * stages: reads the probed coded buckets through Spark's own vectorized
+  * parquet reader, but with every per-query driver cost amortized to once
+  * per INDEX EPOCH (db, indexVersion). A trained single query on the
+  * plan surface runs its coarse and fetch stages here:
   *
   *  - the Hadoop conf is cloned from the session ONCE per epoch and
-  *    broadcast ONCE — the Catalyst path re-clones and re-broadcasts it
-  *    per chunk scan per query (8 fresh ~1000-entry conf broadcasts per
-  *    query at the 35M shape: driver serialize+gzip, executor
-  *    gunzip+HashMap fill — the r16-attributed top CPU frame,
-  *    PLANS.md round-16 audit);
+  *    broadcast ONCE — a Catalyst file scan clones and broadcasts it per
+  *    scan per query (8 fresh ~1000-entry conf broadcasts per query at
+  *    the 35M shape: driver serialize+gzip, executor gunzip+HashMap
+  *    fill — the r16-attributed top CPU frame, PLANS.md round-16 audit);
   *  - the bucket→file listing is computed once per epoch (the exact
-  *    owner-version dir rules of [[Engine]]'s coded read) and the probed
-  *    subset ships in the job closure — no FileIndex, no per-query
-  *    Catalyst analyze/optimize/physical-plan of N chunk subtrees
-  *    (the 286-of-389 ms plan share at 11M×768, EVAL_r16);
+  *    owner-version dir rules of [[CodedStore]]) and the probed subset
+  *    ships in the job closure — no FileIndex, no per-query Catalyst
+  *    analyze/optimize/physical-plan of N scan subtrees (the 286-of-389
+  *    ms plan share at 11M×768, EVAL_r16);
   *  - parquet footers are cached executor-side across queries — the
   *    stock reader re-reads every file's footer on every query;
-  *  - the injected probe predicate (same or-of-eq mechanism as
-  *    [[Engine.injectedIntInOptions]]) is built per TASK from only the
-  *    task's own buckets' probes — shorter chains than the 500-probe
-  *    chunk predicate every file of a chunk used to evaluate, and the
-  *    per-task conf writes drop from two clones per FILE (Spark's
-  *    reader-factory lambda) to two per TASK.
+  *  - the injected probe predicate ([[taskPredicate]]) is built per TASK
+  *    from only the task's own buckets' probes, and the per-task conf
+  *    writes are two per TASK instead of two clones per FILE (Spark's
+  *    reader-factory lambda);
+  *  - pending soft-deletes are skipped before heap entry with the sorted
+  *    id array [[graft.operators.PreparedANN.servePartition]] gates on,
+  *    broadcast once per deletes generation by the engine.
   *
   * Exactness story: row-group/page/dictionary pruning off the injected
   * predicate passes a SUPERSET of the probed rows per file (page
   * granularity), and the coarse kernel ([[graft.operators.BatchANN
-  * .coarsePartition]]) scores ONLY clusters in the query's probe set —
-  * the same superset-then-exact-gate contract the Catalyst serving path
-  * has carried since r15. The kernel and the driver merge are the very
-  * functions the Catalyst path runs, so the candidate array is
-  * bit-identical by construction (gated by ServingScanCustomSpec).
+  * .coarsePartition]]) scores ONLY clusters in the query's probe set.
+  * The kernel is the batch coarse stage's per-partition function and
+  * the driver merge keeps the same (adc_dist, id) order, so the
+  * candidate array equals the batch path's at q=1 over the same live
+  * rows (gated by ServingScanCustomSpec and CoarseUnionJobSpec).
   *
   * Scale shape: [[planTasks]] aims at ~2× parallelism tasks per query
   * along two subdivision axes — byte ranges of bucket-sorted files
@@ -61,7 +62,7 @@ import graft.core.Engine.IndexModel
   * geometries AND spreads over the cores at few-file ones. Measured
   * (EVAL_r17): latency is ~flat in file count (94–112 ms at 665 coded
   * files vs 105–143 at 3, same 2M corpus) where the per-query-planned
-  * path degrades 294–371 vs 197–284. At 1000-executor geometry the
+  * path degraded 294–371 vs 197–284. At 1000-executor geometry the
   * epoch conf broadcast and footer caches amortize across queries the
   * same way (both are executor-resident).
   */
@@ -224,12 +225,11 @@ object ServingScan {
     *    but on a FEW-big-row-group root only the range holding a row
     *    group's midpoint does any work, so ranges alone left a 3-file
     *    2M root scanning on ~4 of 32 cores (measured: custom coarse
-    *    215–243 ms vs the 11-chunk Catalyst union's 69–80).
+    *    215–243 ms vs 69–80 for the Catalyst chunk union of the time).
     *  - PROBE SUBSETS: when ranges are too few, each range is served by
     *    k tasks carrying DISJOINT contiguous slices of its bucket's
     *    probes — each task's injected predicate page-prunes to its own
-    *    slice, which is exactly how the Catalyst chunk-union subdivides
-    *    the same row groups.
+    *    slice.
     *
     * Every task's kernel/id gate is its OWN `probes`/`ids` (disjoint
     * union over tasks = the query's full sets), so each probed row is
@@ -309,14 +309,16 @@ object ServingScan {
   }
 
   /** The coarse ADC stage over the probed buckets: plan-free scan tasks,
-    * the shared per-partition kernel, the shared driver merge. Returns
-    * the ≤ prelimK (id, adc_dist, cluster_id) candidate rows, smallest
-    * (adc_dist, id) first — bit-identical to
-    * [[graft.operators.BatchANN.coarseSingleChunked]] over the same
-    * probed row set.
+    * the shared per-partition kernel, the shared driver merge. Rows whose
+    * id is in `deleted` (sorted pending soft-deletes) never enter a heap.
+    * Returns the ≤ prelimK (id, adc_dist, cluster_id) candidate rows,
+    * smallest (adc_dist, id) first — the batch coarse stage's
+    * ([[graft.operators.BatchANN.coarseCandidates]]) rows for this one
+    * query over the same live rows.
     */
   def coarse(spark: SparkSession, epoch: Epoch,
              bcModel: Broadcast[IndexModel],
+             deleted: Broadcast[Array[Long]],
              qp: Array[Float], probes: Array[Int],
              prelimK: Int): Array[(Long, Double, Int)] = {
     val tasks = planTasks(epoch, probes,
@@ -333,10 +335,13 @@ object ServingScan {
     // what keeps every probed row scored by exactly one task
     val parts = sc.runJob(rdd, (it: Iterator[ScanTask]) => {
       val model = bcModel.value
+      val dead = deleted.value
       it.map { task =>
+        val rows = taskRows(task, bcConf.value.value, schemaJson)
         graft.operators.BatchANN.coarsePartition(
-          taskRows(task, bcConf.value.value, schemaJson), model, q,
-          task.probes.toSet, prelimK)
+          if (dead.isEmpty) rows
+          else rows.filter(r => java.util.Arrays.binarySearch(dead, r.getLong(0)) < 0),
+          model, q, task.probes.toSet, prelimK)
       }.toArray
     })
     graft.operators.BatchANN.mergeCoarseParts(
@@ -345,9 +350,10 @@ object ServingScan {
 
   /** Candidate fetch by exact row id over the probed-candidate clusters:
     * the Q4 stage as a plan-free scan. Pages are pruned by the injected
-    * (cluster or-of-eq AND id or-of-eq) predicate — the same two chains
-    * the Catalyst fetch pushes — and rows are gated EXACTLY by the id
-    * set in the task. Returns (id, vector, metadata) driver-side: ≤
+    * (cluster or-of-eq AND id or-of-eq) predicate — the two chains the
+    * batch path's Catalyst fetch pushes — and rows are gated EXACTLY by
+    * the id set in the task, so a pending-deleted id (never a coarse
+    * survivor) never comes back. Returns (id, vector, metadata) driver-side: ≤
     * prelimK rows by construction (the ids are the coarse survivors), so
     * the collect is bounded by the same contract that already bounds the
     * coarse merge.
@@ -383,11 +389,23 @@ object ServingScan {
 
   /** The task's injected parquet predicate: a balanced or-of-eq over its
     * buckets' probed clusters, ANDed (fetch tasks) with a balanced
-    * or-of-eq over its candidate ids — the same shape rationale as
-    * [[Engine.injectedIntInOptions]] (parquet 1.16's native In page
-    * pruning is broken-coarse; or-of-eq prunes exactly).
+    * or-of-eq over its candidate ids. It is serialized straight into the
+    * task's conf ([[taskRows]]), once per task: Spark's own pushdown
+    * rebuilds the predicate at every reader init, and parquet's
+    * `setFilterPredicate` string-concats a left-nested chain (O(terms²)
+    * chars) and gzip+Java-serializes it per FILE per TASK — ~99.6% of
+    * the coarse scan's task CPU in the r15 attribution
+    * (evalruns_r15/chunkcpu_35m.log, PLANS.md).
+    *
+    * SHAPE: a BALANCED or-tree of `eq` terms, NOT parquet's native
+    * `Operators.In` — on the coded page geometry (InjectedPredicateSpec's
+    * fixture), 1.16's column-index evaluation of In kept every page from
+    * row 0 through the LAST matching page (97,280 of 100k rows for 4
+    * values) where the same values as an or-of-eq kept exactly the 4
+    * matching pages (2,048 rows). Balanced keeps the tree O(log terms)
+    * deep (serializer/visitor stack).
     */
-  private def taskPredicate(task: ScanTask)
+  private[graft] def taskPredicate(task: ScanTask)
       : org.apache.parquet.filter2.predicate.FilterPredicate = {
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     val cCol = FilterApi.intColumn("cluster_id")

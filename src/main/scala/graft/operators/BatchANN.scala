@@ -89,7 +89,7 @@ object BatchANN {
   }
 
   /** The per-partition coarse kernel shared by [[coarseCandidates]] and
-    * [[coarseSingle]]: decode each probed row's PQ code once, score it
+    * [[coarsePartition]]: decode each probed row's PQ code once, score it
     * for exactly the queries probing its cluster, keep per-query bounded
     * heaps. Returns one heap per query of ≤ prelimK (adc_dist, id,
     * cluster_id) entries — worst kept under (dist asc, id asc) on top.
@@ -239,10 +239,9 @@ object BatchANN {
   /** The q=1 per-partition coarse stage as a plain function: the shared
     * kernel over an InternalRow iterator, drained to three flat
     * primitive arrays (the task wire format — ship arrays, not ~500
-    * boxed tuples). BOTH serving scan paths (the Catalyst chunk scans
-    * below and [[graft.core.ServingScan]]'s plan-free tasks) run exactly
-    * this function, so their per-partition results are identical by
-    * construction.
+    * boxed tuples). [[graft.core.ServingScan]]'s plan-free tasks run it;
+    * the kernel is [[coarseCandidates]]' own, so a single query's heaps
+    * match the batch form's at q=1.
     */
   def coarsePartition(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
                       model: IndexModel, qp: Array[Float], probeSet: Set[Int],
@@ -262,8 +261,8 @@ object BatchANN {
   }
 
   /** Exact driver-side merge of per-partition coarse results: global
-    * (adc_dist, id) order, ≤ prelimK rows — shared by both serving scan
-    * paths (see [[coarsePartition]]).
+    * (adc_dist, id) order, ≤ prelimK rows — the same cut
+    * [[coarseCandidates]]' window takes per query.
     */
   def mergeCoarseParts(parts: Seq[(Array[Double], Array[Long], Array[Int])],
                        prelimK: Int): Array[(Long, Double, Int)] = {
@@ -273,76 +272,6 @@ object BatchANN {
     java.util.Arrays.sort(merged,
       Ordering.by[(Double, Long, Int), (Double, Long)](e => (e._1, e._2)))
     merged.take(prelimK).map { case (d, id, cid) => (id, d, cid) }
-  }
-
-  /** Single-query coarse candidates over per-chunk scans, driver-merged:
-    * the q=1 face of [[coarseCandidates]] used by the composable Catalyst
-    * path. Same kernel, same global (adc_dist, id) order, same ≤ prelimK
-    * result — two structural differences, both latency-only:
-    *
-    *  - each probe CHUNK's driver-side setup (`toRdd`: planning plus the
-    *    per-scan Hadoop-conf broadcast, ~11 ms per scan at the 8-chunk
-    *    35M shape — PLANS.md, round-14 serving-floor findings) runs on its
-    *    own thread, and all chunk scans are then scored in ONE union job;
-    *  - the cross-partition merge happens on the DRIVER over
-    *    partitions·prelimK tuples (tens of KBs) instead of a
-    *    window-over-shuffle stage.
-    *
-    * The kernel is per-partition either way, so chunk boundaries do not
-    * change any heap's content — the merged result is bit-identical to
-    * the union-scan + window form (gated by PreparedIndexSpec /
-    * TrainedPathSpec equalities) and to a single-chunk scan of the same
-    * probes (CoarseUnionJobSpec).
-    *
-    * @param chunks the per-chunk pruned coded frames
-    *               (CodedStore.chunks)
-    * @return ≤ prelimK (id, adc_dist, cluster_id) rows, smallest
-    *         (adc_dist, id) first
-    */
-  def coarseSingleChunked(spark: SparkSession, chunks: Seq[DataFrame],
-                          bcModel: Broadcast[IndexModel],
-                          qp: Array[Float], probes: Array[Int],
-                          prelimK: Int): Array[(Long, Double, Int)] = {
-    val probeSet = probes.toSet
-    val bcQ = spark.sparkContext.broadcast((qp, probeSet))
-    val partFn =
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val model = bcModel.value
-        val (q, ps) = bcQ.value
-        coarsePartition(it, model, q, ps, prelimK)
-      }
-    def scanRdd(df: DataFrame) =
-      df.select(col("id").cast("long"), col("cluster_id").cast("int"),
-        col("code")).queryExecution.toRdd
-    // Several chunks: ONE RDD-union job, not one job per chunk — the
-    // per-job submit + result collection runs on the DAGScheduler's
-    // single-threaded event loop. Same partition functions over the same
-    // partitions, so the merged result is bit-identical. Measured against
-    // concurrent per-chunk jobs (2M root forced to 8 chunks,
-    // evalruns_r16/ujob_*.log): warm coarse 133→87 and 95→74 ms, e2e p50
-    // 365→350 and 332→248, never worse.
-    val parts: Array[(Array[Double], Array[Long], Array[Int])] =
-      if (chunks.isEmpty) Array.empty
-      else if (chunks.lengthCompare(1) == 0)
-        spark.sparkContext.runJob(scanRdd(chunks.head), partFn)
-      else {
-        val rdds = new Array[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]](chunks.length)
-        val errors = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-        val threads = chunks.zipWithIndex.map { case (df, i) =>
-          val t = new Thread(() => {
-            try rdds(i) = scanRdd(df)
-            catch { case e: Throwable => errors.compareAndSet(null, e) }
-          })
-          t.setDaemon(true); t.start(); t
-        }
-        threads.foreach(_.join())
-        if (errors.get() != null) throw errors.get()
-        spark.sparkContext.runJob(spark.sparkContext.union(rdds.toIndexedSeq),
-          partFn)
-      }
-    bcQ.unpersist(blocking = false)
-    mergeCoarseParts(parts, prelimK)
   }
 
   /** Exact rerank of per-query candidate id sets against the full-precision

@@ -2,15 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Gate for the conf-injected parquet FilterPredicate mechanism behind
-  * the serving coarse scans (Engine.injectedIntInOptions +
-  * Engine.withReadOptions): a pre-serialized native `In` carried in the
-  * relation's READ OPTIONS — with Spark-side parquet pushdown OFF —
-  * must still engage parquet row-group/page pruning at the reader, and
-  * results must stay exact. This is the structural replacement for
-  * Spark's per-file predicate rebuild (O(terms²) toString + gzip/Java
-  * serialize per reader init — the r15 attribution of
-  * ~99.6% of coarse-scan task CPU).
+/** Gate for the conf-injected parquet FilterPredicate behind the
+  * plan-free serving scan ([[graft.core.ServingScan.taskPredicate]]): the
+  * task's or-of-eq, pre-serialized into the reader's conf — with
+  * Spark-side parquet pushdown OFF — must still engage parquet
+  * row-group/page pruning at the reader, and results must stay exact.
+  * This is the structural replacement for Spark's per-file predicate
+  * rebuild (O(terms²) toString + gzip/Java serialize per reader init —
+  * the r15 attribution of ~99.6% of coarse-scan task CPU).
   */
 class InjectedPredicateSpec extends SparkSpec {
 
@@ -38,6 +37,18 @@ class InjectedPredicateSpec extends SparkSpec {
 
   private val wanted = Array(3, 310, 771, 1519) // cluster ids, spread out
 
+  /** The predicate a coarse task over `wanted` injects, as read options
+    * (Spark folds them into the reader's Hadoop conf).
+    */
+  private def injected: Map[String, String] = {
+    val key = org.apache.parquet.hadoop.ParquetInputFormat.FILTER_PREDICATE
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    org.apache.parquet.hadoop.util.SerializationUtil.writeObjectToConfAsBase64(
+      key, graft.core.ServingScan.taskPredicate(
+        graft.core.ServingScan.ScanTask(Array.empty, wanted)), conf)
+    Map(key -> conf.get(key))
+  }
+
   private def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
     df.collect() // run first: metrics fill on execution
     df.queryExecution.executedPlan.collectLeaves()
@@ -45,8 +56,7 @@ class InjectedPredicateSpec extends SparkSpec {
   }
 
   test("injected or-of-eq predicate prunes pages with Spark-side pushdown off") {
-    val inj = graft.core.Engine.injectedIntInOptions("cluster_id", wanted)
-    val df = noPush.read.options(inj).parquet(dir)
+    val df = noPush.read.options(injected).parquet(dir)
       .filter(col("cluster_id").isInCollection(
         wanted.toIndexedSeq.map(Integer.valueOf)))
     val rows = df.collect()
@@ -72,22 +82,5 @@ class InjectedPredicateSpec extends SparkSpec {
     assert(df.collect().length == wanted.length * 64)
     assert(scanOutputRows(df) == N,
       "pushdown-off control should output every row at the scan")
-  }
-
-  test("withReadOptions rewrites every parquet relation and preserves output") {
-    val base = noPush.read.parquet(dir)
-    val inj = graft.core.Engine.injectedIntInOptions("cluster_id", wanted)
-    val plan = graft.core.Engine.withReadOptions(
-      base.queryExecution.analyzed, inj)
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val rels = plan.collect { case lr: LogicalRelation => lr }
-    assert(rels.nonEmpty)
-    rels.foreach { lr =>
-      val opts = lr.relation.asInstanceOf[HadoopFsRelation].options
-      assert(opts.contains(
-        org.apache.parquet.hadoop.ParquetInputFormat.FILTER_PREDICATE))
-    }
-    assert(plan.output == base.queryExecution.analyzed.output,
-      "output attributes must be preserved (branch Filters bind to them)")
   }
 }

@@ -28,4 +28,25 @@ class LayoutInventorySpec extends AnyFunSuite {
     val store = Files.readString(Paths.get("src/main/scala/graft/core/CodedStore.scala"))
     LayoutNames.foreach(n => assert(store.contains(n), s"CodedStore no longer names $n"))
   }
+
+  // A trained single query has one plan-surface route: the plan-free
+  // ServingScan. These named the retired Catalyst chunk-union route and
+  // its relation-option predicate injection.
+  private val RetiredRoute = Seq("coarseSingleChunked", "servingCustomScan",
+    "withReadOptions", "injectedIntInOptions", "servingSession", "store.chunks")
+
+  test("src/main names none of the retired single-query chunk-union route") {
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"run from the repo root (no $main)")
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(main).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readString(f).split("\n").zipWithIndex.toSeq
+      name <- RetiredRoute if line.contains(name)
+    } yield s"$f:${i + 1}: $name"
+    assert(hits.isEmpty, s"retired route named in src/main:\n${hits.mkString("\n")}")
+  }
 }

@@ -207,6 +207,60 @@ class RestServerSpec extends SparkSpec {
     assert(post("/db/nulls/delete")._1 == 200)
   }
 
+  /** Poll a db's train status until it leaves "not started"/"in progress". */
+  private def awaitTrainEnd(db: String): String = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var status = ""
+    while ({ status = get(s"/db/$db/train")._2.get("status").asText()
+             status == "in progress" || status == "not started" } &&
+           System.nanoTime() < deadline) Thread.sleep(100)
+    status
+  }
+
+  test("non-boolean train flags are rejected with 400, no train started") {
+    // Jackson's asBoolean() read the strings and {} as false and 1 as true
+    for {
+      key <- Seq("omit_opq", "use_two_level_clustering")
+      bad <- Seq("\"yes\"", "\"abc\"", "\"true\"", "{}", "[]", "1", "0")
+      body <- Seq(s"""{"$key": $bad}""", s"""{"pca_dimension": 4, "$key": $bad}""")
+    } {
+      val (c, b) = post("/db/restdb/train", body)
+      assert(c == 400 && b.get("detail").asText().contains(key), s"$body: $c $b")
+    }
+    assert(get("/db/restdb/train")._2.get("status").asText() == "not started",
+      "a rejected train flag started a train")
+    // JSON booleans are accepted and an explicit null means absent; on an
+    // empty db each accepted train bypasses to "failed"
+    assert(post("/db/create", """{"name": "flags"}""")._1 == 200)
+    Seq("""{"omit_opq": null, "use_two_level_clustering": null}""",
+        """{"omit_opq": true, "use_two_level_clustering": false}""").foreach { body =>
+      val (c, b) = post("/db/flags/train", body)
+      assert(c == 200, s"$body: $c $b")
+      assert(awaitTrainEnd("flags") == "failed")
+    }
+    assert(post("/db/flags/delete")._1 == 200)
+  }
+
+  test("a malformed JSON body answers 422 and changes nothing") {
+    def numVectors(): Long =
+      mapper.readTree(get("/db/restdb/info")._2.get("db_info").asText())
+        .get("num_vectors").asLong()
+    val before = numVectors()
+    val q = Seq("1") ++ Seq.fill(7)("0")
+    Seq(
+      "add" -> s"""{"add_data": [[${q.mkString(",")}], {"x": 1}""",
+      "query" -> s"""{"query_vector": [${q.mkString(",")}""",
+      "remove" -> """{"ids": [2, 3""",
+      "train" -> """{"omit_opq": tru""",
+      "train" -> "not json").foreach { case (verb, body) =>
+      val (c, b) = post(s"/db/restdb/$verb", body)
+      assert(c == 422 && b.get("detail").asText().contains("JSON"), s"$verb $body: $c $b")
+    }
+    assert(numVectors() == before, "a malformed body changed the db")
+    assert(get("/db/restdb/train")._2.get("status").asText() == "not started",
+      "a malformed train body started a train")
+  }
+
   test("train: async start, status endpoint, small-db bypass → failed " +
        "(fastapi.py:314-338; T3)") {
     assert(get("/db/restdb/train")._2.get("status").asText() == "not started")

@@ -85,13 +85,12 @@ class TornCatalogSpec extends AnyFunSuite {
     assert(Catalog.load(root, "db").maxId == 20L)
   }
 
-  test("legacy single-file catalog loads as epoch 0 and is swept after migration") {
+  test("a db dir holding only the retired catalog.json fails loudly, naming the db") {
     val root = newRoot()
     // a pre-r12 catalog.json — no `complete` marker existed back then
-    val legacy = doc("db", 42L)
     val legacyJson =
       s"""{
-         |  "name": "db",
+         |  "name": "olddb",
          |  "vectorDimension": -1,
          |  "maxId": 42,
          |  "dataVersion": 0,
@@ -107,17 +106,18 @@ class TornCatalogSpec extends AnyFunSuite {
          |  "numClusters": -1,
          |  "nProbe": -1,
          |  "usedTwoLevel": -1,
-         |  "createdAt": ${legacy.createdAt},
+         |  "createdAt": 1,
          |  "codedBucketShift": -1,
          |  "codedOwners": ""
          |}""".stripMargin
-    writeRaw(root, "db", "catalog.json", legacyJson)
-    assert(Catalog.exists(root, "db"))
-    assert(Catalog.load(root, "db").maxId == 42L)
-    Catalog.save(root, doc("db", 43L))   // migrates (legacy kept as the -1 window)
-    Catalog.save(root, doc("db", 44L))   // second save sweeps the legacy file
-    assert(!listNames(root, "db").contains("catalog.json"))
-    assert(Catalog.load(root, "db").maxId == 44L)
+    writeRaw(root, "olddb", "catalog.json", legacyJson)
+    // present, so it never reads as "database not found" …
+    assert(Catalog.exists(root, "olddb"))
+    // … but it is refused with the way out
+    val e = intercept[RuntimeException](Catalog.load(root, "olddb"))
+    assert(e.getMessage.contains("'olddb'") && e.getMessage.contains("recreate"),
+      e.getMessage)
+    assert(listNames(root, "olddb") == Seq("catalog.json"), "the refusal must not write")
   }
 
   test("a root holding ONLY a torn epoch fails loudly (real crash artifact)") {

@@ -6,11 +6,13 @@ import graft.SparkSpec
 import graft.index.IndexParams
 
 /** Bit-identity and staleness gates for the plan-free serving scan
-  * ([[ServingScan]]): its coarse candidate array must equal the Catalyst
-  * chunk-scan path's EXACTLY (same kernel, same merge — any drift means
-  * the reader surfaced different rows), and the per-epoch listing must
-  * be invalidated by the same-version post-train append exactly like the
-  * cached serving DataFrames are.
+  * ([[ServingScan]]): its coarse candidate array must equal the batch
+  * path's at q=1 EXACTLY (the Catalyst chunk-union scan `prunedLive`
+  * scored by `BatchANN.coarseCandidates` — same kernel, same cut; any
+  * drift means the reader surfaced different rows), `queryCatalyst` must
+  * return `queryBatchTrained`'s rows, and the per-epoch listing must be
+  * invalidated by the same-version post-train append exactly like the
+  * cached table frame is.
   */
 class ServingScanCustomSpec extends SparkSpec {
 
@@ -22,7 +24,7 @@ class ServingScanCustomSpec extends SparkSpec {
     val e = new Engine(spark, tmpDir(dir)) {
       override protected def chooseCodedBucketShift(nn: Long, nlist: Int,
                                                     d: Int, m: Int): Int = 2
-      override protected def probePushChunk: Int = 4 // force multi-chunk Catalyst shape
+      override protected def probePushChunk: Int = 4 // multi-chunk batch reference
       override protected def servingScanMinSplitBytes: Long = minSplit
     }
     val rnd = new Random(Seed)
@@ -38,13 +40,7 @@ class ServingScanCustomSpec extends SparkSpec {
     e
   }
 
-  private def catalystCoarse(e: Engine, doc: graft.catalog.CatalogDoc,
-                             qp: Array[Float], probes: Array[Int],
-                             prelimK: Int): Array[(Long, Double, Int)] = {
-    val chunks = e.store.chunks(doc, probes)
-    graft.operators.BatchANN.coarseSingleChunked(
-      spark, chunks, e.modelBroadcast(doc), qp, probes, prelimK)
-  }
+  import ServingScanCustomSpec.{batchCoarse, batchRows}
 
   private def compareAllShapes(e: Engine): Unit = {
     val doc = e.load("db")
@@ -60,11 +56,10 @@ class ServingScanCustomSpec extends SparkSpec {
       val q = Array.fill(D)(rnd.nextGaussian().toFloat)
       val qp = model.pca.applyLocal(q)
       val custom = e.servingScanCoarse(doc, qp, probes, 50)
-      assert(custom.isDefined, s"shape $pi: custom scan declined a clean layout")
-      val cat = catalystCoarse(e, doc, qp, probes, 50)
-      assert(custom.get.toSeq == cat.toSeq,
-        s"shape $pi: custom scan coarse diverged from the Catalyst path")
-      assert(cat.nonEmpty, s"shape $pi: empty coarse result undermines the gate")
+      val ref = batchCoarse(e, doc, qp, probes, 50)
+      assert(custom.toSeq == ref.toSeq,
+        s"shape $pi: custom scan coarse diverged from the batch path")
+      assert(ref.nonEmpty, s"shape $pi: empty coarse result undermines the gate")
     }
   }
 
@@ -81,16 +76,15 @@ class ServingScanCustomSpec extends SparkSpec {
     val qp = model.pca.applyLocal(q)
     val probes = Array.range(0, doc0.numClusters)
     // prime the epoch cache
-    assert(e.servingScanCoarse(doc0, qp, probes, 2000).isDefined)
+    assert(e.servingScanCoarse(doc0, qp, probes, 2000).nonEmpty)
     // post-train add: fused assign+encode appends coded rows under the
     // SAME index version — the listing must pick them up
     e.addLocal("db", Seq.tabulate(50)(i =>
       Array.fill(D)(rnd.nextGaussian().toFloat)),
       Seq.tabulate(50)(i => s"""{"new":$i}"""))
     val doc1 = e.load("db")
-    val custom = e.servingScanCoarse(doc1, qp, probes, 5000).get
-    val cat = catalystCoarse(e, doc1, qp, probes, 5000)
-    assert(custom.toSeq == cat.toSeq)
+    val custom = e.servingScanCoarse(doc1, qp, probes, 5000)
+    assert(custom.toSeq == batchCoarse(e, doc1, qp, probes, 5000).toSeq)
     assert(custom.exists(_._1 > doc0.maxId),
       "appended rows never surfaced through the custom scan - stale epoch listing")
   }
@@ -99,13 +93,14 @@ class ServingScanCustomSpec extends SparkSpec {
     val e = buildEngine("graft-sscan-e2e")
     val rnd = new Random(Seed + 3)
     val qs = Array.fill(4)(Array.fill(D)(rnd.nextGaussian().toFloat))
-    def run(): Seq[Seq[Any]] = qs.toSeq.flatMap { q =>
-      e.queryCatalyst("db", q, 200, 20).collect().toSeq.map(_.toSeq)
+    // "knob on" = the plan-free scan, "knob off" = its Catalyst
+    // reference, the batch path at q=1
+    qs.foreach { q =>
+      val rows = e.queryCatalyst("db", q, 200, 20).collect().toSeq.map(_.toSeq)
+      assert(rows.length == 20)
+      assert(rows == batchRows(e, q, 200, 20),
+        "queryCatalyst rows differ from the batch path at q=1")
     }
-    val on = run()
-    e.servingCustomScan = false
-    val off = run()
-    assert(on == off, "queryCatalyst rows differ between custom scan and Catalyst path")
   }
 
   test("multi-range tasks: coarse + fetch + e2e stay exact (midpoint-rule footer filter)") {
@@ -122,17 +117,15 @@ class ServingScanCustomSpec extends SparkSpec {
     val q = Array.fill(D)(rnd.nextGaussian().toFloat)
     val qp = model.pca.applyLocal(q)
     val probes = Array.range(0, doc.numClusters)
-    val cand = e.servingScanCoarse(doc, qp, probes, 100).get
+    val cand = e.servingScanCoarse(doc, qp, probes, 100)
     assert(cand.map(_._1).distinct.length == cand.length,
       "duplicate candidate ids - a row group was read by several ranges")
-    val cat = catalystCoarse(e, doc, qp, probes, 100)
-    assert(cand.toSeq == cat.toSeq)
-    val fetched = e.servingScanFetchRows(doc, cand).get
+    assert(cand.toSeq == batchCoarse(e, doc, qp, probes, 100).toSeq)
+    val fetched = e.servingScanFetchRows(doc, cand)
     assert(fetched.map(_._1).sorted.toSeq == cand.map(_._1).sorted.toSeq,
       "fetch rows are not exactly the candidate ids")
     val res = e.queryCatalyst("db", q, 100, 20).collect().map(_.toSeq).toSeq
-    e.servingCustomScan = false
-    assert(res == e.queryCatalyst("db", q, 100, 20).collect().map(_.toSeq).toSeq)
+    assert(res == batchRows(e, q, 100, 20))
   }
 
   test("custom fetch returns exactly the rows the Catalyst fetch scan returns") {
@@ -143,9 +136,9 @@ class ServingScanCustomSpec extends SparkSpec {
     val q = Array.fill(D)(rnd.nextGaussian().toFloat)
     val qp = model.pca.applyLocal(q)
     val probes = Array.range(0, doc.numClusters)
-    val candRows = e.servingScanCoarse(doc, qp, probes, 80).get
+    val candRows = e.servingScanCoarse(doc, qp, probes, 80)
     assert(candRows.nonEmpty)
-    val custom = e.servingScanFetch(doc, candRows).get
+    val custom = e.servingScanFetch(doc, candRows)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getString(2)))
       .sortBy(_._1).toSeq
     import org.apache.spark.sql.functions._
@@ -163,16 +156,21 @@ class ServingScanCustomSpec extends SparkSpec {
   test("filtered query path equality: knob on vs knob off") {
     val e = buildEngine("graft-sscan-filt")
     import org.apache.spark.sql.functions._
-    val pred = get_json_object(col("metadata"), "$.i").cast("long") % 2 === 0
+    // three regimes: the first round fills (~50%), one pushed round (the
+    // batch path at q=1, ~3%), the exact flat fallback (id < 10)
+    val preds = Seq(
+      get_json_object(col("metadata"), "$.i").cast("long") % 2 === 0,
+      get_json_object(col("metadata"), "$.i").cast("long") % 29 === 0,
+      col("id") < 10L)
     val rnd = new Random(Seed + 9)
     val qs = Array.fill(3)(Array.fill(D)(rnd.nextGaussian().toFloat))
-    def run(): Seq[Seq[Any]] = qs.toSeq.flatMap { q =>
-      e.queryCatalyst("db", q, 200, 20, Some(pred)).collect().toSeq.map(_.toSeq)
+    // knob on/off as in the unfiltered test
+    for (pred <- preds; q <- qs) {
+      val rows = e.queryCatalyst("db", q, 200, 20, Some(pred)).collect().toSeq.map(_.toSeq)
+      assert(rows.nonEmpty)
+      assert(rows == batchRows(e, q, 200, 20, Some(pred)),
+        s"filtered queryCatalyst rows differ from the batch path under $pred")
     }
-    val on = run()
-    e.servingCustomScan = false
-    assert(on == run(),
-      "filtered queryCatalyst rows differ between custom scan and Catalyst path")
   }
 
   test("zero-hit shapes: empty buckets and empty candidate sets plan zero tasks") {
@@ -195,7 +193,7 @@ class ServingScanCustomSpec extends SparkSpec {
     // row set (not an exception) and the e2e query serves an empty frame
     val e = buildEngine("graft-sscan-zero", n = 600)
     val doc = e.load("db")
-    assert(e.servingScanFetchRows(doc, Array.empty).exists(_.isEmpty))
+    assert(e.servingScanFetchRows(doc, Array.empty).isEmpty)
   }
 
   test("footer cache is byte-bounded: eviction keeps resident bytes under the cap") {
@@ -210,14 +208,14 @@ class ServingScanCustomSpec extends SparkSpec {
     try {
       ServingScan.footerCacheMaxBytes = 8L << 10 // ~2 footers at 3 cols
       ServingScan.footerCacheClear()
-      val cand = e.servingScanCoarse(doc, qp, probes, 50).get
+      val cand = e.servingScanCoarse(doc, qp, probes, 50)
       assert(cand.nonEmpty)
       val (entries, bytes) = ServingScan.footerCacheStats
       assert(entries >= 1, "scan never populated the footer cache")
       assert(bytes <= ServingScan.footerCacheMaxBytes,
         s"footer cache resident bytes $bytes exceed the cap")
-      // correctness under heavy eviction: same candidates as Catalyst
-      assert(cand.toSeq == catalystCoarse(e, doc, qp, probes, 50).toSeq)
+      // correctness under heavy eviction: same candidates as the batch path
+      assert(cand.toSeq == batchCoarse(e, doc, qp, probes, 50).toSeq)
     } finally {
       ServingScan.footerCacheMaxBytes = saved
     }
@@ -252,7 +250,7 @@ class ServingScanCustomSpec extends SparkSpec {
     val qp = model.pca.applyLocal(q)
     val probes = Array.range(0, doc0.numClusters)
     // prime driver A's epoch
-    assert(a.servingScanCoarse(doc0, qp, probes, 2000).isDefined)
+    assert(a.servingScanCoarse(doc0, qp, probes, 2000).nonEmpty)
     // driver B appends under the SAME index version
     val b = mk()
     b.addLocal("db", Seq.tabulate(40)(_ =>
@@ -263,10 +261,10 @@ class ServingScanCustomSpec extends SparkSpec {
     val doc1 = a.load("db")
     assert(doc1.indexVersion == doc0.indexVersion,
       "append unexpectedly bumped the index version - test shape broken")
-    val custom = a.servingScanCoarse(doc1, qp, probes, 5000).get
+    val custom = a.servingScanCoarse(doc1, qp, probes, 5000)
     assert(custom.exists(_._1 > doc0.maxId),
       "cross-driver appended rows never surfaced - stale epoch listing")
-    assert(custom.toSeq == catalystCoarse(a, doc1, qp, probes, 5000).toSeq)
+    assert(custom.toSeq == batchCoarse(a, doc1, qp, probes, 5000).toSeq)
   }
 
   test("planTasks covers every probed byte exactly once; big files range-split") {
@@ -314,5 +312,36 @@ class ServingScanCustomSpec extends SparkSpec {
       assert(ranges.forall(_.fileLen == gb))
     }
     t2.foreach(t => assert(t.probes.toSeq == t.probes.toSeq.sorted))
+  }
+}
+
+/** The batch path at q=1 — the Catalyst reference the plan-free scan is
+  * gated against (shared with ServingScanDeletesSpec).
+  */
+object ServingScanCustomSpec {
+
+  /** `BatchANN.coarseCandidates` over `prunedLive` for one query:
+    * (id, adc_dist, cluster_id), smallest (adc_dist, id) first.
+    */
+  def batchCoarse(e: Engine, doc: graft.catalog.CatalogDoc, qp: Array[Float],
+                  probes: Array[Int], prelimK: Int): Array[(Long, Double, Int)] =
+    graft.operators.BatchANN.coarseCandidates(e.spark,
+        e.store.prunedLive(doc, probes), e.modelBroadcast(doc),
+        Array(0L -> qp), Array(probes), prelimK)
+      .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .sortWith((a, b) =>
+        java.lang.Double.compare(a._2, b._2) < 0 || (a._2 == b._2 && a._1 < b._1))
+
+  /** `queryBatchTrained` for one query, as `queryCatalyst`'s
+    * (rank, id, metadata, cosine_similarity) rows in rank order.
+    */
+  def batchRows(e: Engine, q: Array[Float], prelimK: Int, finalK: Int,
+                pred: Option[org.apache.spark.sql.Column] = None): Seq[Seq[Any]] = {
+    import e.spark.implicits._
+    val qdf = Seq((0L, q.toSeq)).toDF("query_id", "qvec")
+    e.queryBatchTrained("db", qdf, prelimK, finalK, pred).collect()
+      .map(r => Seq(r.getInt(4), r.getLong(1),
+        if (r.isNullAt(2)) null else r.getString(2), r.getDouble(3)))
+      .sortBy(_.head.asInstanceOf[Int]).toSeq
   }
 }
