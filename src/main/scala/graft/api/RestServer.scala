@@ -200,11 +200,11 @@ final class RestServer(engine: Engine, port: Int = 8000,
                 else if (meta.isTextual) meta.asText()
                 else mapper.writeValueAsString(meta))
     }
+    // the engine reports a bad batch (dimension mismatch, empty input, the
+    // flat memory guard) as IllegalArgumentException; any other failure is
+    // the server's and answers 500 through the route handler
     try engine.addLocal(name, vectors.result().toSeq, metas.result().toSeq)
-    catch {
-      case e: IllegalArgumentException => fail(400, e.getMessage)
-      case NonFatal(e) => fail(400, String.valueOf(e.getMessage))
-    }
+    catch { case e: IllegalArgumentException => fail(400, e.getMessage) }
     // M3 — initial-training trigger, queued + drained off-request exactly
     // like the reference (fastapi.py:173-186)
     maybeQueueInitial(name)

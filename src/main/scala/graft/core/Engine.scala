@@ -623,10 +623,15 @@ class Engine(val spark: SparkSession, val root: String) {
         // partition order, same within-partition order, same base), one
         // Spark job fewer per add on the real write path.
         val rdd = prepared.rdd
-        val partCounts = rdd.mapPartitionsWithIndex { case (i, it) =>
-          var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-          Iterator((i, n))
-        }.collect().sortBy(_._1).map(_._2)
+        val partCounts =
+          try rdd.mapPartitionsWithIndex { case (i, it) =>
+            var n = 0L; while (it.hasNext) { it.next(); n += 1 }
+            Iterator((i, n))
+          }.collect().sortBy(_._1).map(_._2)
+          catch { // the A1 dim check's raise_error is the caller's fault
+            case e: Exception if Engine.userRaisedMessage(e).isDefined =>
+              throw new IllegalArgumentException(Engine.userRaisedMessage(e).get, e)
+          }
         val added = partCounts.sum
         require(added > 0, "add: empty input")
         // A3 — the count is in hand and nothing is committed yet, so the
@@ -1457,6 +1462,23 @@ class Engine(val spark: SparkSession, val root: String) {
 
   // ----------------------------------------------------------------- train
 
+  /** Driver bytes a subsample-strategy train may hold to fit on one
+    * collected sample ([[IndexFit.fit]]): the db's `maxMemoryUsage`, capped
+    * at a quarter of the driver heap and at `spark.driver.maxResultSize`
+    * (the sample pass returns its rows as one job's result). Overridable
+    * so specs can force the distributed fit.
+    */
+  protected def localFitBudgetBytes(maxMemoryUsage: Long): Long = {
+    val maxResult = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    Seq(maxMemoryUsage, Runtime.getRuntime.maxMemory / 4,
+      if (maxResult > 0) maxResult else Long.MaxValue).min
+  }
+
+  // test seam — TrainFitJobsSpec marks the end of the fit phase (called on
+  // the training thread once the models are fit, before the coded write)
+  private[core] var afterFitSeam: () => Unit = () => ()
+
   /** T1-T19 — build the PCA→IVF→PQ index over the current snapshot and
     * swap it in (mindb.py:231-344). Residual PQ encoding, matching Faiss
     * IVFPQ. No-op below the flat floor (T3, mindb.py:276-287);
@@ -1587,7 +1609,8 @@ class Engine(val spark: SparkSession, val root: String) {
     }
     onSnapshot() // test seam — deterministic "during training" window
     val table = pinnedFull.select("id", "vector")
-    val n = table.count()
+    // one job: a Dataset count is a map stage and a result stage
+    val n = pinnedFull.select("id").queryExecution.toRdd.count()
     if (n < minTrainRows) return (doc, false, snapshotMaxId, snapshotMaxId) // T3 small-db bypass
 
     val d = doc.vectorDimension
@@ -1613,60 +1636,23 @@ class Engine(val spark: SparkSession, val root: String) {
     val nlist = math.max(1, Heuristics.numClusters(n))
     val nprobe = math.max(1, Heuristics.nProbe(nlist))
 
-    // T10 — PCA fit on a 100·d sample; optional OPQ rotation fit in PCA
-    // space, composed into ONE effective projection matrix (Pca.compose)
-    val pcaBase =
-      if (p.pcaDimension == d) Pca.identity(d)
-      else Pca.fit(table, "vector", d, p.pcaDimension,
-        sampleSize = math.min(n, 100L * d).toInt, seed = seed, totalRows = n)
-    val (pca, effDim) =
-      if (p.omitOpq) (pcaBase, p.pcaDimension)
-      else {
-        val sampleN = 64 * 256
-        val opqSample = projectedView(table, pcaBase)
-          .sample(withReplacement = false, math.min(1.0, sampleN * 1.1 / n), seed)
-          .limit(sampleN)
-          .select("pvec").collect()
-          .map(_.getSeq[Double](0).map(_.toFloat).toArray)
-        val r = Opq.fit(opqSample, p.opqDimension, p.compressedVectorBytes,
-          seed = seed)
-        (Pca.compose(pcaBase, r), p.opqDimension)
-      }
-    val projected = projectedView(table, pca)
-
     // T7 — strategy chooser (training_utils.py:75-88): two-level when the
     // RAM-capped subsample would leave < 39 vectors/cluster
     val twoLevel = useTwoLevelClustering.getOrElse(
       Heuristics.isTwoLevelClusteringOptimal(maxMemoryUsage, d, n))
 
-    // T9/T11-T15 — centroids in PCA space
-    val centroids: Array[Array[Float]] =
-      if (twoLevel)
-        TwoLevelClustering.fit(projected, "pvec", effDim, nlist,
-          kmeansIters, seed, totalRows = n)
-      else {
-        val sampleN = math.min(n, 256L * nlist)
-        val sample = projected.sample(withReplacement = false,
-          math.min(1.0, sampleN.toDouble / n), seed)
-        KMeansDF.fitDistributed(sample, "pvec", effDim, nlist,
-          kmeansIters, seed)
-      }
-
-    // T15 — PQ codebooks on a 64·256-row sample of assigned residuals
-    // (one cheap sample() pass; residuals computed by the broadcast kernel)
-    val pqN = 64 * 256
-    val pqSample = projected
-      .sample(withReplacement = false, math.min(1.0, pqN * 1.1 / n), seed)
-      .limit(pqN)
-      .select(Coder.residualCol(spark, centroids, col("pvec")).as("res"))
-      .collect().map(_.getSeq[Double](0).map(_.toFloat).toArray)
-    val pq = ProductQuantizer.fit(pqSample, p.compressedVectorBytes,
-      iters = kmeansIters, seed = seed)
+    // T9-T15 — PCA (+ OPQ), centroids in PCA space and PQ codebooks on
+    // assigned residuals, fit on samples of the pinned rows: in one sample
+    // pass on the driver when the sample fits the budget
+    val fitted = IndexFit.fit(table,
+      IndexFit.Spec(n, d, p, nlist, kmeansIters, seed), twoLevel,
+      localFitBudgetBytes(maxMemoryUsage))
+    afterFitSeam()
 
     // T18 — single full pass: project + assign + residual-encode + write
     // the covering coded table (vector + metadata ride along so serving
     // never rescans the base table)
-    val model = IndexModel(pca, centroids, pq)
+    val model = IndexModel(fitted.pca, fitted.centroids, fitted.pq)
     // the index version is stable for the whole train: the only other
     // writers that bump it (compact, coded-table bin-packing) defer while
     // the status is "in progress"
@@ -1737,15 +1723,6 @@ class Engine(val spark: SparkSession, val root: String) {
       maybeCompactCoded(name)
       load(name)
     }
-
-  /** `(id, pvec)` PCA-space view of `(id, vector)` rows. Identity PCA is a
-    * plain cast (no d×d matmul); otherwise the matrix ships as a broadcast.
-    */
-  private def projectedView(rows: DataFrame, pca: PcaModel): DataFrame =
-    if (pca.isIdentity)
-      rows.select(col("id"), col("vector").cast("array<double>").as("pvec"))
-    else
-      rows.select(col("id"), Coder.pcaApplyCol(spark, pca, col("vector")).as("pvec"))
 
   /** Index dirs a swap away from `doc` supersedes: every version its
     * coded table still reads ([[CodedStore.referencedVersions]]).
@@ -2007,6 +1984,15 @@ object Engine {
     * T7 strategy chooser only — Spark spills instead of enforcing it.
     */
   val DefaultMaxMemoryUsage: Long = 4L * 1024 * 1024 * 1024
+
+  /** The message of a `raise_error` in `e`'s cause chain: a failed job
+    * wraps the task's error.
+    */
+  private def userRaisedMessage(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).take(16).takeWhile(_ != null).collectFirst {
+      case t: org.apache.spark.SparkThrowable if t.getCondition == "USER_RAISED_EXCEPTION" =>
+        Option(t.getMessageParameters.get("errorMessage")).getOrElse(t.getMessage)
+    }
 
   /** Target bytes per [[ServingScan]] task — 512 MB, the ccp6-measured
     * split packing optimum for the per-query coarse scans

@@ -182,16 +182,17 @@ object Coder {
   def residualCol(spark: SparkSession, centroids: Array[Array[Float]],
                   vec: Column): Column = {
     val bc = spark.sparkContext.broadcast(FlatCentroids.build(centroids))
-    val f = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val ci = bc.value
-      val base = ci.nearest(arr) * ci.d
-      val out = new Array[Double](arr.length)
-      var i = 0
-      while (i < arr.length) { out(i) = arr(i) - ci.flat(base + i); i += 1 }
-      out
-    }
+    val f = udf { (v: Seq[Double]) => residual(bc.value, v.toArray) }
     f(vec)
+  }
+
+  /** [[residualCol]]'s per-row arithmetic, shared with the driver-local fit. */
+  def residual(ci: FlatCentroids, arr: Array[Double]): Array[Double] = {
+    val base = ci.nearest(arr) * ci.d
+    val out = new Array[Double](arr.length)
+    var i = 0
+    while (i < arr.length) { out(i) = arr(i) - ci.flat(base + i); i += 1 }
+    out
   }
 
   /** PCA apply y = W·(x−μ) as a broadcast-backed column (the full-pass
@@ -201,21 +202,29 @@ object Coder {
     val bc = spark.sparkContext.broadcast((pca.mean, pca.components))
     val f = udf { (v: Seq[Double]) =>
       val (mean, comps) = bc.value
-      val c = new Array[Double](mean.length)
-      var i = 0
-      while (i < mean.length) { c(i) = v(i) - mean(i); i += 1 }
-      val out = new Array[Double](comps.length)
-      i = 0
-      while (i < comps.length) {
-        val row = comps(i)
-        var s = 0.0
-        var j = 0
-        while (j < row.length) { s += row(j) * c(j); j += 1 }
-        out(i) = s
-        i += 1
-      }
-      out
+      pcaApply(mean, comps, i => v(i))
     }
     f(vec)
+  }
+
+  /** [[pcaApplyCol]]'s per-row arithmetic, shared with the driver-local
+    * fit: `v(i)` is the input vector's i-th element as a double.
+    */
+  def pcaApply(mean: Array[Double], comps: Array[Array[Double]],
+               v: Int => Double): Array[Double] = {
+    val c = new Array[Double](mean.length)
+    var i = 0
+    while (i < mean.length) { c(i) = v(i) - mean(i); i += 1 }
+    val out = new Array[Double](comps.length)
+    i = 0
+    while (i < comps.length) {
+      val row = comps(i)
+      var s = 0.0
+      var j = 0
+      while (j < row.length) { s += row(j) * c(j); j += 1 }
+      out(i) = s
+      i += 1
+    }
+    out
   }
 }

@@ -94,6 +94,93 @@ object LocalKMeans {
 
 object KMeansDF {
 
+  /** Fraction of the `n` input rows the init sample draws: ~4 rows per
+    * centroid plus slack.
+    */
+  def initFraction(k: Int, n: Long): Double =
+    math.min(1.0, (k * 4.0 + 64.0) / math.max(1L, n))
+
+  /** The init sample made deterministic and duplicate-free: distinct
+    * vectors sorted on a content hash, ties broken by their text (a
+    * duplicate initial centroid would stay degenerate forever — empty
+    * clusters keep their position). The first k become the initial
+    * centroids when there are k of them. The text is built only for a
+    * hash tie; the comparisons are those of the `(hashCode, mkString)`
+    * tuple ordering.
+    */
+  def initCandidates(sampled: Array[Seq[Double]]): Array[Seq[Double]] =
+    sampled.distinct.sorted(new Ordering[Seq[Double]] {
+      def compare(a: Seq[Double], b: Seq[Double]): Int = {
+        val c = Integer.compare(a.hashCode(), b.hashCode())
+        if (c != 0) c else a.mkString(",").compareTo(b.mkString(","))
+      }
+    })
+
+  /** True when the partial-collect Lloyd step's partial set
+    * (numPartitions · k · d doubles) is driver-small.
+    */
+  def partialCollectFits(numPartitions: Int, k: Int, d: Int): Boolean =
+    numPartitions.toLong * k * (d * 8L + 24L) <= PartialCollectCap
+
+  private val PartialCollectCap = 64L << 20
+
+  /** One partition's Lloyd partials: per cluster, the row-order double
+    * sum of its assigned rows and their count, in first-assignment order.
+    * Rows are assigned in [[AssignBatchRows]]-row `nearestBatch` chunks.
+    */
+  def partialSums(rows: Iterator[Array[Double]], ci: FlatCentroids, d: Int): Partials = {
+    val sums: Partials = scala.collection.mutable.LinkedHashMap.empty
+    rows.grouped(AssignBatchRows).foreach { chunk =>
+      val qs = chunk.toArray
+      accumulate(sums, qs, assign(ci, qs), d)
+    }
+    sums
+  }
+
+  type Partials = scala.collection.mutable.LinkedHashMap[Int, (Array[Double], Array[Long])]
+
+  val AssignBatchRows = 1024
+
+  /** The nearest centroid of each of `qs`. */
+  def assign(ci: FlatCentroids, qs: Array[Array[Double]]): Array[Int] = {
+    val out = new Array[Int](qs.length)
+    ci.nearestBatch(qs, out)
+    out
+  }
+
+  /** Adds rows `qs`, assigned to clusters `out`, to `sums` in row order. */
+  def accumulate(sums: Partials, qs: Array[Array[Double]], out: Array[Int], d: Int): Unit = {
+    var i = 0
+    while (i < qs.length) {
+      val e = sums.getOrElseUpdate(out(i),
+        (new Array[Double](d), new Array[Long](1)))
+      var j = 0; val q = qs(i)
+      while (j < d) { e._1(j) += q(j); j += 1 }
+      e._2(0) += 1
+      i += 1
+    }
+  }
+
+  /** The Lloyd update from partials `(cluster, sums, count)` listed in
+    * partition order: per cluster, the partition sums added in that
+    * order, divided once; a cluster with no rows keeps its position.
+    */
+  def mergePartials(centroids: Array[Array[Float]], d: Int,
+                    partials: Iterator[(Int, Seq[Double], Long)]): Array[Array[Float]] = {
+    val agg = scala.collection.mutable.LinkedHashMap
+      .empty[Int, (Array[Double], Array[Long])]
+    partials.foreach { case (c, sv, cnt) =>
+      val e = agg.getOrElseUpdate(c, (new Array[Double](d), new Array[Long](1)))
+      var j = 0
+      while (j < d) { e._1(j) += sv(j); j += 1 }
+      e._2(0) += cnt
+    }
+    val updated = agg.iterator.map { case (c, (sv, cn)) =>
+      c -> Array.tabulate(d)(j => (sv(j) / cn(0)).toFloat)
+    }.toMap
+    Array.tabulate(centroids.length)(c => updated.getOrElse(c, centroids(c)))
+  }
+
   /** Distributed Lloyd's over a DataFrame for cases where even the
     * training sample exceeds driver memory: per-iteration, one map-side
     * partially-aggregated `groupBy(cluster)` with `avg` per dimension
@@ -109,14 +196,11 @@ object KMeansDF {
     val n = work.count()
     require(n > 0, "kmeans on empty input")
     // init: a cheap sample pass (never a global sort-by-rand), made
-    // deterministic + duplicate-free by sorting the collected sample on a
-    // content hash and deduping — a duplicate initial centroid would stay
-    // degenerate forever (empty clusters keep their position).
+    // deterministic + duplicate-free by initCandidates
     val sampled = work
-      .sample(withReplacement = false, math.min(1.0, (k * 4.0 + 64.0) / math.max(1L, n)), seed)
+      .sample(withReplacement = false, initFraction(k, n), seed)
       .collect().map(_.getSeq[Double](0))
-    val distinctSorted = sampled.distinct
-      .sortBy(v => (v.hashCode(), v.mkString(",")))
+    val distinctSorted = initCandidates(sampled)
     var centroids: Array[Array[Float]] =
       (if (distinctSorted.length >= k) distinctSorted.take(k)
        else {
@@ -153,10 +237,8 @@ object KMeansDF {
     //    (numPartitions · k · d doubles) stops being driver-small, so
     //    the classic per-iteration groupBy/avg keeps partials on the
     //    cluster; centroids ship as a per-iteration broadcast.
-    val partialBytes = work.rdd.getNumPartitions.toLong * k * (d * 8L + 24L)
-    val partialCollectCap = 64L << 20 // driver-safe partial set
     try {
-      if (partialBytes <= partialCollectCap) {
+      if (partialCollectFits(work.rdd.getNumPartitions, k, d)) {
         val holder = new java.util.concurrent.atomic.AtomicReference[FlatCentroids]()
         val vecIdx = work.schema.fieldIndex(vecCol)
         val outSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -170,43 +252,16 @@ object KMeansDF {
             org.apache.spark.sql.types.LongType, nullable = false)))
         val partials = work.mapPartitions { rows =>
           val ci = holder.get // re-captured at each job's task serialization
-          val sums = scala.collection.mutable.LinkedHashMap
-            .empty[Int, (Array[Double], Array[Long])]
-          rows.grouped(1024).foreach { chunk =>
-            val qs = chunk.iterator.map(_.getSeq[Double](vecIdx).toArray).toArray
-            val out = new Array[Int](qs.length)
-            ci.nearestBatch(qs, out)
-            var i = 0
-            while (i < qs.length) {
-              val e = sums.getOrElseUpdate(out(i),
-                (new Array[Double](d), new Array[Long](1)))
-              var j = 0; val q = qs(i)
-              while (j < d) { e._1(j) += q(j); j += 1 }
-              e._2(0) += 1
-              i += 1
+          partialSums(rows.map(_.getSeq[Double](vecIdx).toArray), ci, d)
+            .iterator.map { case (c, (sv, cn)) =>
+              org.apache.spark.sql.Row(c, sv.toSeq, cn(0))
             }
-          }
-          sums.iterator.map { case (c, (sv, cn)) =>
-            org.apache.spark.sql.Row(c, sv.toSeq, cn(0))
-          }
         }(org.apache.spark.sql.Encoders.row(outSchema))
         for (_ <- 0 until iters) {
           holder.set(FlatCentroids.build(centroids))
-          val agg = scala.collection.mutable.LinkedHashMap
-            .empty[Int, (Array[Double], Array[Long])]
-          partials.collect().foreach { r => // collect preserves partition order
-            val sv = r.getSeq[Double](1)
-            val e = agg.getOrElseUpdate(r.getInt(0),
-              (new Array[Double](d), new Array[Long](1)))
-            var j = 0
-            while (j < d) { e._1(j) += sv(j); j += 1 }
-            e._2(0) += r.getLong(2)
-          }
-          val updated = agg.iterator.map { case (c, (sv, cn)) =>
-            c -> Array.tabulate(d)(j => (sv(j) / cn(0)).toFloat)
-          }.toMap
-          centroids = Array.tabulate(centroids.length)(c =>
-            updated.getOrElse(c, centroids(c)))
+          centroids = mergePartials(centroids, d,
+            // collect preserves partition order
+            partials.collect().iterator.map(r => (r.getInt(0), r.getSeq[Double](1), r.getLong(2))))
         }
       } else {
         for (_ <- 0 until iters) {

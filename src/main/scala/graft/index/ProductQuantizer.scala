@@ -59,7 +59,9 @@ final case class PqModel(m: Int, subDim: Int,
 object ProductQuantizer {
 
   /** Fit codebooks on a sample of PCA-space vectors (driver-local — the
-    * sample is 64·256 rows, same scale the reference trains PQ on).
+    * sample is 64·256 rows, same scale the reference trains PQ on). The m
+    * subspace k-means are independent, each with its own seed, so they run
+    * on the [[FitPool]] and return the sequential loop's codebooks.
     */
   def fit(sample: Array[Array[Float]], m: Int, iters: Int = 25,
           seed: Long = 42L): PqModel = {
@@ -67,7 +69,7 @@ object ProductQuantizer {
     val p = sample(0).length
     require(p % m == 0, s"pq: dim $p not divisible by m=$m")
     val subDim = p / m
-    val codebooks = Array.tabulate(m) { j =>
+    val codebooks = FitPool.tabulate(m) { j =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
       LocalKMeans.fit(sub, k = 256, iters = iters, seed = seed + j)
     }

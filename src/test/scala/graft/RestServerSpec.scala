@@ -34,9 +34,9 @@ class RestServerSpec extends SparkSpec {
     (r.statusCode(), mapper.readTree(r.body()))
   }
 
-  private def post(path: String, json: String = ""): (Int, JsonNode) = {
+  private def post(path: String, json: String = "", to: => String = base): (Int, JsonNode) = {
     val r = client.send(
-      HttpRequest.newBuilder(URI.create(base + path))
+      HttpRequest.newBuilder(URI.create(to + path))
         .POST(HttpRequest.BodyPublishers.ofString(json))
         .header("Content-Type", "application/json").build(),
       HttpResponse.BodyHandlers.ofString())
@@ -92,6 +92,26 @@ class RestServerSpec extends SparkSpec {
     assert(cm == 404 && bm.get("detail").asText() == "Database not found")
     val (cd, _) = post("/db/restdb/query", """{"query_vector":[1,0,0]}""")
     assert(cd == 400) // dimension mismatch
+  }
+
+  test("add: a dimension mismatch raised inside the Spark job is the client's 400") {
+    val (c, b) = post("/db/restdb/add", """{"add_data": [[[1, 0, 0], {"x": 1}]]}""")
+    assert(c == 400 && b.get("detail").asText().contains("dimension mismatch"), s"$c $b")
+  }
+
+  test("add: a server-side fault answers 500, not the client's 400") {
+    val faulty = new Engine(spark, tmpDir("graft-rest-fault")) {
+      override def addLocal(name: String, vectors: Seq[Array[Float]],
+                            metadata: Seq[String]): (Long, Long) =
+        throw new java.io.IOException("injected storage fault")
+    }
+    val srv = new RestServer(faulty, port = 0).start()
+    try {
+      val url = s"http://127.0.0.1:${srv.boundPort}"
+      assert(post("/db/create", """{"name":"faultdb","vector_dimension":2}""", url)._1 == 200)
+      val (c, b) = post("/db/faultdb/add", """{"add_data": [[[1, 0], {"x": 1}]]}""", url)
+      assert(c == 500 && b.get("detail").asText().contains("injected storage fault"), s"$c $b")
+    } finally srv.stop()
   }
 
   test("hostile vector elements and k values are rejected with 400, nothing stored") {
