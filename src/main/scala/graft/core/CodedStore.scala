@@ -2,7 +2,10 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.catalog.CatalogDoc
@@ -190,7 +193,7 @@ private[core] final class CodedStore(
   def prunedLive(doc: CatalogDoc, probes: Array[Int]): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Union => LUnion}
     val plans = branchPlans(doc, probes)
-    val rows = org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+    val rows = Bridge.ofRows(spark,
       if (plans.length == 1) plans.head else LUnion(plans))
     if (doc.numPendingDeletes == 0) rows
     else rows.join(broadcast(deletes(doc)), Seq("id"), "left_anti")
@@ -416,23 +419,6 @@ private[core] final class CodedStore(
       .option("parquet.page.row.count.limit", "512")
       .partitionBy("cluster_bucket").parquet(path)
 
-  /** (id, vector, metadata) rows → covering coded rows. The projection and
-    * the fused assign+encode kernel run in one scan; vector/metadata pass
-    * through untouched.
-    */
-  private def assignEncode(rows: DataFrame, model: IndexModel): DataFrame = {
-    val withP =
-      if (model.pca.isIdentity)
-        rows.withColumn("pvec", col("vector").cast("array<double>"))
-      else
-        rows.withColumn("pvec", Coder.pcaApplyCol(spark, model.pca, col("vector")))
-    Coder.assignEncodeBatched(
-        withP.select(col("id"), col("vector"), col("metadata"), col("pvec")),
-        "pvec", model.centroids, model.pq)
-      .select(col("id"), col("vector"), col("metadata"),
-        col("code"), col("cluster_id"))
-  }
-
   /** Incremental insert (A6). Each appended row lands in the version dir
     * that OWNS its bucket — one append-write per distinct owner, all
     * reading one persisted encode pass. Owner count is small (grows by
@@ -541,6 +527,59 @@ private[core] final class CodedStore(
 }
 
 object CodedStore {
+
+  /** (id, vector, metadata) rows → covering coded rows
+    * (id, vector, metadata, code, cluster_id): PCA apply, nearest
+    * centroid and residual PQ encode in ONE `mapPartitions` over Catalyst
+    * rows. A vector is read as floats through `ArrayData` and the code
+    * leaves as an `UnsafeArrayData`; no Row encoder runs on either side.
+    * The arithmetic is per row and in the same order as
+    * [[Coder.pcaApply]] (or the plain float→double cast of an identity
+    * model), [[graft.index.FlatCentroids.nearestBatch]] over
+    * [[Coder.BatchRows]]-row chunks and [[Coder.encodeResidual]], so the
+    * codes do not depend on how the rows are partitioned.
+    */
+  private[graft] def assignEncode(rows: DataFrame, model: IndexModel): DataFrame = {
+    val sc = rows.sparkSession.sparkContext
+    val bcP =
+      if (model.pca.isIdentity) None
+      else Some(sc.broadcast((model.pca.mean, model.pca.components)))
+    val bcC = sc.broadcast(graft.index.FlatCentroids.build(model.centroids))
+    val bcB = sc.broadcast(model.pq.codebooks)
+    val subDim = model.pq.subDim
+    val in = rows.select("id", "vector", "metadata")
+    val schema = in.schema
+      .add("code", ArrayType(IntegerType, containsNull = false), nullable = false)
+      .add("cluster_id", IntegerType, nullable = false)
+    val coded = in.queryExecution.toRdd.mapPartitions[InternalRow] { it =>
+      val pca = bcP.map(_.value)
+      // the scan reuses one row object: each buffered row is a copy
+      it.map(_.copy()).grouped(Coder.BatchRows).flatMap { chunk =>
+        val ci = bcC.value
+        val qs = chunk.iterator.map { r =>
+          val v = r.getArray(1).toFloatArray()
+          pca match {
+            case Some((mean, comps)) => Coder.pcaApply(mean, comps, i => v(i))
+            case None =>
+              val out = new Array[Double](v.length)
+              var i = 0
+              while (i < v.length) { out(i) = v(i); i += 1 }
+              out
+          }
+        }.toArray
+        val cids = new Array[Int](qs.length)
+        ci.nearestBatch(qs, cids)
+        chunk.iterator.zipWithIndex.map { case (r, i) =>
+          val codes = Coder.encodeResidual(qs(i), ci, cids(i), bcB.value, subDim)
+          new GenericInternalRow(Array[Any](
+            if (r.isNullAt(0)) null else r.getLong(0),
+            r.getArray(1), r.getUTF8String(2),
+            UnsafeArrayData.fromPrimitiveArray(codes), cids(i)))
+        }
+      }
+    }
+    Bridge.internalCreateDataFrame(rows.sparkSession, coded, schema)
+  }
 
   /** Coded table read schema, explicit on every read (inference dies on
     * a legitimately-empty index, e.g. after removing every row): the

@@ -1,9 +1,13 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.{Catalog, CatalogDoc}
 import graft.functions.VectorFunctions._
@@ -636,11 +640,7 @@ class Engine(val spark: SparkSession, val root: String) {
         require(added > 0, "add: empty input")
         // A3 — the count is in hand and nothing is committed yet, so the
         // guard rejects atomically (same contract as the A1 dim rejection)
-        if (!doc.isTrained) flatAddMemoryGuardBytes.foreach { cap =>
-          val est = (doc.maxId + 1 + added) * d.toLong * 4L * 3L
-          require(est <= cap,
-            s"add: flat index would use ~$est bytes > max memory usage $cap")
-        }
+        checkFlatMemory(doc, d, added)
         val offsets = partCounts.scanLeft(0L)(_ + _)
         val withIds = spark.createDataFrame(
           rdd.mapPartitionsWithIndex { case (i, it) =>
@@ -655,20 +655,39 @@ class Engine(val spark: SparkSession, val root: String) {
         withIds.write.mode("append").parquet(doc.dataPath(root))
         added
       } finally prepared.unpersist()
+    commitAdd(doc, d, base, added)
+  }
 
+  /** A3 — the opt-in flat-index memory guard, checked before anything of
+    * the batch is written, so a rejected add commits nothing.
+    */
+  private def checkFlatMemory(doc: CatalogDoc, d: Int, added: Long): Unit =
+    if (!doc.isTrained) flatAddMemoryGuardBytes.foreach { cap =>
+      val est = (doc.maxId + 1 + added) * d.toLong * 4L * 3L
+      require(est <= cap,
+        s"add: flat index would use ~$est bytes > max memory usage $cap")
+    }
+
+  /** The commit tail both add paths share, once the batch's rows
+    * `base …` are in the data table: encode them into a live trained
+    * index, commit the doc, bin-pack past the file budget and log the
+    * flat-index warning. Runs under the db lock.
+    */
+  private def commitAdd(doc0: CatalogDoc, d: Int, base: Long,
+                        added: Long): (Long, Long) = {
     // A6 — incremental index insert for a live trained index
-    if (doc.isTrained)
-      store.append(doc, indexModel(doc),
-        spark.read.schema(dataSchema).parquet(doc.dataPath(root))
+    if (doc0.isTrained)
+      store.append(doc0, indexModel(doc0),
+        spark.read.schema(dataSchema).parquet(doc0.dataPath(root))
           .filter(col("id") >= base))
 
-    doc = doc.copy(maxId = base + added - 1,
+    val doc = doc0.copy(maxId = base + added - 1,
       vectorDimension = d,
-      numNewVectors = doc.numNewVectors + added)
+      numNewVectors = doc0.numNewVectors + added)
     saveDoc(doc)
     // a steady trickle of post-train adds must not degrade the pruned
     // scan into a small-file storm — bin-pack past the file budget
-    if (doc.isTrained) maybeCompactCoded(name)
+    if (doc.isTrained) maybeCompactCoded(doc.name)
     // A10 — flat-index size warning (mindb.py:180-184)
     if (flatWarning(doc))
       log.warn(s"database '${doc.name}' has ${doc.maxId + 1} vectors on an " +
@@ -684,18 +703,46 @@ class Engine(val spark: SparkSession, val root: String) {
   private def flatWarning(doc: CatalogDoc): Boolean =
     !doc.isTrained && doc.maxId + 1 > Heuristics.FlatIndexWarnSize
 
-  /** Driver-local convenience add (test/API parity with the reference's
-    * `add(list of (vector, metadata))`).
+  /** A1-A8 for a batch already on the driver (the reference's
+    * `add(list of (vector, metadata))`; REST add): validation, L2
+    * normalization and id assignment run here, and the rows reach the
+    * data table in ONE write job — no count job, no persist. A missing
+    * metadata entry is null. The stored rows are bit-identical to
+    * [[add]] over the same batch in `max(1, n/5000)` partitions: the
+    * normalization is `VectorKernels.l2normF`'s arithmetic followed by
+    * the float cast, and the write keeps that partitioning, so the data
+    * files and their row order match too (the train's samples are seeded
+    * per partition).
     */
   def addLocal(name: String, vectors: Seq[Array[Float]],
-               metadata: Seq[String]): (Long, Long) = {
-    val rows = vectors.zipAll(metadata, Array.empty[Float], null)
-      .map { case (v, m) => org.apache.spark.sql.Row(v.toSeq, m) }
-    val schema = StructType(Seq(
-      StructField("vector", ArrayType(FloatType, containsNull = false)),
-      StructField("metadata", StringType)))
-    add(name, spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, math.max(1, rows.size / 5000)), schema))
+               metadata: Seq[String]): (Long, Long) = dbLock(name).synchronized {
+    val doc = load(name)
+    val batch = vectors.zipAll(metadata, Array.empty[Float], null).toArray
+    require(batch.nonEmpty, "add: empty input")
+    // A7 — a db with no declared or inferred dimension takes the first
+    // vector's
+    val d =
+      if (doc.vectorDimension > 0) doc.vectorDimension
+      else Option(batch(0)._1).fold(0)(_.length)
+    batch.foreach { case (v, _) =>
+      val got = if (v == null) -1 else v.length
+      require(got == d, s"dimension mismatch: expected $d, got $got")
+    }
+    val added = batch.length.toLong
+    checkFlatMemory(doc, d, added)
+    val base = doc.maxId + 1
+    val rows = batch.indices.map { i =>
+      val (v, m) = batch(i)
+      (base + i, graft.functions.VectorKernels.l2normFloats(v), m)
+    }
+    val rdd = spark.sparkContext
+      .parallelize(rows, math.max(1, batch.length / 5000))
+      .map { case (id, v, m) =>
+        InternalRow(id, UnsafeArrayData.fromPrimitiveArray(v), UTF8String.fromString(m))
+      }
+    Bridge.internalCreateDataFrame(spark, rdd, dataSchema)
+      .write.mode("append").parquet(doc.dataPath(root))
+    commitAdd(doc, d, base, added)
   }
 
   // ---------------------------------------------------------------- remove

@@ -107,6 +107,25 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** [[l2normF]]'s arithmetic on a driver-side vector, each component then
+    * cast to float — the stored form of a vector the driver-local add
+    * normalizes (`transform(l2_normalize(v), x -> cast(x as float))` in
+    * the distributed add), bit for bit.
+    */
+  def l2normFloats(a: Array[Float]): Array[Float] = {
+    val n = a.length
+    var s = 0.0
+    var i = 0
+    while (i < n) { val x = a(i).toDouble; s += x * x; i += 1 }
+    val nn = math.sqrt(s)
+    val out = new Array[Float](n)
+    if (nn != 0.0) {
+      i = 0
+      while (i < n) { out(i) = (a(i).toDouble / nn).toFloat; i += 1 }
+    }
+    out
+  }
+
   def l2normD(a: ArrayData): ArrayData = {
     val n = a.numElements()
     var s = 0.0

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.udf
-import org.apache.spark.sql.types.{ArrayType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 
 /** Broadcast-backed index-math columns for the hot full-table passes.
   *
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   * `typedLit` centroid array is ~400 MB serialized into every task binary.
   * Here each artifact ships once per executor as a broadcast variable and
   * the per-row math runs as a tight primitive loop — plan size O(1) in
-  * nlist/m/d, and the loops (early-exit argmin, fused
-  * assign+residual+encode) are faster than the equivalent boxed Catalyst
-  * array-lambda chain.
+  * nlist/m/d, and the loops (batched argmin, residual encode) are faster
+  * than the equivalent boxed Catalyst array-lambda chain. The full-table
+  * assign+encode pass that uses them is `CodedStore.assignEncode`.
   *
   * Reference semantics: nearest-centroid assignment
   * (two_level_clustering.py:11-21), residual PQ encode (Faiss IVFPQ
@@ -23,41 +23,19 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   */
 object Coder {
 
-  /** Named struct for the fused assign+encode kernel (field names survive
-    * into the Catalyst schema, unlike a bare Tuple2's `_1`/`_2`).
-    */
-  final case class AssignedCode(cluster_id: Int, code: Array[Int])
-
-  /** argmin_c ‖v − centroid_c‖² as a column (0-based id), over an
-    * already-created broadcast. Caller owns the broadcast lifecycle —
-    * iterative fitters must `destroy()` it after the pass collects.
-    * [[FlatCentroids]] runs the exact argmin on its SIMD path where the
-    * JVM has `jdk.incubator.vector`, scalar flat scan otherwise.
-    */
-  def nearestCentroidCol(bc: Broadcast[FlatCentroids], vec: Column): Column = {
-    val f = udf { (v: Seq[Double]) => bc.value.nearest(v.toArray) }
-    f(vec)
-  }
-
-  /** One-shot convenience overload; the broadcast is cleaned up by Spark's
-    * ContextCleaner once the plan is GC'd.
-    */
-  def nearestCentroidCol(spark: SparkSession, centroids: Array[Array[Float]],
-                         vec: Column): Column =
-    nearestCentroidCol(spark.sparkContext.broadcast(FlatCentroids.build(centroids)), vec)
-
   /** Rows buffered per [[FlatCentroids.nearestBatch]] call in the batched
     * passes — enough to fill many SIMD tiles, small enough that a chunk of
     * rows (ids + vectors + metadata) is trivially bounded in memory.
     */
-  private val BatchRows = 1024
+  private[graft] val BatchRows = 1024
 
   /** Appends `outCol` = exact nearest-centroid id, computed BATCHED: rows
     * stream through `mapPartitions` in [[BatchRows]] chunks so the SIMD
-    * tile kernel gets one query per vector lane instead of a per-row UDF
-    * call (the per-row path pays a lane reduction per centroid — measured
-    * 5× slower at nlist 91k). Results are identical to
-    * [[nearestCentroidCol]]; all other columns pass through untouched.
+    * tile kernel gets one query per vector lane instead of a per-row call
+    * (the per-row path pays a lane reduction per centroid — measured 5×
+    * slower at nlist 91k). Results are identical to
+    * [[FlatCentroids.nearest]] per row; all other columns pass through
+    * untouched.
     */
   def withNearestBatched(df: DataFrame, vecCol: String, outCol: String,
                          bc: Broadcast[FlatCentroids]): DataFrame = {
@@ -75,105 +53,39 @@ object Coder {
     }(Encoders.row(outSchema))
   }
 
-  /** Batched fused assign + residual + PQ-encode: appends `cluster_id` and
-    * `code` in one `mapPartitions` pass. The argmin runs on the SIMD tile
-    * kernel (the full-corpus encode bottleneck at 35M×91k); the per-row PQ
-    * code (m·256·subDim flops — ~2 orders smaller) stays scalar. Same
-    * results as the [[assignEncodeCol]] column form.
+  /** Residual PQ encode of one PCA-space vector against its assigned
+    * centroid `cid`: per subspace, the argmin over the codebook of
+    * Σ ((v − centroid) − entry)² in double, strict `<`, lowest index on
+    * ties. The coded write's per-row arithmetic.
     */
-  def assignEncodeBatched(df: DataFrame, vecCol: String,
-                          centroids: Array[Array[Float]], pq: PqModel): DataFrame = {
-    val spark = df.sparkSession
-    val bcC = spark.sparkContext.broadcast(FlatCentroids.build(centroids))
-    val bcB = spark.sparkContext.broadcast(pq.codebooks)
-    val m = pq.m
-    val subDim = pq.subDim
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    val outSchema = df.schema
-      .add("cluster_id", IntegerType, nullable = false)
-      .add("code", ArrayType(IntegerType, containsNull = false), nullable = false)
-    df.mapPartitions { rows =>
-      rows.grouped(BatchRows).flatMap { chunk =>
-        val ci = bcC.value
-        val cbs = bcB.value
-        val qs = chunk.iterator.map(_.getSeq[Double](vecIdx).toArray).toArray
-        val cids = new Array[Int](qs.length)
-        ci.nearestBatch(qs, cids)
-        chunk.iterator.zipWithIndex.map { case (r, i) =>
-          val arr = qs(i)
-          val base = cids(i) * ci.d
-          val codes = new Array[Int](m)
-          var j = 0
-          while (j < m) {
-            val cb = cbs(j)
-            val off = j * subDim
-            var best = 0
-            var bestD = Double.MaxValue
-            var k = 0
-            while (k < cb.length) {
-              val e = cb(k)
-              var s = 0.0
-              var t = 0
-              while (t < subDim) {
-                val df0 = (arr(off + t) - ci.flat(base + off + t)) - e(t)
-                s += df0 * df0
-                t += 1
-              }
-              if (s < bestD) { bestD = s; best = k }
-              k += 1
-            }
-            codes(j) = best
-            j += 1
-          }
-          Row.fromSeq(r.toSeq :+ cids(i) :+ codes.toSeq)
+  def encodeResidual(arr: Array[Double], ci: FlatCentroids, cid: Int,
+                     cbs: Array[Array[Array[Float]]], subDim: Int): Array[Int] = {
+    val m = cbs.length
+    val base = cid * ci.d
+    val codes = new Array[Int](m)
+    var j = 0
+    while (j < m) {
+      val cb = cbs(j)
+      val off = j * subDim
+      var best = 0
+      var bestD = Double.MaxValue
+      var k = 0
+      while (k < cb.length) {
+        val e = cb(k)
+        var s = 0.0
+        var t = 0
+        while (t < subDim) {
+          val df0 = (arr(off + t) - ci.flat(base + off + t)) - e(t)
+          s += df0 * df0
+          t += 1
         }
+        if (s < bestD) { bestD = s; best = k }
+        k += 1
       }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Fused assign + residual + PQ-encode in one pass over the PCA-space
-    * vector: returns `struct(cluster_id int, code array<int>)`. One scan,
-    * no intermediate residual column materialized.
-    */
-  def assignEncodeCol(spark: SparkSession, centroids: Array[Array[Float]],
-                      pq: PqModel, vec: Column): Column = {
-    val bcC = spark.sparkContext.broadcast(FlatCentroids.build(centroids))
-    val bcB = spark.sparkContext.broadcast(pq.codebooks)
-    val m = pq.m
-    val subDim = pq.subDim
-    val f = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val ci = bcC.value
-      val cid = ci.nearest(arr)
-      val base = cid * ci.d
-      val cFlat = ci.flat
-      val cbs = bcB.value
-      val codes = new Array[Int](m)
-      var j = 0
-      while (j < m) {
-        val cb = cbs(j)
-        val off = j * subDim
-        var best = 0
-        var bestD = Double.MaxValue
-        var k = 0
-        while (k < cb.length) {
-          val e = cb(k)
-          var s = 0.0
-          var t = 0
-          while (t < subDim) {
-            val df = (arr(off + t) - cFlat(base + off + t)) - e(t)
-            s += df * df
-            t += 1
-          }
-          if (s < bestD) { bestD = s; best = k }
-          k += 1
-        }
-        codes(j) = best
-        j += 1
-      }
-      AssignedCode(cid, codes)
+      codes(j) = best
+      j += 1
     }
-    f(vec)
+    codes
   }
 
   /** Assigned residual `v − centroid(argmin)` — the PQ-codebook training
@@ -195,8 +107,9 @@ object Coder {
     out
   }
 
-  /** PCA apply y = W·(x−μ) as a broadcast-backed column (the full-pass
-    * projection in train/add; the d×p matrix never enters the plan).
+  /** PCA apply y = W·(x−μ) as a broadcast-backed column (the projection
+    * of the distributed fit's samples; the d×p matrix never enters the
+    * plan).
     */
   def pcaApplyCol(spark: SparkSession, pca: PcaModel, vec: Column): Column = {
     val bc = spark.sparkContext.broadcast((pca.mean, pca.components))
@@ -208,7 +121,8 @@ object Coder {
   }
 
   /** [[pcaApplyCol]]'s per-row arithmetic, shared with the driver-local
-    * fit: `v(i)` is the input vector's i-th element as a double.
+    * fit and the coded write: `v(i)` is the input vector's i-th element as
+    * a double.
     */
   def pcaApply(mean: Array[Double], comps: Array[Array[Double]],
                v: Int => Double): Array[Double] = {

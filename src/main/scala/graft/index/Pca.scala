@@ -1,11 +1,10 @@
 package graft.index
 
-import breeze.linalg.{eigSym, DenseMatrix, DenseVector}
+import dev.ludovic.netlib.blas.BLAS
+import dev.ludovic.netlib.lapack.LAPACK
+import org.netlib.util.intW
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.DataFrame
 
 /** PCA dimensionality reduction (reference T10: the Faiss PCAMatrix stage
   * of the index chain, two_level_clustering.py:119-140 — fit on a random
@@ -13,9 +12,12 @@ import graft.functions.VectorFunctions
   *
   * Fit is driver-local over a Spark-sampled matrix (O(sample·d + d²)
   * memory, d ≤ a few thousand — the same driver-sized footprint the
-  * reference uses). Apply is a pure Catalyst projection: the projection
-  * matrix enters the plan as a literal and each output component is a
-  * codegen'd dot product — no UDF, no shuffle, scales with the scan.
+  * reference uses), calling netlib's BLAS/LAPACK directly
+  * ([[Pca.fitLocal]]). Apply ships the matrix as a broadcast, never as a
+  * plan literal: the full pass is the coded write's kernel
+  * (`CodedStore.assignEncode`, over [[Coder.pcaApply]]), the sample
+  * projection is [[Coder.pcaApplyCol]], and a query vector uses
+  * [[PcaModel.applyLocal]].
   */
 final case class PcaModel(mean: Array[Double], components: Array[Array[Double]]) {
 
@@ -95,6 +97,14 @@ object Pca {
 
   /** Eigendecomposition of the sample covariance; components sorted by
     * descending eigenvalue. Deterministic.
+    *
+    * The covariance is `dgemm("T","N")` over the column-major centred
+    * sample, divided elementwise by `n − 1`, and `dsyev("V","L")`
+    * decomposes it with workspace `max(1, 3d − 1)`. These are the
+    * routines, arguments and workspace Breeze's `m.t * m` and `eigSym`
+    * pass, so the model is bit-identical to the Breeze form (the LAPACK
+    * optimal workspace would change the bits); calling netlib directly
+    * skips Breeze's first-use cost, which was most of a cold fit.
     */
   def fitLocal(rows: Array[Array[Float]], outDim: Int): PcaModel = {
     val n = rows.length
@@ -105,21 +115,31 @@ object Pca {
     var j = 0
     while (j < d) { mean(j) /= n; j += 1 }
 
-    val m = DenseMatrix.zeros[Double](n, d)
+    // centred sample, column-major n×d
+    val m = new Array[Double](n * d)
     var i = 0
     while (i < n) {
+      val r = rows(i)
       j = 0
-      while (j < d) { m(i, j) = rows(i)(j) - mean(j); j += 1 }
+      while (j < d) { m(i + j * n) = r(j) - mean(j); j += 1 }
       i += 1
     }
-    val cov = (m.t * m) /:/ math.max(n - 1, 1).toDouble
-    val es = eigSym(cov)
-    // eigSym returns ascending eigenvalues; take the top outDim, descending
-    val order = es.eigenvalues.toArray.zipWithIndex.sortBy(-_._1).map(_._2).take(outDim)
-    val comps = order.map { c =>
-      val v: DenseVector[Double] = es.eigenvectors(::, c)
-      v.toArray
-    }
-    PcaModel(mean, comps)
+    val cov = new Array[Double](d * d)
+    BLAS.getInstance().dgemm("T", "N", d, d, n, 1.0, m, 0, n, m, 0, n, 0.0, cov, 0, d)
+    val div = math.max(n - 1, 1).toDouble
+    i = 0
+    while (i < cov.length) { cov(i) = cov(i) / div; i += 1 }
+    // dsyev reads only the lower triangle and overwrites the matrix with
+    // the eigenvectors (column c is the c-th ascending eigenvalue's)
+    val eigenvalues = new Array[Double](d)
+    val lwork = math.max(1, 3 * d - 1)
+    val info = new intW(0)
+    LAPACK.getInstance().dsyev("V", "L", d, cov, math.max(1, d), eigenvalues,
+      new Array[Double](lwork), lwork, info)
+    if (info.`val` != 0)
+      throw new ArithmeticException(s"pca: dsyev returned info ${info.`val`}")
+    // take the top outDim, descending
+    val order = eigenvalues.zipWithIndex.sortBy(-_._1).map(_._2).take(outDim)
+    PcaModel(mean, order.map(c => java.util.Arrays.copyOfRange(cov, c * d, (c + 1) * d)))
   }
 }

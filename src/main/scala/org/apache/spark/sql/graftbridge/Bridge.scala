@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge for the graft native expressions. Spark 4
   * moved these conversions behind `private[sql]` (`ExpressionUtils`); this
@@ -23,6 +26,16 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** DataFrame over an RDD of Catalyst rows, with no Row encoder on
+    * either side: the rows must match `schema`, and the scan projects
+    * each to an UnsafeRow. The coded write's encode kernel and the
+    * driver-local add emit through here.
+    */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                              schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Block until the listener bus has delivered every queued event —
     * task-metrics accounting (ScaleEval's concurrency-ceiling

@@ -49,4 +49,17 @@ class LayoutInventorySpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: $name"
     assert(hits.isEmpty, s"retired route named in src/main:\n${hits.mkString("\n")}")
   }
+
+  // The PCA fit calls netlib directly: Breeze's first use cost most of a
+  // cold fit. Breeze stays on the classpath (Opq uses it) and in the
+  // test-scope reference (PcaFitSpec), not in the fit: no `breeze`
+  // package name in the file.
+  test("index/Pca.scala names no Breeze") {
+    val path = Paths.get("src/main/scala/graft/index/Pca.scala")
+    assert(Files.isRegularFile(path), s"run from the repo root (no $path)")
+    val hits = Files.readString(path).split("\n").zipWithIndex.toSeq.collect {
+      case (line, i) if line.contains("breeze") => s"Pca.scala:${i + 1}: $line"
+    }
+    assert(hits.isEmpty, s"Breeze named in the PCA fit:\n${hits.mkString("\n")}")
+  }
 }

@@ -7,7 +7,7 @@ import graft.index.IndexParams
 
 /** End-to-end recall through a REAL (non-identity) PCA reduction —
   * 256-d corpus, default params for that dim (PCA 128, PQ 16): covers
-  * Pca.fit eigendecomposition + the Coder.pcaApplyCol full pass +
+  * Pca.fit eigendecomposition + the coded write's projection pass +
   * PCA-space clustering/PQ, which the 64-d suites exercise only in
   * identity form.
   */
