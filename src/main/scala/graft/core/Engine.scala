@@ -2187,5 +2187,13 @@ object Engine {
       */
     def nearestClusters(qp: Array[Float], nprobe: Int): Array[Int] =
       flatCentroids.nearestKFloat(qp, nprobe)
+
+    /** Codebooks and centroids widened to double for the ADC kernel
+      * ([[graft.index.AdcKernel]]) — built lazily per JVM like
+      * [[flatCentroids]], so a handle or a broadcast pays the codebook
+      * copy once and each centroid's on its first probe.
+      */
+    @transient lazy val adcTables: graft.index.AdcTables =
+      new graft.index.AdcTables(centroids, pq)
   }
 }

@@ -130,19 +130,22 @@ final class PreparedIndex private[core] (
   // 5.04 ms because it is an in-process call. When the pinned block set
   // is small enough to hold on the driver (byte-estimated from the
   // cached blocks themselves, bounded by [[Engine.PreparedLocalMaxBytes]]),
-  // serves run the UNCHANGED per-partition kernel over a driver-resident
-  // copy in the caller thread: no job, no scheduler — the same parts
-  // reach the same merge, so results are bit-identical (LocalServeSpec).
-  // Above the bound (every real at-scale corpus) nothing changes.
+  // serves run the same kernel over a driver-resident copy in the caller
+  // thread: no job, no scheduler, and one heap over every part, so the
+  // global (adc, id) cut is the job path's merged one (LocalServeSpec).
+  // Above the bound (every real at-scale corpus) the job path serves.
   @volatile private[core] var localServe: Boolean = true
-  private lazy val localParts: Option[Array[Map[Int, ClusterBlock]]] = {
+  // the driver copy joins each cluster's partial blocks from every
+  // partition into one block: a serve then scans one block per probe
+  private lazy val localBlocks: Option[Map[Int, ClusterBlock]] = {
     val bytes = blocks.map { m =>
       m.valuesIterator.map(b =>
         b.ids.length * 8L + b.codes.length + b.vecs.length * 4L +
           b.meta.iterator.map(s =>
             if (s == null) 8L else 40L + 2L * s.length).sum).sum
     }.sum()
-    if (bytes > Engine.PreparedLocalMaxBytes) None else Some(blocks.collect())
+    if (bytes > Engine.PreparedLocalMaxBytes) None
+    else Some(PreparedANN.concatBlocks(blocks.collect()))
   }
 
   /** Acquire one more reference — None if the last holder already
@@ -366,16 +369,14 @@ final class PreparedIndex private[core] (
                           bcDeleted: Broadcast[Array[Long]],
                           side: Map[Int, ClusterBlock],
                           pred: (Long, String) => Boolean = null): Array[Cand] = {
-    if (localServe) localParts match {
-      case Some(maps) =>
-        // in-thread serve: same per-part kernel, same merge, no job
-        val parts = maps.map(m => PreparedANN.servePartition(m, model,
-          probes, qp, qn, prelimK, bcDeleted.value, pred))
-        val all =
-          if (side.isEmpty) parts
-          else parts :+ PreparedANN.servePartition(side, model, probes, qp,
-            qn, prelimK, bcDeleted.value, pred)
-        return PreparedANN.mergePrelim(all, prelimK)
+    if (localServe) localBlocks match {
+      case Some(local) =>
+        // in-thread serve: the same kernel over the pinned rows and the
+        // side buffer into ONE heap (the global top-prelimK by (adc, id),
+        // the set the job path's per-part heaps merge to), no job
+        return PreparedANN.serveLocal(
+          if (side.isEmpty) Array(local) else Array(local, side),
+          model, probes, qp, qn, prelimK, bcDeleted.value, pred).toCands
       case None => ()
     }
     probePrelimSingle(probes, qp, qn, prelimK, bcDeleted, side, pred)

@@ -164,6 +164,37 @@ object ServingScan {
     def clear(): Unit = synchronized { map.clear(); bytes = 0L }
   }
 
+  /** One file's full footer through the cache above. */
+  private def cachedFooter(path: Path, fileLen: Long,
+                           conf: Configuration): ParquetMetadata = {
+    val k = (path.toString, fileLen)
+    var f = footerCache.get(k)
+    if (f == null) {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        HadoopInputFile.fromPath(path, conf))
+      try f = r.getFooter finally r.close()
+      footerCache.put(k, f)
+    }
+    f
+  }
+
+  /** Row groups in `files` (parquet paths), read from their cached
+    * footers and counted only until `atLeast` is reached — the number of
+    * scan splits that can hold rows, since a split owns exactly the row
+    * groups whose midpoint it covers.
+    */
+  private[graft] def rowGroupsAtLeast(files: Seq[String], conf: Configuration,
+                                      atLeast: Int): Int = {
+    var groups = 0
+    val it = files.iterator
+    while (groups < atLeast && it.hasNext) {
+      val in = HadoopInputFile.fromPath(new Path(it.next()), conf)
+      groups += cachedFooter(in.getPath, in.getLength, conf)
+        .getBlocks.size
+    }
+    groups
+  }
+
   /** Test seams for the byte-bound spec. */
   private[core] def footerCacheStats: (Int, Long) = footerCache.stats
   private[core] def footerCacheClear(): Unit = footerCache.clear()
@@ -446,17 +477,7 @@ object ServingScan {
                        ctx: TaskAttemptContextImpl): Iterator[InternalRow] = {
     val conf = ctx.getConfiguration
     val path = new Path(fr.path)
-    val fullFooter = {
-      val k = (fr.path, fr.fileLen)
-      var f = footerCache.get(k)
-      if (f == null) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          HadoopInputFile.fromPath(path, conf))
-        try f = r.getFooter finally r.close()
-        footerCache.put(k, f)
-      }
-      f
-    }
+    val fullFooter = cachedFooter(path, fr.fileLen, conf)
     // RANGE-filter the cached footer by parquet's midpoint rule
     // (startingPos + compressedSize/2 ∈ [start, end)) — the rule Spark's
     // per-split footer READ applies. A PROVIDED footer bypasses that

@@ -35,16 +35,37 @@ final case class PcaModel(mean: Array[Double], components: Array[Array[Double]])
 
   /** Driver-side apply for query vectors (O(d·p), no Spark job); the
     * full-pass column form is Coder.pcaApplyCol (broadcast, not literal).
+    * Four output rows share each pass over the centred input, each summed
+    * left to right in its own chain.
     */
   def applyLocal(x: Array[Float]): Array[Float] = {
     val c = new Array[Double](mean.length)
     var i = 0
     while (i < mean.length) { c(i) = x(i) - mean(i); i += 1 }
-    components.map { row =>
-      var s = 0.0; var j = 0
-      while (j < row.length) { s += row(j) * c(j); j += 1 }
-      s.toFloat
+    val out = new Array[Float](components.length)
+    var r = 0
+    while (r + 4 <= out.length) {
+      val w0 = components(r); val w1 = components(r + 1)
+      val w2 = components(r + 2); val w3 = components(r + 3)
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var j = 0
+      while (j < w0.length) {
+        val cj = c(j)
+        s0 += w0(j) * cj; s1 += w1(j) * cj; s2 += w2(j) * cj; s3 += w3(j) * cj
+        j += 1
+      }
+      out(r) = s0.toFloat; out(r + 1) = s1.toFloat
+      out(r + 2) = s2.toFloat; out(r + 3) = s3.toFloat
+      r += 4
     }
+    while (r < out.length) {
+      val w = components(r)
+      var s = 0.0; var j = 0
+      while (j < w.length) { s += w(j) * c(j); j += 1 }
+      out(r) = s.toFloat
+      r += 1
+    }
+    out
   }
 }
 

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable.PriorityQueue
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -10,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.Engine.IndexModel
 import graft.functions.VectorFunctions
+import graft.index.{AdcHeap, AdcKernel}
 
 /** Batched trained-index ANN: the throughput form of the reference's
   * two-stage search (mindb.py:368-442) — q query vectors share ONE
@@ -19,10 +18,11 @@ import graft.functions.VectorFunctions
   * q_probing) kernel flops and a shuffle bounded by O(partitions·q·k).
   *
   * Stage 1 (coarse): scan only the union of all queries' probed clusters
-  * (partition pruning); per row, decode the PQ code once
-  * (centroid + codebook residual) and score ‖q_pca − reconstructed‖² for
-  * exactly the queries probing that cluster — the same value the
-  * single-query ADC LUT computes — into per-query bounded heaps of size
+  * (partition pruning); per row, read the PQ code once and score
+  * ‖q_pca − (centroid + codebook residual)‖² with the serving ADC kernel
+  * ([[graft.index.AdcKernel]]) for exactly the queries probing that
+  * cluster — the same value the single-query path computes — into
+  * per-query bounded heaps of size
   * preliminaryTopK. Stage 2 (rerank): exact dot over the fetched candidate
   * vectors, per-query top-finalTopK. Both shuffles move candidate rows,
   * never scored cross products.
@@ -72,9 +72,12 @@ object BatchANN {
     val partialRdd = src.queryExecution.toRdd.mapPartitions { it =>
       val model = bcModel.value
       val (qvecs, c2q) = bcQ.value
-      val heaps = scanPartitionHeaps(it, model, qvecs, c2q, prelimK)
+      val tables = model.adcTables
+      val heaps = scanPartitionHeaps(it,
+        qvecs.map(q => new AdcKernel(tables, q)), c2q, prelimK)
       heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (d, id, cid) => Row(qIds(qi), id, d, cid) }
+        Iterator.tabulate(h.sortAscending())(i =>
+          Row(qIds(qi), h.ids(i), h.dists(i), h.tags(i)))
       }
     }
     val partial = spark.createDataFrame(partialRdd, StructType(Seq(
@@ -89,147 +92,35 @@ object BatchANN {
   }
 
   /** The per-partition coarse kernel shared by [[coarseCandidates]] and
-    * [[coarsePartition]]: decode each probed row's PQ code once, score it
-    * for exactly the queries probing its cluster, keep per-query bounded
-    * heaps. Returns one heap per query of ≤ prelimK (adc_dist, id,
-    * cluster_id) entries — worst kept under (dist asc, id asc) on top.
+    * [[coarsePartition]]: copy each probed row's PQ code once and score it
+    * with [[AdcKernel]] for exactly the queries probing its cluster, into
+    * per-query bounded heaps. Returns one heap per query (one kernel each)
+    * of ≤ prelimK (adc_dist, id, cluster_id-as-tag) entries.
     */
   private def scanPartitionHeaps(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      model: IndexModel, qvecs: Array[Array[Float]],
-      c2q: Map[Int, Array[Int]],
-      prelimK: Int): Array[PriorityQueue[(Double, Long, Int)]] = {
-    val (centroids, codebooks, subDim) =
-      (model.centroids, model.pq.codebooks, model.pq.subDim)
-    val m = codebooks.length
-    val p = if (qvecs.isEmpty) 0 else qvecs(0).length
-    // max-heap on (dist, id): head = worst kept under (dist asc, id asc);
-    // the cluster id tags along for the downstream pruned fetch
-    val heapOrd = Ordering.by[(Double, Long, Int), (Double, Long)](e => (e._1, e._2))
-    val heaps = Array.fill(qvecs.length)(
-      PriorityQueue.empty[(Double, Long, Int)](heapOrd))
-    val recon = new Array[Double](p)
-    val codeBuf = new Array[Int](m)
+      kernels: Array[AdcKernel],
+      c2q: Map[Int, Array[Int]], prelimK: Int): Array[AdcHeap] = {
+    val heaps = Array.fill(kernels.length)(new AdcHeap(prelimK))
+    if (kernels.isEmpty) return heaps
+    val m = kernels(0).m
+    val codes = new Array[Byte](m)
     it.foreach { r =>
       val cid = r.getInt(1)
-      c2q.get(cid).foreach { probing =>
+      val probing = c2q.getOrElse(cid, null)
+      if (probing != null) {
         val id = r.getLong(0)
         val code = r.getArray(2)
         var j = 0
-        while (j < m) { codeBuf(j) = code.getInt(j); j += 1 }
-        val cc = centroids(cid)
-        if (probing.length == 1) {
-          // single-query fused reconstruct+distance (r18): the separate
-          // recon pass built all p dims while the bounded distance loop
-          // early-exits after a handful once the heap fills — fusing
-          // skips the dims the exit never reads. Same per-dim expression
-          // and accumulation order → bit-identical dist (the batch form
-          // below amortizes ONE reconstruction over many queries, where
-          // the separate pass is the right trade).
-          val qi = probing(0)
-          val q = qvecs(qi)
+        while (j < m) { codes(j) = code.getInt(j).toByte; j += 1 }
+        val cc = kernels(0).centroid(cid)
+        var k = 0
+        while (k < probing.length) {
+          val qi = probing(k)
           val h = heaps(qi)
-          val full = h.size >= prelimK
-          val bound = if (full) h.head._1 else Double.MaxValue
-          // bound check hoisted to once per subquantizer (r18b); for
-          // subDim==8 the block sum uses the PAIRWISE-TREE grouping
-          // (r18c) — same grouping as PreparedANN.servePartition and the
-          // DuckDB replay (see the comment there): breaks the serial FP
-          // add chain, measured 123 → 68 ns/row (ADC micro-profile,
-          // CHANGES_r18.md)
-          var d = 0.0
-          var j = 0
-          if (subDim == 8) {
-            while (j < m && d <= bound) {
-              val cb = codebooks(j)(codeBuf(j))
-              val off = j * subDim
-              val e0 = q(off) - (cc(off).toDouble + cb(0))
-              val e1 = q(off + 1) - (cc(off + 1).toDouble + cb(1))
-              val e2 = q(off + 2) - (cc(off + 2).toDouble + cb(2))
-              val e3 = q(off + 3) - (cc(off + 3).toDouble + cb(3))
-              val e4 = q(off + 4) - (cc(off + 4).toDouble + cb(4))
-              val e5 = q(off + 5) - (cc(off + 5).toDouble + cb(5))
-              val e6 = q(off + 6) - (cc(off + 6).toDouble + cb(6))
-              val e7 = q(off + 7) - (cc(off + 7).toDouble + cb(7))
-              d += ((e0 * e0 + e1 * e1) + (e2 * e2 + e3 * e3)) +
-                ((e4 * e4 + e5 * e5) + (e6 * e6 + e7 * e7))
-              j += 1
-            }
-          } else {
-            while (j < m && d <= bound) {
-              val cb = codebooks(j)(codeBuf(j))
-              val off = j * subDim
-              var t = 0
-              while (t < subDim) {
-                val df = q(off + t) - (cc(off + t).toDouble + cb(t))
-                d += df * df
-                t += 1
-              }
-              j += 1
-            }
-          }
-          if (!full) h.enqueue((d, id, cid))
-          else {
-            val (wd, wid, _) = h.head
-            if (d < wd || (d == wd && id < wid)) {
-              h.dequeue(); h.enqueue((d, id, cid))
-            }
-          }
-        } else {
-          var j = 0
-          while (j < m) {
-            val cb = codebooks(j)(codeBuf(j))
-            val off = j * subDim
-            var t = 0
-            while (t < subDim) { recon(off + t) = cc(off + t).toDouble + cb(t); t += 1 }
-            j += 1
-          }
-          var k = 0
-          while (k < probing.length) {
-            val qi = probing(k)
-            val q = qvecs(qi)
-            val h = heaps(qi)
-            val full = h.size >= prelimK
-            val bound = if (full) h.head._1 else Double.MaxValue
-            // per-subDim-block bound check (r18b) + the same
-            // pairwise-tree grouping as the fused branch when subDim==8
-            // (r18c): recon(x) IS cc+cb bit-for-bit, so both branches
-            // produce identical dists — a query served partly by each
-            // branch (probing.length varies per partition) merges
-            // consistently
-            var d = 0.0
-            var x = 0
-            if (subDim == 8) {
-              while (x < p && d <= bound) {
-                val e0 = q(x) - recon(x)
-                val e1 = q(x + 1) - recon(x + 1)
-                val e2 = q(x + 2) - recon(x + 2)
-                val e3 = q(x + 3) - recon(x + 3)
-                val e4 = q(x + 4) - recon(x + 4)
-                val e5 = q(x + 5) - recon(x + 5)
-                val e6 = q(x + 6) - recon(x + 6)
-                val e7 = q(x + 7) - recon(x + 7)
-                d += ((e0 * e0 + e1 * e1) + (e2 * e2 + e3 * e3)) +
-                  ((e4 * e4 + e5 * e5) + (e6 * e6 + e7 * e7))
-                x += 8
-              }
-            } else {
-              while (x < p && d <= bound) {
-                val end = x + subDim
-                while (x < end) {
-                  val df = q(x) - recon(x); d += df * df; x += 1
-                }
-              }
-            }
-            if (!full) h.enqueue((d, id, cid))
-            else {
-              val (wd, wid, _) = h.head
-              if (d < wd || (d == wd && id < wid)) {
-                h.dequeue(); h.enqueue((d, id, cid))
-              }
-            }
-            k += 1
-          }
+          val d = kernels(qi).dist(codes, 0, cc, h.bound)
+          if (h.admits(d, id)) h.offer(d, id, cid, 0)
+          k += 1
         }
       }
     }
@@ -238,26 +129,30 @@ object BatchANN {
 
   /** The q=1 per-partition coarse stage as a plain function: the shared
     * kernel over an InternalRow iterator, drained to three flat
-    * primitive arrays (the task wire format — ship arrays, not ~500
-    * boxed tuples). [[graft.core.ServingScan]]'s plan-free tasks run it;
-    * the kernel is [[coarseCandidates]]' own, so a single query's heaps
-    * match the batch form's at q=1.
+    * primitive arrays in (adc_dist, id) order (the task wire format —
+    * ship arrays, not ~500 boxed tuples). [[graft.core.ServingScan]]'s
+    * plan-free tasks run it; the kernel is [[coarseCandidates]]' own, so
+    * a single query's heaps match the batch form's at q=1.
     */
   def coarsePartition(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
                       model: IndexModel, qp: Array[Float], probeSet: Set[Int],
                       prelimK: Int)
+      : (Array[Double], Array[Long], Array[Int]) =
+    coarsePartitionWith(it, new AdcKernel(model.adcTables, qp), probeSet,
+      prelimK)
+
+  /** [[coarsePartition]] with the caller's kernel (specs force its scalar
+    * form).
+    */
+  private[graft] def coarsePartitionWith(
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      kernel: AdcKernel, probeSet: Set[Int], prelimK: Int)
       : (Array[Double], Array[Long], Array[Int]) = {
     val c2q = probeSet.iterator.map(c => c -> Array(0)).toMap
-    val heap = scanPartitionHeaps(it, model, Array(qp), c2q, prelimK)(0)
-    val n = heap.size
-    val ds = new Array[Double](n); val ids = new Array[Long](n)
-    val cs = new Array[Int](n)
-    var i = 0
-    while (heap.nonEmpty) {
-      val (dd, id, cid) = heap.dequeue()
-      ds(i) = dd; ids(i) = id; cs(i) = cid; i += 1
-    }
-    (ds, ids, cs)
+    val heap = scanPartitionHeaps(it, Array(kernel), c2q, prelimK)(0)
+    val n = heap.sortAscending()
+    (java.util.Arrays.copyOf(heap.dists, n), java.util.Arrays.copyOf(heap.ids, n),
+      java.util.Arrays.copyOf(heap.tags, n))
   }
 
   /** Exact driver-side merge of per-partition coarse results: global
@@ -266,12 +161,17 @@ object BatchANN {
     */
   def mergeCoarseParts(parts: Seq[(Array[Double], Array[Long], Array[Int])],
                        prelimK: Int): Array[(Long, Double, Int)] = {
-    val merged = parts.iterator.flatMap { case (ds, ids, cs) =>
-      Iterator.tabulate(ds.length)(i => (ds(i), ids(i), cs(i)))
-    }.toArray
-    java.util.Arrays.sort(merged,
-      Ordering.by[(Double, Long, Int), (Double, Long)](e => (e._1, e._2)))
-    merged.take(prelimK).map { case (d, id, cid) => (id, d, cid) }
+    val ps = parts.toArray
+    val heap = new AdcHeap(prelimK)
+    var p = 0
+    while (p < ps.length) {
+      val (ds, ids, _) = ps(p)
+      var i = 0
+      while (i < ds.length) { heap.keep(ds(i), ids(i), p, i); i += 1 }
+      p += 1
+    }
+    Array.tabulate(heap.sortAscending())(i =>
+      (heap.ids(i), heap.dists(i), ps(heap.tags(i))._3(heap.rows(i))))
   }
 
   /** Exact rerank of per-query candidate id sets against the full-precision

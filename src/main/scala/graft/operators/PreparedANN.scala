@@ -1,13 +1,13 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.collection.mutable.PriorityQueue
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.core.Engine.IndexModel
+import graft.index.{AdcHeap, AdcKernel}
 
 /** Executor-resident serving blocks for the prepared low-latency query
   * path (reference mindb.py:368-442 semantics, served the way the
@@ -24,12 +24,15 @@ import graft.core.Engine.IndexModel
   * driver-side merge of ≤ partitions·prelimK candidates.
   *
   * Every arithmetic step replicates the regular path bit-for-bit:
-  *  - ADC: reconstruction `centroid + codebook residual` per row, Σ(qp−r)²
-  *    in left-to-right double, bounded heap under (dist asc, id asc) —
-  *    the [[BatchANN.coarseCandidates]] kernel verbatim;
+  *  - ADC: [[graft.index.AdcKernel]], the kernel [[BatchANN]]'s coarse
+  *    stage runs too — per row, subquantizer blocks of
+  *    (qp − (centroid + codebook residual))² added in j order (subDim 8
+  *    in the pairwise-tree grouping, on vector lanes where available),
+  *    into a primitive bounded heap under (dist asc, id asc);
   *  - rerank: Σ v·q in left-to-right double over the stored float vectors
-  *    — the codegen `dot` kernel
-  *    ([[graft.functions.VectorKernels.dotFF]]) verbatim;
+  *    — the codegen `dot` kernel's arithmetic
+  *    ([[graft.functions.VectorKernels.dotFF]]), four survivors per pass
+  *    over q, each in its own chain;
   * so a prepared query returns EXACTLY the rows `Engine.query` returns
   * (gated by the `prepared_knn` oracle row, which replays the full
   * two-stage computation in DuckDB, and by PreparedIndexSpec equality).
@@ -85,6 +88,19 @@ object PreparedANN {
     }.toMap
   }
 
+  /** Join each cluster's blocks across `parts` into one block (rows in
+    * part order) — the driver-local serving copy of a pinned block set.
+    */
+  def concatBlocks(parts: Array[Map[Int, ClusterBlock]]): Map[Int, ClusterBlock] =
+    parts.iterator.flatMap(_.iterator).toSeq.groupBy(_._1).map { case (cid, bs) =>
+      val blks = bs.map(_._2)
+      cid -> (if (blks.length == 1) blks.head
+              else new ClusterBlock(Array.concat(blks.map(_.ids): _*),
+                Array.concat(blks.map(_.codes): _*),
+                Array.concat(blks.map(_.vecs): _*),
+                Array.concat(blks.map(_.meta): _*)))
+    }
+
   /** Pin the covering coded table into `numParts` cached partitions of
     * cluster-keyed blocks. One shuffle, executed once at prepare time.
     *
@@ -100,11 +116,11 @@ object PreparedANN {
     * them. `coalesce` (narrow, zero exchange) merges the scan's file
     * splits down to `numParts` for the serving task shape.
     *
-    * SMALL tables (fewer scan splits than `numParts`): coalesce cannot
-    * RAISE a partition count, so the pinned block set would drop to the
-    * split count and cut per-query serve parallelism (~a 500 MB table
-    * on 32 cores would pin ~4 serve tasks — ADVICE r15). Those take a
-    * round-robin `repartition(numParts)` instead — rows, not
+    * SMALL tables (fewer row-holding scan splits than `numParts`):
+    * coalesce cannot RAISE a partition count, so the pinned block set
+    * would drop to the split count and cut per-query serve parallelism
+    * (~a 500 MB table on 32 cores would pin ~4 serve tasks — ADVICE r15).
+    * Those take a round-robin `repartition(numParts)` instead — rows, not
     * cluster-keyed (co-location still not required) — whose exchange is
     * bounded by the small table's size, the regime where shuffle
     * scratch is harmless; the zero-shuffle path is kept exactly where
@@ -117,8 +133,21 @@ object PreparedANN {
     // `src.rdd` would wrap the plan in a second to-external-row
     // deserializer stage just to read a count (ADVICE r16 nit)
     val srcParts = src.queryExecution.toRdd.getNumPartitions
+    // Splits that can hold rows: a byte-range split owns only the row
+    // groups whose midpoint it covers, so a one-row-group file cut into 4
+    // splits fills one of them, and coalescing those pinned every row in
+    // one partition. Counted from the files' cached footers, stopping at
+    // numParts.
+    val filled =
+      if (srcParts < numParts) srcParts
+      else {
+        val files = coded.inputFiles
+        if (files.isEmpty) srcParts
+        else math.min(srcParts, graft.core.ServingScan.rowGroupsAtLeast(
+          files.toSeq, coded.sparkSession.sessionState.newHadoopConf(), numParts))
+      }
     val shaped =
-      if (srcParts >= numParts) src.coalesce(numParts)
+      if (filled >= numParts) src.coalesce(numParts)
       else src.repartition(numParts)
     shaped.rdd
       .mapPartitions(it =>
@@ -126,10 +155,10 @@ object PreparedANN {
   }
 
   /** Serve one query against one partition's blocks: ADC top-`prelimK`
-    * over the probed clusters present here (BatchANN math), then exact
-    * cosine over just those survivors (dotFF math). `deleted` is the
-    * sorted pending-delete id set — rows in it never enter the heap,
-    * matching the regular path's anti-join-before-ADC.
+    * over the probed clusters present here, then exact cosine over just
+    * those survivors — [[serveLocal]] over a single block map. `deleted`
+    * is the sorted pending-delete id set — rows in it never enter the
+    * heap, matching the regular path's anti-join-before-ADC.
     *
     * `pred` (nullable) is the PUSHED metadata predicate of the filtered
     * under-fill round: when set, only rows it accepts enter the heap, so
@@ -148,112 +177,120 @@ object PreparedANN {
   def servePartition(blocks: Map[Int, ClusterBlock], model: IndexModel,
                      probes: Array[Int], qp: Array[Float], qn: Array[Float],
                      prelimK: Int, deleted: Array[Long],
-                     pred: (Long, String) => Boolean = null): Array[Cand] = {
-    val centroids = model.centroids
-    val codebooks = model.pq.codebooks
-    val subDim = model.pq.subDim
-    val m = codebooks.length
-    val d = qn.length
-    // max-heap on (dist, id, cluster, row): head = worst kept under
-    // (dist asc, id asc) — same ordering as the BatchANN heap
-    val heapOrd =
-      Ordering.by[(Double, Long, Int, Int), (Double, Long)](e => (e._1, e._2))
-    val heap = PriorityQueue.empty[(Double, Long, Int, Int)](heapOrd)
+                     pred: (Long, String) => Boolean = null): Array[Cand] =
+    serveLocal(Array(blocks), model, probes, qp, qn, prelimK, deleted, pred)
+      .toCands
+
+  /** Serve one query against several block maps (a driver-held copy of
+    * every pinned partition plus the appended-rows side buffer) with ONE
+    * heap: the global top-`prelimK` by (adc, id) is the set a per-map heap
+    * and a merge would keep, but a single heap's bound tightens across all
+    * maps instead of refilling once per map.
+    */
+  def serveLocal(parts: Array[Map[Int, ClusterBlock]], model: IndexModel,
+                 probes: Array[Int], qp: Array[Float], qn: Array[Float],
+                 prelimK: Int, deleted: Array[Long],
+                 pred: (Long, String) => Boolean = null): CandBatch =
+    serveWith(new AdcKernel(model.adcTables, qp), parts, probes, qn,
+      prelimK, deleted, pred)
+
+  /** [[serveLocal]] with the caller's kernel (specs force its scalar form). */
+  private[graft] def serveWith(kern: AdcKernel,
+                               parts: Array[Map[Int, ClusterBlock]],
+                               probes: Array[Int], qn: Array[Float],
+                               prelimK: Int, deleted: Array[Long],
+                               pred: (Long, String) => Boolean): CandBatch = {
+    val heap = new AdcHeap(prelimK)
+    // heap tag = index of the scanned block, so the rerank finds its rows
+    val scanned = mutable.ArrayBuffer.empty[ClusterBlock]
     var pi = 0
     while (pi < probes.length) {
       val cid = probes(pi)
-      blocks.get(cid).foreach { blk =>
-        val cc = centroids(cid)
-        val n = blk.size
-        var row = 0
-        while (row < n) {
-          val id = blk.ids(row)
-          if (deleted.length == 0 ||
-              java.util.Arrays.binarySearch(deleted, id) < 0) {
-            val base = row * m
-            // FUSED reconstruct+distance (r18): the old shape built the
-            // full p-dim reconstruction into `recon` before a distance
-            // loop that early-exits after a handful of dims once the
-            // heap is full — most of the reconstruction work was never
-            // read. Same per-dim expression (cc.toDouble + cb, float
-            // query minus double) and accumulation order → kept rows'
-            // dists are bit-identical; only dims past the (per-block,
-            // see below) exit are skipped.
-            val full = heap.size >= prelimK
-            val bound = if (full) heap.head._1 else Double.MaxValue
-            // bound check hoisted to once per subquantizer (r18b): dist
-            // only grows (+= df*df), so a row over the bound at dim t
-            // stays over it at its block end — same rows kept, same dist
-            // bits (the += sequence of kept rows is untouched).
-            //
-            // subDim==8 blocks use the PAIRWISE-TREE grouping (r18c):
-            // partial = ((s0+s1)+(s2+s3)) + ((s4+s5)+(s6+s7)), dist +=
-            // partial in j order. This REGROUPS the FP sum (not
-            // bit-identical to the old sequential fold) — the DuckDB
-            // replay (TrainedFixture.replayCtes) and BOTH BatchANN
-            // branches compute the SAME grouping, so every path and the
-            // oracle stay hash-exact together. Why: the sequential
-            // dist += df*df chain is latency-bound (one dependent FP add
-            // per dim); the depth-3 tree halves measured scan cost
-            // (ADC micro-profile, CHANGES_r18.md: 123 → 68 ns/row at the
-            // 35M geometry).
-            var dist = 0.0
-            var j = 0
-            if (subDim == 8) {
-              while (j < m && dist <= bound) {
-                val cb = codebooks(j)(blk.codes(base + j) & 0xFF)
-                val off = j * subDim
-                val d0 = qp(off) - (cc(off).toDouble + cb(0))
-                val d1 = qp(off + 1) - (cc(off + 1).toDouble + cb(1))
-                val d2 = qp(off + 2) - (cc(off + 2).toDouble + cb(2))
-                val d3 = qp(off + 3) - (cc(off + 3).toDouble + cb(3))
-                val d4 = qp(off + 4) - (cc(off + 4).toDouble + cb(4))
-                val d5 = qp(off + 5) - (cc(off + 5).toDouble + cb(5))
-                val d6 = qp(off + 6) - (cc(off + 6).toDouble + cb(6))
-                val d7 = qp(off + 7) - (cc(off + 7).toDouble + cb(7))
-                dist += ((d0 * d0 + d1 * d1) + (d2 * d2 + d3 * d3)) +
-                  ((d4 * d4 + d5 * d5) + (d6 * d6 + d7 * d7))
-                j += 1
-              }
-            } else {
-              while (j < m && dist <= bound) {
-                val cb = codebooks(j)(blk.codes(base + j) & 0xFF)
-                val off = j * subDim
-                var t = 0
-                while (t < subDim) {
-                  val df = qp(off + t) - (cc(off + t).toDouble + cb(t))
-                  dist += df * df
-                  t += 1
-                }
-                j += 1
-              }
-            }
-            if (!full) {
-              if (pred == null || pred(id, blk.meta(row)))
-                heap.enqueue((dist, id, cid, row))
-            } else {
-              val (wd, wid, _, _) = heap.head
-              if ((dist < wd || (dist == wd && id < wid)) &&
-                  (pred == null || pred(id, blk.meta(row)))) {
-                heap.dequeue(); heap.enqueue((dist, id, cid, row))
-              }
-            }
-          }
-          row += 1
+      var k = 0
+      while (k < parts.length) {
+        val blk = parts(k).getOrElse(cid, null)
+        if (blk != null) {
+          scanBlock(kern, heap, blk, kern.centroid(cid), scanned.length,
+            deleted, pred)
+          scanned += blk
         }
+        k += 1
       }
       pi += 1
     }
-    // exact rerank scoring fused in-task: the survivors' vectors are
+    val n = heap.sortAscending()
+    // exact rerank scoring fused in: the survivors' vectors are
     // co-located, so the global merge needs no second fetch round-trip
-    heap.dequeueAll[(Double, Long, Int, Int)].iterator.map { case (dist, id, cid, row) =>
-      val blk = blocks(cid)
-      val vo = row * d
+    val sims = rerankSims(heap, n, scanned, qn)
+    new CandBatch(java.util.Arrays.copyOf(heap.dists, n),
+      java.util.Arrays.copyOf(heap.ids, n), sims,
+      Array.tabulate(n)(i => scanned(heap.tags(i)).meta(heap.rows(i))))
+  }
+
+  // One block's rows into the heap. The early-exit bound is re-read only
+  // when the heap changes.
+  private def scanBlock(kern: AdcKernel, heap: AdcHeap, blk: ClusterBlock,
+                        cc: Array[Double], tag: Int, deleted: Array[Long],
+                        pred: (Long, String) => Boolean): Unit = {
+    val m = kern.m
+    val ids = blk.ids
+    val codes = blk.codes
+    var bound = heap.bound
+    var row = 0
+    while (row < ids.length) {
+      val id = ids(row)
+      if (deleted.length == 0 ||
+          java.util.Arrays.binarySearch(deleted, id) < 0) {
+        val dist = kern.dist(codes, row * m, cc, bound)
+        if (heap.admits(dist, id) &&
+            (pred == null || pred(id, blk.meta(row)))) {
+          heap.offer(dist, id, tag, row)
+          bound = heap.bound
+        }
+      }
+      row += 1
+    }
+  }
+
+  // Σ v·q per survivor, each a left-to-right double sum over the stored
+  // float vector (the codegen `dot`, VectorKernels.dotFF); four survivors
+  // share a pass over q, each in its own chain.
+  private def rerankSims(heap: AdcHeap, n: Int,
+                         scanned: mutable.ArrayBuffer[ClusterBlock],
+                         qn: Array[Float]): Array[Double] = {
+    val d = qn.length
+    val q = new Array[Double](d)
+    var t = 0
+    while (t < d) { q(t) = qn(t); t += 1 }
+    val sims = new Array[Double](n)
+    var i = 0
+    while (i + 4 <= n) {
+      val v0 = scanned(heap.tags(i)).vecs; val o0 = heap.rows(i) * d
+      val v1 = scanned(heap.tags(i + 1)).vecs; val o1 = heap.rows(i + 1) * d
+      val v2 = scanned(heap.tags(i + 2)).vecs; val o2 = heap.rows(i + 2) * d
+      val v3 = scanned(heap.tags(i + 3)).vecs; val o3 = heap.rows(i + 3) * d
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      t = 0
+      while (t < d) {
+        val x = q(t)
+        s0 += v0(o0 + t) * x
+        s1 += v1(o1 + t) * x
+        s2 += v2(o2 + t) * x
+        s3 += v3(o3 + t) * x
+        t += 1
+      }
+      sims(i) = s0; sims(i + 1) = s1; sims(i + 2) = s2; sims(i + 3) = s3
+      i += 4
+    }
+    while (i < n) {
+      val v = scanned(heap.tags(i)).vecs; val o = heap.rows(i) * d
       var s = 0.0
-      var i = 0
-      while (i < d) { s += blk.vecs(vo + i).toDouble * qn(i).toDouble; i += 1 }
-      Cand(dist, id, s, blk.meta(row))
-    }.toArray
+      t = 0
+      while (t < d) { s += v(o + t) * q(t); t += 1 }
+      sims(i) = s
+      i += 1
+    }
+    sims
   }
 
   /** Columnar wire form of one partition's survivors: task results ride
@@ -262,7 +299,7 @@ object PreparedANN {
     * AND deserialization on the driver's result-getter — per-query
     * driver-side work that caps concurrent qps (EVAL_r14: 52.8 measured
     * vs ~102 implied by task-CPU at 35M). Four primitive/string arrays
-    * serialize as flat blocks instead.
+    * serialize as flat blocks instead. Ascending by (adc, id).
     */
   final class CandBatch(val dists: Array[Double], val ids: Array[Long],
                         val sims: Array[Double], val metas: Array[String])
@@ -277,32 +314,29 @@ object PreparedANN {
   def servePartitionBatch(blocks: Map[Int, ClusterBlock], model: IndexModel,
                           probes: Array[Int], qp: Array[Float], qn: Array[Float],
                           prelimK: Int, deleted: Array[Long],
-                          pred: (Long, String) => Boolean = null): CandBatch = {
-    val cands = servePartition(blocks, model, probes, qp, qn, prelimK,
-      deleted, pred)
-    new CandBatch(cands.map(_.adcDist), cands.map(_.id), cands.map(_.sim),
-      cands.map(_.meta))
-  }
+                          pred: (Long, String) => Boolean = null): CandBatch =
+    serveLocal(Array(blocks), model, probes, qp, qn, prelimK, deleted, pred)
 
   /** Driver-side preliminary merge: global top-`prelimK` by (adc, id) —
     * the same candidate set the regular path's coarse stage collects.
-    * Exposed separately from [[merge]] so the filtered serving path can
-    * evaluate its metadata predicate against the preliminary candidates
-    * (the regular path filters the hydrated candidate frame at exactly
-    * this point) before the final rerank cut.
+    * The filtered serving path evaluates its metadata predicate against
+    * these preliminary candidates (the regular path filters the hydrated
+    * candidate frame at exactly this point) before the final rerank cut.
     */
-  def mergePrelim(parts: Array[Array[Cand]], prelimK: Int): Array[Cand] =
-    parts.iterator.flatten.toArray.sortBy(c => (c.adcDist, c.id)).take(prelimK)
+  def mergePrelim(parts: Array[Array[Cand]], prelimK: Int): Array[Cand] = {
+    val heap = new AdcHeap(prelimK)
+    var p = 0
+    while (p < parts.length) {
+      val cs = parts(p)
+      var i = 0
+      while (i < cs.length) { heap.keep(cs(i).adcDist, cs(i).id, p, i); i += 1 }
+      p += 1
+    }
+    val n = heap.sortAscending()
+    Array.tabulate(n)(i => parts(heap.tags(i))(heap.rows(i)))
+  }
 
   /** Final rerank cut: top-`finalK` by (cosine desc, id). */
   def rerankCut(cands: Array[Cand], finalK: Int): Array[Cand] =
     cands.sortBy(c => (-c.sim, c.id)).take(finalK)
-
-  /** Driver-side merge: global preliminary top-`prelimK` by (adc, id) —
-    * the window the regular path computes — then final top-`finalK` by
-    * (cosine desc, id).
-    */
-  def merge(parts: Array[Array[Cand]], prelimK: Int,
-            finalK: Int): Array[Cand] =
-    rerankCut(mergePrelim(parts, prelimK), finalK)
 }

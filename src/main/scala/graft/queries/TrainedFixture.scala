@@ -250,10 +250,9 @@ object TrainedFixture {
     * subspaces) uses the r18c PAIRWISE-TREE block sum — per subquantizer
     * j: ((s1+s2)+(s3+s4)) + ((s5+s6)+(s7+s8)), then a sequential
     * left-fold over the j partials (DuckDB's `list_sum` over the
-    * M-element list) — matching `dist += treeBlock(j)` in
-    * PreparedANN.servePartition / BatchANN.scanPartitionHeaps term for
-    * term. Other subDims replay the sequential per-element fold the
-    * kernels fall back to.
+    * M-element list) — matching `dist += treeBlock(j)` in the shared
+    * serving kernel (graft.index.AdcKernel) term for term. Other subDims
+    * replay the sequential per-element fold the kernel uses for them.
     */
   private def adcDistExpr: String = {
     val d = 64

@@ -74,6 +74,30 @@ class AdcGroupingSpec extends SparkSpec {
     assert(ds(0) === treeExpected)
   }
 
+  test("the shared kernel's vector and scalar forms sum blocks in the tree grouping") {
+    assert(graft.index.AdcKernel.simdAvailable, "vector path inactive on this JVM")
+    val blk = new PreparedANN.ClusterBlock(
+      ids = Array(7L), codes = Array[Byte](0, 0),
+      vecs = Array.fill(D)(0f), meta = Array("x"))
+    val row = new GenericInternalRow(Array[Any](7L, 0,
+      new GenericArrayData(Array(0, 0))))
+    for (simd <- Seq(true, false)) {
+      def kernel = new graft.index.AdcKernel(model.adcTables, qp, simd)
+      assert(kernel.dist(Array[Byte](0, 0), 0, kernel.centroid(0),
+        Double.MaxValue) === treeExpected, s"simd=$simd")
+      val served = PreparedANN.serveWith(kernel, Array(Map(0 -> blk)),
+        Array(0), Array.fill(D)(0f), 1, Array.emptyLongArray, null)
+      assert(served.dists.toSeq === Seq(treeExpected), s"simd=$simd")
+      val (ds, ids, _) = BatchANN.coarsePartitionWith(Iterator(row), kernel,
+        probeSet = Set(0), prelimK = 1)
+      assert(ids.toSeq === Seq(7L))
+      assert(ds(0) === treeExpected, s"simd=$simd")
+    }
+  }
+
+  // (the multi-query batch form now scores each probing query with the
+  // same kernel; the name is kept from when it summed a shared
+  // reconstruction)
   test("BatchANN multi-query reconstruction branch matches the tree grouping") {
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),

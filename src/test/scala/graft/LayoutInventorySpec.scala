@@ -62,4 +62,26 @@ class LayoutInventorySpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"Breeze named in the PCA fit:\n${hits.mkString("\n")}")
   }
+
+  // The ADC block arithmetic lives in one kernel (index/AdcKernel.scala,
+  // index/SimdAdc.java). An unrolled 8-wide block sum — an eighth-lane
+  // offset `+ 7)` or an eighth squared term `e7 * e7` — in a serving file
+  // means a hand copy of it is back.
+  private val Unrolled8 = Seq("""\+ 7\)""".r, """\b([a-z]+)7 \* \1[7]\b""".r)
+
+  test("the serving operators hold no hand copy of the 8-wide ADC block sum") {
+    def hits(f: String) = {
+      val path = Paths.get(f)
+      assert(Files.isRegularFile(path), s"run from the repo root (no $path)")
+      Files.readString(path).split("\n").zipWithIndex.toSeq.collect {
+        case (line, i) if Unrolled8.exists(_.findFirstIn(line).isDefined) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    val copies = Seq("src/main/scala/graft/operators/PreparedANN.scala",
+      "src/main/scala/graft/operators/BatchANN.scala").flatMap(hits)
+    assert(copies.isEmpty, s"unrolled ADC block sum outside the kernel:\n${copies.mkString("\n")}")
+    // and the patterns still recognise the kernel's own scalar tree
+    assert(hits("src/main/scala/graft/index/AdcKernel.scala").nonEmpty)
+  }
 }

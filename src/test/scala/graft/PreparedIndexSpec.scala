@@ -474,6 +474,45 @@ class PreparedIndexSpec extends SparkSpec {
     assert(ids == (0L until 64L))
   }
 
+  test("buildBlocks spreads a one-row-group table over min(numParts, rows) partitions") {
+    // a single row group cut into several byte-range splits fills only the
+    // split that covers its midpoint; coalescing those splits pinned every
+    // row in one partition
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    def oneGroup(rows: Long): org.apache.spark.sql.DataFrame = {
+      val dir = tmpDir("graft-onegroup") + "/t"
+      (0L until rows)
+        .map(i => ((i % 4).toInt, i, Seq.fill(8)(i.toInt % 256),
+          Seq.fill(16)(i.toFloat), s"m$i"))
+        .toDF("cluster_id", "id", "code", "vector", "metadata")
+        .select(col("cluster_id"), col("id"),
+          col("code").cast("array<int>").as("code"),
+          col("vector").cast("array<float>").as("vector"), col("metadata"))
+        .coalesce(1).write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "512")
+    try {
+      for ((rows, numParts) <- Seq((64L, 3), (2L, 3))) {
+        val df = oneGroup(rows)
+        assert(df.inputFiles.length == 1)
+        assert(df.queryExecution.toRdd.getNumPartitions >= 2,
+          "fixture must span several splits")
+        val maps = graft.operators.PreparedANN.buildBlocks(df, numParts).collect()
+        val filled = maps.count(_.valuesIterator.exists(_.size > 0))
+        assert(filled == math.min(numParts.toLong, rows), s"rows=$rows")
+        assert(maps.flatMap(_.valuesIterator.flatMap(_.ids)).sorted.toSeq ==
+          (0L until rows))
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** A small trained db (4 coded buckets) on its own engine, with the
     * auto-built handle's adds-refresh debounce set to `debounceMs`.
     */
