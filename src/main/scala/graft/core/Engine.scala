@@ -2188,10 +2188,10 @@ object Engine {
     def nearestClusters(qp: Array[Float], nprobe: Int): Array[Int] =
       flatCentroids.nearestKFloat(qp, nprobe)
 
-    /** Codebooks and centroids widened to double for the ADC kernel
-      * ([[graft.index.AdcKernel]]) — built lazily per JVM like
-      * [[flatCentroids]], so a handle or a broadcast pays the codebook
-      * copy once and each centroid's on its first probe.
+    /** The ADC kernel's tables ([[graft.index.AdcKernel]]) — built
+      * lazily per JVM like [[flatCentroids]], so a handle or a broadcast
+      * widens the codebooks (m·256·subDim doubles) once; centroids are
+      * widened per probe, not kept.
       */
     @transient lazy val adcTables: graft.index.AdcTables =
       new graft.index.AdcTables(centroids, pq)

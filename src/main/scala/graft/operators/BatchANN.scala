@@ -105,15 +105,19 @@ object BatchANN {
     if (kernels.isEmpty) return heaps
     val m = kernels(0).m
     val codes = new Array[Byte](m)
+    // each probed cluster's centroid is widened on its first row here
+    val probed = c2q.map { case (c, qs) => c -> new Probed(qs) }
     it.foreach { r =>
       val cid = r.getInt(1)
-      val probing = c2q.getOrElse(cid, null)
-      if (probing != null) {
+      val pc = probed.getOrElse(cid, null)
+      if (pc != null) {
+        val probing = pc.queries
         val id = r.getLong(0)
         val code = r.getArray(2)
         var j = 0
         while (j < m) { codes(j) = code.getInt(j).toByte; j += 1 }
-        val cc = kernels(0).centroid(cid)
+        if (pc.cc == null) pc.cc = kernels(0).centroid(cid)
+        val cc = pc.cc
         var k = 0
         while (k < probing.length) {
           val qi = probing(k)
@@ -125,6 +129,12 @@ object BatchANN {
       }
     }
     heaps
+  }
+
+  // One probed cluster in a partition scan: the queries probing it and its
+  // centroid, widened on the first row that needs it.
+  private final class Probed(val queries: Array[Int]) {
+    var cc: Array[Double] = null
   }
 
   /** The q=1 per-partition coarse stage as a plain function: the shared

@@ -90,16 +90,31 @@ object PreparedANN {
 
   /** Join each cluster's blocks across `parts` into one block (rows in
     * part order) — the driver-local serving copy of a pinned block set.
+    * Consumes `parts`: each slot is cleared once its blocks are grouped
+    * and each cluster's sources are dropped once joined, so building the
+    * copy holds about one block set plus one cluster, not two block sets.
     */
-  def concatBlocks(parts: Array[Map[Int, ClusterBlock]]): Map[Int, ClusterBlock] =
-    parts.iterator.flatMap(_.iterator).toSeq.groupBy(_._1).map { case (cid, bs) =>
-      val blks = bs.map(_._2)
-      cid -> (if (blks.length == 1) blks.head
-              else new ClusterBlock(Array.concat(blks.map(_.ids): _*),
-                Array.concat(blks.map(_.codes): _*),
-                Array.concat(blks.map(_.vecs): _*),
-                Array.concat(blks.map(_.meta): _*)))
+  def concatBlocks(parts: Array[Map[Int, ClusterBlock]]): Map[Int, ClusterBlock] = {
+    val byCid = mutable.HashMap.empty[Int, mutable.ArrayBuffer[ClusterBlock]]
+    var p = 0
+    while (p < parts.length) {
+      parts(p).foreach { case (cid, b) =>
+        byCid.getOrElseUpdate(cid, mutable.ArrayBuffer.empty) += b
+      }
+      parts(p) = null
+      p += 1
     }
+    val out = Map.newBuilder[Int, ClusterBlock]
+    for (cid <- byCid.keys.toArray) {
+      val blks = byCid.remove(cid).get
+      out += cid -> (if (blks.length == 1) blks.head
+                     else new ClusterBlock(Array.concat(blks.map(_.ids).toSeq: _*),
+                       Array.concat(blks.map(_.codes).toSeq: _*),
+                       Array.concat(blks.map(_.vecs).toSeq: _*),
+                       Array.concat(blks.map(_.meta).toSeq: _*)))
+    }
+    out.result()
+  }
 
   /** Pin the covering coded table into `numParts` cached partitions of
     * cluster-keyed blocks. One shuffle, executed once at prepare time.
@@ -116,38 +131,53 @@ object PreparedANN {
     * them. `coalesce` (narrow, zero exchange) merges the scan's file
     * splits down to `numParts` for the serving task shape.
     *
-    * SMALL tables (fewer row-holding scan splits than `numParts`):
-    * coalesce cannot RAISE a partition count, so the pinned block set
-    * would drop to the split count and cut per-query serve parallelism
-    * (~a 500 MB table on 32 cores would pin ~4 serve tasks — ADVICE r15).
-    * Those take a round-robin `repartition(numParts)` instead — rows, not
+    * SMALL tables (fewer scan splits than `numParts`): coalesce cannot
+    * RAISE a partition count, so the pinned block set would drop to the
+    * split count and cut per-query serve parallelism (~a 500 MB table on
+    * 32 cores would pin ~4 serve tasks — ADVICE r15). Those take a
+    * round-robin `repartition(numParts)` instead — rows, not
     * cluster-keyed (co-location still not required) — whose exchange is
     * bounded by the small table's size, the regime where shuffle
     * scratch is harmless; the zero-shuffle path is kept exactly where
     * the exchange was the ENOSPC risk (tables already wider than
     * `numParts` splits).
+    *
+    * SKEWED splits: a split owns only the row groups whose midpoint it
+    * covers, so one large row group cut into several splits fills one of
+    * them, and a coalesced partition holds at least the largest row
+    * group. When that group exceeds a fair share of rows (rows/numParts,
+    * from the files' footers), coalesce would pin nearly every row in one
+    * serve task, so the table takes the round-robin exchange too — unless
+    * its block set will be served driver-locally (within
+    * `localMaxBytes`): that copy joins every partition, so their balance
+    * cannot matter.
     */
-  def buildBlocks(coded: DataFrame, numParts: Int): RDD[Map[Int, ClusterBlock]] = {
+  def buildBlocks(coded: DataFrame, numParts: Int): RDD[Map[Int, ClusterBlock]] =
+    buildBlocks(coded, numParts, graft.core.Engine.PreparedLocalMaxBytes)
+
+  /** [[buildBlocks]] under the caller's driver-local byte bound (specs
+    * pass 0 to take the job-path shape on a small table).
+    */
+  private[graft] def buildBlocks(coded: DataFrame, numParts: Int,
+                                 localMaxBytes: Long): RDD[Map[Int, ClusterBlock]] = {
     val src = coded.select("cluster_id", "id", "code", "vector", "metadata")
     // partition-count probe via the already-planned internal RDD —
     // `src.rdd` would wrap the plan in a second to-external-row
     // deserializer stage just to read a count (ADVICE r16 nit)
     val srcParts = src.queryExecution.toRdd.getNumPartitions
-    // Splits that can hold rows: a byte-range split owns only the row
-    // groups whose midpoint it covers, so a one-row-group file cut into 4
-    // splits fills one of them, and coalescing those pinned every row in
-    // one partition. Counted from the files' cached footers, stopping at
-    // numParts.
-    val filled =
-      if (srcParts < numParts) srcParts
-      else {
-        val files = coded.inputFiles
-        if (files.isEmpty) srcParts
-        else math.min(srcParts, graft.core.ServingScan.rowGroupsAtLeast(
-          files.toSeq, coded.sparkSession.sessionState.newHadoopConf(), numParts))
+    val coalesces = srcParts >= numParts && {
+      val files = coded.inputFiles
+      files.isEmpty || {
+        val (rows, largest, bytes) = graft.core.ServingScan.rowGroupShape(
+          files.toSeq, coded.sparkSession.sessionState.newHadoopConf())
+        // the driver copy's byte estimate (PreparedIndex) is within twice
+        // the uncompressed column bytes (UTF-16 strings) plus 40 bytes a
+        // row, unless dictionary encoding shrank repeated strings on disk
+        largest * numParts <= rows || 2 * bytes + 40 * rows <= localMaxBytes
       }
+    }
     val shaped =
-      if (filled >= numParts) src.coalesce(numParts)
+      if (coalesces) src.coalesce(numParts)
       else src.repartition(numParts)
     shaped.rdd
       .mapPartitions(it =>
@@ -203,15 +233,18 @@ object PreparedANN {
     val heap = new AdcHeap(prelimK)
     // heap tag = index of the scanned block, so the rerank finds its rows
     val scanned = mutable.ArrayBuffer.empty[ClusterBlock]
+    // one buffer, refilled with each probed centroid that has rows here
+    var cc: Array[Double] = null
     var pi = 0
     while (pi < probes.length) {
       val cid = probes(pi)
+      var widened = false
       var k = 0
       while (k < parts.length) {
         val blk = parts(k).getOrElse(cid, null)
         if (blk != null) {
-          scanBlock(kern, heap, blk, kern.centroid(cid), scanned.length,
-            deleted, pred)
+          if (!widened) { cc = kern.centroid(cid, cc); widened = true }
+          scanBlock(kern, heap, blk, cc, scanned.length, deleted, pred)
           scanned += blk
         }
         k += 1

@@ -196,8 +196,10 @@ class AdcKernelSpec extends AnyFunSuite {
       val probes = Array(2, 0, 5, 1)
       for (k <- Seq(1, 64, 300)) {
         val split = assertServes(mdl, parts :+ side, probes, qp, qn, k)
-        val joined = assertServes(mdl, Array(PreparedANN.concatBlocks(parts), side),
-          probes, qp, qn, k)
+        val consumed = parts.clone()
+        val joined = assertServes(mdl,
+          Array(PreparedANN.concatBlocks(consumed), side), probes, qp, qn, k)
+        assert(consumed.forall(_ == null))
         assert(bits(split) == bits(joined))
       }
     }

@@ -474,38 +474,53 @@ class PreparedIndexSpec extends SparkSpec {
     assert(ids == (0L until 64L))
   }
 
-  test("buildBlocks spreads a one-row-group table over min(numParts, rows) partitions") {
-    // a single row group cut into several byte-range splits fills only the
-    // split that covers its midpoint; coalescing those splits pinned every
-    // row in one partition
+  test("buildBlocks spreads a table whose largest row group is over a fair share") {
+    // a split owns only the row groups whose midpoint it covers, so one
+    // large row group cut into several splits fills one of them, and
+    // coalescing those splits pinned every row in one partition — also
+    // when small appended files add row groups of their own
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    def oneGroup(rows: Long): org.apache.spark.sql.DataFrame = {
-      val dir = tmpDir("graft-onegroup") + "/t"
-      (0L until rows)
-        .map(i => ((i % 4).toInt, i, Seq.fill(8)(i.toInt % 256),
+    def write(dir: String, ids: Seq[Long], mode: String): Unit =
+      ids.map(i => ((i % 4).toInt, i, Seq.fill(8)(i.toInt % 256),
           Seq.fill(16)(i.toFloat), s"m$i"))
         .toDF("cluster_id", "id", "code", "vector", "metadata")
         .select(col("cluster_id"), col("id"),
           col("code").cast("array<int>").as("code"),
           col("vector").cast("array<float>").as("vector"), col("metadata"))
-        .coalesce(1).write.parquet(dir)
-      spark.read.parquet(dir)
-    }
+        .coalesce(1).write.mode(mode).parquet(dir)
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Boolean =
+      r.dependencies.exists {
+        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+        case d => shuffles(d.rdd)
+      }
     val key = "spark.sql.files.maxPartitionBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "512")
     try {
-      for ((rows, numParts) <- Seq((64L, 3), (2L, 3))) {
-        val df = oneGroup(rows)
-        assert(df.inputFiles.length == 1)
-        assert(df.queryExecution.toRdd.getNumPartitions >= 2,
-          "fixture must span several splits")
-        val maps = graft.operators.PreparedANN.buildBlocks(df, numParts).collect()
+      val numParts = 3
+      // (big group's rows, small one-group files appended)
+      for ((big, small) <- Seq((64L, 0), (2L, 0), (60L, numParts - 1))) {
+        val dir = tmpDir("graft-onegroup") + "/t"
+        write(dir, 0L until big, "overwrite")
+        (0 until small).foreach(k => write(dir, Seq(big + k), "append"))
+        val df = spark.read.parquet(dir)
+        val rows = big + small
+        assert(df.inputFiles.length == 1 + small)
+        assert(df.queryExecution.toRdd.getNumPartitions >= numParts,
+          "fixture must span at least numParts splits")
+        // job-path shape (no driver-local bound): rows spread
+        val maps = graft.operators.PreparedANN.buildBlocks(df, numParts, 0L)
+          .collect()
         val filled = maps.count(_.valuesIterator.exists(_.size > 0))
-        assert(filled == math.min(numParts.toLong, rows), s"rows=$rows")
+        assert(filled == math.min(numParts.toLong, rows), s"big=$big small=$small")
         assert(maps.flatMap(_.valuesIterator.flatMap(_.ids)).sorted.toSeq ==
           (0L until rows))
+        // a block set served driver-locally is joined whole: no exchange
+        val local = graft.operators.PreparedANN.buildBlocks(df, numParts)
+        assert(!shuffles(local), s"big=$big small=$small")
+        assert(local.collect().flatMap(_.valuesIterator.flatMap(_.ids)).sorted
+          .toSeq == (0L until rows))
       }
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
