@@ -6,9 +6,9 @@ import graft.SparkSpec
 import graft.index.IndexParams
 
 /** The prepared handle's driver-local serve (r18): when the pinned
-  * blocks fit [[Engine.PreparedLocalMaxBytes]], serves run the unchanged
-  * per-partition kernel over a driver-resident copy in the caller thread
-  * — no Spark job. Hits must be BIT-equal to the job shape, including
+  * blocks fit [[Engine.PreparedLocalMaxBytes]], serves run the same
+  * kernel over a driver-resident copy in the caller thread, one heap over
+  * every part — no Spark job. Hits must be BIT-equal to the job shape, including
   * with pending deletes and a fresh adds side buffer in play.
   */
 class LocalServeSpec extends SparkSpec {
