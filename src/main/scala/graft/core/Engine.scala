@@ -104,12 +104,19 @@ class Engine(val spark: SparkSession, val root: String) {
     */
   @volatile var flatAddMemoryGuardBytes: Option[Long] = None
 
-  /** Adds-refresh debounce of the AUTO-built handle — a test seam
-    * (PreparedIndexSpec pins queryCatalyst's read-your-writes with a
-    * debounce the test provably cannot outrun).
+  /** Adds-refresh debounce of every [[PreparedIndex]] this engine builds
+    * — a test seam (PreparedIndexSpec pins exact visibility with 0 and
+    * queryCatalyst's read-your-writes with a debounce the test provably
+    * cannot outrun).
     */
   protected def autoPreparedAddsRefreshMs: Long =
     Engine.PreparedAddsRefreshIntervalMs
+
+  /** Byte bound under which a [[PreparedIndex]] is built into its driver
+    * copy — a test seam (specs set 0 to build the job form on a small
+    * table).
+    */
+  protected def preparedLocalMaxBytes: Long = Engine.PreparedLocalMaxBytes
 
   /** True when an auto-prepared handle exists for `name` (test seam:
     * queryCatalyst must never BUILD one).
@@ -127,7 +134,7 @@ class Engine(val spark: SparkSession, val root: String) {
       prepareLocks.getOrElseUpdate(doc.name, new Object).synchronized {
         autoPrepared.get(doc.name).filter(!_.isStaleFor(doc)).getOrElse {
           autoPrepared.remove(doc.name).foreach(_.close())
-          val p = buildPrepared(doc.name, -1, autoPreparedAddsRefreshMs)
+          val p = buildPrepared(doc.name, -1)
           // close any handle the publish displaces: after a drop+recreate
           // the OLD lock object is gone (delete() removes prepareLocks),
           // so a stale builder still holding it can race this publish —
@@ -536,9 +543,21 @@ class Engine(val spark: SparkSession, val root: String) {
   private def deletesPath(doc: CatalogDoc): String =
     s"$root/${doc.name}/deletes/d${doc.dataVersion}"
 
-  private def deletes(doc: CatalogDoc): DataFrame =
+  /** The committed pending deletes of `doc`. A remove writes its ids to
+    * the segment `s<n>`, `n` its pre-remove pending count, so a segment
+    * named at or above `numPendingDeletes` lost its commit (the retry
+    * overwrites it). Part files directly in the dir (a root written
+    * before segments) all load.
+    */
+  private def deletes(doc: CatalogDoc): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(deletesPath(doc))
+    val paths = fsFor(dir).listStatus(dir).map(_.getPath).filter { p =>
+      p.getName.endsWith(".parquet") || p.getName.startsWith("s") &&
+        p.getName.drop(1).toLongOption.exists(_ < doc.numPendingDeletes)
+    }.map(_.toString)
     spark.read.schema(StructType(Seq(StructField("id", LongType, nullable = false))))
-      .parquet(deletesPath(doc))
+      .parquet(paths.toIndexedSeq: _*)
+  }
 
   /** The sorted pending soft-deleted ids of `doc` and their executor
     * broadcast, collected once per deletes generation — (createdAt,
@@ -772,9 +791,12 @@ class Engine(val spark: SparkSession, val root: String) {
     val removedTrained = present.count(_ <= doc.maxTrainedId).toLong
     val removedNew = present.length - removedTrained
 
-    // soft delete: append the present ids to this data version's deletes
+    // soft delete: the present ids become this data version's deletes
+    // segment named by the pre-remove pending count; the catalog save
+    // below is what makes it read (see `deletes`)
     spark.createDataFrame(present.toSeq.map(Tuple1(_))).toDF("id")
-      .coalesce(1).write.mode("append").parquet(deletesPath(doc))
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"${deletesPath(doc)}/s${doc.numPendingDeletes}")
 
     doc = doc.copy(
       numPendingDeletes = doc.numPendingDeletes + present.length,
@@ -858,9 +880,8 @@ class Engine(val spark: SparkSession, val root: String) {
     * stale — the post-job re-check catches version moves, not pending-
     * delete drift). The reference folds appends synchronously, so its
     * reads are read-your-writes; callers needing that on this engine set
-    * `autoRoutePrepared = false` (or use [[queryCatalyst]]) — or
-    * `prepareServing(name, addsRefreshIntervalMs = 0)` for a handle that
-    * refreshes on every drift.
+    * `autoRoutePrepared = false` (or use [[queryCatalyst]]). Every
+    * handle, routed or from [[prepareServing]], takes the same window.
     *
     * EXECUTION CONTRACT: on a trained db this method is EAGER — the
     * coarse ADC stage runs (a Spark job) at CALL time, and the returned
@@ -1303,10 +1324,12 @@ class Engine(val spark: SparkSession, val root: String) {
   }
 
   /** Pin the trained index into a memory-resident [[PreparedIndex]] —
-    * the low-latency serving form: the covering coded table is cached
-    * once as partition-local primitive blocks and each query becomes ONE
-    * job (fused ADC + exact rerank in-task, driver merge) instead of a
-    * per-query Catalyst plan. Results are bit-identical to
+    * the low-latency serving form: the covering coded table is pinned
+    * once as primitive blocks — a driver copy served in the caller thread
+    * when it fits [[Engine.PreparedLocalMaxBytes]], else cached executor
+    * partitions served by ONE job per query (fused ADC + exact rerank
+    * in-task, driver merge) — instead of a per-query Catalyst plan.
+    * Results are bit-identical to
     * [[query]] (gated by the `prepared_knn` DuckDB replay row and
     * PreparedIndexSpec); mutations are handled by delta-refresh
     * (removes AND bounded adds — appended rows join as a side buffer)
@@ -1315,11 +1338,10 @@ class Engine(val spark: SparkSession, val root: String) {
     *
     * `numParts` defaults to the scheduler's parallelism: tasks are pure
     * in-memory scans of (nprobe/nlist)·n/numParts rows, so more, smaller
-    * tasks only add scheduling overhead.
+    * tasks only add scheduling overhead. An explicit `numParts` builds a
+    * handle of its own; the default shares the engine's routing handle.
     */
-  def prepareServing(name: String, numParts: Int = -1,
-                     addsRefreshIntervalMs: Long =
-                       Engine.PreparedAddsRefreshIntervalMs): PreparedIndex = {
+  def prepareServing(name: String, numParts: Int = -1): PreparedIndex = {
     val doc = load(name)
     require(doc.isTrained, s"'$name' has no trained index to prepare")
     // default-shaped requests SHARE the engine's routing handle: one
@@ -1328,8 +1350,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // of the block set — at the 35M geometry the second build evicted
     // the first's partitions and every sequential serve paid disk
     // re-promotion (r14 eval: 2.07 s prepared p50 from a 35 ms path).
-    if (autoRoutePrepared && numParts <= 0 &&
-        addsRefreshIntervalMs == Engine.PreparedAddsRefreshIntervalMs) {
+    if (autoRoutePrepared && numParts <= 0) {
       while (true) {
         // tryRetain loses only to a concurrent swap's close of the just
         // published handle; autoPreparedFor rebuilds fresh on re-entry
@@ -1339,26 +1360,34 @@ class Engine(val spark: SparkSession, val root: String) {
         }
       }
     }
-    buildPrepared(doc.name, numParts, addsRefreshIntervalMs)
+    buildPrepared(doc.name, numParts)
   }
 
   /** The unshared build behind [[prepareServing]] (and the engine's own
-    * routing handle): pin the coded blocks and wire the refresh closures.
+    * routing handle): pin the coded blocks in the handle's one form and
+    * wire the refresh closures.
     */
-  private def buildPrepared(name: String, numParts: Int,
-                            addsRefreshIntervalMs: Long): PreparedIndex = {
+  private def buildPrepared(name: String, numParts: Int): PreparedIndex = {
     val doc = load(name)
     require(doc.isTrained, s"'$name' has no trained index to prepare")
     val parts =
       if (numParts > 0) numParts else spark.sparkContext.defaultParallelism
+    val localMax = preparedLocalMaxBytes
     // the id fence pins the block set to EXACTLY the pinned doc: an add
     // racing prepare would otherwise land its rows both in the blocks
     // (the scan sees the appended files) and in the side buffer (id >
     // pinned.maxId) — served twice
-    val blocks = graft.operators.PreparedANN.buildBlocks(
-        store.frame(doc).filter(col("id") <= doc.maxId), parts)
+    val cached = graft.operators.PreparedANN.buildBlocks(
+        store.frame(doc).filter(col("id") <= doc.maxId), parts, localMax)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    blocks.count() // materialize the cache at prepare time, not first query
+    // one job caches and measures the blocks; a set within the bound
+    // becomes the driver copy and leaves the executors
+    val bytes = cached.map(_.valuesIterator.map(_.bytes).sum).fold(0L)(_ + _)
+    val blocks =
+      if (bytes > localMax) Left(cached)
+      else
+        try Right(graft.operators.PreparedANN.concatBlocks(cached.collect()))
+        finally cached.unpersist(blocking = false)
     // Post-prepare appends (A6 encodes them into the coded table before
     // add() returns) delta-refresh into a driver-local side buffer: the
     // appended rows live in parquet files whose id stats are entirely
@@ -1374,7 +1403,7 @@ class Engine(val spark: SparkSession, val root: String) {
         rows.iterator.map(r => (r.getInt(0), r))))
     }
     new PreparedIndex(this, spark, doc, blocks, modelBroadcast(doc),
-      pendingDeletes(_).bc, collectAppended, addsRefreshIntervalMs)
+      pendingDeletes(_).bc, collectAppended, autoPreparedAddsRefreshMs)
   }
 
   /** Probe-list chunk size for the bucketed pruned scan. Each chunk's
@@ -1553,28 +1582,35 @@ class Engine(val spark: SparkSession, val root: String) {
             seed: Long = 42L,
             minTrainRows: Int = Heuristics.FlatIndexFloor,
             onSnapshot: () => Unit = () => (),
-            onSwapped: () => Unit = () => ()): CatalogDoc = {
+            onSwapped: () => Unit = () => ()): CatalogDoc =
+    claimTraining(name, onSwapped)(trainImpl(name, params,
+      useTwoLevelClustering, kmeansIters, maxMemoryUsage, seed, minTrainRows,
+      onSnapshot))()
+
+  /** Claim `name`'s training slot now; the returned run is `impl` and the
+    * status lifecycle: "trained", reconcile, "complete" — or "failed" for
+    * a train that made no index (fastapi.py:288-296) or threw.
+    */
+  private def claimTraining(name: String, onSwapped: () => Unit)(
+      impl: => (CatalogDoc, Boolean, Long, Long)): () => CatalogDoc = {
     val epoch = beginTraining(name)
     val incarnation = scala.util.Try(load(name).createdAt).getOrElse(-1L)
-    try {
-      val (doc, didTrain, snapshotMaxId, reconcileTo) = trainImpl(name, params,
-        useTwoLevelClustering, kmeansIters, maxMemoryUsage, seed, minTrainRows,
-        onSnapshot)
-      if (!didTrain) {
-        // reference parity: a train that produced no new index reports
-        // "failed" at the status endpoint (fastapi.py:288-296)
-        setTrainStatus(name, epoch, "failed")
-        doc
-      } else {
-        setTrainStatus(name, epoch, "trained")
-        onSwapped() // test seam — deterministic swapped-but-draining window
-        val out = reconcileAfterTrain(name, snapshotMaxId, reconcileTo)
-        setTrainStatus(name, epoch, "complete")
-        out
+    () =>
+      try {
+        val (doc, didTrain, snapshotMaxId, reconcileTo) = impl
+        if (!didTrain) {
+          setTrainStatus(name, epoch, "failed")
+          doc
+        } else {
+          setTrainStatus(name, epoch, "trained")
+          onSwapped() // test seam — deterministic swapped-but-draining window
+          val out = reconcileAfterTrain(name, snapshotMaxId, reconcileTo)
+          setTrainStatus(name, epoch, "complete")
+          out
+        }
+      } catch {
+        case e: Throwable => failTrainStatus(name, epoch, incarnation, e); throw e
       }
-    } catch {
-      case e: Throwable => failTrainStatus(name, epoch, incarnation, e); throw e
-    }
   }
 
   /** Failure-path status: a db that no longer exists — or exists only as a
@@ -1592,7 +1628,7 @@ class Engine(val spark: SparkSession, val root: String) {
     else setTrainStatus(name, epoch, "failed")
 
   /** The async training verb (POST /db/{name}/train, fastapi.py:314-331):
-    * claims the training slot, runs [[train]] on a background thread, and
+    * claims the training slot, runs the train on a background thread, and
     * returns immediately. Progress via [[trainingStatus]]; failures are
     * logged and reported as status "failed" (T20 — the catalog is left
     * untouched). Adds/removes/queries against the db proceed while it
@@ -1607,24 +1643,14 @@ class Engine(val spark: SparkSession, val root: String) {
                  minTrainRows: Int = Heuristics.FlatIndexFloor,
                  onSnapshot: () => Unit = () => (),
                  onSwapped: () => Unit = () => ()): Thread = {
-    val epoch = beginTraining(name)
-    val incarnation = scala.util.Try(load(name).createdAt).getOrElse(-1L)
+    val run = claimTraining(name, onSwapped)(trainImpl(name, params,
+      useTwoLevelClustering, kmeansIters, maxMemoryUsage, seed, minTrainRows,
+      onSnapshot))
     val t = new Thread(() => {
-      try {
-        val (_, didTrain, snapshotMaxId, reconcileTo) = trainImpl(name, params,
-          useTwoLevelClustering, kmeansIters, maxMemoryUsage, seed, minTrainRows,
-          onSnapshot)
-        if (!didTrain) setTrainStatus(name, epoch, "failed")
-        else {
-          setTrainStatus(name, epoch, "trained")
-          onSwapped()
-          reconcileAfterTrain(name, snapshotMaxId, reconcileTo)
-          setTrainStatus(name, epoch, "complete")
-        }
-      } catch {
+      try run()
+      catch {
         case e: Throwable =>
           log.warn(s"async train of '$name' failed: ${e.getMessage}")
-          failTrainStatus(name, epoch, incarnation, e)
       }
     }, s"graft-train-$name")
     t.setDaemon(true)
@@ -2010,16 +2036,17 @@ class Engine(val spark: SparkSession, val root: String) {
         store.evict(k)
       }
 
-  private def normalizeLocal(v: Array[Float]): Array[Float] = {
+}
+
+object Engine {
+
+  /** The query normalizer of every trained serving path. */
+  private[graft] def normalizeLocal(v: Array[Float]): Array[Float] = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
     val n = math.sqrt(s)
     if (n == 0) v else v.map(x => (x / n).toFloat)
   }
-
-}
-
-object Engine {
 
   /** One deletes generation of a db: the broadcast of its sorted pending
     * soft-deleted ids (see `Engine.pendingDeletes`).

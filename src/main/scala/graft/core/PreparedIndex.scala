@@ -14,40 +14,49 @@ import graft.operators.PreparedANN.{Cand, ClusterBlock}
   * path for batches and for ad-hoc queries against a moving table).
   *
   * `query` returns exactly what `Engine.query(...).collect()` returns
-  * for the same arguments (modulo row type), but as ONE Spark job over
-  * cached partition-local blocks: no per-query Catalyst planning, no
-  * candidate-fetch join round-trip. Staleness is handled conservatively:
+  * for the same arguments (modulo row type), with no per-query Catalyst
+  * planning and no candidate-fetch join round-trip. The pinned rows take
+  * ONE of two forms, picked once when the handle is built:
   *
-  *  - removes: the engine's pending-delete ids (one small job per
-  *    deletes generation, shared with the plan path) are re-read only
-  *    when the pinned count drifts, then applied in-kernel before the
-  *    ADC heap — the plan path's gate, same place;
+  *  - a driver copy, when the block set fits
+  *    [[Engine.PreparedLocalMaxBytes]]: a query runs the kernel in the
+  *    caller thread, one heap over every pinned row, with no Spark job;
+  *  - executor blocks in a persisted RDD, above the bound: a query is ONE
+  *    Spark job over the cached partitions plus a driver-side merge.
+  *
+  * Both forms run the same kernel and keep the same global (adc, id) cut
+  * (LocalServeSpec). Staleness is handled conservatively:
+  *
+  *  - removes: each serve gates on the engine's pending-delete ids of the
+  *    observed catalog state (one small job per deletes generation,
+  *    shared with the plan path), applied in-kernel before the ADC heap —
+  *    the plan path's gate, same place;
   *  - adds (maxId moved, versions unchanged): DELTA-REFRESH — the
   *    appended rows (already PQ-encoded by A6 before `add` returned)
   *    are collected once into a driver-local side buffer of the same
-  *    ClusterBlock shape and scanned with the same kernel after the
-  *    distributed job, so a steady ingest trickle never degrades the
-  *    prepared path (the reference absorbs adds into its live index the
-  *    same way, mindb.py:214-217). The refresh is DEBOUNCED: at most one
-  *    side-buffer collect per `addsRefreshIntervalMs` window (VERDICT
-  *    r11 ask #5 — without it a continuous trickle pays one small Spark
-  *    job per query), so a query may miss adds committed within the last
-  *    interval; every add older than the interval is always visible.
-  *    Bounded by [[Engine.MaxPreparedSideRows]]; past it the handle
-  *    reports stale and serves via fallback until the caller re-prepares;
+  *    ClusterBlock shape and scanned with the same kernel, so a steady
+  *    ingest trickle never degrades the prepared path (the reference
+  *    absorbs adds into its live index the same way, mindb.py:214-217).
+  *    The refresh is DEBOUNCED: at most one side-buffer collect per
+  *    engine refresh window ([[Engine.PreparedAddsRefreshIntervalMs]] —
+  *    without it a continuous trickle pays one small Spark job per
+  *    query), so a query may miss adds committed within the last window;
+  *    every add older than the window is always visible. Bounded by
+  *    [[Engine.MaxPreparedSideRows]]; past it the handle reports stale
+  *    and serves via fallback until the caller re-prepares;
   *  - train / compact (a version moved): the pinned blocks can't serve —
   *    transparent fallback to the regular engine path for that query.
-  *    The version check runs BEFORE and is RE-CHECKED AFTER the serving
-  *    job: a swap landing inside that window reroutes the query through
+  *    The version check runs BEFORE and is RE-CHECKED AFTER the serve: a
+  *    swap landing inside that window reroutes the query through
   *    fallback instead of serving the superseded blocks, so every result
   *    reflects a catalog state observed during the call (the reference
   *    holds a lock over the same window, mindb.py:395-417; we re-check
   *    instead of locking). `isStale` tells the caller it is time to
   *    `close()` and re-prepare.
   *
-  * Thread-safe: concurrent `query` calls share the cached RDD and run
-  * as independent jobs (FAIR scheduling applies, same as the regular
-  * path).
+  * Thread-safe: concurrent `query` calls share the pinned rows; in the
+  * job form they run as independent jobs (FAIR scheduling applies, same
+  * as the regular path).
   */
 object PreparedIndex {
   /** One result row, rank-ordered — the collected shape of
@@ -61,22 +70,16 @@ final class PreparedIndex private[core] (
     engine: Engine,
     spark: SparkSession,
     val pinned: CatalogDoc,
-    blocks: RDD[Map[Int, ClusterBlock]],
+    // the pinned rows: persisted executor blocks (Left, the job form) or
+    // the driver copy (Right) — see the class doc
+    blocks: Either[RDD[Map[Int, ClusterBlock]], Map[Int, ClusterBlock]],
     bcModel: Broadcast[IndexModel],
     pendingDeletes: CatalogDoc => Broadcast[Array[Long]],
     collectAppended: (CatalogDoc, Long) => Option[Map[Int, ClusterBlock]],
-    addsRefreshIntervalMs: Long = Engine.PreparedAddsRefreshIntervalMs) {
+    refreshWindowMs: Long) {
 
   import PreparedIndex.Hit
 
-  // pending-delete snapshot: (count we saw, broadcast sorted ids) — a
-  // broadcast so the set ships once per executor on refresh, not per-task
-  // in every query's closure (pending deletes are bounded by the
-  // compaction threshold, which can still be millions of ids at scale).
-  // The engine owns the broadcast (one per deletes generation, shared
-  // with the plan path); refreshed when the catalog count drifts.
-  @volatile private var deletedSnapshot: (Long, Broadcast[Array[Long]]) =
-    (pinned.numPendingDeletes, pendingDeletes(pinned))
   // appended-rows side buffer: (maxId it covers, blocks of every coded
   // row with id > pinned.maxId). Driver-local — the extra per-query work
   // is one in-process kernel scan over the appended rows only, no task.
@@ -86,7 +89,7 @@ final class PreparedIndex private[core] (
   // handle) fallback; re-prepare to pin the grown table
   @volatile private var addsOverflowed = false
   // debounce clock for the adds delta-refresh: at most one side-buffer
-  // collect per addsRefreshIntervalMs window (0 = refresh on every drift)
+  // collect per refreshWindowMs window (0 = refresh on every drift)
   @volatile private var lastAddsRefreshMs = 0L
   private val refreshLock = new Object
   @volatile private var closed = false
@@ -100,7 +103,7 @@ final class PreparedIndex private[core] (
   // own publish) — and frees the blocks only at zero.
   private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
 
-  // ---- adaptive serving shape ----------------------------------------
+  // ---- adaptive serving shape of the job form -------------------------
   // At 16 caller threads the driver schedules threads × numPartitions
   // task events per query wave; with the default 32-partition blocks
   // that serialized the DAGScheduler loop and capped a healthy 35M box
@@ -114,38 +117,17 @@ final class PreparedIndex private[core] (
   // identical by construction: the same per-partition heaps reach the
   // same global merge, whichever task grouping computed them.
   private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val narrowParts =
-    Engine.preparedNarrowParts(spark.sparkContext.defaultParallelism)
   // var so specs can force every serve onto the narrow shape (depth 1)
   // and assert bit-equality against the wide shape
   @volatile private[core] var narrowDepth: Int = Engine.PreparedNarrowDepth
-  private val narrowBlocks: RDD[Map[Int, ClusterBlock]] =
-    if (blocks.getNumPartitions > narrowParts) blocks.coalesce(narrowParts)
-    else blocks
-
-  // ---- driver-local serve for small corpora (r18) ---------------------
-  // The published-config replication (57,638×768) pinned the single-query
-  // floor at the per-query Spark JOB (~15-19 ms at local[32]) while the
-  // kernel work is ~1-2 ms — the reference serves the same corpus at
-  // 5.04 ms because it is an in-process call. When the pinned block set
-  // is small enough to hold on the driver (byte-estimated from the
-  // cached blocks themselves, bounded by [[Engine.PreparedLocalMaxBytes]]),
-  // serves run the same kernel over a driver-resident copy in the caller
-  // thread: no job, no scheduler, and one heap over every part, so the
-  // global (adc, id) cut is the job path's merged one (LocalServeSpec).
-  // Above the bound (every real at-scale corpus) the job path serves.
-  @volatile private[core] var localServe: Boolean = true
-  // the driver copy joins each cluster's partial blocks from every
-  // partition into one block: a serve then scans one block per probe
-  private lazy val localBlocks: Option[Map[Int, ClusterBlock]] = {
-    val bytes = blocks.map { m =>
-      m.valuesIterator.map(b =>
-        b.ids.length * 8L + b.codes.length + b.vecs.length * 4L +
-          b.meta.iterator.map(s =>
-            if (s == null) 8L else 40L + 2L * s.length).sum).sum
-    }.sum()
-    if (bytes > Engine.PreparedLocalMaxBytes) None
-    else Some(PreparedANN.concatBlocks(blocks.collect()))
+  // null for a driver copy, which runs no job
+  private val narrowBlocks: RDD[Map[Int, ClusterBlock]] = blocks match {
+    case Left(wide) =>
+      val narrowParts =
+        Engine.preparedNarrowParts(spark.sparkContext.defaultParallelism)
+      if (wide.getNumPartitions > narrowParts) wide.coalesce(narrowParts)
+      else wide
+    case Right(_) => null
   }
 
   /** Acquire one more reference — None if the last holder already
@@ -183,8 +165,7 @@ final class PreparedIndex private[core] (
         cur.maxId - pinned.maxId > Engine.MaxPreparedSideRows)
 
   /** Two-stage ANN query (Q1-Q9 semantics, mindb.py:368-442), served
-    * from the prepared blocks (+ the appended-rows side buffer) in one
-    * job. Result rows are ordered by rank, identical to
+    * from the pinned rows (+ the appended-rows side buffer). Result rows are ordered by rank, identical to
     * `Engine.query(name, q, prelimK, finalK)`.
     */
   def query(q: Array[Float], preliminaryTopK: Int = 500,
@@ -209,14 +190,14 @@ final class PreparedIndex private[core] (
     refreshForServe(cur) match {
       case None => fallback(q, preliminaryTopK, finalTopK)
       case Some((bcDeleted, side)) =>
-        val qn = normalize(q)
+        val qn = Engine.normalizeLocal(q)
         val qp = model.pca.applyLocal(qn)
         val probes = model.nearestClusters(qp, cur.nProbe)
         val merged = PreparedANN.rerankCut(
           probePrelim(probes, qp, qn, preliminaryTopK, bcDeleted, side),
           finalTopK)
         // VERDICT r11 ask #8: a train/compact swap landing between the
-        // entry catalog load and the serving job would have served one
+        // entry catalog load and the serve would have served one
         // query from the superseded pinned blocks — re-check and reroute
         // through fallback instead (the reference holds a lock over the
         // same window, mindb.py:395-417). The re-check reads through the
@@ -267,9 +248,9 @@ final class PreparedIndex private[core] (
     require(cur.vectorDimension <= 0 || q.length == cur.vectorDimension,
       s"query dim ${q.length} != ${cur.vectorDimension}")
     refreshForServe(cur) match {
-      case None => fallbackFiltered(q, preliminaryTopK, finalTopK, predCol)
+      case None => fallback(q, preliminaryTopK, finalTopK, Some(predCol))
       case Some((bcDeleted, side)) =>
-        val qn = normalize(q)
+        val qn = Engine.normalizeLocal(q)
         val qp = model.pca.applyLocal(qn)
         val probes = model.nearestClusters(qp, cur.nProbe)
         val first = probePrelim(probes, qp, qn, preliminaryTopK, bcDeleted, side)
@@ -288,12 +269,12 @@ final class PreparedIndex private[core] (
               bcDeleted, side, pred = evalP)
             if (pushed.length >= finalTopK) Some(pushed) else None
           }
-        // post-job re-check (same contract as the unfiltered path): a
-        // swap landing during ANY serving job reroutes through the plan
+        // post-serve re-check (same contract as the unfiltered path): a
+        // swap landing during ANY serving round reroutes through the plan
         // path instead of serving the superseded blocks; reads through
         // the TTL'd cache — see the unfiltered path's note
         if (versionMoved(engine.loadRecheck(pinned.name)))
-          fallbackFiltered(q, preliminaryTopK, finalTopK, predCol)
+          fallback(q, preliminaryTopK, finalTopK, Some(predCol))
         else chosen match {
           case Some(cands) => rank(PreparedANN.rerankCut(cands, finalTopK))
           case None => // exact flat fallback, the Catalyst terminal branch
@@ -313,37 +294,26 @@ final class PreparedIndex private[core] (
   private def rank(cands: Array[Cand]): Array[Hit] =
     cands.zipWithIndex.map { case (c, i) => Hit(i + 1, c.id, c.meta, c.sim) }
 
-  private def normalize(q: Array[Float]): Array[Float] = {
-    var s = 0.0; var i = 0
-    while (i < q.length) { s += q(i).toDouble * q(i); i += 1 }
-    val n = math.sqrt(s)
-    if (n == 0) q else q.map(x => (x / n).toFloat)
-  }
-
-  /** Staleness checks + delete/adds snapshot refresh shared by the
-    * filtered and unfiltered serving paths. `None` = the pinned blocks
-    * can't serve this state (version moved / side buffer overflowed) —
-    * fall back to the plan path; `Some((bcDeleted, side))` = serve.
+  /** Staleness checks + deletes/adds refresh shared by the filtered and
+    * unfiltered serving paths. `None` = the pinned blocks can't serve
+    * this state (version moved / side buffer overflowed) — fall back to
+    * the plan path; `Some((bcDeleted, side))` = serve.
     */
   private def refreshForServe(cur: CatalogDoc)
       : Option[(Broadcast[Array[Long]], Map[Int, ClusterBlock])] = {
     if (versionMoved(cur) || addsOverflowed) return None
-    if (cur.numPendingDeletes != deletedSnapshot._1)
-      deletedSnapshot = (cur.numPendingDeletes, pendingDeletes(cur))
     // adds delta-refresh: rebuild the side buffer when maxId moved (the
     // collect re-reads ALL appends past the pinned fence — idempotent,
     // so a racing add that lands mid-scan is at worst served early).
-    // DEBOUNCED to ≤1 collect job per addsRefreshIntervalMs window: a
-    // query landing inside the window serves the previous side buffer
-    // (≤ interval-old view of the appends; every add older than the
-    // interval is visible — see the class doc).
-    if (cur.maxId != addsSnapshot._1 &&
-        (addsRefreshIntervalMs <= 0L ||
-          System.currentTimeMillis() - lastAddsRefreshMs >= addsRefreshIntervalMs))
+    // DEBOUNCED to ≤1 collect job per refreshWindowMs window: a query
+    // landing inside the window serves the previous side buffer
+    // (≤ window-old view of the appends; every add older than the
+    // window is visible — see the class doc).
+    def windowOpen = refreshWindowMs <= 0L ||
+      System.currentTimeMillis() - lastAddsRefreshMs >= refreshWindowMs
+    if (cur.maxId != addsSnapshot._1 && windowOpen)
       refreshLock.synchronized {
-        if (cur.maxId != addsSnapshot._1 && !addsOverflowed &&
-            (addsRefreshIntervalMs <= 0L ||
-              System.currentTimeMillis() - lastAddsRefreshMs >= addsRefreshIntervalMs)) {
+        if (cur.maxId != addsSnapshot._1 && !addsOverflowed && windowOpen) {
           collectAppended(cur, pinned.maxId) match {
             case Some(side) => addsSnapshot = (cur.maxId, side)
             case None => addsOverflowed = true
@@ -351,65 +321,68 @@ final class PreparedIndex private[core] (
           lastAddsRefreshMs = System.currentTimeMillis()
         }
       }
+    // the engine caches the deletes broadcast per generation, so this
+    // is a lookup unless `cur` starts a new one
     if (addsOverflowed) None
-    else Some((deletedSnapshot._2, addsSnapshot._2))
+    else Some((pendingDeletes(cur), addsSnapshot._2))
   }
 
-  /** One serving job over the pinned blocks (+ the appended-rows side
-    * scan) returning the per-partition ADC/rerank candidates merged to
-    * the global preliminary cut.
+  /** The per-query preliminary cut over the pinned rows and the
+    * appended-rows side buffer: the global top-`prelimK` by (adc, id),
+    * each candidate with its exact rerank score.
     *
     * `pred` (nullable): the pushed predicate of the filtered under-fill
-    * round — ships in the job closure (deterministic compiled predicates
-    * and plain lambdas only; [[Engine.DriverOnlyPredicate]]s never reach
-    * here) and gates heap entry inside [[PreparedANN.servePartition]].
+    * round — in the job form it ships in the job closure (deterministic
+    * compiled predicates and plain lambdas only;
+    * [[Engine.DriverOnlyPredicate]]s never reach here) — and gates heap
+    * entry inside the kernel.
     */
   private def probePrelim(probes: Array[Int], qp: Array[Float],
                           qn: Array[Float], prelimK: Int,
                           bcDeleted: Broadcast[Array[Long]],
                           side: Map[Int, ClusterBlock],
-                          pred: (Long, String) => Boolean = null): Array[Cand] = {
-    if (localServe) localBlocks match {
-      case Some(local) =>
+                          pred: (Long, String) => Boolean = null): Array[Cand] =
+    blocks match {
+      case Right(local) =>
         // in-thread serve: the same kernel over the pinned rows and the
         // side buffer into ONE heap (the global top-prelimK by (adc, id),
-        // the set the job path's per-part heaps merge to), no job
-        return PreparedANN.serveLocal(
+        // the set the job form's per-part heaps merge to), no job
+        PreparedANN.serveLocal(
           if (side.isEmpty) Array(local) else Array(local, side),
           model, probes, qp, qn, prelimK, bcDeleted.value, pred).toCands
-      case None => ()
+      case Left(wide) =>
+        probePrelimJob(wide, probes, qp, qn, prelimK, bcDeleted, side, pred)
     }
-    probePrelimSingle(probes, qp, qn, prelimK, bcDeleted, side, pred)
-  }
 
   // One job per query: batching queued queries into one job measured −23%
   // qps at 35M (evalruns_r18/waveqps_35m.log); kernel CPU binds, not jobs.
-  private def probePrelimSingle(probes: Array[Int], qp: Array[Float],
-                                qn: Array[Float], prelimK: Int,
-                                bcDeleted: Broadcast[Array[Long]],
-                                side: Map[Int, ClusterBlock],
-                                pred: (Long, String) => Boolean): Array[Cand] = {
+  private def probePrelimJob(wide: RDD[Map[Int, ClusterBlock]],
+                             probes: Array[Int], qp: Array[Float],
+                             qn: Array[Float], prelimK: Int,
+                             bcDeleted: Broadcast[Array[Long]],
+                             side: Map[Int, ClusterBlock],
+                             pred: (Long, String) => Boolean): Array[Cand] = {
     val bc = bcModel // avoid capturing `this` in the job closure
     val bcDel = bcDeleted
     val p = pred
     val depth = inFlight.incrementAndGet()
     val batches: Array[PreparedANN.CandBatch] =
       try {
-        if (depth >= narrowDepth && (narrowBlocks ne blocks))
+        if (depth >= narrowDepth && (narrowBlocks ne wide))
           // throughput shape: each narrow task folds several cached
           // partitions' block maps — one CandBatch per ORIGINAL
           // partition comes back, exactly as the wide job returns them
           spark.sparkContext.runJob(
             narrowBlocks,
             (it: Iterator[Map[Int, ClusterBlock]]) =>
-              it.map(m => PreparedANN.servePartitionBatch(m, bc.value, probes,
+              it.map(m => PreparedANN.serveLocal(Array(m), bc.value, probes,
                 qp, qn, prelimK, bcDel.value, p)).toArray).flatten
         else
           spark.sparkContext.runJob(
-            blocks,
+            wide,
             (it: Iterator[Map[Int, ClusterBlock]]) =>
               if (it.hasNext)
-                PreparedANN.servePartitionBatch(it.next(), bc.value, probes,
+                PreparedANN.serveLocal(Array(it.next()), bc.value, probes,
                   qp, qn, prelimK, bcDel.value, p)
               else new PreparedANN.CandBatch(Array.empty, Array.empty,
                 Array.empty, Array.empty))
@@ -428,14 +401,9 @@ final class PreparedIndex private[core] (
   /** Serve through the engine's regular Catalyst plan (NOT the routed
     * [[Engine.query]] — that would re-enter this handle).
     */
-  private def fallback(q: Array[Float], prelimK: Int,
-                       finalK: Int): Array[Hit] =
-    collectHits(engine.queryCatalyst(pinned.name, q, prelimK, finalK))
-
-  private def fallbackFiltered(q: Array[Float], prelimK: Int, finalK: Int,
-                               predCol: org.apache.spark.sql.Column): Array[Hit] =
-    collectHits(engine.queryCatalyst(pinned.name, q, prelimK, finalK,
-      Some(predCol)))
+  private def fallback(q: Array[Float], prelimK: Int, finalK: Int,
+                       pred: Option[org.apache.spark.sql.Column] = None): Array[Hit] =
+    collectHits(engine.queryCatalyst(pinned.name, q, prelimK, finalK, pred))
 
   private def collectHits(df: org.apache.spark.sql.DataFrame): Array[Hit] =
     df.collect().map { r =>
@@ -443,14 +411,14 @@ final class PreparedIndex private[core] (
         if (r.isNullAt(2)) null else r.getString(2), r.getDouble(3))
     }
 
-  /** Release this acquisition's reference; the cached blocks free when
+  /** Release this acquisition's reference; the pinned blocks free when
     * the LAST holder releases (the model and pending-delete broadcasts
     * are engine-owned and stay — they serve the plan path too). Call once
     * per acquisition.
     */
   def close(): Unit = if (refs.decrementAndGet() == 0) {
     closed = true
-    blocks.unpersist(blocking = false)
+    blocks.left.foreach(_.unpersist(blocking = false))
     addsSnapshot = (addsSnapshot._1, Map.empty)
   }
 }

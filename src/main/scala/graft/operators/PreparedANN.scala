@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.col
 import graft.core.Engine.IndexModel
 import graft.index.{AdcHeap, AdcKernel}
 
-/** Executor-resident serving blocks for the prepared low-latency query
+/** Memory-resident serving blocks for the prepared low-latency query
   * path (reference mindb.py:368-442 semantics, served the way the
   * reference actually serves them: from memory).
   *
@@ -18,10 +18,14 @@ import graft.index.{AdcHeap, AdcKernel}
   * analysis plus several job round-trips: a ~600 ms p50 at 10M vectors
   * where the in-memory reference gates at 30 ms. This module pins the
   * COVERING coded table (cluster_id, id, code, vector, metadata) into
-  * partition-local primitive-array blocks, cached once; a query is then
-  * ONE `sc.runJob` whose tasks fuse the coarse ADC scan and the exact
-  * rerank scoring over only the probed clusters, followed by a
-  * driver-side merge of ≤ partitions·prelimK candidates.
+  * primitive-array blocks, built once, in one of two forms:
+  *  - a driver copy ([[concatBlocks]]) when the set is small enough: a
+  *    query is one in-thread scan ([[serveLocal]]) that fuses the coarse
+  *    ADC scan and the exact rerank over only the probed clusters, with
+  *    no Spark job;
+  *  - partition-local blocks cached on the executors otherwise: a query
+  *    is ONE `sc.runJob` whose tasks run the same fused scan, followed by
+  *    a driver-side merge of ≤ partitions·prelimK candidates.
   *
   * Every arithmetic step replicates the regular path bit-for-bit:
   *  - ADC: [[graft.index.AdcKernel]], the kernel [[BatchANN]]'s coarse
@@ -55,6 +59,12 @@ object PreparedANN {
       val vecs: Array[Float],
       val meta: Array[String]) extends Serializable {
     def size: Int = ids.length
+
+    /** Estimated resident bytes: ids, codes and vectors, and per metadata
+      * string 40 bytes of object plus its UTF-16 chars (8 for a null).
+      */
+    def bytes: Long = ids.length * 8L + codes.length + vecs.length * 4L +
+      meta.iterator.map(s => if (s == null) 8L else 40L + 2L * s.length).sum
   }
 
   /** A surviving candidate: ADC distance (the preliminary-stage key),
@@ -152,14 +162,8 @@ object PreparedANN {
     * `localMaxBytes`): that copy joins every partition, so their balance
     * cannot matter.
     */
-  def buildBlocks(coded: DataFrame, numParts: Int): RDD[Map[Int, ClusterBlock]] =
-    buildBlocks(coded, numParts, graft.core.Engine.PreparedLocalMaxBytes)
-
-  /** [[buildBlocks]] under the caller's driver-local byte bound (specs
-    * pass 0 to take the job-path shape on a small table).
-    */
-  private[graft] def buildBlocks(coded: DataFrame, numParts: Int,
-                                 localMaxBytes: Long): RDD[Map[Int, ClusterBlock]] = {
+  def buildBlocks(coded: DataFrame, numParts: Int,
+                  localMaxBytes: Long): RDD[Map[Int, ClusterBlock]] = {
     val src = coded.select("cluster_id", "id", "code", "vector", "metadata")
     // partition-count probe via the already-planned internal RDD —
     // `src.rdd` would wrap the plan in a second to-external-row
@@ -170,9 +174,10 @@ object PreparedANN {
       files.isEmpty || {
         val (rows, largest, bytes) = graft.core.ServingScan.rowGroupShape(
           files.toSeq, coded.sparkSession.sessionState.newHadoopConf())
-        // the driver copy's byte estimate (PreparedIndex) is within twice
-        // the uncompressed column bytes (UTF-16 strings) plus 40 bytes a
-        // row, unless dictionary encoding shrank repeated strings on disk
+        // the driver copy's byte estimate (ClusterBlock.bytes) is within
+        // twice the uncompressed column bytes (UTF-16 strings) plus 40
+        // bytes a row, unless dictionary encoding shrank repeated strings
+        // on disk
         largest * numParts <= rows || 2 * bytes + 40 * rows <= localMaxBytes
       }
     }
@@ -340,15 +345,6 @@ object PreparedANN {
     def toCands: Array[Cand] =
       Array.tabulate(ids.length)(i => Cand(dists(i), ids(i), sims(i), metas(i)))
   }
-
-  /** [[servePartition]] with the columnar wire format — the form the
-    * serving job ships back to the driver.
-    */
-  def servePartitionBatch(blocks: Map[Int, ClusterBlock], model: IndexModel,
-                          probes: Array[Int], qp: Array[Float], qn: Array[Float],
-                          prelimK: Int, deleted: Array[Long],
-                          pred: (Long, String) => Boolean = null): CandBatch =
-    serveLocal(Array(blocks), model, probes, qp, qn, prelimK, deleted, pred)
 
   /** Driver-side preliminary merge: global top-`prelimK` by (adc, id) —
     * the same candidate set the regular path's coarse stage collects.

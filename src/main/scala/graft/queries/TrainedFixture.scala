@@ -72,13 +72,7 @@ object TrainedFixture {
     val model = IndexStore.loadModel(s, doc.indexPath(root))
     val qRaw = s.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") === 0L).head().getSeq[Float](1).toArray
-    // same op sequence as Engine.normalizeLocal → bit-identical floats
-    val qn = {
-      var ss = 0.0; var i = 0
-      while (i < qRaw.length) { ss += qRaw(i).toDouble * qRaw(i); i += 1 }
-      val nrm = math.sqrt(ss)
-      if (nrm == 0) qRaw else qRaw.map(x => (x / nrm).toFloat)
-    }
+    val qn = Engine.normalizeLocal(qRaw)
     val f = Fixture(eng, doc, model, s.sparkContext.broadcast(model), qRaw, qn)
     oracleSql.put("trained_adc_topk", adcSql(f))
     oracleSql.put("trained_knn", knnSql(f))

@@ -84,4 +84,22 @@ class LayoutInventorySpec extends AnyFunSuite {
     // and the patterns still recognise the kernel's own scalar tree
     assert(hits("src/main/scala/graft/index/AdcKernel.scala").nonEmpty)
   }
+
+  // A prepared handle holds one copy of each thing it serves: its pinned
+  // rows in ONE form picked at build time, the engine's deletes cache,
+  // the engine's refresh window. These named the lazy second copy of the
+  // rows, its switch, the handle's own deletes snapshot and the
+  // per-handle refresh window.
+  private val SecondCopies =
+    Seq("localServe", "localBlocks", "deletedSnapshot", "addsRefreshIntervalMs")
+
+  test("core/PreparedIndex.scala names no second copy of what it serves") {
+    val path = Paths.get("src/main/scala/graft/core/PreparedIndex.scala")
+    assert(Files.isRegularFile(path), s"run from the repo root (no $path)")
+    val hits = for {
+      (line, i) <- Files.readString(path).split("\n").zipWithIndex.toSeq
+      name <- SecondCopies if line.contains(name)
+    } yield s"PreparedIndex.scala:${i + 1}: $name"
+    assert(hits.isEmpty, s"second copy named in the handle:\n${hits.mkString("\n")}")
+  }
 }

@@ -21,7 +21,17 @@ class PreparedIndexSpec extends SparkSpec {
   private val PrelimK = 200
   private val FinalK = 25
 
-  lazy val engine = new Engine(spark, tmpDir("graft-prep"))
+  // the adds-refresh window of every handle the engine builds: 0 (refresh
+  // on every drift) unless a test widens it
+  @volatile private var refreshMs = 0L
+
+  lazy val engine = new Engine(spark, tmpDir("graft-prep")) {
+    override protected def autoPreparedAddsRefreshMs: Long = refreshMs
+  }
+
+  // an explicit part count builds a handle of its own
+  private def ownHandle(): graft.core.PreparedIndex =
+    engine.prepareServing("pdb", numParts = spark.sparkContext.defaultParallelism)
 
   private def mkCorpus(n: Int, seed: Long): Array[Array[Float]] = {
     val rnd = new Random(seed)
@@ -61,10 +71,10 @@ class PreparedIndexSpec extends SparkSpec {
     engine.addLocal("pdb", mkCorpus(N, Seed).toIndexedSeq,
       (0 until N).map(i => s"""{"doc":$i}"""))
     engine.train("pdb", kmeansIters = 6, seed = Seed, minTrainRows = 1)
-    // interval 0: refresh on every drift — the delta-refresh tests below
+    // window 0: refresh on every drift — the delta-refresh tests below
     // assert EXACT visibility of each mutation (the debounce property has
     // its own tests at the end)
-    prep = engine.prepareServing("pdb", addsRefreshIntervalMs = 0L)
+    prep = ownHandle()
     assert(!prep.isStale)
   }
 
@@ -146,9 +156,9 @@ class PreparedIndexSpec extends SparkSpec {
       }
       assert(got == regular(q))
     }
-    // a non-default shape builds its own handle (different refresh
-    // contract ⇒ cannot share the engine's)
-    val own = engine.prepareServing("pdb", addsRefreshIntervalMs = 0L)
+    // an explicit part count builds its own handle (a different block
+    // shape ⇒ cannot share the engine's)
+    val own = ownHandle()
     assert(!(own eq b))
     own.close()
   }
@@ -171,7 +181,11 @@ class PreparedIndexSpec extends SparkSpec {
   }
 
   test("adds delta-refresh is debounced: at most one refresh per window") {
-    val slow = engine.prepareServing("pdb", addsRefreshIntervalMs = 3600000L)
+    def withWindow(ms: Long): graft.core.PreparedIndex = {
+      refreshMs = ms
+      try ownHandle() finally refreshMs = 0L
+    }
+    val slow = withWindow(3600000L)
     val rnd = new Random(Seed + 123)
     val marker = Array.tabulate(D)(_ => rnd.nextGaussian().toFloat)
     val (mId, _) = engine.addLocal("pdb", Seq(marker), Seq("""{"m":1}"""))
@@ -189,7 +203,7 @@ class PreparedIndexSpec extends SparkSpec {
     slow.close()
 
     // with a short window the add becomes visible once the window passes
-    val quick = engine.prepareServing("pdb", addsRefreshIntervalMs = 150L)
+    val quick = withWindow(150L)
     val marker3 = Array.tabulate(D)(_ => rnd.nextGaussian().toFloat)
     val (m3Id, _) = engine.addLocal("pdb", Seq(marker3), Seq("""{"m":3}"""))
     assert(quick.query(marker3, PrelimK, FinalK).head.id == m3Id) // fresh clock
@@ -460,7 +474,8 @@ class PreparedIndexSpec extends SparkSpec {
         col("code").cast("array<int>").as("code"),
         col("vector").cast("array<float>").as("vector"), col("metadata"))
       .coalesce(1) // one split — the shape coalesce(numParts) can't widen
-    val blocks = graft.operators.PreparedANN.buildBlocks(df, numParts = 8)
+    val blocks = graft.operators.PreparedANN.buildBlocks(df, numParts = 8,
+      Engine.PreparedLocalMaxBytes)
     assert(blocks.getNumPartitions == 8,
       "small scan must round-robin up to the requested serve parallelism")
     val maps = blocks.collect()
@@ -517,7 +532,8 @@ class PreparedIndexSpec extends SparkSpec {
         assert(maps.flatMap(_.valuesIterator.flatMap(_.ids)).sorted.toSeq ==
           (0L until rows))
         // a block set served driver-locally is joined whole: no exchange
-        val local = graft.operators.PreparedANN.buildBlocks(df, numParts)
+        val local = graft.operators.PreparedANN.buildBlocks(df, numParts,
+          Engine.PreparedLocalMaxBytes)
         assert(!shuffles(local), s"big=$big small=$small")
         assert(local.collect().flatMap(_.valuesIterator.flatMap(_.ids)).sorted
           .toSeq == (0L until rows))

@@ -20,6 +20,8 @@ class NarrowServeSpec extends SparkSpec {
     val e = new Engine(spark, tmpDir("graft-narrow")) {
       override protected def chooseCodedBucketShift(nn: Long, nlist: Int,
                                                     d: Int, m: Int): Int = 2
+      // a zero driver-local bound builds the JOB form this spec gates
+      override protected def preparedLocalMaxBytes: Long = 0L
     }
     val rnd = new Random(7L)
     val centers = Array.fill(10, D)(rnd.nextGaussian().toFloat)
@@ -41,7 +43,6 @@ class NarrowServeSpec extends SparkSpec {
       def run(): Seq[Seq[Any]] = qs.toSeq.flatMap { q =>
         prep.query(q, 200, 20).toSeq
       }.map(h => Seq(h.rank, h.id, h.metadata, h.cosineSimilarity))
-      prep.localServe = false // force the JOB shapes this spec gates
       prep.narrowDepth = Int.MaxValue // wide shape
       val wide = run()
       prep.narrowDepth = 1 // every serve takes the narrow shape
