@@ -21,6 +21,9 @@ import graft.index.IndexParams
   *   <root>/<name>/deletes/d<dataVersion>/   pending soft-deleted ids
   *   <root>/<name>/index/v<indexVersion>/    centroids/ codebooks/ pca/ coded/
   * }}}
+  *
+  * A trained db's whole coded table lives in its one `index/v<indexVersion>`
+  * dir; a compaction or bin-pack rewrites all of it into the next version.
   */
 final case class CatalogDoc(
     name: String,
@@ -41,15 +44,9 @@ final case class CatalogDoc(
     usedTwoLevel: Int,             // T7 decision at last train: -1 never, 0 subsample, 1 two-level
     createdAt: Long,               // creation stamp — a train started against an older
                                    // incarnation must never swap onto a drop+recreate
-    codedBucketShift: Int,         // coded-table layout: clusters 2^shift-grouped into
+    codedBucketShift: Int) {       // coded-table layout: clusters 2^shift-grouped into
                                    // `cluster_bucket` partition dirs (-1 = untrained,
                                    // no coded table yet)
-    codedOwners: String = "") {    // per-bucket owner INDEX VERSION as csv (one int per
-                                   // cluster_bucket) — "" means every bucket lives under
-                                   // `indexVersion`. Lets compaction rewrite ONLY the
-                                   // buckets holding deleted rows: untouched buckets stay
-                                   // in (and are read from) the version dir that wrote
-                                   // them, so compact cost ∝ touched buckets, not table
 
   def isTrained: Boolean = indexVersion >= 0
 
@@ -188,7 +185,6 @@ object Catalog {
          |  "usedTwoLevel": ${doc.usedTwoLevel},
          |  "createdAt": ${doc.createdAt},
          |  "codedBucketShift": ${doc.codedBucketShift},
-         |  "codedOwners": ${quote(doc.codedOwners)},
          |  "complete": true
          |}""".stripMargin
     val known = listEpochs(dir, f)
@@ -289,8 +285,7 @@ object Catalog {
       num("numClusters").toInt, num("nProbe").toInt,
       // absent from older catalogs — defaults keep old roots loadable
       numOr("usedTwoLevel", -1L).toInt, numOr("createdAt", 0L),
-      numOr("codedBucketShift", -1L).toInt,
-      strOr("codedOwners", ""))
+      numOr("codedBucketShift", -1L).toInt)
     // a trained doc without a bucket shift (missing, or the pre-r10 -1)
     // points at the retired one-dir-per-cluster coded table, which no
     // reader understands any more — refuse it
@@ -303,6 +298,15 @@ object Catalog {
     if (numOr("codedPacked", 0L) != 0L)
       sys.error(s"catalog for '$name': the coded table uses the retired " +
         "packed code layout (codedPacked = 1); retrain the db to rewrite it")
+    // a per-bucket owner list split the retired coded table over several
+    // index version dirs; every reader now reads only `indexVersion`, so
+    // such a table would lose the buckets left in older dirs — refuse it.
+    // Roots written before the retirement carry `"codedOwners": ""`,
+    // which loads.
+    if (doc.isTrained && strOr("codedOwners", "").nonEmpty)
+      sys.error(s"catalog for '$name': the coded table is split across " +
+        "index versions by a per-bucket owner list (codedOwners); retrain " +
+        "the db to rewrite it")
     // cache under the winner's identity; the probe only ever hits when
     // this same file is still the newest listed, so a torn newer epoch
     // (winner != newest) simply never hits — correct, just uncached

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
@@ -15,9 +15,11 @@ import graft.index.Coder
 /** The PQ-coded covering table of a trained db, and the one module that
   * knows its on-disk format: IVF inverted lists as parquet, `2^shift`
   * consecutive clusters per `cluster_bucket` hive dir, rows sorted by
-  * `cluster_id` within each file ([[CodedStore.bucketShift]]). After a
-  * per-bucket compaction a bucket lives under the index version that
-  * last rewrote it (the doc's owner list).
+  * `cluster_id` within each file ([[CodedStore.bucketShift]]). The
+  * whole table lives in ONE index version dir, `index/v{indexVersion}`:
+  * a train writes it there, and a compaction or bin-pack rewrites all of
+  * it into the next version ([[rewrite]]), as the reference rewrites its
+  * index to remove rows.
   *
   * [[Engine]] keeps the lifecycle, locks, catalog commits, routing and
   * the pending soft-deletes the reads apply (`deletes`). Where a commit
@@ -86,65 +88,28 @@ private[core] final class CodedStore(
     epochCache.remove(k).foreach(_.close())
   }
 
-  /** Index versions whose dirs `doc`'s coded table reads: the current
-    * one plus every bucket owner a per-bucket compaction left behind.
-    * Empty for an untrained doc. Sweeps and supersession spare exactly
-    * these.
+  /** (bucket, dir) of every bucket dir of `doc`'s table, sorted by
+    * bucket. A bucket with no rows never materialized a dir.
     */
-  def referencedVersions(doc: CatalogDoc): Set[Int] =
-    if (!doc.isTrained) Set.empty
-    else ownerVersions(doc).toSet + doc.indexVersion
-
-  /** (owner version, bucket, dir) of every bucket dir `doc`'s table
-    * reads, sorted by (version, bucket). Only OWNED dirs are listed: a
-    * version dir may still hold stale copies of buckets a later compact
-    * rewrote, and listing the owned dirs explicitly is what keeps those
-    * invisible. A bucket with no rows never materialized a dir.
-    */
-  private def ownedBucketDirs(doc: CatalogDoc): Seq[(Int, Int, Path)] = {
-    val owners = ownerVersions(doc)
-    owners.distinct.sorted.toSeq.flatMap { v =>
-      val base = new Path(codedDir(doc.name, v))
-      val f = fsFor(base)
-      val listed =
-        if (!f.exists(base)) Seq.empty
-        else f.listStatus(base).iterator.flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("cluster_bucket="))
-            n.stripPrefix("cluster_bucket=").toIntOption.map(_ -> st.getPath)
-          else None
-        }.toSeq
-      listed.filter { case (b, _) => owners.lift(b).contains(v) }
-        .sortBy(_._1).map { case (b, p) => (v, b, p) }
-    }
+  private def bucketDirs(doc: CatalogDoc): Seq[(Int, Path)] = {
+    val base = new Path(codedDir(doc.name, doc.indexVersion))
+    val f = fsFor(base)
+    if (!f.exists(base)) Seq.empty
+    else f.listStatus(base).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("cluster_bucket="))
+        n.stripPrefix("cluster_bucket=").toIntOption.map(_ -> st.getPath)
+      else None
+    }.sortBy(_._1)
   }
 
-  /** The table as ONE DataFrame, cached per (db, indexVersion) — owners
-    * only change on a version bump.
+  /** The table as ONE DataFrame (a whole-dir read of its version),
+    * cached per (db, indexVersion).
     */
   def frame(doc: CatalogDoc): DataFrame =
     frameCache.getOrElseUpdate((doc.name, doc.indexVersion),
-      buildFrame(doc))
-
-  /** A single whole-dir read when every bucket lives under the current
-    * version (fresh train, bin-pack); otherwise a union of per-owner-
-    * version reads, each restricted to the bucket dirs that version
-    * still owns.
-    */
-  private def buildFrame(doc: CatalogDoc): DataFrame =
-    if (doc.codedOwners.isEmpty)
       spark.read.schema(codedSchema)
-        .parquet(codedDir(doc.name, doc.indexVersion))
-    else {
-      val byOwner = ownedBucketDirs(doc).groupBy(_._1).toSeq.sortBy(_._1)
-      if (byOwner.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], codedSchema)
-      else byOwner.map { case (v, dirs) =>
-        val base = codedDir(doc.name, v)
-        spark.read.schema(codedSchema).option("basePath", base)
-          .parquet(dirs.map { case (_, b, _) => s"$base/cluster_bucket=$b" }: _*)
-      }.reduce(_ union _)
-    }
+        .parquet(codedDir(doc.name, doc.indexVersion)))
 
   /** The per-chunk branch plans of the pruned scan: each chunk's
     * `Filter(In(cluster_id), Filter(In(cluster_bucket), coded))` over the
@@ -207,16 +172,17 @@ private[core] final class CodedStore(
     * contention is irrelevant and the loser's broadcast never exists.
     * Closing a replaced epoch under in-flight queries is safe:
     * unpersist(false) only drops executor copies; the broadcast value
-    * re-ships lazily.
+    * re-ships lazily. An epoch is stale when the doc's `maxId` moved
+    * ([[ServingScan.Epoch]]'s stamp): a cross-driver add surfaces through
+    * the TTL'd doc re-read, while same-driver writers [[evict]] eagerly.
     */
   def servingEpoch(doc: CatalogDoc): ServingScan.Epoch = {
     val k = (doc.name, doc.indexVersion)
-    val want = epochStamp(doc)
     epochCache.get(k) match {
-      case Some(e) if e.stamp == want => e
+      case Some(e) if e.stamp == doc.maxId => e
       case _ => epochCache.synchronized {
         epochCache.get(k) match {
-          case Some(e) if e.stamp == want => e
+          case Some(e) if e.stamp == doc.maxId => e
           case stale =>
             stale.foreach(_.close())
             val built = buildEpoch(doc)
@@ -226,17 +192,6 @@ private[core] final class CodedStore(
       }
     }
   }
-
-  /** The epoch's data stamp: the doc fields a same-version append or
-    * per-bucket compaction moves. A CROSS-DRIVER writer saves the doc
-    * with a new stamp; this driver's TTL'd doc re-read surfaces it and
-    * [[servingEpoch]] rebuilds the listing — so out-of-band coded files
-    * are served at doc-TTL granularity, the same visibility rule as
-    * every other serving read (VERDICT r17 #3). Same-driver writers
-    * still invalidate eagerly via [[evict]].
-    */
-  private def epochStamp(doc: CatalogDoc): String =
-    s"${doc.maxId}|${doc.codedOwners}"
 
   private def buildEpoch(doc: CatalogDoc): ServingScan.Epoch = {
     val schema = StructType(Seq(
@@ -256,8 +211,8 @@ private[core] final class CodedStore(
       StructField("metadata", StringType, nullable = true),
       StructField("cluster_id", IntegerType, nullable = false)))
     ServingScan.buildEpoch(spark, doc.codedBucketShift, schema, fetchSchema,
-      ownedBucketDirs(doc).map { case (_, b, dir) => b -> dir },
-      Engine.ServingScanTaskBytes, servingScanMinSplitBytes(), epochStamp(doc))
+      bucketDirs(doc), Engine.ServingScanTaskBytes, servingScanMinSplitBytes(),
+      doc.maxId)
   }
 
   /** T18 — fused project+assign+residual+PQ-encode (broadcast kernel,
@@ -319,7 +274,7 @@ private[core] final class CodedStore(
         if (g < groups - 1) awaitShuffleDrain(baseline)
       }
     }
-    _.copy(codedBucketShift = shift, codedOwners = "")
+    _.copy(codedBucketShift = shift)
   }
 
   /** Total bytes of shuffle files under this context's block-manager
@@ -419,68 +374,15 @@ private[core] final class CodedStore(
       .option("parquet.page.row.count.limit", "512")
       .partitionBy("cluster_bucket").parquet(path)
 
-  /** Incremental insert (A6). Each appended row lands in the version dir
-    * that OWNS its bucket — one append-write per distinct owner, all
-    * reading one persisted encode pass. Owner count is small (grows by
-    * ≤1 per compact, reset by every train/bin-pack).
+  /** Incremental insert (A6): the encoded rows append to the table's
+    * own version dir.
     */
   def append(doc: CatalogDoc, model: IndexModel, rows: DataFrame): Unit = {
-    val encoded = assignEncode(rows, model)
-    val nlist = math.max(1, doc.numClusters)
-    val shift = doc.codedBucketShift
-    if (doc.codedOwners.isEmpty)
-      writeRows(encoded, shift, nlist, codedDir(doc.name, doc.indexVersion),
-        "append")
-    else {
-      val byOwner = ownerVersions(doc).zipWithIndex.groupBy(_._1)
-      encoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        byOwner.toSeq.sortBy(_._1).foreach { case (ownerV, entries) =>
-          val owned = entries.map(_._2).toIndexedSeq.map(Integer.valueOf)
-          val subset = encoded.filter(
-            expr(s"cluster_id div ${1L << shift}").cast("int").isin(owned: _*))
-          writeRows(subset, shift, nlist, codedDir(doc.name, ownerV), "append")
-        }
-      } finally encoded.unpersist()
-    }
+    writeRows(assignEncode(rows, model), doc.codedBucketShift,
+      math.max(1, doc.numClusters), codedDir(doc.name, doc.indexVersion),
+      "append")
     // same-version append: the cached frame's FileIndex is now stale
     evict((doc.name, doc.indexVersion))
-  }
-
-  /** The coded side of a delete compaction, PER BUCKET: only the buckets
-    * that hold a `deleted` id are rewritten — minus those rows — into
-    * index version `version`; every untouched bucket keeps its files and
-    * stays owned by the version that wrote them. At 100 TB a threshold
-    * compact touches ~10% of rows, spread over (usually far) fewer than
-    * all buckets, so the rewrite cost is ∝ touched buckets, not table
-    * size. Returns the doc at `version` with the new owners, and the
-    * index versions no bucket references any more (sweepable).
-    */
-  def rewriteWithout(doc: CatalogDoc, deleted: DataFrame,
-                     version: Int): (CatalogDoc, Seq[Int]) = {
-    val owners = ownerVersions(doc)
-    // one column-pruned pass (id + the partition value) finds the
-    // buckets with deletions — no vector/code/metadata decode
-    val touched = frame(doc)
-      .join(broadcast(deleted), Seq("id"), "left_semi")
-      .select("cluster_bucket").distinct().collect().map(_.getInt(0))
-    if (touched.nonEmpty)
-      writeRows(
-        frame(doc)
-          .filter(col("cluster_bucket").isin(
-            touched.toIndexedSeq.map(Integer.valueOf): _*))
-          .join(broadcast(deleted), Seq("id"), "left_anti"),
-        doc.codedBucketShift, math.max(1, doc.numClusters),
-        codedDir(doc.name, version), "overwrite")
-    val touchedSet = touched.toSet
-    val newOwners = owners.zipWithIndex.map { case (o, b) =>
-      if (touchedSet(b)) version else o }
-    val unreferenced = (owners.toSet + doc.indexVersion)
-      .diff(newOwners.toSet + version).toSeq.sorted
-    // an owner list that is uniform collapses to the "" shorthand
-    (doc.copy(indexVersion = version, codedOwners =
-      if (newOwners.forall(_ == version)) "" else newOwners.mkString(",")),
-      unreferenced)
   }
 
   /** Parquet files under a directory (recursive; 0 if absent). */
@@ -493,16 +395,6 @@ private[core] final class CodedStore(
     n
   }
 
-  /** Parquet data files the table would READ — per owned bucket dir when
-    * ownership is split across versions (stale copies of rewritten
-    * buckets left in old version dirs don't count; they're vacuum's
-    * problem, not the bin-pack trigger's).
-    */
-  private def fileCount(doc: CatalogDoc): Int =
-    if (doc.codedOwners.isEmpty)
-      countParquetFiles(new Path(codedDir(doc.name, doc.indexVersion)))
-    else ownedBucketDirs(doc).iterator.map(d => countParquetFiles(d._3)).sum
-
   /** Why the table needs a bin-pack, or None: post-train appends lay
     * down one file-set per touched bucket, and past
     * [[CodedFilesPerCluster]] files per bucket the pruned scan becomes a
@@ -510,19 +402,26 @@ private[core] final class CodedStore(
     */
   def overFileBudget(doc: CatalogDoc): Option[String] = {
     val units = bucketCount(doc)
-    val files = fileCount(doc)
+    val files = countParquetFiles(new Path(codedDir(doc.name, doc.indexVersion)))
     if (files <= CodedFilesPerCluster * units) None
     else Some(s"$files files exceeded $CodedFilesPerCluster×$units")
   }
 
-  /** Rewrite every owned bucket into right-sized files under index
-    * version `version` (rows only move between files; trained query
-    * results are unchanged). Returns the doc at `version` owning them all.
+  /** The one rewrite of the table: all of it, minus the rows whose id is
+    * in `without`, into right-sized files under index version `version`.
+    * A delete compaction passes its pending deletes; a bin-pack passes
+    * None, so rows only move between files and trained query results are
+    * unchanged. Every trained table lives in exactly one version dir, so
+    * even a compaction whose deletes fall in a few buckets rewrites them
+    * all. Returns the doc at `version`.
     */
-  def binPack(doc: CatalogDoc, version: Int): CatalogDoc = {
-    writeRows(frame(doc), doc.codedBucketShift, math.max(1, doc.numClusters),
+  def rewrite(doc: CatalogDoc, version: Int,
+              without: Option[DataFrame]): CatalogDoc = {
+    val live = without.fold(frame(doc))(d =>
+      frame(doc).join(broadcast(d), Seq("id"), "left_anti"))
+    writeRows(live, doc.codedBucketShift, math.max(1, doc.numClusters),
       codedDir(doc.name, version), "overwrite")
-    doc.copy(indexVersion = version, codedOwners = "")
+    doc.copy(indexVersion = version)
   }
 }
 
@@ -660,13 +559,6 @@ object CodedStore {
   /** Bucket-dir count the shift yields for an nlist. */
   def bucketCount(nlist: Int, shift: Int): Int =
     math.max(1, ((nlist.toLong + (1L << shift) - 1) >> shift).toInt)
-
-  /** Owner index version per bucket of a trained doc's table: the doc's
-    * csv, or every bucket under `indexVersion` when it is "".
-    */
-  private[graft] def ownerVersions(doc: CatalogDoc): Array[Int] =
-    if (doc.codedOwners.isEmpty) Array.fill(bucketCount(doc))(doc.indexVersion)
-    else doc.codedOwners.split(",").map(_.toInt)
 
   /** Bucket-dir count of a trained doc's table. */
   def bucketCount(doc: CatalogDoc): Int =

@@ -82,14 +82,13 @@ class Engine(val spark: SparkSession, val root: String) {
 
   /** Serving handles owned by [[query]]'s prepared auto-routing, one per
     * db; rebuilt when the catalog doc shows a moved version and released
-    * with the model cache entry / on drop. `autoRoutePrepared = false`
-    * turns the routing off engine-wide (specs, plan-inspection callers).
+    * with the model cache entry / on drop. Plan-inspection callers use
+    * [[queryCatalyst]], which never builds one.
     */
   private val autoPrepared =
     scala.collection.concurrent.TrieMap.empty[String, PreparedIndex]
   private val prepareLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
-  @volatile var autoRoutePrepared: Boolean = true
 
   /** A3 — opt-in flat-index memory guard (reference
     * input_validation.py:101-105 via training_utils.py:58-61): when set,
@@ -831,24 +830,19 @@ class Engine(val spark: SparkSession, val root: String) {
     val newVersion = doc.dataVersion + 1
     snapshot(doc).write.mode("overwrite").parquet(s"$root/$name/data/v$newVersion")
 
-    // the index side rewrites only what holds deleted rows
-    // ([[CodedStore.rewriteWithout]]) into a new index version; versions
-    // that no longer own any of the table become sweepable
-    var unreferencedIndexDirs = Seq.empty[String]
+    // the index side rewrites the whole coded table without the deleted
+    // rows ([[CodedStore.rewrite]]) into the next index version
     if (doc.isTrained) {
       val model = indexModel(doc)
       val newIdxVersion = doc.indexVersion + 1
-      val (rewritten, unreferenced) =
-        store.rewriteWithout(doc, deletes(doc), newIdxVersion)
+      doc = store.rewrite(doc, newIdxVersion, Some(deletes(doc)))
       IndexStore.saveModel(spark, doc.indexPath(root, newIdxVersion), model)
-      unreferencedIndexDirs = unreferenced.map(doc.indexPath(root, _))
-      doc = rewritten
     }
 
     doc = doc.copy(dataVersion = newVersion, numPendingDeletes = 0L)
     saveDoc(doc) // atomic swap; old deletes dir is now unreferenced
     markSuperseded((Seq(old.dataPath(root), deletesPath(old)) ++
-      unreferencedIndexDirs): _*)
+      supersededIndexDir(old)): _*)
     doc
   }
 
@@ -879,9 +873,9 @@ class Engine(val spark: SparkSession, val root: String) {
     * adds AND removes from another driver inside the TTL can be served
     * stale — the post-job re-check catches version moves, not pending-
     * delete drift). The reference folds appends synchronously, so its
-    * reads are read-your-writes; callers needing that on this engine set
-    * `autoRoutePrepared = false` (or use [[queryCatalyst]]). Every
-    * handle, routed or from [[prepareServing]], takes the same window.
+    * reads are read-your-writes; callers needing that on this engine use
+    * [[queryCatalyst]]. Every handle, routed or from [[prepareServing]],
+    * takes the same window.
     *
     * EXECUTION CONTRACT: on a trained db this method is EAGER — the
     * coarse ADC stage runs (a Spark job) at CALL time, and the returned
@@ -914,15 +908,14 @@ class Engine(val spark: SparkSession, val root: String) {
     // knn_filtered_trained DuckDB replays). First routed query per
     // (db, version) pays the block build; staleness falls back inside
     // the handle, and the handle is rebuilt here once the catalog doc
-    // shows a moved version. `autoRoutePrepared = false` (or
-    // [[queryCatalyst]]) restores the pure-plan path.
+    // shows a moved version. [[queryCatalyst]] is the pure-plan path.
     routedHits(doc, q, preliminaryTopK, finalTopK, predicate)
       .fold(queryCatalyst(name, q, preliminaryTopK, finalTopK, predicate))(hitsDf)
   }
 
   /** The routed answer shared by [[query]] and [[queryHits]]: the warm
     * auto-prepared handle's hits, or None when the caller must take the
-    * plan path — routing off, an untrained db, a predicate that needs the
+    * plan path — an untrained db, a predicate that needs the
     * full candidate schema, or an IllegalArgumentException from the
     * handle. The catch covers a concurrent close (cache eviction / drop)
     * voiding the handle mid-call — the plan path serves the same
@@ -936,7 +929,7 @@ class Engine(val spark: SparkSession, val root: String) {
     def routed(serve: PreparedIndex => Array[PreparedIndex.Hit]) =
       try Some(serve(autoPreparedFor(doc)))
       catch { case _: IllegalArgumentException => None }
-    if (!autoRoutePrepared || !doc.isTrained) None
+    if (!doc.isTrained) None
     else predicate match {
       case None => routed(_.queryWith(doc, q, prelimK, finalK))
       case Some(pred) =>
@@ -1350,7 +1343,7 @@ class Engine(val spark: SparkSession, val root: String) {
     // of the block set — at the 35M geometry the second build evicted
     // the first's partitions and every sequential serve paid disk
     // re-promotion (r14 eval: 2.07 s prepared p50 from a 35 ms path).
-    if (autoRoutePrepared && numParts <= 0) {
+    if (numParts <= 0) {
       while (true) {
         // tryRetain loses only to a concurrent swap's close of the just
         // published handle; autoPreparedFor rebuilds fresh on re-entry
@@ -1753,9 +1746,7 @@ class Engine(val spark: SparkSession, val root: String) {
         sum(when(col("id") > snapshotMaxId, 1L).otherwise(0L))).first()
       val liveTrained = if (live.isNullAt(0)) 0L else live.getLong(0)
       val liveNew = if (live.isNullAt(1)) 0L else live.getLong(1)
-      // the fresh index supersedes EVERY old index version, including
-      // bucket-owner versions a per-bucket compact left referenced
-      val oldIndexPaths = supersededIndexDirs(cur)
+      val oldIndexPath = supersededIndexDir(cur)
       val reconcileTo = cur.maxId
       cur = layout(Catalog.withParams(cur, p, nlist, nprobe).copy(
         usedTwoLevel = if (twoLevel) 1 else 0,
@@ -1765,7 +1756,7 @@ class Engine(val spark: SparkSession, val root: String) {
         numTrainedVectorsRemoved = n - liveTrained,
         numNewVectors = liveNew))
       saveDoc(cur)
-      markSuperseded(oldIndexPaths: _*)
+      oldIndexPath.foreach(markSuperseded(_))
       (cur, true, snapshotMaxId, reconcileTo)
     }
   }
@@ -1797,11 +1788,11 @@ class Engine(val spark: SparkSession, val root: String) {
       load(name)
     }
 
-  /** Index dirs a swap away from `doc` supersedes: every version its
-    * coded table still reads ([[CodedStore.referencedVersions]]).
+  /** The index dir a swap away from `doc` supersedes: its one version
+    * dir, which holds the whole coded table. None for an untrained doc.
     */
-  private def supersededIndexDirs(doc: CatalogDoc): Seq[String] =
-    store.referencedVersions(doc).toSeq.sorted.map(doc.indexPath(root, _))
+  private def supersededIndexDir(doc: CatalogDoc): Option[String] =
+    if (doc.isTrained) Some(doc.indexPath(root)) else None
 
   /** Bin-pack the coded table once post-train appends have accreted past
     * its file budget ([[CodedStore.overFileBudget]]): one rewrite into a
@@ -1820,11 +1811,10 @@ class Engine(val spark: SparkSession, val root: String) {
     store.overFileBudget(doc).foreach { why =>
       val model = indexModel(doc)
       val newVersion = doc.indexVersion + 1
-      val packed = store.binPack(doc, newVersion)
+      val packed = store.rewrite(doc, newVersion, None)
       IndexStore.saveModel(spark, doc.indexPath(root, newVersion), model)
       saveDoc(packed)
-      // the bin-pack consolidates EVERY owner version into the new one
-      markSuperseded(supersededIndexDirs(doc): _*)
+      markSuperseded(doc.indexPath(root))
       log.info(s"coded-table compaction: '$name' index v${doc.indexVersion} → " +
         s"v$newVersion ($why)")
     }
@@ -1849,27 +1839,21 @@ class Engine(val spark: SparkSession, val root: String) {
     val doc = load(name)
     val cutoff = System.currentTimeMillis() - graceMillis
     val f = fsFor(new org.apache.hadoop.fs.Path(root))
-    // index versions the coded table still READS (per-bucket compaction
-    // leaves untouched buckets in older version dirs) are never
-    // sweepable, no matter how old
-    val referencedIdx = store.referencedVersions(doc)
-    def sweep(parent: org.apache.hadoop.fs.Path, prefix: String, current: Int,
-              referenced: Int => Boolean): Int = {
+    def sweep(parent: org.apache.hadoop.fs.Path, prefix: String, current: Int): Int = {
       if (!f.exists(parent)) return 0
       f.listStatus(parent).count { st =>
         val n = st.getPath.getName
         val old = n.startsWith(prefix) &&
-          n.stripPrefix(prefix).toIntOption.exists(v => v < current && !referenced(v))
+          n.stripPrefix(prefix).toIntOption.exists(_ < current)
         val stale = old && supersededAt(f, st.getPath) <= cutoff
         if (stale) f.delete(st.getPath, true)
         stale
       }
     }
     val base = new org.apache.hadoop.fs.Path(root, name)
-    sweep(new org.apache.hadoop.fs.Path(base, "data"), "v", doc.dataVersion, _ => false) +
-      sweep(new org.apache.hadoop.fs.Path(base, "index"), "v", doc.indexVersion,
-        referencedIdx.contains) +
-      sweep(new org.apache.hadoop.fs.Path(base, "deletes"), "d", doc.dataVersion, _ => false)
+    sweep(new org.apache.hadoop.fs.Path(base, "data"), "v", doc.dataVersion) +
+      sweep(new org.apache.hadoop.fs.Path(base, "index"), "v", doc.indexVersion) +
+      sweep(new org.apache.hadoop.fs.Path(base, "deletes"), "d", doc.dataVersion)
   }
 
   /** The explicit supersession stamp of a version dir: the millis inside

@@ -30,8 +30,8 @@ import graft.core.Engine.IndexModel
   *    scan per query (8 fresh ~1000-entry conf broadcasts per query at
   *    the 35M shape: driver serialize+gzip, executor gunzip+HashMap
   *    fill — the r16-attributed top CPU frame, PLANS.md round-16 audit);
-  *  - the bucket→file listing is computed once per epoch (the exact
-  *    owner-version dir rules of [[CodedStore]]) and the probed subset
+  *  - the bucket→file listing of the table's version dir is computed
+  *    once per epoch ([[CodedStore]] supplies the dirs) and the probed subset
   *    ships in the job closure — no FileIndex, no per-query Catalyst
   *    analyze/optimize/physical-plan of N scan subtrees (the 286-of-389
   *    ms plan share at 11M×768, EVAL_r16);
@@ -79,8 +79,8 @@ object ServingScan {
     "org.apache.spark.sql.parquet.row.requested_schema"
 
   /** Per-epoch driver state. `bucketFiles` holds (path, length) per
-    * cluster_bucket, listed under the owner-version dirs exactly as the
-    * engine's coded read does; `bcConf` is the one Hadoop-conf broadcast
+    * cluster_bucket, listed under the table's one version dir exactly as
+    * the engine's coded read does; `bcConf` is the one Hadoop-conf broadcast
     * every query of this epoch reuses.
     */
   final class Epoch(
@@ -94,13 +94,13 @@ object ServingScan {
       // specs lower it so multi-range tasks (and the midpoint-rule
       // footer filtering they depend on) are exercised at sbt-test scale
       val minSplitBytes: Long = 4L << 20,
-      // data stamp of the catalog doc this epoch's listing reflects
-      // (maxId|codedOwners at build time) — the engine rebuilds
-      // the epoch when the TTL'd doc re-read shows a different stamp, so
-      // a CROSS-DRIVER same-version coded append is served at doc-TTL
-      // granularity instead of "stale until a version bump" (r18,
-      // VERDICT r17 #3)
-      val stamp: String = "") extends Serializable {
+      // the catalog doc's maxId when this epoch's listing was taken: an
+      // add appends coded files to the current version dir and moves
+      // maxId. The engine rebuilds the epoch when the
+      // TTL'd doc re-read shows a different maxId, so a CROSS-DRIVER
+      // same-version coded append is served at doc-TTL granularity
+      // instead of "stale until a version bump" (r18, VERDICT r17 #3)
+      val stamp: Long = -1L) extends Serializable {
     def close(): Unit = bcConf.unpersist(false)
   }
 
@@ -203,15 +203,15 @@ object ServingScan {
 
   /** Build the per-epoch state: one conf clone + one broadcast + one
     * listing pass. `bucketDirs` supplies (bucket → dir) pairs — the
-    * coded store owns the owner-version layout rules, so the listing rule
-    * stays in ONE place (CodedStore.servingEpoch).
+    * coded store owns the layout rules, so the listing rule stays in ONE
+    * place (CodedStore.servingEpoch).
     */
   def buildEpoch(spark: SparkSession, shift: Int,
                  coarseSchema: StructType, fetchSchema: StructType,
                  bucketDirs: Seq[(Int, Path)],
                  maxTaskBytes: Long,
                  minSplitBytes: Long = 4L << 20,
-                 stamp: String = ""): Epoch = {
+                 stamp: Long = -1L): Epoch = {
     val conf = spark.sessionState.newHadoopConf()
     conf.set(ReadSupportClassKey, ReadSupportClassName)
     // keys the stock reader init reads WITHOUT defaults (normally set by

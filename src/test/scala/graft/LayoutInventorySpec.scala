@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class LayoutInventorySpec extends AnyFunSuite {
 
   private val LayoutNames =
-    Seq("codedBucketShift", "codedOwners", "ownerVersions", "cluster_bucket")
+    Seq("codedBucketShift", "cluster_bucket")
 
   test("core/Engine.scala names none of the coded layout's fields or dirs") {
     val path = Paths.get("src/main/scala/graft/core/Engine.scala")
@@ -27,6 +27,28 @@ class LayoutInventorySpec extends AnyFunSuite {
     // and the store that owns it still does
     val store = Files.readString(Paths.get("src/main/scala/graft/core/CodedStore.scala"))
     LayoutNames.foreach(n => assert(store.contains(n), s"CodedStore no longer names $n"))
+  }
+
+  // A trained coded table lives in exactly one index version dir. These
+  // named the retired per-bucket owner map that split it across several.
+  // `catalog/Catalog.scala` still reads the JSON key to refuse such a doc,
+  // so the check covers `core/` only.
+  private val OwnerMap =
+    Seq("codedOwners", "ownerVersions", "ownedBucketDirs", "referencedVersions")
+
+  test("src/main/scala/graft/core names none of the retired bucket owner map") {
+    val core = Paths.get("src/main/scala/graft/core")
+    assert(Files.isDirectory(core), s"run from the repo root (no $core)")
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(core).iterator().asScala
+      .filter(p => Files.isRegularFile(p)).toSeq
+    assert(files.nonEmpty)
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readString(f).split("\n").zipWithIndex.toSeq
+      name <- OwnerMap if line.contains(name)
+    } yield s"$f:${i + 1}: $name"
+    assert(hits.isEmpty, s"bucket owner map named in core/:\n${hits.mkString("\n")}")
   }
 
   // A trained single query has one plan-surface route: the plan-free

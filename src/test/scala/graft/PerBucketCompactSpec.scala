@@ -2,15 +2,16 @@ package graft
 
 import scala.util.Random
 
+import org.apache.hadoop.fs.Path
+
 import graft.core.Engine
 import graft.index.IndexParams
 
-/** Per-bucket compaction (round 11): a threshold compact rewrites ONLY the
-  * cluster_buckets that hold deleted rows; untouched buckets stay — files,
-  * names, mtimes — in the version dir that wrote them, tracked by the
-  * catalog's per-bucket owner map, and vacuum refuses to sweep a version
-  * that still owns buckets. At 100 TB this turns the compact from a
-  * full-table rewrite into one ∝ touched buckets.
+/** Compaction on a multi-bucket coded table: a trained table lives in
+  * exactly one index version dir, so a compact whose deletes all fall in
+  * ONE bucket still rewrites every bucket, minus the deleted rows, into
+  * the next version. The superseded version then sweeps like a data
+  * version, appends land in the new dir, and a retrain sweeps cleanly.
   */
 class PerBucketCompactSpec extends SparkSpec {
 
@@ -33,6 +34,8 @@ class PerBucketCompactSpec extends SparkSpec {
       // force a multi-bucket layout on the small corpus
       override protected def chooseCodedBucketShift(n: Long, nlist: Int,
                                                     d: Int, m: Int): Int = 2
+      // an add is visible to the very next routed query
+      override protected def autoPreparedAddsRefreshMs: Long = 0L
     }
     val (v, m) = mkCorpus(N)
     e.create("db", vectorDimension = D)
@@ -52,23 +55,25 @@ class PerBucketCompactSpec extends SparkSpec {
     Seq.fill(k)(Array.fill(D)(rnd.nextGaussian().toFloat))
   }
 
-  /** (name, mtime, size) of every parquet file under a bucket dir of one
-    * index version.
-    */
-  private def bucketFiles(version: Int, bucket: Int): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"${engine.root}/db/index/v$version/coded/cluster_bucket=$bucket")
-    val fs = p.getFileSystem(engine.hadoopConf)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => (st.getPath.getName, st.getModificationTime, st.getLen))
-      .toSeq.sortBy(_._1)
+  private def fs = new Path(engine.root).getFileSystem(engine.hadoopConf)
+
+  private def indexDir(version: Int): Path =
+    new Path(s"${engine.root}/db/index/v$version")
+
+  /** The `cluster_bucket=` dir names under one index version's table. */
+  private def bucketDirNames(version: Int): Set[String] = {
+    val p = new Path(indexDir(version), "coded")
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p).map(_.getPath.getName)
+      .filter(_.startsWith("cluster_bucket=")).toSet
   }
 
-  test("compact rewrites only the buckets holding deleted rows") {
+  private def codedIds(version: Int): Set[Long] =
+    spark.read.parquet(new Path(indexDir(version), "coded").toString)
+      .select("id").collect().map(_.getLong(0)).toSet
+
+  test("compact rewrites every bucket, minus the deletes, into v+1") {
     val v0 = engine.load("db").indexVersion
-    assert(engine.load("db").codedOwners.isEmpty)
 
     // all deleted ids from ONE bucket: read the coded table's assignment
     val coded = spark.read
@@ -77,20 +82,16 @@ class PerBucketCompactSpec extends SparkSpec {
       .map(r => r.getInt(0) -> r.getLong(1)).sortBy(-_._2)
     assert(byBucket.length > 2, "fixture must span several buckets")
     val target = byBucket.head._1
+    assert(byBucket.head._2 > 100, "the target bucket must keep rows")
     val victims = coded
       .filter(org.apache.spark.sql.functions.col("cluster_bucket") === target)
       .select("id").limit(100).collect().map(_.getLong(0)).toSeq
     assert(victims.size == 100)
-
-    val untouched = byBucket.map(_._1).filter(_ != target)
-    val before = untouched.map(b => b -> bucketFiles(v0, b)).toMap
-    val preQ = mkQueries(6)
-    val preResults = preQ.map { q =>
-      engine.remove("db", Seq.empty) // no-op; keep shape symmetric
-      results(q)
-    }
+    val bucketsBefore = bucketDirNames(v0)
+    val idsBefore = codedIds(v0)
 
     // soft-delete without triggering the threshold, then compact explicitly
+    val preQ = mkQueries(6)
     engine.remove("db", victims, compactionThreshold = 2.0)
     val pendingResults = preQ.map(results) // deletes visible via anti-join
     engine.compact("db")
@@ -98,17 +99,11 @@ class PerBucketCompactSpec extends SparkSpec {
     val doc = engine.load("db")
     assert(doc.indexVersion == v0 + 1)
     assert(doc.numPendingDeletes == 0L)
-    // owner map: target bucket moved to v1, everything else stayed at v0
-    val owners = graft.core.CodedStore.ownerVersions(doc)
-    assert(owners(target) == v0 + 1)
-    untouched.foreach(b => assert(owners(b) == v0, s"bucket $b must stay at v$v0"))
-
-    // ONLY the touched bucket dir exists under the new version
-    assert(bucketFiles(v0 + 1, target).nonEmpty)
-    untouched.foreach(b =>
-      assert(bucketFiles(v0 + 1, b).isEmpty, s"bucket $b must not be rewritten"))
-    // untouched buckets keep their exact files (names, mtimes, sizes) in v0
-    untouched.foreach(b => assert(bucketFiles(v0, b) == before(b)))
+    // every bucket dir exists under the new version, holding every row
+    // but the deleted ones
+    assert(bucketsBefore.size == byBucket.length)
+    assert(bucketDirNames(v0 + 1) == bucketsBefore)
+    assert(codedIds(v0 + 1) == idsBefore -- victims)
 
     // results: identical to the pending-delete (anti-join) view, and the
     // deleted ids are gone for good
@@ -117,35 +112,40 @@ class PerBucketCompactSpec extends SparkSpec {
       assert(r == pendingResults(i), "compact must not change any result")
       assert(r.map(_._2).intersect(victims).isEmpty)
     }
-    preResults // (materialized pre-delete baseline kept for debugging)
   }
 
-  test("vacuum keeps owner versions alive; retrain releases them") {
-    val doc = engine.load("db")
-    val v0 = doc.indexVersion - 1
-    // v0 still owns untouched buckets → not sweepable even at grace 0
-    engine.vacuum("db", graceMillis = 0L)
-    val fs = new org.apache.hadoop.fs.Path(engine.root)
-      .getFileSystem(engine.hadoopConf)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"${engine.root}/db/index/v$v0")), "vacuum must not sweep a bucket owner")
+  test("vacuum sweeps the old version; adds and a retrain stay clean") {
+    val v1 = engine.load("db").indexVersion
+    val v0 = v1 - 1
+    // the compacted-away version holds nothing the table reads
+    assert(engine.vacuum("db", graceMillis = 0L) >= 1)
+    assert(!fs.exists(indexDir(v0)), s"vacuum must sweep index v$v0")
+    assert(fs.exists(indexDir(v1)))
     val q = mkQueries(1).head
     assert(results(q).nonEmpty)
 
-    // post-compact appends route to each bucket's OWNER version dir
+    // a post-compact append lands in the table's one version dir and is
+    // served: each added vector finds itself first
     val rnd = new Random(Seed + 9)
-    engine.addLocal("db",
-      Seq.fill(60)(Array.fill(D)(rnd.nextGaussian().toFloat)),
-      Seq.tabulate(60)(i => s"""{"x":$i}"""))
-    assert(results(q).nonEmpty)
+    val added = Seq.fill(60)(Array.fill(D)(rnd.nextGaussian().toFloat))
+    val maxBefore = engine.load("db").maxId
+    engine.addLocal("db", added, Seq.tabulate(60)(i => s"""{"x":$i}"""))
+    val addedIds = (maxBefore + 1 to maxBefore + 60).toSet
+    assert(engine.load("db").indexVersion == v1)
+    assert(addedIds.subsetOf(codedIds(v1)))
+    added.zipWithIndex.take(5).foreach { case (v, i) =>
+      assert(results(v).head._2 == maxBefore + 1 + i, s"added row $i not served")
+    }
 
-    // a retrain consolidates ownership; the old owners become sweepable
+    // a retrain writes the next version and the compacted one sweeps
     engine.train("db", params = Some(IndexParams(D, D, 4, omitOpq = true)),
       kmeansIters = 4, seed = Seed, minTrainRows = 1)
-    assert(engine.load("db").codedOwners.isEmpty)
-    assert(engine.vacuum("db", graceMillis = 0L) >= 2,
-      "both previously-owned index versions must sweep after retrain")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${engine.root}/db/index/v$v0")))
+    val v2 = engine.load("db").indexVersion
+    assert(v2 == v1 + 1)
+    assert(engine.vacuum("db", graceMillis = 0L) >= 1)
+    assert(!fs.exists(indexDir(v1)))
+    assert(fs.listStatus(new Path(s"${engine.root}/db/index"))
+      .map(_.getPath.getName).toSeq == Seq(s"v$v2"))
     assert(results(q).nonEmpty)
   }
 }

@@ -317,13 +317,15 @@ class PreparedIndexSpec extends SparkSpec {
     val viaHits = engine.queryHits("pdb", probe, PrelimK, FinalK)
       .map(h => (h.rank, h.id, h.metadata, h.cosineSimilarity)).toSeq
     assert(viaHits == viaDf)
-    // routing off → the collect-the-plan fallback must agree too
-    engine.autoRoutePrepared = false
-    try {
-      val viaPlan = engine.queryHits("pdb", probe, PrelimK, FinalK)
-        .map(h => (h.rank, h.id, h.metadata, h.cosineSimilarity)).toSeq
-      assert(viaPlan == viaDf)
-    } finally engine.autoRoutePrepared = true
+    // a predicate on `vector` cannot compile against (id, metadata), so
+    // queryHits takes its collect-the-plan fallback, which must agree
+    // with queryCatalyst
+    import org.apache.spark.sql.functions.{col, size => asize}
+    val onVector = asize(col("vector")) === D
+    val viaPlan = engine.queryHits("pdb", probe, PrelimK, FinalK, Some(onVector))
+      .map(h => (h.rank, h.id, h.metadata, h.cosineSimilarity)).toSeq
+    assert(viaPlan.nonEmpty)
+    assert(viaPlan == regularP(probe, onVector))
   }
 
   // ---- predicate-capable routed serving (round 13; r15 replaced the

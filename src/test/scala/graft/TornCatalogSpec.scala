@@ -182,6 +182,39 @@ class TornCatalogSpec extends AnyFunSuite {
     assert(!d.isTrained && d.codedBucketShift == -1 && d.maxId == 10L)
   }
 
+  /** A trained doc's epoch 2, written as `save` writes epoch 1 plus one
+    * `codedOwners` key carrying `owners`.
+    */
+  private def withOwners(root: String, name: String, owners: String): Unit = {
+    Catalog.save(root, doc(name, 10L).copy(indexVersion = 3, codedBucketShift = 2))
+    val json = savedJson(root, name)
+    writeRaw(root, name, "catalog.00000000000000000002.json",
+      json.replace("\"complete\": true",
+        s""""codedOwners": "$owners",\n  "complete": true"""))
+  }
+
+  test("a trained catalog with a per-bucket owner list fails to load, naming the db") {
+    val root = newRoot()
+    withOwners(root, "splitdb", "2,3,3,2")
+    val e = intercept[RuntimeException](Catalog.load(root, "splitdb"))
+    assert(e.getMessage.contains("'splitdb'") && e.getMessage.contains("retrain"),
+      e.getMessage)
+  }
+
+  test("a current save writes no codedOwners key") {
+    val root = newRoot()
+    Catalog.save(root, doc("oneversion", 10L).copy(indexVersion = 3, codedBucketShift = 2))
+    val json = savedJson(root, "oneversion")
+    assert(json.contains("\"complete\": true") && !json.contains("codedOwners"), json)
+  }
+
+  test("a catalog carrying an empty codedOwners still loads") {
+    val root = newRoot()
+    withOwners(root, "olderdb", "")
+    val d = Catalog.load(root, "olderdb")
+    assert(d.isTrained && d.indexVersion == 3 && d.codedBucketShift == 2 && d.maxId == 10L)
+  }
+
   test("reader never sees a torn or absent doc while a writer saves and sweeps") {
     val root = newRoot()
     Catalog.save(root, doc("db", 0L))
