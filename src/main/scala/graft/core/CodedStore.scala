@@ -408,20 +408,20 @@ private[core] final class CodedStore(
   }
 
   /** The one rewrite of the table: all of it, minus the rows whose id is
-    * in `without`, into right-sized files under index version `version`.
+    * in `without`, into right-sized files under the next index version.
     * A delete compaction passes its pending deletes; a bin-pack passes
     * None, so rows only move between files and trained query results are
     * unchanged. Every trained table lives in exactly one version dir, so
     * even a compaction whose deletes fall in a few buckets rewrites them
-    * all. Returns the doc at `version`.
+    * all. Returns the doc at `indexVersion + 1`.
     */
-  def rewrite(doc: CatalogDoc, version: Int,
-              without: Option[DataFrame]): CatalogDoc = {
+  def rewrite(doc: CatalogDoc, without: Option[DataFrame]): CatalogDoc = {
+    val next = doc.copy(indexVersion = doc.indexVersion + 1)
     val live = without.fold(frame(doc))(d =>
       frame(doc).join(broadcast(d), Seq("id"), "left_anti"))
     writeRows(live, doc.codedBucketShift, math.max(1, doc.numClusters),
-      codedDir(doc.name, version), "overwrite")
-    doc.copy(indexVersion = version)
+      codedDir(doc.name, next.indexVersion), "overwrite")
+    next
   }
 }
 

@@ -830,14 +830,7 @@ class Engine(val spark: SparkSession, val root: String) {
     val newVersion = doc.dataVersion + 1
     snapshot(doc).write.mode("overwrite").parquet(s"$root/$name/data/v$newVersion")
 
-    // the index side rewrites the whole coded table without the deleted
-    // rows ([[CodedStore.rewrite]]) into the next index version
-    if (doc.isTrained) {
-      val model = indexModel(doc)
-      val newIdxVersion = doc.indexVersion + 1
-      doc = store.rewrite(doc, newIdxVersion, Some(deletes(doc)))
-      IndexStore.saveModel(spark, doc.indexPath(root, newIdxVersion), model)
-    }
+    if (doc.isTrained) doc = rewriteIndex(doc, Some(deletes(doc)))
 
     doc = doc.copy(dataVersion = newVersion, numPendingDeletes = 0L)
     saveDoc(doc) // atomic swap; old deletes dir is now unreferenced
@@ -1809,15 +1802,23 @@ class Engine(val spark: SparkSession, val root: String) {
     // as compact(); reconcileAfterTrain re-runs this check post-drain
     if (trainingStatus(name) == "in progress") return
     store.overFileBudget(doc).foreach { why =>
-      val model = indexModel(doc)
-      val newVersion = doc.indexVersion + 1
-      val packed = store.rewrite(doc, newVersion, None)
-      IndexStore.saveModel(spark, doc.indexPath(root, newVersion), model)
+      val packed = rewriteIndex(doc, None)
       saveDoc(packed)
       markSuperseded(doc.indexPath(root))
       log.info(s"coded-table compaction: '$name' index v${doc.indexVersion} → " +
-        s"v$newVersion ($why)")
+        s"v${packed.indexVersion} ($why)")
     }
+  }
+
+  /** The whole coded table, minus the ids in `without`, into the next
+    * index version ([[CodedStore.rewrite]]), with the unchanged model
+    * saved beside it. Returns that doc, unsaved: the caller commits it.
+    */
+  private def rewriteIndex(doc: CatalogDoc, without: Option[DataFrame]): CatalogDoc = {
+    val model = indexModel(doc)
+    val next = store.rewrite(doc, without)
+    IndexStore.saveModel(spark, next.indexPath(root), model)
+    next
   }
 
   /** Drop unreferenced snapshot/index/deletes versions (everything below
